@@ -29,6 +29,7 @@ from .compact import compact_changes
 from .localrel import empty_df
 from .parse import parse_messages, split_events, split_heartbeats
 from .quorum import latest_heartbeats, out_of_order_events
+from .shared_frames import evict, shared_frame
 from .types import pos, pos_lit
 from .sources import load_events_ns
 
@@ -114,37 +115,21 @@ def wire_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every operator consumes the materialized result (foreachBatch semantics).
 # Memoized per (session, sf_dir); also prevents Catalyst from substituting
 # the from_json chain into pushed-down predicates (see parse.py note).
-_PARSED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def clear_parsed_cache(spark: SparkSession | None = None) -> int:
     """Evict the memoized parse barriers (and unpersist their blocks when
     a live session is given); see registry.clear_query_caches."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    evicted = 0
-    for key in list(_PARSED_CACHE):
-        if app is None or key[0] == app:
-            df = _PARSED_CACHE.pop(key)
-            evicted += 1
-            if app is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # session already stopped
-    return evicted
+    return evict(spark, "cdc_parse")
 
 
+@shared_frame("cdc_parse")
 def parsed_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PARSED_CACHE:
-        df = parse_messages(wire_messages(spark, sf_dir), table_id_col=None)
-        # localCheckpoint over persist(): ~4x cheaper materialization (no
-        # columnar encoding of map/decimal columns) and a hard lineage
-        # barrier. Non-replicated blocks mean an executor loss fails the
-        # job — acceptable for a micro-batch kernel (Spark retries the
-        # batch), the exact trade a foreachBatch deployment makes.
-        _PARSED_CACHE[key] = df.localCheckpoint(eager=False)
-    return _PARSED_CACHE[key]
+    df = parse_messages(wire_messages(spark, sf_dir), table_id_col=None)
+    # localCheckpoint over persist(): ~4x cheaper materialization (no
+    # columnar encoding of map/decimal columns) and a hard lineage
+    # barrier. Non-replicated blocks mean an executor loss fails the
+    # job — acceptable for a micro-batch kernel (Spark retries the
+    # batch), the exact trade a foreachBatch deployment makes.
+    return df.localCheckpoint(eager=False)
 
 
 def _user_id() -> F.Column:

@@ -13,83 +13,74 @@ consume ann's kNN oracle). ``_shared`` holds the helpers, CTE constants and
 per-session caches every domain uses. The flat ``aardappel_spark.registry``
 namespace (helpers, ``q_*`` functions, caches) is preserved by hoisting each
 module's names below, so existing imports keep working unchanged.
+
+The order of ``QUERIES``/``ORACLES`` is the correctness gate's order:
+each round's gate checks only the first 50 entries, so ``gate_order``
+puts the queries that need a fresh gate first (see its docstring).
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+
 from . import _dicts, _shared
 from . import cdc, tpch, events, dedup, ann, text, corpus, graph, sales, layout, misc
-from . import _rotation
 
 from ._shared import *  # noqa: F401,F403
 
 _MODULES = (_shared, cdc, tpch, events, dedup, ann, text, corpus, graph,
-            sales, layout, misc, _rotation)
+            sales, layout, misc)
 for _m in _MODULES:
     for _k, _v in vars(_m).items():
         if not _k.startswith("__") and _k not in globals():
             globals()[_k] = _v
 del _m, _k, _v
 
-# ---------------------------------------------------------------------------
-# Driver-coverage rotation (round 13).
-#
-# union(CORRECTNESS_r01..r12) covers all 261 queries with zero red
-# latest rows (r12 judge-verified). Round-13 slots go to: the queries
-# whose OUTPUT changed this round (the 4-bit packed grey PNG sub-arm)
-# plus the PLAN-changed re-gates (the setsim verify join and the
-# exact-dedup anti-join are now bucket-pruned; the guard reads a
-# counts sidecar), then ALL 29 rows whose latest driver gate is r07
-# (the r12 rotation comment's promise: the r07 tail leads), then the
-# r08 block in name order. r08 rows that do not fit lead the r14
-# stale block; full-registry parity is additionally checked every
-# round by tools/check_oracle.py at sf0.001/0.01/0.1
-# (CHECK_ORACLE_r13*.json).
-_R13_ADDITIONS: list[str] = [
-    k
-    for k in _rotation.R13_ADDITION_NAMES
-    if k in _dicts.QUERIES
+# Queries whose plan or output changed after their latest gate row, in
+# the order they lead the gate. A name leaves this list once a committed
+# CORRECTNESS artifact newer than its change holds its row; a change to a
+# query's plan or output adds it here in the same commit.
+_REGATE: list[str] = [
+    "multimodal_video_frames",  # fused into one Arrow kernel (r14); last gated r11
+    "multimodal_audio_stats",  # kind filtered before the Python boundary (r13); r11
+    "dedup_span",  # reads the shared gram census (r13); r10
+    "doc_dup_coverage",  # reads the shared gram census (r13); r10
+    "doc_boilerplate",  # pins its (doc, gram) aggregate (r13); r9
 ]
 
-_R13_PRIORITY: list[str] = list(
-    dict.fromkeys(_R13_ADDITIONS + _rotation._R13_STALE)
-)[:50]
+# the committed CORRECTNESS artifacts sit next to the package
+_ARTIFACT_DIR = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-assert len(_R13_PRIORITY) == 50 and len(set(_R13_PRIORITY)) == 50
-assert set(_R13_PRIORITY) <= set(_dicts.QUERIES), sorted(
-    set(_R13_PRIORITY) - set(_dicts.QUERIES)
-)
 
-# kept importable for the r12 rotation regression test
-_R12_ADDITIONS: list[str] = [
-    k
-    for k in _rotation.R12_ADDITION_NAMES
-    if k in _dicts.QUERIES
-]
-_R12_PRIORITY: list[str] = list(
-    dict.fromkeys(_R12_ADDITIONS + _rotation._R12_STALE)
-)[:50]
+def latest_gate_rounds() -> dict[str, int]:
+    """Query name -> the newest round whose ``CORRECTNESS_rNN.json`` holds
+    a row for it (each artifact is one gate run's 50 rows)."""
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_ARTIFACT_DIR, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if m is None:
+            continue
+        with open(path) as fh:
+            for name in json.load(fh):
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    return latest
 
-# kept importable for the r11 rotation regression test
-_R11_ADDITIONS: list[str] = [
-    k
-    for k in _rotation.R11_ADDITION_NAMES
-    if k in _dicts.QUERIES
-]
-_R11_PRIORITY: list[str] = list(
-    dict.fromkeys(_R11_ADDITIONS + _rotation._R11_STALE)
-)[:50]
 
-# kept importable for the r10 rotation regression test
-_R10_ADDITIONS: list[str] = [
-    k
-    for k in _rotation.R10_ADDITION_NAMES
-    if k in _dicts.QUERIES
-]
-_R10_PRIORITY: list[str] = list(
-    dict.fromkeys(_R10_ADDITIONS + _rotation._R10_STALE)
-)[:50]
+def gate_order(names, latest: dict[str, int], regate=_REGATE) -> list[str]:
+    """Each round's correctness gate checks the first 50 queries. Lead with
+    ``regate``, then every other query by its latest gate round, oldest
+    first (never gated counts as oldest; ties keep registry order). With
+    no artifacts the order is plain registry order."""
+    if not latest:
+        return list(names)
+    lead = [k for k in regate if k in names]
+    rest = sorted((k for k in names if k not in lead), key=lambda k: latest.get(k, 0))
+    return lead + rest
 
-_rotated = _R13_PRIORITY + [k for k in _dicts.QUERIES if k not in set(_R13_PRIORITY)]
-QUERIES = {k: _dicts.QUERIES[k] for k in _rotated}
-ORACLES = {k: _dicts.ORACLES[k] for k in _rotated}
+
+_order = gate_order(_dicts.QUERIES, latest_gate_rounds())
+QUERIES = {k: _dicts.QUERIES[k] for k in _order}
+ORACLES = {k: _dicts.ORACLES[k] for k in _order}

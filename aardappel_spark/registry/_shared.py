@@ -1,4 +1,4 @@
-"""Shared helpers, CTE constants, and per-session caches for the query registry."""
+"""Shared helpers, CTE constants, and shared-frame builders for the query registry."""
 
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from ..ops.dedup import (
     simhash,
     verify_pairs_jaccard,
 )
+from ..shared_frames import evict, shared_frame
 from ..sources import load_events_ns
 from ..ops.similarity import (
     brute_force_topk,
@@ -38,43 +39,28 @@ from ._dicts import QUERIES, ORACLES  # noqa: F401
 
 __all__ = [
     'IVF_N_CENTROIDS',
-    '_BANDED_SIG_CACHE',
     '_CDC_CTE',
     '_CUTOFF',
     '_GOPHER_STOPS',
-    '_GRAMS4_CACHE',
-    '_PREFIX_RANKED4_CACHE',
     '_HILBERT_LEVELS',
     '_IVF_ASG_CTE',
-    '_IVF_ASSIGN_CACHE',
-    '_IVF_CENTROIDS_CACHE',
     '_LR_ITERS',
     '_LR_LR',
-    '_LR_WEIGHTS_CACHE',
-    '_MINHASH_SIG_CACHE',
     '_MMR_K',
     '_MMR_LAMBDA',
-    '_PAIRS_CACHE',
     '_PAIRS_CTE',
-    '_PQ_CODEBOOK_CACHE',
-    '_PQ_CODES_CACHE',
-    '_SIMHASH64_CACHE',
-    '_SIMHASH_PAIRS_CACHE',
     '_STOP_SQL',
     '_banded_sig_cached',
-    '_cache_key',
     '_communities_oracle_sql',
     '_dec',
     '_docs',
     '_emb_banded_cte',
     '_emb_sig_cte',
     '_grams4_cached',
-    '_GRAMS4_CENSUS_CACHE',
     '_gh60',
     '_grams4_census_cached',
     '_prefix_ranked4_cached',
     '_lsh_scored4_cached',
-    '_LSH_SCORED4_CACHE',
     '_hilbert_ctes',
     '_hilbert_level',
     '_hyperplane_values_sql',
@@ -89,9 +75,7 @@ __all__ = [
     '_clusters_cached',
     '_knn_edges_cached',
     '_media_cached',
-    '_CLUSTERS_CACHE',
     '_minhash_sig_cached',
-    '_SIG12_PAIRS_CACHE',
     '_sig12_cached',
     '_sig12_pairs_cached',
     '_mmr_oracle_sql',
@@ -335,110 +319,46 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.withColumn("text", F.coalesce("text", F.lit("")))
 
 
-# signatures feed the listing query AND the band joins — build once.
-# Cache keys are (applicationId, sf_dir): stable across the session's
-# lifetime (unlike id(), which can be reused after GC) and shared by
-# sibling sessions on one context, whose JVM blocks are shared anyway.
-_MINHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_KNN_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-_MEDIA_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cache_key(spark, sf_dir) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
 def clear_query_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist and evict the memoized shared frames (minhash
-    signatures, LSH pairs, simhash64, cdc parse barrier). With a live
-    session: unpersists that session's frames JVM-side and evicts them.
-    With None: evicts every entry without touching the JVM (for teardown
-    paths where the owning sessions are already stopped). Returns the
-    number of evicted entries. Long-lived processes that cycle sessions
-    should call this on session stop so dead persisted frames don't
-    accumulate in the driver."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    evicted = 0
-    for key in list(_LR_WEIGHTS_CACHE):
-        if app is None or key[0] == app:
-            _LR_WEIGHTS_CACHE.pop(key)
-            evicted += 1
-    for cache in (
-        _LR_FEATS_CACHE,
-        _MINHASH_SIG_CACHE,
-        _SIG12_PAIRS_CACHE,
-        _PAIRS_CACHE,
-        _CLUSTERS_CACHE,
-        _KNN_EDGES_CACHE,
-        _MEDIA_CACHE,
-        _SIMHASH64_CACHE,
-        _SIMHASH_PAIRS_CACHE,
-        _GRAMS4_CACHE,
-        _GRAMS4_CENSUS_CACHE,
-        _LSH_SCORED4_CACHE,
-        _PREFIX_RANKED4_CACHE,
-        _BANDED_SIG_CACHE,
-        _IVF_ASSIGN_CACHE,
-        _PQ_CODES_CACHE,
-    ):
-        for key in list(cache):
-            if app is None or key[0] == app:
-                df = cache.pop(key)
-                evicted += 1
-                if app is not None:
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass  # session already stopped; blocks died with it
-    for key in list(_IVF_CENTROIDS_CACHE):
-        if app is None or key[0] == app:
-            _IVF_CENTROIDS_CACHE.pop(key)
-    for key in list(_PQ_CODEBOOK_CACHE):
-        if app is None or key[0] == app:
-            _PQ_CODEBOOK_CACHE.pop(key)
-    evicted += cdc.clear_parsed_cache(spark)
-    return evicted
+    """Unpersist and evict the memoized shared frames (every
+    ``@shared_frame`` builder, the cdc parse barrier included). With a
+    live session: unpersists that session's frames JVM-side and evicts
+    them. With None: evicts every entry without touching the JVM (for
+    teardown paths where the owning sessions are already stopped).
+    Returns the number of evicted entries. Long-lived processes that
+    cycle sessions should call this on session stop so dead persisted
+    frames don't accumulate in the driver."""
+    return evict(spark)
 
 
+# signatures feed the listing query AND the band joins — build once.
+@shared_frame("minhash_signatures", minhash_sig12=(12,))
 def _minhash_sig_cached(spark, sf_dir, num_hashes: int = 4):
-    """Shared MinHash signature frame, ONE cache for every width (the
+    """Shared MinHash signature frame, ONE builder for every width (the
     key carries num_hashes): the 4-perm signature feeds the near-dup
     pair family, the 12-perm one the (b, r) band sweep and the b-bit
     estimation census."""
-    key = (*_cache_key(spark, sf_dir), num_hashes)
-    if key not in _MINHASH_SIG_CACHE:
-        _MINHASH_SIG_CACHE[key] = minhash_signatures(
-            _docs(spark, sf_dir), num_hashes=num_hashes
-        ).persist()
-    return _MINHASH_SIG_CACHE[key]
+    return minhash_signatures(_docs(spark, sf_dir), num_hashes=num_hashes).persist()
 
 
 def _sig12_cached(spark, sf_dir):
     return _minhash_sig_cached(spark, sf_dir, num_hashes=12)
 
 
-_SIG12_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_frame("minhash_sig12_pairs")
 def _sig12_pairs_cached(spark, sf_dir):
     """Shared pooled candidate universe for the 12-permutation family:
     the aligned 2-band LSH pairs (the dominant shuffle of the band
     sweep AND the b-bit census) built and persisted once."""
-    key = _cache_key(spark, sf_dir)
-    if key not in _SIG12_PAIRS_CACHE:
-        _SIG12_PAIRS_CACHE[key] = minhash_candidate_pairs(
-            _docs(spark, sf_dir),
-            num_hashes=12,
-            band_size=2,
-            sig=_sig12_cached(spark, sf_dir),
-        ).persist()
-    return _SIG12_PAIRS_CACHE[key]
+    return minhash_candidate_pairs(
+        _docs(spark, sf_dir),
+        num_hashes=12,
+        band_size=2,
+        sig=_sig12_cached(spark, sf_dir),
+    ).persist()
 
 
-_LSH_SCORED4_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_frame("lsh_scored4")
 def _lsh_scored4_cached(spark, sf_dir):
     """Shared bits=4 LSH-bucket pair frame with exact unrounded cosine
     (ops.similarity.cosine_lsh_scored_pairs) — the bucket self-join +
@@ -446,18 +366,11 @@ def _lsh_scored4_cached(spark, sf_dir):
     (calibration bins) read; built and persisted once per session."""
     from ..ops.similarity import cosine_lsh_scored_pairs
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _LSH_SCORED4_CACHE:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        _LSH_SCORED4_CACHE[key] = cosine_lsh_scored_pairs(
-            emb, bits=4
-        ).persist()
-    return _LSH_SCORED4_CACHE[key]
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return cosine_lsh_scored_pairs(emb, bits=4).persist()
 
 
-_PREFIX_RANKED4_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_frame("prefix_ranked4")
 def _prefix_ranked4_cached(spark, sf_dir):
     """Shared df-ranked word-4-gram token frame
     (ops.dedup.ranked_token_frame, shingle=4) — the tau-independent
@@ -466,39 +379,21 @@ def _prefix_ranked4_cached(spark, sf_dir):
     and persisted once per session like the minhash/simhash frames."""
     from ..ops.dedup import ranked_token_frame
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _PREFIX_RANKED4_CACHE:
-        _PREFIX_RANKED4_CACHE[key] = ranked_token_frame(
-            _docs(spark, sf_dir), shingle=4
-        ).persist()
-    return _PREFIX_RANKED4_CACHE[key]
+    return ranked_token_frame(_docs(spark, sf_dir), shingle=4).persist()
 
 
-_GRAMS4_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_frame("grams4")
 def _grams4_cached(spark, sf_dir):
     """Shared (doc_id, pos, gram) word-4-gram explode of the whole
     corpus — consumed by decontamination, decontam_bloom, and
     doc_score's contamination leg, so it's built and persisted once."""
     from ..ops.dedup import shingles_col
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _GRAMS4_CACHE:
-        _GRAMS4_CACHE[key] = (
-            _docs(spark, sf_dir)
-            .select(
-                "doc_id", F.posexplode(shingles_col("text", k=4)).alias("pos", "gram")
-            )
-            .persist()
-        )
-    return _GRAMS4_CACHE[key]
-
-
-# one gram-keyed document-frequency census over the shared 4-gram
-# explode — the dominant shuffle of BOTH dedup_span (nd >= 2 cut) and
-# doc_dup_coverage (dup flag); built and persisted once per session
-_GRAMS4_CENSUS_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return (
+        _docs(spark, sf_dir)
+        .select("doc_id", F.posexplode(shingles_col("text", k=4)).alias("pos", "gram"))
+        .persist()
+    )
 
 
 def _gh60(col: str = "gram"):
@@ -508,6 +403,7 @@ def _gh60(col: str = "gram"):
     return F.conv(F.substring(F.md5(F.col(col)), 1, 15), 16, 10).cast("long")
 
 
+@shared_frame("grams4_census")
 def _grams4_census_cached(spark, sf_dir):
     """Shared (gh, nd) census: per 60-bit gram hash, the number of
     DISTINCT documents containing it. dedup_span and doc_dup_coverage
@@ -515,89 +411,64 @@ def _grams4_census_cached(spark, sf_dir):
     heaviest shuffle either query plans — so it is built and persisted
     once like the other shared frames (the gram stream itself stays a
     cheap row-local projection of the persisted _grams4_cached blocks)."""
-    key = _cache_key(spark, sf_dir)
-    if key not in _GRAMS4_CENSUS_CACHE:
-        _GRAMS4_CENSUS_CACHE[key] = (
-            _grams4_cached(spark, sf_dir)
-            .select(_gh60().alias("gh"), "doc_id")
-            .groupBy("gh")
-            .agg(F.count_distinct("doc_id").alias("nd"))
-            .persist()
-        )
-    return _GRAMS4_CENSUS_CACHE[key]
+    return (
+        _grams4_cached(spark, sf_dir)
+        .select(_gh60().alias("gh"), "doc_id")
+        .groupBy("gh")
+        .agg(F.count_distinct("doc_id").alias("nd"))
+        .persist()
+    )
 
 
 # one vectorized signature build (mapInPandas matmul) feeds the top-k,
-# the candidate count and the recall eval — memoize-and-persist like the
-# minhash/simhash shared frames
-_BANDED_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# the candidate count and the recall eval
+@shared_frame("banded_sig")
 def _banded_sig_cached(spark, sf_dir):
     from ..ops.similarity import banded_signature_frame
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _BANDED_SIG_CACHE:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        _BANDED_SIG_CACHE[key] = banded_signature_frame(
-            emb, n_bands=12, band_bits=4
-        ).persist()
-    return _BANDED_SIG_CACHE[key]
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return banded_signature_frame(emb, n_bands=12, band_bits=4).persist()
 
 
 # the wide fingerprint build (two n_tokens*bits shuffles) feeds both the
 # fingerprint listing and the Hamming-band pair join — one materialization
-_SIMHASH64_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_frame("simhash64")
 def _simhash64_cached(spark, sf_dir):
     from ..ops.dedup import simhash_wide
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _SIMHASH64_CACHE:
-        _SIMHASH64_CACHE[key] = simhash_wide(_docs(spark, sf_dir), bits=60).persist()
-    return _SIMHASH64_CACHE[key]
+    return simhash_wide(_docs(spark, sf_dir), bits=60).persist()
 
 
 # the Hamming-band pair join feeds two consumers (the pair listing and
-# dedup_method_agreement) — memoize-and-persist like the MinHash pairs
-_SIMHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# dedup_method_agreement)
+@shared_frame("simhash_pairs")
 def _simhash_pairs_cached(spark, sf_dir):
     from ..ops.dedup import simhash_candidate_pairs
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _SIMHASH_PAIRS_CACHE:
-        _SIMHASH_PAIRS_CACHE[key] = simhash_candidate_pairs(
-            _docs(spark, sf_dir),
-            bits=60,
-            n_bands=4,
-            max_hamming=8,
-            sig=_simhash64_cached(spark, sf_dir),
-        ).persist()
-    return _SIMHASH_PAIRS_CACHE[key]
+    return simhash_candidate_pairs(
+        _docs(spark, sf_dir),
+        bits=60,
+        n_bands=4,
+        max_hamming=8,
+        sig=_simhash64_cached(spark, sf_dir),
+    ).persist()
 
 
 # One LSH candidate-pair build feeds three consumers (pair listing, word
-# Jaccard, n-gram Jaccard) — same memoize-and-persist pattern as
-# cdc_queries.parsed_messages, and the same pipeline reality: candidates
-# are computed once, verification stages fan out from them.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Jaccard, n-gram Jaccard) — the same pipeline reality as
+# cdc_queries.parsed_messages: candidates are computed once,
+# verification stages fan out from them.
+@shared_frame("minhash_pairs")
 def _minhash_pairs_cached(spark, sf_dir):
-    key = _cache_key(spark, sf_dir)
-    if key not in _PAIRS_CACHE:
-        _PAIRS_CACHE[key] = minhash_candidate_pairs(
-            _docs(spark, sf_dir),
-            num_hashes=4,
-            band_size=2,
-            sig=_minhash_sig_cached(spark, sf_dir),
-        ).persist()
-    return _PAIRS_CACHE[key]
+    return minhash_candidate_pairs(
+        _docs(spark, sf_dir),
+        num_hashes=4,
+        band_size=2,
+        sig=_minhash_sig_cached(spark, sf_dir),
+    ).persist()
 
 
+@shared_frame("neardup_clusters")
 def _clusters_cached(spark, sf_dir):
     """Shared near-dup component assignment: every CC consumer
     (dedup_clusters, dedup_survivors, dedup_survivor_quality,
@@ -608,14 +479,12 @@ def _clusters_cached(spark, sf_dir):
     one-job-per-round fix (r9)."""
     from ..ops.dedup import neardup_clusters
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _CLUSTERS_CACHE:
-        _CLUSTERS_CACHE[key] = neardup_clusters(
-            _docs(spark, sf_dir), _minhash_pairs_cached(spark, sf_dir)
-        ).persist()
-    return _CLUSTERS_CACHE[key]
+    return neardup_clusters(
+        _docs(spark, sf_dir), _minhash_pairs_cached(spark, sf_dir)
+    ).persist()
 
 
+@shared_frame("knn_edges")
 def _knn_edges_cached(spark, sf_dir):
     """Shared kNN similarity graph (k=5 over the banded-LSH candidate
     buckets): every graph-family consumer — PageRank, triangles, LPA
@@ -625,18 +494,15 @@ def _knn_edges_cached(spark, sf_dir):
     before the iterative analytics; without this barrier each LPA /
     PageRank / peel ROUND re-derived the bucket matmul + top-5 window
     from scratch (~2.2 s per evaluation at sf0.1 — measured as the r10
-    graph-family bench drift: 3 LPA rounds paid the build 3x). Same
-    memoize-and-persist contract as _clusters_cached; the edge frame is
-    k * n_vectors rows (24 bytes each), trivially memory-resident at
-    any corpus size that fits the embedding table."""
+    graph-family bench drift: 3 LPA rounds paid the build 3x). The edge
+    frame is k * n_vectors rows (24 bytes each), trivially
+    memory-resident at any corpus size that fits the embedding table."""
     from .ann import q_emb_knn_graph
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _KNN_EDGES_CACHE:
-        _KNN_EDGES_CACHE[key] = q_emb_knn_graph(spark, sf_dir).persist()
-    return _KNN_EDGES_CACHE[key]
+    return q_emb_knn_graph(spark, sf_dir).persist()
 
 
+@shared_frame("media_payloads")
 def _media_cached(spark, sf_dir):
     """Shared synthetic-media frame: the five payload-decoding queries
     (decode, pixel_stats, audio_stats, video_frames, aspect_buckets)
@@ -645,23 +511,12 @@ def _media_cached(spark, sf_dir):
     expression — so re-running the engine-portable payload-assembly
     SQL per query charged a fixture-construction cost (~2.1 s at
     sf0.1, 5x) to queries whose real work is the 0.4 s Arrow-batched
-    decode. Memoize-and-persist like the other shared frames; the
-    oracle side keeps assembling payloads in SQL (DuckDB materializes
-    its `media` CTE once per query)."""
+    decode. The oracle side keeps assembling payloads in SQL (DuckDB
+    materializes its `media` CTE once per query)."""
     from ..ops.multimodal import synthetic_media
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _MEDIA_CACHE:
-        _MEDIA_CACHE[key] = synthetic_media(_docs(spark, sf_dir)).persist()
-    return _MEDIA_CACHE[key]
+    return synthetic_media(_docs(spark, sf_dir)).persist()
 
-
-# one deterministic k-means assignment (the IVF build) feeds
-# semantic_dedup's pair generation — memoize-and-persist like the other
-# shared frames so repeated calls don't re-run the build or leak
-# persisted RDDs
-_IVF_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-_IVF_CENTROIDS_CACHE: dict[tuple[str, str], "object"] = {}
 
 # the ONE n_centroids every shared-index consumer uses (build, probe
 # curve, SemDeDup, centroid shift); change it here and every query and
@@ -670,6 +525,7 @@ _IVF_CENTROIDS_CACHE: dict[tuple[str, str], "object"] = {}
 IVF_N_CENTROIDS = 16
 
 
+@shared_frame("ivf_build")
 def _ivf_build_cached(spark, sf_dir):
     """The IVF index built ONCE per (session, sf_dir) and shared by
     every consumer — ann_ivf, the probe curve, centroid shift, and
@@ -678,25 +534,18 @@ def _ivf_build_cached(spark, sf_dir):
     job, queries share the artifact."""
     from ..ops.similarity import ivf_build
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _IVF_ASSIGN_CACHE:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        assigned, centroids = ivf_build(
-            emb, n_centroids=IVF_N_CENTROIDS, refine_iters=1
-        )
-        _IVF_ASSIGN_CACHE[key] = assigned.persist()
-        _IVF_CENTROIDS_CACHE[key] = centroids
-    return _IVF_ASSIGN_CACHE[key], _IVF_CENTROIDS_CACHE[key]
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    assigned, centroids = ivf_build(
+        emb, n_centroids=IVF_N_CENTROIDS, refine_iters=1
+    )
+    return assigned.persist(), centroids
 
 
 def _ivf_assigned_cached(spark, sf_dir):
     return _ivf_build_cached(spark, sf_dir)[0]
 
 
-_PQ_CODES_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PQ_CODEBOOK_CACHE: dict[tuple[str, str], "object"] = {}
-
-
+@shared_frame("pq_build")
 def _pq_build_cached(spark, sf_dir):
     """The PQ index (codes + codebook) built ONCE per (session, sf_dir)
     and shared by ann_pq, the IVFADC composition, and their recall
@@ -704,13 +553,9 @@ def _pq_build_cached(spark, sf_dir):
     jobs, exactly like _ivf_build_cached."""
     from ..ops.similarity import pq_build
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _PQ_CODES_CACHE:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        codes, codebook = pq_build(emb)
-        _PQ_CODES_CACHE[key] = codes.persist()
-        _PQ_CODEBOOK_CACHE[key] = codebook
-    return _PQ_CODES_CACHE[key], _PQ_CODEBOOK_CACHE[key]
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    codes, codebook = pq_build(emb)
+    return codes.persist(), codebook
 
 
 def _dec(c: str) -> F.Column:
@@ -722,18 +567,12 @@ _LR_ITERS = 3
 
 
 # the (n_docs x 6) feature frame is read by the training loop AND by
-# every scoring consumer (quality_lr_score, quality_calibration) —
-# memoize-and-persist like the other shared frames so each query's
-# timed plan starts from the materialized training set instead of
-# re-running the tokenize/explode per consumer
-_LR_FEATS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# every scoring consumer (quality_lr_score, quality_calibration), so each
+# query's timed plan starts from the materialized training set instead
+# of re-running the tokenize/explode per consumer
+@shared_frame("lr_feats")
 def _lr_feats_cached(spark, sf_dir):
-    key = _cache_key(spark, sf_dir)
-    if key not in _LR_FEATS_CACHE:
-        _LR_FEATS_CACHE[key] = _lr_features(_docs(spark, sf_dir)).persist()
-    return _LR_FEATS_CACHE[key]
+    return _lr_features(_docs(spark, sf_dir)).persist()
 
 
 def _lr_features(docs):
@@ -758,14 +597,9 @@ def _lr_features(docs):
 
 # learned weights memoized per (app, sf_dir) like the shared frames —
 # plain floats, nothing persisted JVM-side, so no unpersist lifecycle
-_LR_WEIGHTS_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
+@shared_frame("lr_weights")
 def _lr_weights(spark, sf_dir) -> list[float]:
-    key = _cache_key(spark, sf_dir)
-    if key not in _LR_WEIGHTS_CACHE:
-        _LR_WEIGHTS_CACHE[key] = _lr_train(spark, sf_dir)
-    return _LR_WEIGHTS_CACHE[key]
+    return _lr_train(spark, sf_dir)
 
 
 def _lr_train(spark, sf_dir) -> list[float]:

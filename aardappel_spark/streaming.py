@@ -386,8 +386,7 @@ class ReplicationEngine:
 
     def __post_init__(self):
         self.state = StateStore(self.spark, os.path.join(self.work_dir, "_state"), self.instance_id)
-        self._restore_hb(before_batch_id=None)
-        self._restore_offsets(before_batch_id=None)
+        self._restore_snapshots(before_batch_id=None)
         if not self.initial_scan and self.state.read()["stage"] == STAGE_INITIAL_SCAN:
             # seed straight to RUN when no initial-scan sync is wanted
             st = self.state.read()
@@ -437,114 +436,79 @@ class ReplicationEngine:
             if v < version - 1:
                 shutil.rmtree(os.path.join(self.pending_dir, f"v{v}"), ignore_errors=True)
 
-    # -- heartbeat tracking across batches ------------------------------
+    # -- durable per-batch snapshots: heartbeats (_hb) and offsets (_off) --
+    #
+    # Heartbeat highs: Spark commits source offsets after EVERY successful
+    # foreachBatch return — including pending-only early returns — so
+    # heartbeats consumed in committed batches must survive a driver
+    # restart, or quorum stalls and out-of-order detection silently misses
+    # pre-restart lateness (the reference re-reads uncommitted heartbeats
+    # instead).
+    #
+    # Max-consumed offset per (table_id, partition): the reference's
+    # MakeTopicReaderGuard state (internal/reader/reader.go:32-76). Spark's
+    # checkpoint normally owns resume offsets (S5 by design), but a
+    # partition REBALANCE hands the same partition to a new reader session
+    # whose delivery can overlap already-consumed offsets; the guard is
+    # what drops that overlap.
+    #
+    # Both are versioned like ``_write_pending``: ``<dir>/v{batch}.json``,
+    # keeping v{N} and v{N-1}, so a replayed batch restores the snapshot
+    # written BEFORE it and does not see its own crashed attempt's
+    # heartbeats (they would flag the batch's own events as out-of-order)
+    # or filter its own records.
 
-    def _hb_dir(self) -> str:
-        return os.path.join(self.work_dir, "_hb")
-
-    def _hb_versions(self) -> list[int]:
-        if not os.path.isdir(self._hb_dir()):
+    def _snapshot_versions(self, kind: str) -> list[int]:
+        d = os.path.join(self.work_dir, kind)
+        if not os.path.isdir(d):
             return []
         return sorted(
             int(f[1:-5])
-            for f in os.listdir(self._hb_dir())
+            for f in os.listdir(d)
             if f.startswith("v") and f.endswith(".json")
         )
 
-    def _persist_hb(self, batch_id: int) -> None:
-        """Durable per-partition heartbeat highs, versioned by batch.
-        Spark commits source offsets after EVERY successful foreachBatch
-        return — including pending-only early returns — so heartbeats
-        consumed in committed batches must survive a driver restart, or
-        quorum stalls and out-of-order detection silently misses
-        pre-restart lateness (the reference re-reads uncommitted
-        heartbeats instead). Versioning mirrors ``_write_pending``: a
-        replayed batch restores the snapshot written BEFORE it."""
-        os.makedirs(self._hb_dir(), exist_ok=True)
-        data = [
-            [t, p, str(s), str(x)] for (t, p), (s, x) in self.hb_state.items()
-        ]
-        path = os.path.join(self._hb_dir(), f"v{batch_id}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(data))
-        os.replace(tmp, path)
-        for v in self._hb_versions():
-            if v < batch_id - 1:
-                os.remove(os.path.join(self._hb_dir(), f"v{v}.json"))
+    def _persist_snapshots(self, batch_id: int) -> None:
+        for kind, data in (
+            ("_hb", [[t, p, str(s), str(x)] for (t, p), (s, x) in self.hb_state.items()]),
+            ("_off", [[t, p, o] for (t, p), o in self.off_state.items()]),
+        ):
+            d = os.path.join(self.work_dir, kind)
+            os.makedirs(d, exist_ok=True)
+            path = os.path.join(d, f"v{batch_id}.json")
+            tmp = path + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(json.dumps(data))
+            os.replace(tmp, path)
+            for v in self._snapshot_versions(kind):
+                if v < batch_id - 1:
+                    os.remove(os.path.join(d, f"v{v}.json"))
 
-    def _restore_hb(self, before_batch_id: int | None) -> None:
-        """Reset hb_state to the newest snapshot from an EARLIER batch.
-        A replayed batch must not see its own crashed attempt's
-        heartbeats — they would flag the batch's own events as
-        out-of-order (the batch re-adds them via _update_hb_state)."""
-        versions = [
-            v
-            for v in self._hb_versions()
-            if before_batch_id is None or v < before_batch_id
-        ]
-        self.hb_state = {}
-        if not versions:
-            return
-        path = os.path.join(self._hb_dir(), f"v{versions[-1]}.json")
-        try:
-            data = json.loads(open(path).read())
-        except (FileNotFoundError, json.JSONDecodeError):
-            return
-        for t, p, s, x in data:
-            self.hb_state[(int(t), int(p))] = (Decimal(s), Decimal(x))
+    def _restore_snapshots(self, before_batch_id: int | None) -> None:
+        """Reset hb_state and off_state to the newest snapshots from an
+        EARLIER batch (any batch when ``before_batch_id`` is None)."""
+
+        def newest(kind: str) -> list:
+            versions = [
+                v
+                for v in self._snapshot_versions(kind)
+                if before_batch_id is None or v < before_batch_id
+            ]
+            if not versions:
+                return []
+            path = os.path.join(self.work_dir, kind, f"v{versions[-1]}.json")
+            try:
+                with open(path) as f:
+                    return json.load(f)
+            except (FileNotFoundError, json.JSONDecodeError):
+                return []
+
+        self.hb_state = {
+            (int(t), int(p)): (Decimal(s), Decimal(x)) for t, p, s, x in newest("_hb")
+        }
+        self.off_state = {(int(t), int(p)): int(o) for t, p, o in newest("_off")}
 
     # -- consumed-offset guard (S5) -------------------------------------
-
-    def _off_dir(self) -> str:
-        return os.path.join(self.work_dir, "_off")
-
-    def _off_versions(self) -> list[int]:
-        if not os.path.isdir(self._off_dir()):
-            return []
-        return sorted(
-            int(f[1:-5])
-            for f in os.listdir(self._off_dir())
-            if f.startswith("v") and f.endswith(".json")
-        )
-
-    def _persist_offsets(self, batch_id: int) -> None:
-        """Durable max-consumed offset per (table_id, partition) —
-        the reference's MakeTopicReaderGuard state
-        (internal/reader/reader.go:32-76). Spark's checkpoint normally
-        owns resume offsets (S5 by design), but a partition REBALANCE
-        hands the same partition to a new reader session whose delivery
-        can overlap already-consumed offsets; the guard is what drops
-        that overlap. Versioned like ``_persist_hb`` so a replayed
-        micro-batch restores the snapshot written before it and does not
-        filter its own records."""
-        os.makedirs(self._off_dir(), exist_ok=True)
-        data = [[t, p, o] for (t, p), o in self.off_state.items()]
-        path = os.path.join(self._off_dir(), f"v{batch_id}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(data))
-        os.replace(tmp, path)
-        for v in self._off_versions():
-            if v < batch_id - 1:
-                os.remove(os.path.join(self._off_dir(), f"v{v}.json"))
-
-    def _restore_offsets(self, before_batch_id: int | None) -> None:
-        versions = [
-            v
-            for v in self._off_versions()
-            if before_batch_id is None or v < before_batch_id
-        ]
-        self.off_state = {}
-        if not versions:
-            return
-        path = os.path.join(self._off_dir(), f"v{versions[-1]}.json")
-        try:
-            data = json.loads(open(path).read())
-        except (FileNotFoundError, json.JSONDecodeError):
-            return
-        for t, p, o in data:
-            self.off_state[(int(t), int(p))] = int(o)
 
     def _guard_consumed_offsets(self, raw: DataFrame) -> DataFrame:
         """Drop records at-or-below the max offset already consumed for
@@ -635,8 +599,7 @@ class ReplicationEngine:
         checkpoint = (st["step_id"], st["tx_id"])
         # pre-batch heartbeat state (no-op in steady state; on a replay it
         # rewinds past the crashed attempt's heartbeats)
-        self._restore_hb(before_batch_id=batch_id)
-        self._restore_offsets(before_batch_id=batch_id)
+        self._restore_snapshots(before_batch_id=batch_id)
         # reader-level offset guard (S5): drop rebalance-overlap
         # redelivery BEFORE parse/out-of-order routing, like the
         # reference's topic reader guard
@@ -708,18 +671,14 @@ class ReplicationEngine:
                 )
                 if not synced:
                     self._write_pending(events, batch_id)
-                    self._persist_hb(batch_id)
-                    self._persist_offsets(batch_id)
+                    self._persist_snapshots(batch_id)
                     return
 
             if q is None or q <= checkpoint:
                 # no safe boundary yet — everything stays pending
                 self._write_pending(events, batch_id)
-                self._persist_hb(batch_id)
-                self._persist_offsets(batch_id)
+                self._persist_snapshots(batch_id)
                 return
-
-            import time as _time
 
             quorum_wait = _time.perf_counter() - t_start
             batch = cut_below_quorum(events, q).persist()
@@ -737,8 +696,7 @@ class ReplicationEngine:
             stage = STAGE_RUN  # first successful quorum apply flips stage
             self.state.write(q, stage)
             self._consume_fresh_heartbeats(q)
-            self._persist_hb(batch_id)
-            self._persist_offsets(batch_id)
+            self._persist_snapshots(batch_id)
             self.batches_applied += 1
             self.metrics.on_batch_applied(
                 modifications=n_mods,

@@ -634,24 +634,66 @@ def test_hll_registers_match_python_model(spark, sf_dir):
 
 def test_clear_query_caches_unpersists(spark, sf_dir):
     """ADVICE r2: the memoized shared frames must be evictable — after
-    clear_query_caches the dict entries are gone and the persisted blocks
-    released, so cycling sessions in one process can't accumulate dead
-    frames. Keys are applicationId-based (stable, unlike id())."""
-    from aardappel_spark import registry
+    clear_query_caches the shared-frame table holds none of the session's
+    entries and the persisted blocks are released (the JVM's persistent
+    RDD count is back where it was before the builds), so cycling
+    sessions in one process can't accumulate dead frames. Covers a single
+    frame, a (frame, matrix) tuple and the plain LR weight list. Keys are
+    applicationId-based (stable, unlike id())."""
+    from aardappel_spark import registry, shared_frames
+
+    app = spark.sparkContext.applicationId
+
+    def entries():
+        return [k for k in shared_frames._ENTRIES if k[1] == app]
+
+    def persistent_rdds():
+        spark.sparkContext._jvm.System.gc()
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    registry.clear_query_caches(spark)
+    assert entries() == []
+    before = persistent_rdds()
 
     sig = registry._minhash_sig_cached(spark, sf_dir)
-    registry._minhash_pairs_cached(spark, sf_dir)
+    registry._minhash_pairs_cached(spark, sf_dir).count()
+    assigned, _centroids = registry._ivf_build_cached(spark, sf_dir)
+    assigned.count()
+    weights = registry._lr_weights(spark, sf_dir)  # builds lr_feats too
+    assert registry._lr_weights(spark, sf_dir) is weights
     sig.count()  # materialize the persist
     assert sig.storageLevel.useMemory or sig.storageLevel.useDisk
+    built = entries()
+    assert {"minhash_signatures", "minhash_pairs", "ivf_build",
+            "lr_feats", "lr_weights"} <= {k[0] for k in built}
+    assert persistent_rdds() > before
 
     n = registry.clear_query_caches(spark)
-    assert n >= 2
+    assert n == len(built) >= 5
     assert not (sig.storageLevel.useMemory or sig.storageLevel.useDisk)
-    assert not registry._MINHASH_SIG_CACHE and not registry._PAIRS_CACHE
+    assert not (assigned.storageLevel.useMemory or assigned.storageLevel.useDisk)
+    assert entries() == []
+    assert persistent_rdds() == before
 
     # rebuild works after eviction (fresh frame, not the stale one)
     assert registry._minhash_sig_cached(spark, sf_dir) is not sig
     registry.clear_query_caches(spark)
+
+
+def test_bench_warmups_come_from_shared_frame_table(spark, sf_dir):
+    """bench.py warms exactly the shared-frame table's builders (and
+    their variants, e.g. the 12-permutation signature) plus the
+    streaming-twin kernels — no hand-kept list to drift from the
+    builders clear_query_caches evicts. Building the dict runs nothing."""
+    import bench
+    from aardappel_spark import shared_frames
+
+    names = list(bench.warmup_builds(spark, sf_dir))
+    table = [n for fn in shared_frames.BUILDERS.values() for n in fn.warmups]
+    assert names == table + ["setsim_stream_kernels"]
+    assert {"cdc_parse", "minhash_signatures", "minhash_sig12",
+            "minhash_sig12_pairs", "lr_feats"} <= set(names)
+    assert len(names) == len(set(names))
 
 
 def test_cosine_neardup_pairs_refuses_large_input(spark, sf_dir):
@@ -1617,40 +1659,40 @@ def test_bench_compact_line_fits_tail_window():
     assert len(parsed_small["queries"]) == 10 and "other_n" not in parsed_small
 
 
-def test_driver_rotation_first_50_are_round13_priority():
-    """The harness gates correctness on the first 50 queries() entries;
-    pin the rotation so the round-13 artifact covers the right set —
-    the queries whose output/plan changed this round lead (gated the
-    round they change), then ALL 29 rows whose latest driver gate is
-    r07 (the staleness promise from the r12 rotation comment), then
-    the r08 block in name order fills the remaining slots."""
-    import json
-
+def test_gate_order_leads_with_regates_then_stalest():
+    """Each round's correctness gate checks the first 50 queries() entries.
+    The order is derived from the committed CORRECTNESS artifacts: the
+    explicit re-gates (plan/output changed since their last gate row)
+    lead in order, then the stalest rows by latest gate round, so every
+    query at the oldest round is inside the next gate."""
     import __spark_entry__ as entry_mod
-    from aardappel_spark.registry import (
-        ORACLES,
-        _R13_ADDITIONS,
-        _R13_PRIORITY,
-        _rotation,
-    )
+    from aardappel_spark.registry import ORACLES, _REGATE, latest_gate_rounds
 
-    q = entry_mod.queries()
-    assert list(q)[:50] == _R13_PRIORITY
-    # this round's re-gates must lead; pin against the rotation source
-    # (not a literal) so the pin cannot go stale when names shift
-    assert _R13_PRIORITY[: len(_R13_ADDITIONS)] == _R13_ADDITIONS
-    assert _R13_PRIORITY[0] == _rotation.R13_ADDITION_NAMES[0]
-    # every r07-stale row (computed from the committed artifacts) must
-    # be inside this round's gate — the staleness promise, enforced
-    latest = {}
-    for r in range(1, 13):
-        with open(f"CORRECTNESS_r{r:02d}.json") as fh:
-            for k in json.load(fh):
-                latest[k] = max(latest.get(k, 0), r)
-    r07 = {k for k, v in latest.items() if v == 7}
-    assert r07 <= set(_R13_PRIORITY), sorted(r07 - set(_R13_PRIORITY))
-    assert list(entry_mod.oracle_sql()) == list(q)
+    q = list(entry_mod.queries())
+    first = q[:50]
+    assert first[: len(_REGATE)] == _REGATE
+    latest = latest_gate_rounds()
+    assert set(latest) == set(q)  # every query has a gate row today
+    rest = first[len(_REGATE):]
+    others = [k for k in q if k not in _REGATE]
+    # the rest of the first 50 are the stalest rows, oldest first
+    assert [latest[k] for k in rest] == sorted(latest[k] for k in others)[: len(rest)]
+    assert max(latest[k] for k in rest) <= min(latest[k] for k in q[50:])
+    oldest = min(latest[k] for k in others)
+    assert {k for k in others if latest[k] == oldest} <= set(first)
+    assert list(entry_mod.oracle_sql()) == q
     assert set(ORACLES) == set(q)
+
+
+def test_gate_order_ties_and_fallback():
+    """Ties keep registry order, a never-gated query counts as oldest,
+    and with no artifacts the order is plain registry order."""
+    from aardappel_spark.registry import gate_order
+
+    names = ["a", "b", "c", "d", "e"]
+    latest = {"a": 9, "b": 8, "c": 9, "e": 8}
+    assert gate_order(names, latest, regate=["c"]) == ["c", "d", "b", "e", "a"]
+    assert gate_order(names, {}, regate=["c"]) == names
 
 
 def test_dedup_span_matches_python_model(spark, tmp_path):

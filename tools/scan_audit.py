@@ -49,8 +49,8 @@ ALLOW = {
     "dedup_simhash_pairs", "doc_simhash_hamming_hist", "decontam_bloom",
     "split_leakage",
     # sig12 family: both censuses read the SAME persisted frames
-    # (_sig12_cached signature + _sig12_pairs_cached aligned-2-band
-    # universe, registry/_shared.py:399-418). Pre-materialization the
+    # (the registry's _sig12_cached signature + _sig12_pairs_cached
+    # aligned-2-band universe). Pre-materialization the
     # cache lineage prints per reference — 12 of the 16 `documents`
     # hits are the 6 band self-joins' (2x sig) build subtrees, 2 are
     # the signature consumers, 2 the token-array legs; at runtime the
