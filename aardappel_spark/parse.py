@@ -160,18 +160,26 @@ def parse_messages(
     return out
 
 
+def is_event() -> Column:
+    """Row predicate of ``split_events`` over parsed messages."""
+    return F.col("error").isNull() & F.col("op").isin(OP_UPDATE, OP_ERASE)
+
+
+def is_heartbeat() -> Column:
+    """Row predicate of ``split_heartbeats`` over parsed messages."""
+    return F.col("error").isNull() & (F.col("op") == OP_RESOLVED)
+
+
 def split_events(parsed: DataFrame) -> DataFrame:
     """Data changes only (update/erase), valid rows."""
-    return parsed.filter(
-        F.col("error").isNull() & F.col("op").isin(OP_UPDATE, OP_ERASE)
-    )
+    return parsed.filter(is_event())
 
 
 def split_heartbeats(parsed: DataFrame) -> DataFrame:
     """Resolved-timestamp (heartbeat) rows: (table_id, partition, step, tx_id)."""
-    return parsed.filter(
-        F.col("error").isNull() & (F.col("op") == OP_RESOLVED)
-    ).select("table_id", "partition", "offset", "step", "tx_id", "seq")
+    return parsed.filter(is_heartbeat()).select(
+        "table_id", "partition", "offset", "step", "tx_id", "seq"
+    )
 
 
 def split_problems(parsed: DataFrame) -> DataFrame:

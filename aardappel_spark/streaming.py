@@ -39,7 +39,16 @@ from .cmdqueue import parse_commands, resolve_problem_actions
 from .keyfilter import filter_blocked_keys
 from .localrel import empty_df, local_df
 from .metrics import MetricsRegistry
-from .parse import parse_messages, split_events, split_heartbeats, split_problems
+# split_heartbeats and get_quorum are unused here but stay bound: the
+# benchmark's tracer wraps the parse/quorum names this module binds
+from .parse import (
+    is_event,
+    is_heartbeat,
+    parse_messages,
+    split_events,
+    split_heartbeats,
+    split_problems,
+)
 from .quorum import cut_below_quorum, get_quorum
 from .types import CDC_EVENT_SCHEMA, OP_RESOLVED, pos, pos_lit
 
@@ -508,57 +517,63 @@ class ReplicationEngine:
         }
         self.off_state = {(int(t), int(p)): int(o) for t, p, o in newest("_off")}
 
-    # -- consumed-offset guard (S5) -------------------------------------
+    # -- consumed-offset guard (S5) and the batch census ---------------
 
-    def _guard_consumed_offsets(self, raw: DataFrame) -> DataFrame:
+    def _guard_consumed_offsets(self, parsed: DataFrame) -> DataFrame:
         """Drop records at-or-below the max offset already consumed for
         their (table_id, partition) — exactly-once across an
-        at-least-once rebalance overlap — then advance the guard from
-        the survivors. Broadcast anti-condition join: the guard table is
-        O(partitions) rows, the stream side never shuffles."""
-        cols = raw.columns
-        if "offset" not in cols:
-            return raw
-        has_table = "table_id" in cols
-        if self.off_state:
-            rows = [
-                (t, p, o) for (t, p), o in self.off_state.items()
-            ]
-            guard = local_df(
-                self.spark, rows, "table_id int, partition int, _consumed long"
+        at-least-once rebalance overlap. Broadcast anti-condition join:
+        the guard table is O(partitions) rows, the stream side never
+        shuffles. The guard advances from the survivors' census
+        (``_advance_offsets``)."""
+        if not self.off_state:
+            return parsed
+        guard = local_df(
+            self.spark,
+            [(t, p, o) for (t, p), o in self.off_state.items()],
+            "table_id int, partition int, _consumed long",
+        )
+        return (
+            parsed.join(F.broadcast(guard), ["table_id", "partition"], "left")
+            .filter(
+                F.col("_consumed").isNull() | (F.col("offset") > F.col("_consumed"))
             )
-            if not has_table:
-                guard = guard.drop("table_id")
-            keys = ["table_id", "partition"] if has_table else ["partition"]
-            raw = (
-                raw.join(F.broadcast(guard), keys, "left")
-                .filter(
-                    F.col("_consumed").isNull()
-                    | (F.col("offset") > F.col("_consumed"))
-                )
-                .drop("_consumed")
-            )
-        for r in (
-            raw.groupBy(
-                *(["table_id", "partition"] if has_table else ["partition"])
-            )
-            .agg(F.max("offset").alias("_max_off"))
-            .collect()
-        ):
-            k = (r.table_id if has_table else 0, r.partition)
-            cur = self.off_state.get(k)
-            if cur is None or r._max_off > cur:
-                self.off_state[k] = r._max_off
-        return raw
+            .drop("_consumed")
+        )
 
-    def _update_hb_state(self, heartbeats: DataFrame) -> set[tuple[int, int]]:
+    @staticmethod
+    def _census(parsed: DataFrame) -> list:
+        """The batch's one driver-side aggregate, per (table_id,
+        partition): max offset (guard advance), newest heartbeat (quorum),
+        error-row count (problem routing) and oldest event position
+        (out-of-order test). One job over the persisted parse replaces a
+        collect or count per question."""
+        return (
+            parsed.groupBy("table_id", "partition")
+            .agg(
+                F.max("offset").alias("max_off"),
+                F.max(F.when(is_heartbeat(), pos())).alias("hb"),
+                F.count_if(F.col("error").isNotNull()).alias("n_problems"),
+                F.min(F.when(is_event(), pos())).alias("min_ev"),
+            )
+            .collect()
+        )
+
+    def _advance_offsets(self, census: list) -> None:
+        for r in census:
+            k = (r.table_id, r.partition)
+            cur = self.off_state.get(k)
+            if cur is None or r.max_off > cur:
+                self.off_state[k] = r.max_off
+
+    def _update_hb_state(self, census: list) -> set[tuple[int, int]]:
         """Fold a batch's heartbeats into ``hb_state``; returns the set of
         (table_id, partition) keys that heartbeated in THIS batch (fresh
         keys for the W2 guard, whether or not they advanced the high)."""
         seen: set[tuple[int, int]] = set()
-        for r in heartbeats.groupBy("table_id", "partition").agg(
-            F.max(pos()).alias("hb")
-        ).collect():
+        for r in census:
+            if r.hb is None:
+                continue
             k = (r.table_id, r.partition)
             seen.add(k)
             cur = self.hb_state.get(k)
@@ -600,29 +615,33 @@ class ReplicationEngine:
         # pre-batch heartbeat state (no-op in steady state; on a replay it
         # rewinds past the crashed attempt's heartbeats)
         self._restore_snapshots(before_batch_id=batch_id)
-        # reader-level offset guard (S5): drop rebalance-overlap
-        # redelivery BEFORE parse/out-of-order routing, like the
-        # reference's topic reader guard
-        raw = self._guard_consumed_offsets(raw)
 
         cols = raw.columns
+        has_offset = "offset" in cols
         parsed = parse_messages(
             raw,
             table_id_col="table_id" if "table_id" in cols else None,
             partition_col="partition" if "partition" in cols else None,
-            offset_col="offset" if "offset" in cols else None,
-        ).persist()
+            offset_col="offset" if has_offset else None,
+        )
+        if has_offset:
+            # reader-level offset guard (S5): drop rebalance-overlap
+            # redelivery BEFORE out-of-order routing, like the reference's
+            # topic reader guard
+            parsed = self._guard_consumed_offsets(parsed)
+        parsed = parsed.persist()
         try:
-            problems = split_problems(parsed)
-            n_problems = problems.count()
-            if n_problems:
-                self._route_problems(problems, st, parsed=parsed)
+            census = self._census(parsed)
+            if has_offset:
+                self._advance_offsets(census)
+            if any(r.n_problems for r in census):
+                self._route_problems(split_problems(parsed), st, parsed=parsed)
 
             # snapshot BEFORE this batch's heartbeats: out-of-order means
             # older than a heartbeat the stream had already emitted
             # (verifyStream, reader.go:150-207)
             hb_before = dict(self.hb_state)
-            seen_hb = self._update_hb_state(split_heartbeats(parsed))
+            seen_hb = self._update_hb_state(census)
             self._note_fresh_heartbeats(seen_hb, _time.time())
 
             events = split_events(parsed).select(
@@ -631,8 +650,17 @@ class ReplicationEngine:
             # out-of-order routing first (read-path order: verifyStream runs
             # before EnqueueTx's stale filter, reader.go:243); an 'apply'
             # override below the checkpoint is still dropped by F1 next,
-            # exactly like EnqueueTx would drop it.
-            events = self._route_out_of_order(events, hb_before, st)
+            # exactly like EnqueueTx would drop it. The census says whether
+            # any partition's oldest event is behind its heartbeat, so a
+            # batch with no late event plans no join.
+            if any(
+                r.min_ev is not None
+                and (r.table_id, r.partition) in hb_before
+                and (r.min_ev.step, r.min_ev.tx_id)
+                < hb_before[(r.table_id, r.partition)]
+                for r in census
+            ):
+                events = self._route_out_of_order(events, hb_before, st)
             # stale filter (F1): strictly-below-checkpoint replays dropped
             events = events.filter(pos() >= pos_lit(*checkpoint))
             if self.blocked_keys is not None:
@@ -778,17 +806,14 @@ class ReplicationEngine:
         st: dict,
     ) -> DataFrame:
         """F4/W3: events older than their partition's last-known heartbeat
-        are problem messages. Resolution order (README.md:577-610):
-        command-queue override ('apply' keeps, 'skip' drops+DLQ), else the
-        stream's problem strategy ('continue' = DLQ+drop, 'stop' = persist
-        FATAL_ERROR and die)."""
-        if not hb_before:
-            return events
-        hb_rows = [
-            (t, p, s, x) for (t, p), (s, x) in hb_before.items()
-        ]
-        hb_df = self.spark.createDataFrame(
-            hb_rows,
+        are problem messages; the caller's census found at least one.
+        Resolution order (README.md:577-610): command-queue override
+        ('apply' keeps, 'skip' drops+DLQ), else the stream's problem
+        strategy ('continue' = DLQ+drop, 'stop' = persist FATAL_ERROR and
+        die)."""
+        hb_df = local_df(
+            self.spark,
+            [(t, p, s, x) for (t, p), (s, x) in hb_before.items()],
             "table_id int, partition int, hb_step decimal(20,0), hb_tx decimal(20,0)",
         )
         marked = events.join(F.broadcast(hb_df), ["table_id", "partition"], "left")
@@ -796,8 +821,6 @@ class ReplicationEngine:
             pos() < F.struct(F.col("hb_step").alias("step"), F.col("hb_tx").alias("tx_id"))
         )
         late = marked.filter(late_cond).drop("hb_step", "hb_tx")
-        if late.isEmpty():
-            return events
         ok = marked.filter(~F.coalesce(late_cond, F.lit(False))).drop("hb_step", "hb_tx")
 
         if self.commands is not None:

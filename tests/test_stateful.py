@@ -2,6 +2,8 @@
 
 import json
 import os
+import re
+
 import pytest
 
 
@@ -2252,8 +2254,15 @@ def test_setsim_verify_join_evaluates_sets_union_once(
     # re-derives it (no file scan of sets/, no re-planned Union)
     assert "FileScan" not in batch1_plan, batch1_plan
     assert "Union" not in batch1_plan, batch1_plan
-    # cand + the two union legs
-    assert batch1_plan.count("Scan ExistingRDD") == 3, batch1_plan
+    # the scans' column sets name what they read: cand's pinned pairs,
+    # and the pinned union on each key leg (at least one scan per leg —
+    # a bound, so a different join strategy cannot flake the pin)
+    scans = [
+        re.sub(r"#\d+L?", "", cols).split(",")
+        for cols in re.findall(r"Scan ExistingRDD\[([^\]]*)\]", batch1_plan)
+    ]
+    assert scans.count(["id_a", "id_b"]) >= 1, batch1_plan
+    assert scans.count(["id", "toks", "n"]) >= 2, batch1_plan
 
 
 def test_read_counts_total_driver_side(spark, tmp_path):

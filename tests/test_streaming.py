@@ -1079,6 +1079,123 @@ def test_kafka_replay_rebalance_offset_overlap_deduped(spark, tmp_path):
     assert st["step_id"] == Decimal(99) and st["stage"] == STAGE_RUN
 
 
+def test_redelivered_record_guarded_while_late_event_goes_to_dlq(spark, tmp_path):
+    """One batch holds a rebalance-redelivered record that is older than
+    its partition's heartbeat and a genuinely late event (new offset,
+    position behind that heartbeat). The offset guard must drop the
+    redelivery silently — no DLQ row, no re-apply — while the late event
+    lands in the DLQ as out_of_order."""
+    tmp = str(tmp_path)
+    eng = make_engine(spark, tmp)
+    for s in eng.streams:
+        s.problem_strategy = "continue"
+    raw_schema = "partition int, offset long, value string"
+    # batch 0: partition 0 heartbeats at 30, partition 1 at 15 -> quorum
+    # 15 applies user 1 (step 10)
+    eng.process_batch(
+        spark.createDataFrame(
+            [
+                (0, 1, msg_update(1, "orig", 10, 1)),
+                (0, 2, msg_hb(30)),
+                (1, 1, msg_hb(15)),
+            ],
+            raw_schema,
+        ),
+        0,
+    )
+    assert {r.user_id: r.value for r in eng.tables[0].current().collect()} == {
+        1: "orig"
+    }
+    # batch 1: offset 1 re-delivered (step 10 < partition 0's hb 30,
+    # payload mutated so a re-apply would show), offset 3 is a new record
+    # at step 20 < 30 (genuinely late, above the checkpoint 15)
+    eng.process_batch(
+        spark.createDataFrame(
+            [
+                (0, 1, msg_update(1, "REPLAYED", 10, 1)),
+                (0, 3, msg_update(2, "late", 20, 1)),
+                (0, 4, msg_update(3, "fresh", 40, 1)),
+                (0, 5, msg_hb(50)),
+                (1, 2, msg_hb(50)),
+            ],
+            raw_schema,
+        ),
+        1,
+    )
+    dlq = spark.read.parquet(eng.dlq_dir).collect()
+    assert [(r.offset, r._reason) for r in dlq] == [(3, "out_of_order")]
+    got = {r.user_id: r.value for r in eng.tables[0].current().collect()}
+    assert got == {1: "orig", 3: "fresh"}
+    assert eng.off_state == {(0, 0): 5, (0, 1): 2}
+    assert eng.state.read()["step_id"] == Decimal(50)
+
+
+def _steady_state_engine(spark, tmp):
+    """An engine plus a maker of same-shaped steady-state batches, read
+    from JSONL files like the file stream source. Batch k updates the same
+    keys on every partition below the heartbeat (k+1)*1000 that all
+    partitions send, plus one update above it that carries over through
+    `_pending` into batch k+1, so every batch advances the quorum and
+    applies the previous carry-over."""
+    n_partitions, per_partition = 4, 6
+    eng = make_engine(spark, tmp, n_partitions=n_partitions)
+
+    def batch(k):
+        hb = (k + 1) * 1000
+        rows = []
+        for p in range(n_partitions):
+            off = k * 100 + p * 10
+            for i in range(per_partition):
+                uid = p * per_partition + i
+                rows.append((p, off + i, msg_update(uid, f"k{k}", hb - 900 + i, 1)))
+            rows.append((p, off + per_partition, msg_update(1000 + p, f"c{k}", hb + 5, 1)))
+            rows.append((p, off + per_partition + 1, msg_hb(hb)))
+        src = os.path.join(tmp, f"b{k}")
+        write_jsonl(os.path.join(src, "f.jsonl"), rows)
+        return spark.read.schema("partition int, offset long, value string").json(src)
+
+    return eng, batch
+
+
+def test_steady_state_cdc_batch_compiles_no_code(spark, tmp_path):
+    """After warm-up, a steady-state batch of the same shape generates
+    only code the session already compiled: every per-batch value (guard
+    offsets, heartbeats, checkpoint, quorum) enters its plans as data or
+    as a reference literal, and the codegen cache holds a whole batch's
+    classes, so the batch adds nothing to Spark's compile counter."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    eng, batch = _steady_state_engine(spark, str(tmp_path))
+    for k in range(3):
+        eng.process_batch(batch(k), k)
+    raw = batch(3)
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    eng.process_batch(raw, 3)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == before
+    assert eng.state.read()["step_id"] == Decimal(4000)
+
+
+def test_steady_state_cdc_batch_job_bound(spark, tmp_path):
+    """A steady-state batch runs at most 15 Spark jobs: one census
+    aggregate answers the offset guard, heartbeat, problem and
+    out-of-order questions. An upper bound, not an exact pin: AQE may
+    plan fewer."""
+    sc = spark.sparkContext
+    eng, batch = _steady_state_engine(spark, str(tmp_path))
+    for k in range(3):
+        eng.process_batch(batch(k), k)
+    raw = batch(3)
+    group = f"steady-state-{tmp_path.name}"
+    sc.setJobGroup(group, "steady-state CDC batch")
+    try:
+        eng.process_batch(raw, 3)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 15, sorted(jobs)
+    assert eng.state.read()["step_id"] == Decimal(4000)
+
+
 @pytest.mark.skipif(
     not os.environ.get("KAFKA_BOOTSTRAP"),
     reason="no live Kafka broker (set KAFKA_BOOTSTRAP=host:port to enable)",
