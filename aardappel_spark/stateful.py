@@ -32,7 +32,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-def _read_store_or_empty(spark, path: str, schema: str) -> DataFrame:
+def _read_store_or_empty(
+    spark, path: str, schema: str | StructType
+) -> DataFrame:
     """Read a parquet state store, treating ONLY 'no committed data'
     as 'first batch / empty corpus': a missing path (PATH_NOT_FOUND)
     or a directory with no parquet footers (UNABLE_TO_INFER_SCHEMA —
@@ -45,9 +47,19 @@ def _read_store_or_empty(spark, path: str, schema: str) -> DataFrame:
     Spark 4), any other AnalysisException: swallowing one would
     silently forget all history, re-admit duplicates, and drop
     detections (r10+r11 ADVICE; the r10 narrowing from bare ``except``
-    was still too broad)."""
+    was still too broad).
+
+    ``schema`` is either a DDL string — the empty frame's schema; the
+    store's own schema is then inferred from its parquet footers,
+    which costs a Spark job — or the StructType an earlier read of the
+    same store inferred (see ``_store_reader``), which skips that job.
+    An empty directory then reads as zero rows without the
+    UNABLE_TO_INFER_SCHEMA detour; a missing path and a mixed layout
+    fail exactly as above."""
     try:
-        return spark.read.parquet(path)
+        if isinstance(schema, str):
+            return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
         cond = e.getCondition() if hasattr(e, "getCondition") else None
         if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or (
@@ -64,7 +76,9 @@ def _read_store_or_empty(spark, path: str, schema: str) -> DataFrame:
         raise
 
 
-def _read_store_buckets(spark, path: str, schema: str, buckets) -> DataFrame:
+def _read_store_buckets(
+    spark, path: str, schema: str | StructType, buckets
+) -> DataFrame:
     """Bucket-pruned state-store read: the filter on the hive
     partition column ``bucket`` is applied to the bare scan, before
     any projection, so Spark partition-discovers ``batch=<id>/
@@ -82,6 +96,61 @@ def _read_store_buckets(spark, path: str, schema: str, buckets) -> DataFrame:
     return df.filter(F.col("bucket").isin(bks) if bks else F.lit(False))
 
 
+def _store_reader():
+    """One kernel instance's bucket-pruned store reader
+    (``_read_store_buckets``) that infers each store's schema once.
+    Inference reads parquet footers in a Spark job, and a kernel reads
+    one to three stores per micro-batch, so inferring on every read is a
+    fixed cost of every batch. The first read that finds committed data
+    keeps the inferred StructType here, in the instance, and later reads
+    hand it to Spark. It is inferred, never declared: a declared schema
+    would read a legacy flat store's missing ``bucket`` column as NULL
+    and silently forget all history, where the inferred one fails fast
+    on it. Every committed row sits under a ``batch=<id>`` dir, so a
+    frame with a ``batch`` column came from footers, not from the
+    empty-store fallback."""
+    inferred: dict[str, StructType] = {}
+
+    def read(spark, path: str, schema: str, buckets) -> DataFrame:
+        df = _read_store_buckets(
+            spark, path, inferred.get(path, schema), buckets
+        )
+        if path not in inferred and "batch" in df.columns:
+            inferred[path] = df.schema
+        return df
+
+    return read
+
+
+def _write_buckets(df: DataFrame, path: str) -> None:
+    """Overwrite ``path`` with ``df`` hive-partitioned by ``bucket``,
+    ONE file per bucket dir. partitionBy alone fans out to (task
+    partitions x buckets) tiny files (r12 measured 2x on the whole
+    replay). Hash-partitioning on ``bucket`` first puts each bucket's
+    rows in one shuffle partition, and AQE only merges whole partitions,
+    so it still writes one file per bucket while it sizes the write to
+    the data: a micro-batch of a few KB per bucket is written by one or
+    two tasks, where one fixed partition per bucket would run one task
+    per bucket. AQE merges only partitions below its advisory size, so
+    at scale the write still runs one task per bucket."""
+    df.repartition("bucket").write.partitionBy("bucket").mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def _unpin(*frames: DataFrame) -> None:
+    """Release the blocks of frames pinned with ``localCheckpoint``.
+    Dropping the Python frame frees them only once the JVM's GC runs
+    the ContextCleaner, so a long stream would otherwise hold every
+    batch's pins in the block manager."""
+    for df in frames:
+        # what the ContextCleaner runs; RDD.unpersist would also warn
+        # that a local checkpoint cannot be recomputed
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+            df._jdf.logicalPlan().rdd().id(), False
+        )
+
+
 def _read_counts_total(path: str, exclude_bid: int) -> int:
     """Driver-side read of the one-row-per-batch ``counts/`` sidecar:
     ``sum(n)`` over rows with ``bid != exclude_bid``. The sidecar is
@@ -94,7 +163,9 @@ def _read_counts_total(path: str, exclude_bid: int) -> int:
     _read_store_or_empty); an unreadable committed file propagates —
     silently dropping sidecar rows would loosen nothing (the guard
     bound only TIGHTENS when the corpus is under-counted) but a
-    corrupt store should still surface."""
+    corrupt store should still surface. Like Spark's reader it skips
+    ``_``/``.`` dirs: a ``_temporary`` dir holds a write that never
+    committed, and its rows (or its torn file) are not corpus."""
     import os
 
     import pyarrow.parquet as pq
@@ -102,7 +173,8 @@ def _read_counts_total(path: str, exclude_bid: int) -> int:
     if not os.path.isdir(path):
         return 0
     total = 0
-    for dirpath, _, files in os.walk(path):
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for f in files:
             if f.startswith(("_", ".")):
                 continue
@@ -135,9 +207,7 @@ def _recover_compaction(path: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _compact_bucketed_store(
-    spark, path: str, schema: str, n_buckets: int = 16
-) -> tuple[int, int]:
+def _compact_bucketed_store(spark, path: str, schema: str) -> tuple[int, int]:
     """Compact a ``batch=<id>/bucket=<b>`` streaming state store to a
     single ``batch=-1`` dir with ONE file per bucket. The per-batch
     layout keeps writes idempotent, but an unbounded run accumulates
@@ -172,16 +242,14 @@ def _compact_bucketed_store(
     before = _nfiles(path)
     cols = [c.split()[0] for c in schema.split(",")]
     tmp = path + ".compacting"
-    df.select(*cols).repartition(n_buckets, "bucket").write.partitionBy(
-        "bucket"
-    ).mode("overwrite").parquet(f"{tmp}/batch=-1")
+    _write_buckets(df.select(*cols), f"{tmp}/batch=-1")
     os.rename(path, path + ".old")
     os.rename(tmp, path)
     shutil.rmtree(path + ".old")
     return (before, _nfiles(path))
 
 
-def compact_setsim_store(spark, store_dir: str, n_buckets: int = 16) -> dict:
+def compact_setsim_store(spark, store_dir: str) -> dict:
     """Compact all three sub-stores of ``incremental_setsim_batch``
     (postings, sets, and the counts sidecar — the sidecar folds to a
     single total row under ``bid=-1``, which the guard's
@@ -195,11 +263,11 @@ def compact_setsim_store(spark, store_dir: str, n_buckets: int = 16) -> dict:
     out = {
         "postings": _compact_bucketed_store(
             spark, f"{store_dir}/postings",
-            "tok string, id long, n long, rn long, bucket int", n_buckets,
+            "tok string, id long, n long, rn long, bucket int",
         ),
         "sets": _compact_bucketed_store(
             spark, f"{store_dir}/sets",
-            "id long, toks array<string>, n long, bucket int", n_buckets,
+            "id long, toks array<string>, n long, bucket int",
         ),
     }
     counts_path = f"{store_dir}/counts"
@@ -220,12 +288,10 @@ def compact_setsim_store(spark, store_dir: str, n_buckets: int = 16) -> dict:
     return out
 
 
-def compact_dedup_store(spark, store_path: str, n_buckets: int = 16):
+def compact_dedup_store(spark, store_path: str):
     """Compact the ``incremental_dedup_batch`` fingerprint store to one
     file per bucket (same contract as ``compact_setsim_store``)."""
-    return _compact_bucketed_store(
-        spark, store_path, "fp string, bucket int", n_buckets
-    )
+    return _compact_bucketed_store(spark, store_path, "fp string, bucket int")
 
 
 LWW_OUTPUT_SCHEMA = StructType(
@@ -974,6 +1040,7 @@ def incremental_dedup_batch(
     # BEFORE the first read, or the store could read as 'first batch'
     # and silently forget the corpus (the r10/r11 ADVICE class)
     _recover_compaction(store_path)
+    read_store = _store_reader()
 
     def fn(batch_df, batch_id):
         spark = batch_df.sparkSession
@@ -990,32 +1057,39 @@ def incremental_dedup_batch(
                 ),
             )
             # one fingerprint pass feeds the bucket list, the
-            # anti-join, and the store write. eager=False: the bucket
-            # collect below is the first consumer and materializes the
-            # blocks — an eager checkpoint spent an extra job per batch
+            # anti-join, and the store write. eager=False saves only
+            # the checkpoint's own collect job: under AQE the shuffle
+            # stages still run here, and the final stage with the
+            # bucket collect below
             .localCheckpoint(eager=False)
         )
-        # anti-join reads ONLY the buckets this batch's fps hash to;
-        # missing path = first batch; any other read error propagates
-        # (r10/r11 ADVICE: silently forgetting history re-admits dups)
-        fp_bks = [r._bk for r in batch.select("_bk").distinct().collect()]
-        store = _read_store_buckets(
-            spark, store_path, "fp string, bucket int", fp_bks
-        ).select("fp")
-        fresh = batch.join(
-            store, batch["_fp"] == store["fp"], "left_anti"
-        ).localCheckpoint()  # pin survivors BEFORE the store grows
-        if sink is not None:
-            sink(fresh.drop("_fp", "_bk"), batch_id)
-        if not fresh.isEmpty():
-            # overwrite-by-batch (idempotent under replay); repartition
-            # on the bucket key first — partitionBy alone fans out to
-            # (task partitions x buckets) tiny files (r12 measured 2x)
-            fresh.select(
-                F.col("_fp").alias("fp"), F.col("_bk").alias("bucket")
-            ).repartition(n_buckets, "bucket").write.partitionBy(
-                "bucket"
-            ).mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
+        try:
+            # anti-join reads ONLY the buckets this batch's fps hash
+            # to; missing path = first batch; any other read error
+            # propagates (r10/r11 ADVICE: silently forgetting history
+            # re-admits dups)
+            fp_bks = [
+                r._bk for r in batch.select("_bk").distinct().collect()
+            ]
+            store = read_store(
+                spark, store_path, "fp string, bucket int", fp_bks
+            ).select("fp")
+            fresh = batch.join(
+                store, batch["_fp"] == store["fp"], "left_anti"
+            ).localCheckpoint()  # pin survivors BEFORE the store grows
+            if sink is not None:
+                sink(fresh.drop("_fp", "_bk"), batch_id)
+            if not fresh.isEmpty():
+                # overwrite-by-batch: idempotent under replay
+                _write_buckets(
+                    fresh.select(
+                        F.col("_fp").alias("fp"), F.col("_bk").alias("bucket")
+                    ),
+                    f"{store_path}/batch={batch_id}",
+                )
+        finally:
+            # `fresh` belongs to the sink, which may read it later
+            _unpin(batch)
 
     return fn
 
@@ -1119,8 +1193,19 @@ def incremental_setsim_batch(
     # a mid-swap crash must never read as an empty corpus
     for _p in (post_path, sets_path, counts_path):
         _recover_compaction(_p)
+    read_store = _store_reader()
 
     def fn(batch_df, batch_id):
+        pins = []  # the batch's internal localCheckpoints
+        try:
+            _batch(batch_df, batch_id, pins)
+        finally:
+            # released after the last store write (or the early
+            # return / guard refusal); `out` is not among them — it
+            # belongs to the sink, which may read it after we return
+            _unpin(*pins)
+
+    def _batch(batch_df, batch_id, pins):
         from .ops.dedup import distinct_shingle_sets
 
         spark = batch_df.sparkSession
@@ -1142,9 +1227,7 @@ def incremental_setsim_batch(
         # missing path = first batch; anything else propagates
         # (r10/r11 ADVICE: swallowing a real read error here would
         # re-admit historical docs and silently drop detections)
-        replay_sets = _read_store_buckets(
-            spark, sets_path, sets_schema, id_bks,
-        )
+        replay_sets = read_store(spark, sets_path, sets_schema, id_bks)
         batch = batch.join(
             replay_sets.select(F.col("id").alias(id_col)), id_col, "left_anti"
         )
@@ -1161,13 +1244,14 @@ def incremental_setsim_batch(
             )
             .withColumn("_n", F.size("_st").cast("bigint"))
             .filter(F.col("_n") >= 1)
-            # one tokenize; feeds postings+sets+verify. eager=False:
-            # the first consumer (the n_new/bucket aggregate below)
-            # materializes the blocks — an eager checkpoint here spent
-            # a whole extra job on the same pass (guide §1.2: remove
-            # passes before tuning anything else)
+            # one tokenize; feeds postings+sets+verify. eager=False
+            # saves only the checkpoint's own collect job (guide §1.2:
+            # remove passes before tuning anything else): under AQE
+            # the shuffle and broadcast stages still run here, and the
+            # final stage with the first action that reads the frame
             .localCheckpoint(eager=False)
         )
+        pins.append(ranked)
         new_post = ranked.selectExpr(
             "_id AS id",
             "_n AS n",
@@ -1187,17 +1271,28 @@ def incremental_setsim_batch(
         # new_post is NOT checkpointed: it is a cheap slice+posexplode
         # projection of the pinned `ranked` blocks, and its own eager
         # checkpoint was one more full job per micro-batch; consumers
-        # (aggregate, guard, candidate join, store write) recompute the
-        # projection from the checkpointed tokenize, never from source
-        # ONE job serves both the batch size (every surviving doc has
-        # >= 1 prefix token, so distinct ids over the postings equal
-        # the ranked doc count) and the prefix-token bucket list for
-        # the pruned candidate read below
-        agg = new_post.agg(
-            F.countDistinct("id").alias("n"),
+        # (per-token count, candidate join, store write) recompute the
+        # projection from the checkpointed tokenize, never from source.
+        # ONE pinned per-token count answers the batch size, the
+        # prefix-token bucket list and the guard's batch-side mass:
+        # every surviving doc has exactly one prefix posting with
+        # rn = 1, so sum(first) is the batch's doc count. The frame is
+        # bounded by the batch's distinct prefix tokens.
+        cb = (
+            new_post.groupBy("tok", "bucket")
+            .agg(
+                F.count("*").alias("cb"),
+                F.count_if(F.col("rn") == 1).alias("first"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        pins.append(cb)
+        head = cb.agg(
+            F.coalesce(F.sum("first"), F.lit(0)).alias("n"),
             F.collect_set("bucket").alias("bks"),
+            F.coalesce(F.sum(F.col("cb") * F.col("cb")), F.lit(0)).alias("sq"),
         ).first()
-        n_new = agg["n"]
+        n_new = head["n"]
         if n_new == 0:
             # fully-replayed (or tokenless) batch: everything it could
             # contribute is already committed. Do NOT call the sink —
@@ -1209,10 +1304,9 @@ def incremental_setsim_batch(
         # prefix tokens hash to: a shared token lands in the same
         # bucket on both sides, so the prune is exact and the scan
         # (hence the shuffle) covers matching buckets, not the corpus
-        tok_bks = list(agg["bks"])
-        old_post = _read_store_buckets(
+        old_post = read_store(
             spark, post_path,
-            "tok string, id long, n long, rn long, bucket int", tok_bks,
+            "tok string, id long, n long, rn long, bucket int", head["bks"],
         ).select("tok", "id", "n", "rn")
         all_post = old_post.unionByName(
             new_post.select("tok", "id", "n", "rn")
@@ -1238,26 +1332,16 @@ def incremental_setsim_batch(
         # mass = sum_t cb_t * ca_t over prefix tokens, with
         # ca = c_old + cb (all_post is old ∪ new and every new token
         # matches itself), so mass = sum_t cb_t^2 + sum_t cb_t*c_old_t.
-        # The second term is computed by streaming the PRUNED postings
-        # scan once through a broadcast hash join against the
-        # batch-bounded per-token counts — the old form aggregated
-        # (i.e. shuffled) the whole store-side scan per batch; this
-        # form shuffles only the batch's own postings (guide §2.3/3.1).
-        # cb is bounded by the micro-batch's distinct prefix tokens,
-        # the same order of magnitude the batch kernel already
-        # collects scalars over.
-        cb = new_post.groupBy("tok").agg(F.count("*").alias("cb"))
-        mass_row = (
-            cb.selectExpr("coalesce(sum(cb * cb), 0) AS mass")
-            .unionAll(
-                old_post.join(F.broadcast(cb), "tok").selectExpr(
-                    "coalesce(sum(cb), 0) AS mass"
-                )
-            )
-            .selectExpr("coalesce(sum(mass), 0) AS mass")
-            .collect()
+        # The first term came with the batch size above; the second
+        # streams the PRUNED postings scan once through a broadcast
+        # hash join against the pinned per-token counts, so only the
+        # batch's own postings are ever shuffled (guide §2.3/3.1). The
+        # refusal comes BEFORE the candidate join is planned.
+        mass = head["sq"] + (
+            old_post.join(F.broadcast(cb.select("tok", "cb")), "tok")
+            .agg(F.coalesce(F.sum("cb"), F.lit(0)))
+            .first()[0]
         )
-        mass = mass_row[0]["mass"] if mass_row else 0
         if mass > bound:
             raise ValueError(
                 f"incremental_setsim_batch: degenerate token space — the "
@@ -1289,11 +1373,12 @@ def incremental_setsim_batch(
             .distinct()
             # pin: feeds the verify join AND the bucket list for its
             # pruned sets read (output bounded by the guard above, so
-            # the materialization is small). eager=False: the bucket-
-            # list collect below is the first consumer and materializes
-            # the blocks — no separate checkpoint job
+            # the materialization is small). eager=False saves only
+            # the checkpoint's own collect job, as for `ranked`; the
+            # final stage runs with the bucket-list collect below
             .localCheckpoint(eager=False)
         )
+        pins.append(cand)
         new_sets = ranked.select(
             F.col("_id").alias("id"),
             F.expr("transform(_st, s -> s.tok)").alias("toks"),
@@ -1326,7 +1411,7 @@ def incremental_setsim_batch(
             .distinct()
             .collect()
         ]
-        old_cand_sets = _read_store_buckets(
+        old_cand_sets = read_store(
             spark, sets_path, sets_schema, cand_bks,
         ).select("id", "toks", "n")
         # pin the pruned-store ∪ new-sets union ONCE per batch: the
@@ -1335,14 +1420,16 @@ def incremental_setsim_batch(
         # the identical union — two pruned store scans + two broadcast
         # builds per batch, and at scale (broadcast -> SortMergeJoin)
         # the toks arrays would shuffle twice (r13 verdict #1; guide
-        # §2.4/§5). eager=False: the first broadcast build inside the
-        # verify job materializes the blocks, the second leg reads
-        # them — no separate checkpoint job. The union is bounded by
-        # the guard above (candidate ids' buckets + the batch).
+        # §2.4/§5). eager=False saves only the checkpoint's own
+        # collect job, as for `ranked`; the first broadcast build of
+        # the verify join runs the union's final stage and the second
+        # leg reads the blocks. The union is bounded by the guard
+        # above (candidate ids' buckets + the batch).
         sets = (
             old_cand_sets.unionByName(new_sets.select("id", "toks", "n"))
             .localCheckpoint(eager=False)
         )
+        pins.append(sets)
         out = (
             cand.join(
                 sets.select(
@@ -1386,10 +1473,8 @@ def incremental_setsim_batch(
         # these store rows nor hand an overwrite-by-batch sink an
         # empty frame (r11 ADVICE). Bucket subdirs under each batch
         # make the next batches' candidate/anti-join scans prunable;
-        # the repartition on the bucket key collapses the write to ONE
-        # file per (batch, bucket) — partitionBy alone fans out to
-        # (task partitions x buckets) tiny files, which doubled the
-        # whole replay's wall-clock at the x1 probe scale.
+        # _write_buckets writes ONE file per (batch, bucket), with as
+        # many tasks as the data needs.
         # Counts sidecar BEFORE sets: the early return above fires only
         # when every doc is in the SETS store, which is written last —
         # so any replay that reaches this point recomputes and
@@ -1405,27 +1490,31 @@ def incremental_setsim_batch(
         # tails (guide §2.6); only the SETS write must commit LAST —
         # it is the write the replay early-return keys on, so
         # "sets committed" must imply "counts + postings committed".
+        from pyspark import InheritableThread
+
+        failed = []
+
         def _write_counts():
-            local_df(
-                spark, [(int(n_new), int(batch_id))], "n long, bid long"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{counts_path}/batch={batch_id}"
-            )
+            try:
+                local_df(
+                    spark, [(int(n_new), int(batch_id))], "n long, bid long"
+                ).coalesce(1).write.mode("overwrite").parquet(
+                    f"{counts_path}/batch={batch_id}"
+                )
+            except BaseException as e:  # re-raised below, before sets
+                failed.append(e)
 
-        def _write_post():
-            new_post.repartition(n_buckets, "bucket").write.partitionBy(
-                "bucket"
-            ).mode("overwrite").parquet(f"{post_path}/batch={batch_id}")
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_write_counts), pool.submit(_write_post)]
-            for f in futs:
-                f.result()  # re-raise any write failure before sets
-        new_sets.repartition(n_buckets, "bucket").write.partitionBy(
-            "bucket"
-        ).mode("overwrite").parquet(f"{sets_path}/batch={batch_id}")
+        # the thread carries the caller's job group and description
+        # (pinned-thread mode), so its job is attributed to this batch
+        counts = InheritableThread(_write_counts, session=spark)
+        counts.start()
+        try:
+            _write_buckets(new_post, f"{post_path}/batch={batch_id}")
+        finally:
+            counts.join()
+        if failed:
+            raise failed[0]
+        _write_buckets(new_sets, f"{sets_path}/batch={batch_id}")
 
     return fn
 

@@ -2291,6 +2291,23 @@ def test_read_counts_total_driver_side(spark, tmp_path):
         .collect()[0][0]
     )
     assert got == 28
+    # an uncommitted write's rows under _temporary are not corpus, as
+    # for Spark's reader — neither whole (it used to add them) nor torn
+    # (it used to raise ArrowInvalid on every later batch)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    orphan = f"{path}/batch=3/_temporary/0/_temporary/attempt_0"
+    os.makedirs(orphan)
+    pq.write_table(
+        pa.table({"n": pa.array([7], pa.int64()), "bid": pa.array([3], pa.int64())}),
+        f"{orphan}/part-00000.parquet",
+    )
+    assert _read_counts_total(path, 99) == 35
+    with open(f"{orphan}/part-00001.parquet", "wb") as f:
+        f.write(b"PAR1 torn")
+    assert _read_counts_total(path, 99) == 35
+    assert spark.read.parquet(path).groupBy().sum("n").collect()[0][0] == 35
 
 
 def test_dedup_fp_store_bucketed_prunes_and_replay_never_wipes(
@@ -2512,3 +2529,182 @@ def test_dedup_store_compaction_and_crash_recovery(spark, tmp_path):
 
     # compacting an empty/missing store is a no-op
     assert compact_dedup_store(spark, str(tmp_path / "nope")) == (0, 0)
+
+
+def _stream_docs(seed, lo, n, history=()):
+    """``n`` documents with ids from ``lo``: mostly fresh word soup, plus
+    near-dups (one word changed) and verbatim re-sends of ``history``."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)]
+    docs, texts = [], list(history)
+    for i in range(lo, lo + n):
+        r = rng.random()
+        if texts and r < 0.1:
+            ws = rng.choice(texts).split()
+            ws[rng.randrange(len(ws))] = rng.choice(vocab)
+            text = " ".join(ws)
+        elif texts and r < 0.15:
+            text = rng.choice(texts)
+        else:
+            text = " ".join(rng.choice(vocab) for _ in range(rng.randint(10, 20)))
+        docs.append((i, text))
+        texts.append(text)
+    return docs
+
+
+def test_steady_state_dedup_batch_job_bound(spark, tmp_path):
+    """A steady-state micro-batch through both streaming dedup kernels
+    runs at most 36 Spark jobs, the sinks' collects and the store
+    writes' threads included. Neither kernel infers a store schema it
+    already read, one pinned per-token count answers the batch size,
+    the bucket list and the guard, and the store writes are sized by
+    AQE. An upper bound, not an exact pin: AQE may plan fewer."""
+    from aardappel_spark.stateful import (
+        incremental_dedup_batch,
+        incremental_setsim_batch,
+    )
+
+    sc = spark.sparkContext
+    setsim = incremental_setsim_batch(
+        str(tmp_path / "setsim"), sink=lambda df, bid: df.collect()
+    )
+    exact = incremental_dedup_batch(
+        str(tmp_path / "exact"), sink=lambda df, bid: df.collect()
+    )
+    texts = []
+    for k in range(3):
+        docs = _stream_docs(k, 100 * k, 60, texts)
+        texts += [t for _, t in docs]
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        group = f"steady-dedup-{tmp_path.name}-{k}"
+        sc.setJobGroup(group, "steady-state dedup batch")
+        try:
+            setsim(df, k)
+            exact(df, k)
+        finally:
+            sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 36, sorted(jobs)
+
+
+def _bucket_dir_files(store):
+    """{(batch dir, bucket dir): committed parquet files} of a store."""
+    out = {}
+    for dp, dirs, files in os.walk(store):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if os.path.basename(dp).startswith("bucket="):
+            key = (os.path.basename(os.path.dirname(dp)), os.path.basename(dp))
+            out[key] = [f for f in files if f.endswith(".parquet")]
+    return out
+
+
+def test_store_writes_one_file_per_bucket_dir(spark, tmp_path):
+    """Every batch=<id>/bucket=<b> dir of the postings, sets and
+    fingerprint stores holds exactly ONE parquet file, both for a batch
+    that touches every bucket and for a one-document batch: the writes
+    hash-partition on the bucket, so however AQE sizes the write, one
+    task owns each bucket."""
+    from aardappel_spark.stateful import (
+        incremental_dedup_batch,
+        incremental_setsim_batch,
+    )
+
+    store = tmp_path / "store"
+    setsim = incremental_setsim_batch(
+        str(store / "setsim"), tau_num=1, tau_den=2, shingle=1,
+        sink=lambda df, bid: None,
+    )
+    exact = incremental_dedup_batch(str(store / "fps"), sink=lambda df, bid: None)
+    wide = spark.createDataFrame(
+        [(i, f"u{i}a u{i}b u{i}c u{i}d") for i in range(200)],
+        "doc_id long, text string",
+    )
+    tiny = spark.createDataFrame([(1000, "one lone doc")], "doc_id long, text string")
+    for bid, df in ((0, wide), (1, tiny)):
+        setsim(df, bid)
+        exact(df, bid)
+    for sub in ("setsim/postings", "setsim/sets", "fps"):
+        files = _bucket_dir_files(str(store / sub))
+        per_batch = {b: sum(1 for (bb, _) in files if bb == b) for b, _ in files}
+        assert per_batch["batch=0"] == 16, (sub, sorted(files))  # every bucket
+        assert 1 <= per_batch["batch=1"] <= 3, (sub, sorted(files))
+        assert all(len(fs) == 1 for fs in files.values()), (sub, files)
+
+
+def test_setsim_guard_mass_exact_with_history(spark, tmp_path):
+    """The guard's candidate mass on a batch WITH history equals the
+    brute-force count of (new prefix posting, old-or-new prefix
+    posting) pairs sharing a token — the candidate join's output bound,
+    measured before that join runs."""
+    import hashlib
+
+    from aardappel_spark.stateful import incremental_setsim_batch
+
+    tau_num, tau_den = 1, 2
+
+    def prefix(text):
+        toks = sorted(
+            {t for t in text.split(" ") if t},
+            key=lambda t: (hashlib.md5(t.encode()).hexdigest(), t),
+        )
+        n = len(toks)
+        return toks[: n - (tau_num * n + tau_den - 1) // tau_den + 1]
+
+    old = _stream_docs(1, 0, 40)
+    new = _stream_docs(2, 100, 25, [t for _, t in old])
+    store = str(tmp_path / "store")
+    incremental_setsim_batch(
+        store, tau_num=tau_num, tau_den=tau_den, shingle=1,
+        sink=lambda df, bid: None,
+    )(spark.createDataFrame(old, "doc_id long, text string"), 0)
+
+    new_post = [t for _, text in new for t in prefix(text)]
+    all_post = new_post + [t for _, text in old for t in prefix(text)]
+    want = sum(a == b for a in new_post for b in all_post)
+    batch_only = sum(a == b for a in new_post for b in new_post)
+    assert want > batch_only  # the history term is really exercised
+
+    guarded = incremental_setsim_batch(
+        store, tau_num=tau_num, tau_den=tau_den, shingle=1,
+        sink=lambda df, bid: None, guard_max_candidates=1,
+    )
+    with pytest.raises(ValueError, match="degenerate token space") as ei:
+        guarded(spark.createDataFrame(new, "doc_id long, text string"), 1)
+    got = int(re.search(r"bound (\d+) candidate pairs", str(ei.value)).group(1))
+    assert got == want
+
+
+def test_dedup_kernels_release_internal_pins(spark, tmp_path):
+    """Each batch releases its internal localCheckpoint pins once its
+    last store write is done: over 4 batches through both kernels the
+    JVM's persistent-RDD count grows by at most the frames the sinks
+    still hold (setsim's pairs, the exact kernel's survivors)."""
+    from aardappel_spark.stateful import (
+        incremental_dedup_batch,
+        incremental_setsim_batch,
+    )
+
+    held = []
+    setsim = incremental_setsim_batch(
+        str(tmp_path / "setsim"), tau_num=1, tau_den=2, shingle=1,
+        sink=lambda df, bid: held.append(df),
+    )
+    exact = incremental_dedup_batch(
+        str(tmp_path / "exact"), sink=lambda df, bid: held.append(df)
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    texts = []
+    for k in range(4):
+        docs = _stream_docs(10 + k, 100 * k, 30, texts)
+        texts += [t for _, t in docs]
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        setsim(df, k)
+        exact(df, k)
+    assert len(held) == 8
+    assert persistent().size() - before <= len(held)
+    # the sink-owned frames are still readable after the kernels return
+    assert sum(h.count() for h in held) > 0
