@@ -1,12 +1,15 @@
 """``python -m aardappel_spark`` — the engine as a service binary.
 
-Mirrors the reference's process lifecycle (cmd/aardappel/main.go):
-parse flags -> load config -> (multi-instance) acquire the distributed
-lock, polling every 5 s as a standby -> start the /metrics + /readyz
-server and the heartbeat guard -> build the engine -> run the stream
-until the source drains (--available-now) or a SIGTERM/SIGINT arrives
-(continuous), then stop the query, release the lock, and shut the
-monitoring server down.
+Mirrors the reference's process lifecycle (cmd/aardappel/main.go), one
+lifecycle for every mode: parse flags -> load config -> reject any
+usage error -> (multi-instance) acquire the distributed lock, polling
+every 5 s as a standby, and renew it at half-TTL -> start ONE streaming
+query (CDC replication, ``--setsim-dedup`` or ``--dedup-exact``) or make
+ONE compaction call (``--compact-and-exit``) -> serve the query until
+the source drains (``--available-now``), a SIGTERM/SIGINT arrives, or
+the lock is lost -> stop the query, the engine's /metrics + /readyz
+server and heartbeat guard (CDC; ``ReplicationEngine.from_config``
+starts them), and the renewal, and release the lock.
 
 The one honest difference from the reference: it discovers destination
 schemas by describing the destination database at startup
@@ -23,17 +26,20 @@ the first commit, so schemas come from a sidecar JSON given with
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import signal
 import sys
-import time
+import threading
 import uuid
 
 from .casting import TableMeta
 from .config import EngineConfig
 
 LOCK_CHECK_INTERVAL = 5.0  # standby re-poll (main.go:38)
+DOC_SCHEMA = "doc_id long, text string"
+MULTI_STREAM_SCHEMA = "table_id int, partition int, offset long, value string"
 
 
 def load_table_metas(path: str) -> dict[str, tuple[TableMeta, str]]:
@@ -152,334 +158,229 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _parse_tau(text: str) -> tuple[int, int] | None:
+    """``NUM/DEN`` with ``0 < NUM <= DEN``, else None."""
+    try:
+        num, den = (int(x) for x in text.split("/", 1))
+    except ValueError:
+        return None
+    return (num, den) if 0 < num <= den else None
+
+
+def _usage_error(args, cfg: EngineConfig) -> str | None:
+    """Every argument check, run before Spark starts or the lock is
+    taken, so a usage error can never leave the lock held."""
+    if args.setsim_dedup and args.dedup_exact:
+        return "--setsim-dedup and --dedup-exact are mutually exclusive"
+    if args.setsim_dedup and _parse_tau(args.setsim_tau) is None:
+        return f"bad --setsim-tau {args.setsim_tau!r}: want NUM/DEN, 0 < NUM <= DEN"
+    if not (args.setsim_dedup or args.dedup_exact) and not args.table_metas:
+        return "--table-metas is required for CDC replication"
+    if not (args.source_dir or cfg.src_connection_string):
+        return "no source: give --source-dir or set src_connection_string"
+    return None
+
+
+def _dedup_mode(args):
+    """(kernel factory, state store dir, output dir) of the selected
+    dedup mode, or None in CDC mode."""
+    from . import stateful
+
+    if args.dedup_exact:
+        return stateful.incremental_dedup_batch, "dedup_store", "dedup_survivors"
+    if args.setsim_dedup:
+        num, den = _parse_tau(args.setsim_tau)
+        kernel = functools.partial(
+            stateful.incremental_setsim_batch,
+            tau_num=num,
+            tau_den=den,
+            shingle=args.setsim_shingle,
+        )
+        return kernel, "setsim_store", "setsim_pairs"
+    return None
+
+
+def _run_keyed_sink(out_dir: str):
+    """foreachBatch sink writing each batch to
+    ``OUT_DIR/run=<run>/batch=<id>``.
+
+    The run key keeps a restart with a fresh checkpoint (batch ids from
+    0 again) from overwriting an earlier run's output. Within a run the
+    per-batch overwrite is idempotent under foreachBatch retry; across
+    runs delivery is at-least-once (dedupe downstream). An empty frame
+    never overwrites an existing batch dir: the exact kernel emits one
+    on a full replay, after the store append, and it must not wipe the
+    attempt's committed output (the setsim kernel skips its sink on a
+    replay)."""
+    run_dir = os.path.join(out_dir, f"run={uuid.uuid4().hex[:12]}")
+
+    def sink(df, batch_id):
+        target = os.path.join(run_dir, f"batch={batch_id}")
+        if os.path.exists(target) and df.isEmpty():
+            return
+        df.write.mode("overwrite").parquet(target)
+
+    return sink
+
+
+def _cdc_source(spark, args, cfg: EngineConfig, source_dir: str):
+    from . import sources
+
+    if args.source_format == "jsonl":
+        if len(cfg.streams) > 1:
+            return spark.readStream.schema(MULTI_STREAM_SCHEMA).json(source_dir)
+        return sources.read_file_stream(spark, source_dir)
+    # topic -> table id from the config's stream order, exactly like the
+    # reference assigns TableId by stream index (main.go:204-208)
+    topics = {s.src_topic: i for i, s in enumerate(cfg.streams)}
+    if args.source_format == "recorded-kafka":
+        return sources.read_recorded_kafka_stream(
+            spark, source_dir, table_id_by_topic=topics
+        )
+    return sources.read_kafka_stream(
+        spark,
+        bootstrap_servers=source_dir,
+        topics=list(topics),
+        table_id_by_topic=topics,
+    )
+
+
+def _compact(spark, args, cfg: EngineConfig, metas, work_dir: str) -> None:
+    """The maintenance call; the instance lock guarantees no live writer.
+
+    A dedup mode compacts its state store (per-batch dirs -> one file
+    per bucket under batch=-1, never a live foreachBatch id), bounding
+    partition discovery under unbounded batch count. CDC rewrites each
+    destination to one file per bucket; that needs only the tables, not
+    an engine (nor its partition count)."""
+    from . import stateful
+    from .streaming import VersionedTable
+
+    if args.dedup_exact:
+        store = os.path.join(work_dir, "dedup_store")
+        b, a = stateful.compact_dedup_store(spark, store)
+        print(f"compacted dedup_store: files {b} -> {a}")
+        return
+    if args.setsim_dedup:
+        store = os.path.join(work_dir, "setsim_store")
+        for part, (b, a) in stateful.compact_setsim_store(spark, store).items():
+            print(f"compacted setsim_store/{part}: files {b} -> {a}")
+        return
+    for s in cfg.streams:
+        meta, ddl = metas[s.dst_table]
+        tbl = VersionedTable(spark, s.dst_table, meta, ddl)
+        before = tbl.n_data_files()
+        new_v = tbl.compact_files()
+        if new_v == 0:
+            # never-committed table: don't misreport the no-op as "v0"
+            print(f"skipped {s.dst_table}: empty table, nothing to compact")
+            continue
+        after = tbl.n_data_files()
+        print(
+            f"compacted {s.dst_table}: v{new_v}, files "
+            f"{sum(before.values())} -> {sum(after.values())} "
+            f"({len(after)} buckets)"
+        )
+
+
+def _serve(query, renewer) -> int:
+    """Serve ``query`` until it ends: the source drained
+    (``--available-now``), SIGINT/SIGTERM, or the instance lock lost.
+    The lock check runs before the first wait, so a renewal that failed
+    before the handle existed (slow stream startup) still stops the
+    query. Returns 0, or 4 on lock loss."""
+    signaled = threading.Event()
+    old_handlers = {}
+    for sig in (signal.SIGINT, signal.SIGTERM):
+        try:
+            old_handlers[sig] = signal.signal(sig, lambda *_: signaled.set())
+        except ValueError:
+            pass  # not the main thread (in-process tests)
+    lost = lambda: renewer is not None and renewer.lost  # noqa: E731
+    try:
+        while query.isActive and not signaled.is_set() and not lost():
+            query.awaitTermination(1)
+    finally:
+        query.stop()
+        for sig, h in old_handlers.items():
+            signal.signal(sig, h)
+    if lost():
+        print("stopped: instance lock lost mid-run", file=sys.stderr)
+        return 4
+    return 0
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     cfg = EngineConfig.load(args.config)
-    if args.setsim_dedup and args.dedup_exact:
-        # validate the flag combination BEFORE the lock-acquisition
-        # block below (r12 ADVICE): failing after acquisition returned
-        # without releasing, blocking a standby until TTL expiry
-        print("--setsim-dedup and --dedup-exact are mutually exclusive",
-              file=sys.stderr)
-        return 2
-    if not (args.setsim_dedup or args.dedup_exact) and not args.table_metas:
-        print("--table-metas is required for CDC replication", file=sys.stderr)
+    err = _usage_error(args, cfg)
+    if err:
+        print(err, file=sys.stderr)
         return 2
     metas = load_table_metas(args.table_metas) if args.table_metas else {}
     source_dir = args.source_dir or cfg.src_connection_string
-    if not source_dir:
-        print("no source: give --source-dir or set src_connection_string", file=sys.stderr)
-        return 2
     work_dir = args.work_dir
     os.makedirs(work_dir, exist_ok=True)
     ckpt = args.checkpoint or os.path.join(work_dir, "ckpt")
+    mode = _dedup_mode(args)
 
     from .session import get_spark
 
     spark = get_spark(f"aardappel-{cfg.instance_id}")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # -- single-writer lock (W7): standby loop at 5 s like the reference
-    locker = None
-    renewer = None
-    # on_lost runs from the renewal thread, possibly before the query
-    # handle exists — hand it the query through a mutable cell
-    lock_lost: dict = {"flag": False, "query": None}
+    # single-writer lock (W7): standby poll every 5 s like the reference,
+    # renewed at half-TTL (locker_thread.go) — without renewal a run
+    # longer than one TTL silently loses the lock to a standby
+    locker = renewer = None
     if cfg.multiple_instances_mode:
         from .locker import Locker, LockStorage
 
         ttl = 2.0 * cfg.max_expected_heartbeat_interval  # main.go:389
         locker = Locker(LockStorage(os.path.join(work_dir, "lock.json")), ttl)
-        deadline = None if args.lock_timeout is None else time.time() + args.lock_timeout
-        while not locker.try_acquire():
-            if deadline is not None and time.time() >= deadline:
+        if not locker.try_acquire():
+            print("standby: lock held elsewhere, waiting", file=sys.stderr)
+            if not locker.wait_acquire(LOCK_CHECK_INTERVAL, args.lock_timeout):
                 print("instance lock held elsewhere; giving up", file=sys.stderr)
                 return 3
-            print("standby: lock held elsewhere, re-checking", file=sys.stderr)
-            time.sleep(LOCK_CHECK_INTERVAL)
+        renewer = locker.start_renewal()
 
-        def _on_lock_lost():
-            # the lock was stolen (or storage broke): we can no longer
-            # prove single-writer ownership — stop writing immediately
-            lock_lost["flag"] = True
-            print("instance lock LOST: stopping the stream", file=sys.stderr)
-            q = lock_lost["query"]
-            if q is not None:
-                try:
-                    q.stop()
-                except Exception:
-                    pass
-
-        # half-TTL renewal (locker_thread.go): without it any run
-        # longer than one TTL silently loses the lock to a standby and
-        # two writers share the state stores (r11 ADVICE)
-        renewer = locker.start_renewal(on_lost=_on_lock_lost)
-
-    from .sources import read_file_stream
-    from .streaming import ReplicationEngine
-
-    def run_doc_stream(fn) -> int:
-        # shared plumbing for the document-stream dedup modes: a
-        # (doc_id, text) JSONL stream through a foreachBatch kernel,
-        # stopping on lock loss (exit 4)
-        try:
-            source = spark.readStream.schema("doc_id long, text string").json(
-                source_dir
-            )
-            writer = source.writeStream.foreachBatch(fn).option(
-                "checkpointLocation", ckpt
-            )
-            if args.available_now:
-                q = writer.trigger(availableNow=True).start()
-            else:
-                q = writer.start()
-            lock_lost["query"] = q
-            if lock_lost["flag"]:
-                # the renewal thread may have fired on_lost while the
-                # query handle was still None (a renew at ttl/2 can
-                # fail during slow stream startup) — nothing stopped
-                # the stream then, so stop it now (r12 ADVICE)
-                try:
-                    q.stop()
-                except Exception:
-                    pass
-            q.awaitTermination()
-            if lock_lost["flag"]:
-                print("stopped: instance lock lost mid-run", file=sys.stderr)
-                return 4
-            return 0
-        finally:
-            if renewer is not None:
-                renewer.stop()
-            if locker is not None:
-                locker.release()
-
-    if args.compact_and_exit and (args.setsim_dedup or args.dedup_exact):
-        # maintenance path for the streaming dedup state stores: the
-        # per-batch layout keeps writes idempotent but accumulates one
-        # directory per micro-batch — partition discovery grows with
-        # batch count. Compact to one file per bucket under batch=-1
-        # (never a live foreachBatch id), under the instance lock.
-        try:
-            if args.dedup_exact:
-                from .stateful import compact_dedup_store
-
-                b, a = compact_dedup_store(
-                    spark, os.path.join(work_dir, "dedup_store")
-                )
-                print(f"compacted dedup_store: files {b} -> {a}")
-            else:
-                from .stateful import compact_setsim_store
-
-                rep = compact_setsim_store(
-                    spark, os.path.join(work_dir, "setsim_store")
-                )
-                for part, (b, a) in rep.items():
-                    print(f"compacted setsim_store/{part}: files {b} -> {a}")
-            return 0
-        finally:
-            if renewer is not None:
-                renewer.stop()
-            if locker is not None:
-                locker.release()
-
-    if args.dedup_exact:
-        # streaming exact-dedup mode (r11 verdict #7): the incremental
-        # fingerprint twin, end-to-end drivable, sharing the setsim
-        # plumbing. The instance lock + renewal above keep the
-        # fingerprint store single-writer.
-        from .stateful import incremental_dedup_batch
-
-        store = os.path.join(work_dir, "dedup_store")
-        surv_dir = os.path.join(work_dir, "dedup_survivors")
-        run_id = uuid.uuid4().hex[:12]
-
-        def emit_survivors(df, batch_id):
-            # run-keyed like the setsim sink. Unlike the setsim twin,
-            # incremental_dedup_batch DOES call the sink with an empty
-            # frame on a full replay (an all-duplicates batch is a
-            # legitimate empty emit) — so additionally skip the
-            # overwrite when the frame is empty AND the batch directory
-            # already exists: a foreachBatch retry after the store
-            # append must not wipe the attempt's committed survivors
-            # (the r11 ADVICE pattern).
-            target = f"{surv_dir}/run={run_id}/batch={batch_id}"
-            if df.isEmpty() and os.path.exists(target):
-                return
-            df.write.mode("overwrite").parquet(target)
-
-        return run_doc_stream(
-            incremental_dedup_batch(store, sink=emit_survivors)
-        )
-
-    if args.setsim_dedup:
-        # streaming dedup mode (r10 verdict #8): the incremental
-        # prefix-filter set-similarity twin, end-to-end drivable. The
-        # instance lock above still applies — the twin's state store
-        # is single-writer by design.
-        from .stateful import incremental_setsim_batch
-
-        try:
-            num, den = (int(x) for x in args.setsim_tau.split("/", 1))
-        except ValueError:
-            print(f"bad --setsim-tau {args.setsim_tau!r}: want NUM/DEN",
-                  file=sys.stderr)
-            return 2
-        if not (0 < num <= den):
-            print(f"bad --setsim-tau {args.setsim_tau!r}: want 0 < NUM <= DEN",
-                  file=sys.stderr)
-            return 2
-        store = os.path.join(work_dir, "setsim_store")
-        pairs_dir = os.path.join(work_dir, "setsim_pairs")
-        run_id = uuid.uuid4().hex[:12]
-
-        def emit(df, batch_id):
-            # keyed by run id + batch id (r11 ADVICE): a restart with a
-            # fresh checkpoint restarts batch ids at 0, and without the
-            # run key its batch=0 overwrite would wipe the prior run's
-            # committed pairs. Within a run the per-batch overwrite is
-            # idempotent under foreachBatch retry; across runs delivery
-            # is at-least-once — dedupe downstream by (id_a, id_b).
-            # A fully-replayed batch never reaches this sink at all
-            # (incremental_setsim_batch returns early), so an empty
-            # replay frame can't wipe a committed batch either.
-            df.write.mode("overwrite").parquet(
-                f"{pairs_dir}/run={run_id}/batch={batch_id}"
-            )
-
-        return run_doc_stream(
-            incremental_setsim_batch(
-                store,
-                tau_num=num,
-                tau_den=den,
-                shingle=args.setsim_shingle,
-                sink=emit,
-            )
-        )
-
+    engine = None
     try:
-        engine = ReplicationEngine.from_config(
-            spark,
-            cfg,
-            metas,
-            work_dir,
-            **(
-                {"expected_partitions": args.expected_partitions}
-                if args.expected_partitions is not None
-                else {}
-            ),
-        )
-
         if args.compact_and_exit:
-            # maintenance path: the lock above guarantees no live writer;
-            # compact each destination and report the small-file delta
-            for s in engine.streams:
-                tbl = engine.tables[s.table_id]
-                before = tbl.n_data_files()
-                new_v = tbl.compact_files()
-                if new_v == 0:
-                    # nothing to compact (empty / never-committed table);
-                    # don't misreport the no-op as a "v0" compaction
-                    print(f"skipped {s.dst_path}: empty table, nothing to compact")
-                    continue
-                after = tbl.n_data_files()
-                print(
-                    f"compacted {s.dst_path}: v{new_v}, files "
-                    f"{sum(before.values())} -> {sum(after.values())} "
-                    f"({len(after)} buckets)"
-                )
+            _compact(spark, args, cfg, metas, work_dir)
             return 0
-
-        server = guard = None
-        if cfg.mon_server_listen:
-            from .pmon import start_monitoring
-
-            server, guard = start_monitoring(
-                engine,
-                cfg.mon_server_listen,
-                guard_timeout=float(cfg.max_expected_heartbeat_interval),
+        if mode is not None:
+            kernel, store_dir, out_dir = mode
+            sink = _run_keyed_sink(os.path.join(work_dir, out_dir))
+            writer = (
+                spark.readStream.schema(DOC_SCHEMA).json(source_dir).writeStream
+                .foreachBatch(kernel(os.path.join(work_dir, store_dir), sink=sink))
+                .option("checkpointLocation", ckpt)
             )
-
-        if args.source_format in ("recorded-kafka", "kafka"):
-            # topic -> table id from the config's stream order, exactly
-            # like the reference assigns TableId by stream index
-            # (cmd/aardappel/main.go:204-208)
-            topics = {s.src_topic: i for i, s in enumerate(cfg.streams)}
-            if args.source_format == "recorded-kafka":
-                from .sources import read_recorded_kafka_stream
-
-                source = read_recorded_kafka_stream(
-                    spark, source_dir, table_id_by_topic=topics
-                )
-            else:
-                from .sources import read_kafka_stream
-
-                source = read_kafka_stream(
-                    spark,
-                    bootstrap_servers=source_dir,
-                    topics=list(topics),
-                    table_id_by_topic=topics,
-                )
-        elif len(engine.streams) > 1:
-            source = spark.readStream.schema(
-                "table_id int, partition int, offset long, value string"
-            ).json(source_dir)
-        else:
-            source = read_file_stream(spark, source_dir)
-
-        q = engine.run_stream(source, ckpt, available_now=args.available_now)
-        lock_lost["query"] = q
-        if lock_lost["flag"]:
-            # on_lost may have fired while the handle was None during
-            # stream startup — close the window (r12 ADVICE)
-            try:
-                q.stop()
-            except Exception:
-                pass
-
-        stopping = {"flag": False}
-
-        def on_signal(signum, frame):
-            stopping["flag"] = True
-
-        old_handlers = {}
-        for sig in (signal.SIGINT, signal.SIGTERM):
-            try:
-                old_handlers[sig] = signal.signal(sig, on_signal)
-            except ValueError:
-                pass  # not the main thread (in-process tests)
-
-        try:
             if args.available_now:
-                q.awaitTermination()
-            else:
-                while q.isActive and not stopping["flag"]:
-                    q.awaitTermination(1)
-                if q.isActive:
-                    q.stop()
-                    q.awaitTermination()
-        finally:
-            for sig, h in old_handlers.items():
-                signal.signal(sig, h)
-            if guard is not None:
-                guard.stop()
-            if server is not None:
-                server.stop()
+                writer = writer.trigger(availableNow=True)
+            query = writer.start()
+        else:
+            from .streaming import ReplicationEngine
 
-        print(
-            json.dumps(
-                {
-                    "batches_applied": engine.batches_applied,
-                    "modifications": engine.modifications,
-                    "state": engine.state.read()["state"],
-                }
+            engine = ReplicationEngine.from_config(
+                spark, cfg, metas, work_dir,
+                expected_partitions=args.expected_partitions,
             )
-        )
-        if lock_lost["flag"]:
-            print("stopped: instance lock lost mid-run", file=sys.stderr)
-            return 4
-        return 0
+            source = _cdc_source(spark, args, cfg, source_dir)
+            query = engine.run_stream(source, ckpt, available_now=args.available_now)
+        rc = _serve(query, renewer)
+        if engine is not None:
+            print(json.dumps({
+                "batches_applied": engine.batches_applied,
+                "modifications": engine.modifications,
+                "state": engine.state.read()["state"],
+            }))
+        return rc
     finally:
+        if engine is not None:
+            engine.stop_monitoring()
         if renewer is not None:
             renewer.stop()
         if locker is not None:

@@ -246,15 +246,7 @@ class VersionedTable:
                 f"version {v} is not retained at {self.path} "
                 f"(retained: {self.versions()}); vacuumed by a later commit"
             )
-        dirs = {
-            k: p
-            for k, p in (
-                (int(name.split("=", 1)[1]), os.path.join(self._version_dir(v), name))
-                for name in os.listdir(self._version_dir(v))
-                if name.startswith("pkb=")
-            )
-        }
-        sel = [p for _, p in sorted(dirs.items())]
+        sel = [p for _, p in sorted(self._bucket_dirs(v).items())]
         if not sel:
             return empty_df(self.spark, self.schema)
         return self.spark.read.schema(self.schema).parquet(*sel)
@@ -392,6 +384,8 @@ class ReplicationEngine:
     hb_fresh: set[tuple[int, int]] = field(default_factory=set)
     batches_applied: int = 0
     modifications: int = 0
+    # (MonitoringServer, HeartbeatGuard) once from_config started them
+    monitoring: tuple | None = None
 
     def __post_init__(self):
         self.state = StateStore(self.spark, os.path.join(self.work_dir, "_state"), self.instance_id)
@@ -981,6 +975,15 @@ class ReplicationEngine:
                 guard_timeout=cfg.max_expected_heartbeat_interval,
             )
         return eng
+
+    def stop_monitoring(self) -> None:
+        """Stop the /metrics server and heartbeat guard from_config
+        started, if any; idempotent."""
+        if self.monitoring is not None:
+            server, guard = self.monitoring
+            self.monitoring = None
+            guard.stop()
+            server.stop()
 
     def run_stream(
         self,

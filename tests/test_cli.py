@@ -139,11 +139,9 @@ def test_cli_lock_conflict_exits_standby(spark, tmp_path, capsys):
     assert not os.path.exists(os.path.join(tmp, "dst_users"))
 
 
-def test_cli_multi_stream_routes_by_table(spark, tmp_path, capsys):
-    """Two streams in the config: the CLI builds the table_id-bearing
-    source schema, routes per table, and gates the cut across both
-    streams' partitions (--expected-partitions 2)."""
-    tmp = str(tmp_path)
+def _write_two_streams(tmp):
+    """A users + orders config, its metas and one source file: a change
+    and a heartbeat per table, table_id-bearing lines."""
     src = os.path.join(tmp, "src")
     os.makedirs(src, exist_ok=True)
 
@@ -200,7 +198,15 @@ def test_cli_multi_stream_routes_by_table(spark, tmp_path, capsys):
             },
             f,
         )
+    return cfg, metas
 
+
+def test_cli_multi_stream_routes_by_table(spark, tmp_path, capsys):
+    """Two streams in the config: the CLI builds the table_id-bearing
+    source schema, routes per table, and gates the cut across both
+    streams' partitions (--expected-partitions 2)."""
+    tmp = str(tmp_path)
+    cfg, metas = _write_two_streams(tmp)
     rc = main(
         [
             "--config", cfg,
@@ -615,24 +621,29 @@ def test_cli_mode_conflict_checked_before_lock_acquisition(tmp_path):
     """r12 ADVICE (low): the --setsim-dedup/--dedup-exact conflict is a
     usage error that must be rejected BEFORE the instance lock is
     acquired — the old post-acquisition `return 2` left the lock held,
-    blocking a standby until TTL expiry."""
+    blocking a standby until TTL expiry. A bad --setsim-tau is a usage
+    error too, and once was parsed only after the lock was taken."""
     from aardappel_spark.locker import Locker, LockStorage
 
     docs = os.path.join(tmp_path, "docs")
     os.makedirs(docs, exist_ok=True)
     cfg = _write_config(tmp_path, docs, multi_instance=True)
     work = os.path.join(tmp_path, "work")
-    rc = main([
-        "--config", cfg, "--source-dir", docs, "--work-dir", work,
-        "--dedup-exact", "--setsim-dedup", "--available-now",
-    ])
-    assert rc == 2
-    # the lock was never taken: a standby acquires instantly
-    other = Locker(
-        LockStorage(os.path.join(work, "lock.json")), ttl_seconds=60
-    )
-    assert other.try_acquire()
-    other.release()
+    for usage_error in (
+        ["--dedup-exact", "--setsim-dedup"],
+        ["--setsim-dedup", "--setsim-tau", "nope"],
+    ):
+        rc = main([
+            "--config", cfg, "--source-dir", docs, "--work-dir", work,
+            *usage_error, "--available-now",
+        ])
+        assert rc == 2, usage_error
+        # the lock was never taken: a standby acquires instantly
+        other = Locker(
+            LockStorage(os.path.join(work, "lock.json")), ttl_seconds=60
+        )
+        assert other.try_acquire(), usage_error
+        other.release()
 
 
 def test_cli_compact_dedup_state_store(spark, tmp_path, capsys):
@@ -686,3 +697,171 @@ def test_cli_compact_dedup_state_store(spark, tmp_path, capsys):
     ]) == 0
     surv = spark.read.parquet(os.path.join(work, "dedup_survivors"))
     assert {r.doc_id for r in surv.collect()} == {1, 2, 3, 6}
+
+
+def test_cli_monitoring_on_fixed_port(spark, tmp_path):
+    """mon_server.listen on a fixed port: the engine's one monitoring
+    server answers /readyz and /metrics during the run, main exits 0,
+    and afterwards the port refuses connections, so no second server
+    was started (a second bind on the same port fails with EADDRINUSE)
+    and none was left running."""
+    import socket
+    import threading
+    import urllib.request
+
+    import pytest
+
+    tmp = str(tmp_path)
+    src = _write_source(tmp)
+    metas = _write_metas(tmp)
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    cfg = os.path.join(tmp, "config.json")
+    with open(cfg, "w") as f:
+        json.dump(
+            {
+                "src_connection_string": src,
+                "instance_id": "cli-mon",
+                "mon_server": {"listen": f"127.0.0.1:{port}"},
+                "streams": [
+                    {"src_topic": "/topic/users",
+                     "dst_table": os.path.join(tmp, "dst_users")}
+                ],
+            },
+            f,
+        )
+
+    seen = {"readyz": False, "metrics": False}
+    done = threading.Event()
+
+    def scrape():
+        base = f"http://127.0.0.1:{port}"
+        while not done.is_set():
+            try:
+                with urllib.request.urlopen(base + "/readyz", timeout=1) as r:
+                    seen["readyz"] |= r.status == 200
+                with urllib.request.urlopen(base + "/metrics", timeout=1) as r:
+                    seen["metrics"] |= "modifications_count" in r.read().decode()
+            except OSError:
+                pass  # not up yet, 503, or already down
+            done.wait(0.05)
+
+    poller = threading.Thread(target=scrape, daemon=True)
+    poller.start()
+    try:
+        rc = main([
+            "--config", cfg, "--table-metas", metas,
+            "--work-dir", os.path.join(tmp, "work"), "--available-now",
+        ])
+    finally:
+        done.set()
+        poller.join(5)
+    assert not poller.is_alive()
+    assert rc == 0
+    assert seen == {"readyz": True, "metrics": True}
+    with pytest.raises(ConnectionRefusedError):
+        socket.create_connection(("127.0.0.1", port), timeout=1).close()
+
+
+def test_cli_sigterm_stops_dedup_mode_and_releases_lock(tmp_path):
+    """SIGTERM stops a continuous --dedup-exact run cleanly: exit code 0,
+    and the instance lock is released at once instead of staying held
+    until its TTL runs out. Runs the real binary in a subprocess, so
+    the signal reaches its main thread."""
+    import glob
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    from aardappel_spark.locker import Locker, LockStorage
+
+    docs = os.path.join(tmp_path, "docs")
+    os.makedirs(docs, exist_ok=True)
+    with open(os.path.join(docs, "b1.jsonl"), "w") as f:
+        for i, text in [(1, "alpha beta"), (2, "alpha beta"), (3, "gamma")]:
+            f.write(json.dumps({"doc_id": i, "text": text}) + "\n")
+    cfg = _write_config(tmp_path, docs, multi_instance=True)
+    work = os.path.join(tmp_path, "work")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join(
+            p for p in (repo, os.environ.get("PYTHONPATH")) if p
+        ),
+    )
+    log_path = os.path.join(tmp_path, "cli.log")
+    with open(log_path, "w") as log:
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "aardappel_spark", "--config", cfg,
+             "--source-dir", docs, "--work-dir", work, "--dedup-exact"],
+            cwd=repo, env=env, stdout=log, stderr=subprocess.STDOUT,
+        )
+    try:
+        # batch 0 committed: its survivors written and its checkpoint
+        # commit recorded, so the stream is idle when the signal lands
+        deadline = time.time() + 120
+        while not (
+            glob.glob(os.path.join(work, "dedup_survivors", "run=*",
+                                   "batch=0", "_SUCCESS"))
+            and os.path.exists(os.path.join(work, "ckpt", "commits", "0"))
+        ):
+            assert proc.poll() is None, open(log_path).read()[-3000:]
+            assert time.time() < deadline, "batch 0 never committed"
+            time.sleep(0.2)
+        proc.send_signal(signal.SIGTERM)
+        rc = proc.wait(timeout=120)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+    assert rc == 0, open(log_path).read()[-3000:]
+    other = Locker(LockStorage(os.path.join(work, "lock.json")), ttl_seconds=60)
+    assert other.try_acquire()
+    other.release()
+
+
+def test_cli_compact_two_streams_without_partition_count(spark, tmp_path, capsys):
+    """CDC --compact-and-exit needs only the destination tables, not a
+    replication engine: on a two-stream config it runs without
+    --expected-partitions (which only the quorum cut needs), leaves
+    every bucket at one file, and keeps the data."""
+    from aardappel_spark.casting import TableMeta
+    from aardappel_spark.streaming import VersionedTable
+
+    tmp = str(tmp_path)
+    cfg, metas = _write_two_streams(tmp)
+    work = os.path.join(tmp, "work")
+    assert main([
+        "--config", cfg, "--table-metas", metas, "--work-dir", work,
+        "--expected-partitions", "2", "--available-now",
+    ]) == 0
+    tables = [
+        VersionedTable(
+            spark, os.path.join(tmp, "dst_users"),
+            TableMeta("users", ["user_id"],
+                      {"user_id": "Int64", "value": "Optional<Utf8>"}),
+            "user_id bigint, value string",
+        ),
+        VersionedTable(
+            spark, os.path.join(tmp, "dst_orders"),
+            TableMeta("orders", ["order_id"],
+                      {"order_id": "Int64", "amount": "Optional<Utf8>"}),
+            "order_id bigint, amount string",
+        ),
+    ]
+    before = [sorted(t.current().collect()) for t in tables]
+    capsys.readouterr()
+
+    assert main([
+        "--config", cfg, "--table-metas", metas, "--work-dir", work,
+        "--compact-and-exit",
+    ]) == 0
+    assert capsys.readouterr().out.count("compacted") == 2
+    for t, rows in zip(tables, before):
+        files = t.n_data_files()
+        assert files and all(n == 1 for n in files.values()), files
+        assert sorted(t.current().collect()) == rows
