@@ -178,6 +178,14 @@ def _usage_error(args, cfg: EngineConfig) -> str | None:
         return "--table-metas is required for CDC replication"
     if not (args.source_dir or cfg.src_connection_string):
         return "no source: give --source-dir or set src_connection_string"
+    cdc_run = not (
+        args.setsim_dedup or args.dedup_exact or args.compact_and_exit
+    )
+    if cdc_run and len(cfg.streams) > 1 and args.expected_partitions is None:
+        return (
+            "--expected-partitions is required for a multi-stream config "
+            "(the quorum cut counts every partition of every stream)"
+        )
     return None
 
 

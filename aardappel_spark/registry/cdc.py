@@ -156,17 +156,13 @@ WHERE e.step < h.step OR (e.step = h.step AND e.txid < h.txid)
 
 
 def q_cdc_view_topk(spark, sf_dir):
-    """Top-k view over the LWW-compacted CDC state — the batch
-    recompute of the maintained top-k IVM view
-    (stateful.MaterializedTopKState consumes streaming_agg_deltas and
-    re-selects from the full per-group aggregate; this query IS that
-    reconciliation recompute, driver-gated). From the compacted
-    per-user merge (cdc_compact_merge: final 'value' column of users
-    whose final op is update), group users by user_id % 16, sum
-    half-up cents (fixed-point BIGINT — no float crosses the hash),
-    and take the top 5 groups in the SAME total deterministic order
-    topk() uses: (sum DESC, grp ASC), so ties cannot differ between
-    engines or across a restart."""
+    """Top-k view over the LWW-compacted CDC state: the 5 of 16 user
+    groups with the largest summed value. From the compacted per-user
+    merge (cdc_compact_merge: final 'value' column of users whose final
+    op is update), group users by user_id % 16, sum half-up cents
+    (fixed-point BIGINT — no float crosses the hash), and take the top
+    5 groups in one total deterministic order, (sum DESC, grp ASC), so
+    ties cannot differ between engines or across a restart."""
     m = cdc.q_compact_merge(spark, sf_dir)
     per = (
         m.filter(F.col("col_name") == "value")

@@ -747,12 +747,11 @@ def q_events_paths(spark, sf_dir):
 
 
 def q_events_anomaly(spark, sf_dir):
-    """Batch 3-sigma anomaly flags (the driver-gateable face of
-    streaming_anomaly): each event is judged against the EWMA and EW
-    variance of its PREVIOUS up-to-10 values. The ten lags materialize
-    once as columns; mean and variance come from the two weighted
-    moments (var = E[l^2] - E[l]^2), so the whole expression stays
-    inside one compact whole-stage-codegen span — the per-term
+    """Batch 3-sigma anomaly flags: each event is judged against the
+    EWMA and EW variance of its PREVIOUS up-to-10 values. The ten lags
+    materialize once as columns; mean and variance come from the two
+    weighted moments (var = E[l^2] - E[l]^2), so the whole expression
+    stays inside one compact whole-stage-codegen span — the per-term
     (l_j - mean)^2 form inlined the mean ten times and overflowed the
     JVM's 64 KB method limit into interpreted fallback. Both engines
     evaluate the identical left-to-right float expression, so even the
@@ -878,8 +877,7 @@ def q_events_cusum(spark, sf_dir):
     on user_id at any scale (the least(0, ...) term is the empty-prefix
     S_0 = 0 the classic recursion implicitly includes). The alarm
     compares the ROUNDED statistic so an ulp of cross-engine summation
-    drift cannot flip a boundary case. Streaming twin:
-    stateful.streaming_cusum carries (S, min S) as two scalars/user."""
+    drift cannot flip a boundary case."""
     from pyspark.sql.window import Window
 
     ev = load_events_ns(spark, sf_dir).select(

@@ -323,11 +323,7 @@ FROM per
 
 
 def q_orders_month_revenue(spark, sf_dir):
-    """Monthly order revenue off the orders⋈lineitem join — the batch
-    twin of the maintained join view (stateful.streaming_join_view_deltas
-    keeps EXACTLY this frame incrementally under upserts and deletes on
-    either table; the parity fuzz pins the streamed state against this
-    GROUP BY recomputed over the surviving rows). Money is exact
+    """Monthly order revenue off the orders⋈lineitem join. Money is exact
     integer cents (round-then-BIGINT, the cross-engine-safe money
     path). One shuffle join keyed on orderkey — both sides hash-
     partition on their natural key, no broadcast needed at any scale —

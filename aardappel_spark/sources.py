@@ -142,7 +142,7 @@ def project_kafka_records(
         mapping = F.create_map(
             *[x for t, i in table_id_by_topic.items() for x in (F.lit(t), F.lit(i))]
         )
-        cols.insert(0, mapping.getItem(F.col("topic")).alias("table_id"))
+        cols.insert(0, mapping[F.col("topic")].alias("table_id"))
     return df.select(*cols)
 
 

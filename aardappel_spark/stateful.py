@@ -1,36 +1,29 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Streaming ingest dedup: the two ``foreachBatch`` kernels and their stores.
 
-The quorum engine (streaming.py) is the faithful replication path; this
-module is the Spark-native *stateful operator* surface for analytics
-over change streams — running last-writer-wins state, per-key counters
-— where strict cross-stream quorum is not required (SURVEY.md W6: the
-reference has no such operators; Spark gives them natively).
+``incremental_dedup_batch`` drops documents whose md5 fingerprint is
+already in a persistent store; ``incremental_setsim_batch`` emits each
+token-set Jaccard near-duplicate pair once, when its second member
+arrives. Both keep the corpus memory in bucketed parquet stores
+(``batch=<id>/bucket=<b>``, ``pmod(xxhash64(key), n_buckets)``) rather
+than in the streaming checkpoint, so a replayed micro-batch overwrites
+only its own ``batch=<id>`` directory and restarts compose; the
+``compact_*_store`` functions fold those per-batch dirs into one
+``batch=-1`` dir with one file per bucket, behind a crash-recoverable
+rename swap.
 
-State is managed by Spark's state store (checkpointed, recoverable);
-the user function sees Arrow batches per key group.
+The quorum engine (streaming.py) is the replication path; these
+kernels back ``--dedup-exact``/``--setsim-dedup``, ``bench.py`` and the
+registry's ``dedup_*_stream`` queries.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from .localrel import empty_df, local_df
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DecimalType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+
 
 def _read_store_or_empty(
     spark, path: str, schema: str | StructType
@@ -292,709 +285,6 @@ def compact_dedup_store(spark, store_path: str):
     """Compact the ``incremental_dedup_batch`` fingerprint store to one
     file per bucket (same contract as ``compact_setsim_store``)."""
     return _compact_bucketed_store(spark, store_path, "fp string, bucket int")
-
-
-LWW_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", StringType(), False),
-        StructField("value", StringType(), True),
-        StructField("step", LongType(), False),
-        StructField("tx_id", LongType(), False),
-        StructField("n_changes", LongType(), False),
-    ]
-)
-
-LWW_STATE_SCHEMA = StructType(
-    [
-        StructField("value", StringType(), True),
-        StructField("step", LongType(), False),
-        StructField("tx_id", LongType(), False),
-        StructField("n_changes", LongType(), False),
-    ]
-)
-
-
-def _lww_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        value, step, tx_id, n = state.get
-    else:
-        value, step, tx_id, n = None, -1, -1, 0
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        n += len(pdf)
-        # winner of THIS batch = last row in (step, tx_id) order; it
-        # replaces the carried state iff its position is >= (LWW ties go
-        # to the newer arrival, matching the reference's arrival-order
-        # tie-break). One vectorized sort per Arrow batch, no row loop.
-        win = pdf.sort_values(["step", "tx_id"]).iloc[-1]
-        if (int(win["step"]), int(win["tx_id"])) >= (step, tx_id):
-            value, step, tx_id = win["value"], int(win["step"]), int(win["tx_id"])
-    state.update((value, step, tx_id, n))
-    yield pd.DataFrame(
-        [{"key": key[0], "value": value, "step": step, "tx_id": tx_id, "n_changes": n}]
-    )
-
-
-def streaming_lww(
-    events: DataFrame,
-    key_col: str = "key",
-    value_col: str = "value",
-    step_col: str = "step",
-    txid_col: str = "tx_id",
-) -> DataFrame:
-    """Running last-writer-wins value per key over a stream.
-
-    Emits, per trigger, one row per key seen in the batch with the
-    current (post-batch) state — a continuously-maintained compaction
-    view. State survives restarts via the streaming checkpoint.
-    """
-    from pyspark.sql import functions as F
-
-    shaped = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias("value"),
-        F.col(step_col).cast("long").alias("step"),
-        F.col(txid_col).cast("long").alias("tx_id"),
-    )
-    return shaped.groupBy("key").applyInPandasWithState(
-        _lww_fn,
-        outputStructType=LWW_OUTPUT_SCHEMA,
-        stateStructType=LWW_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-FUNNEL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("stage", LongType(), False),
-        StructField("t1", LongType(), True),
-        StructField("t2", LongType(), True),
-        StructField("t3", LongType(), True),
-    ]
-)
-
-FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("t1", LongType(), False),
-        StructField("t2", LongType(), False),
-        StructField("t3", LongType(), False),
-    ]
-)
-
-
-def _funnel_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    t1, t2, t3 = state.get if state.exists else (-1, -1, -1)
-    # concat all Arrow chunks before the event-time sort (see _ewma_fn:
-    # per-chunk sorting would depend on Arrow batch boundaries). With
-    # per-user in-order arrival this reproduces the batch chain exactly
-    # (first view, first click strictly after it, first purchase strictly
-    # after that). Stages only ever advance — a late pre-stage event can't
-    # regress completed stages.
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        for mic, et in pdf.sort_values("mic")[["mic", "event_type"]].itertuples(
-            index=False
-        ):
-            mic = int(mic)
-            if t1 < 0:
-                if et == "view":
-                    t1 = mic
-            elif t2 < 0:
-                if et == "click" and mic > t1:
-                    t2 = mic
-            elif t3 < 0:
-                if et == "purchase" and mic > t2:
-                    t3 = mic
-    state.update((t1, t2, t3))
-    stage = (t1 >= 0) + (t2 >= 0) + (t3 >= 0)
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": key[0],
-                "stage": stage,
-                "t1": None if t1 < 0 else t1,
-                "t2": None if t2 < 0 else t2,
-                "t3": None if t3 < 0 else t3,
-            }
-        ]
-    )
-
-
-def streaming_funnel(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Continuously-maintained funnel progress per user (the streaming
-    complement of the batch ``events_funnel`` query): stage 0-3 for the
-    view -> click -> purchase chain with strictly increasing event
-    times. State is three longs per user — O(users), independent of
-    event volume — and survives restarts via the checkpoint. Emits each
-    batch's touched users with their post-batch stage (update mode).
-
-    The per-batch scan is a tiny per-user loop over an Arrow batch
-    (bounded by that user's events in the trigger); stage transitions
-    are inherently sequential, which is exactly the case
-    applyInPandasWithState exists for.
-    """
-    from pyspark.sql import functions as F
-
-    ts_field = events.schema[ts_col].dataType.simpleString()
-    mic = (
-        F.expr(f"{ts_col} div 1000")
-        if ts_field == "bigint"
-        else F.unix_micros(F.col(ts_col).cast("timestamp"))
-    )
-    shaped = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(type_col).cast("string").alias("event_type"),
-        mic.alias("mic"),
-    )
-    return shaped.groupBy("user_id").applyInPandasWithState(
-        _funnel_fn,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-EWMA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("ewma", DoubleType(), False),
-        StructField("n_events", LongType(), False),
-    ]
-)
-
-EWMA_STATE_SCHEMA = StructType(
-    [
-        StructField("acc", DoubleType(), False),
-        StructField("n", LongType(), False),
-    ]
-)
-
-_EWMA_ALPHA = 0.25
-
-
-def _ewma_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    acc, n = state.get if state.exists else (0.0, 0)
-    # A group's rows may arrive as SEVERAL Arrow record batches (chunked at
-    # spark.sql.execution.arrow.maxRecordsPerBatch); sorting per-chunk would
-    # fold chunks in arrival order and break the documented invariant.
-    # Concatenate the whole group's batch first, then sort ONCE by
-    # (event-time micros, event_id) — the same total order the batch kernel
-    # folds in, so splitting the stream at ANY batch boundary composes to
-    # the identical left fold.
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        for v in pdf.sort_values(["mic", "event_id"])["value"]:
-            v = float(v)
-            acc = v if n == 0 else _EWMA_ALPHA * v + (1 - _EWMA_ALPHA) * acc
-            n += 1
-    state.update((acc, n))
-    yield pd.DataFrame([{"user_id": key[0], "ewma": acc, "n_events": n}])
-
-
-def streaming_ewma(
-    events: DataFrame,
-    user_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Continuously-maintained per-user EWMA (recursive form: acc =
-    a*v + (1-a)*acc, seeded with the first value) — the streaming
-    complement of the batch ``events_ewma`` window query and the state
-    that drives online anomaly flags. State is TWO scalars per user
-    (O(users), independent of event volume); each batch emits the
-    touched users' post-batch EWMA in update mode.
-
-    The left fold is associative under batch splitting (state carries
-    the fold accumulator), so a stream chopped into any number of
-    micro-batches equals one batch fold over the same ordered events —
-    pinned cross-batch and across a checkpoint restart by test.
-    """
-    from pyspark.sql import functions as F
-
-    ts_field = events.schema[ts_col].dataType.simpleString()
-    mic = (
-        F.expr(f"{ts_col} div 1000")
-        if ts_field == "bigint"
-        else F.unix_micros(F.col(ts_col).cast("timestamp"))
-    )
-    shaped = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(value_col).cast("double").alias("value"),
-        F.col(id_col).cast("long").alias("event_id"),
-        mic.alias("mic"),
-    )
-    return shaped.groupBy("user_id").applyInPandasWithState(
-        _ewma_fn,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def batch_ewma_fold(events: DataFrame, user_col: str = "user_id") -> DataFrame:
-    """Batch reference kernel for ``streaming_ewma``: the identical left
-    fold over each user's (mic, event_id)-ordered values, as a single
-    aggregate expression (sorted collect + F.aggregate) — no Python."""
-    from pyspark.sql import functions as F
-
-    ts_field = events.schema["ts"].dataType.simpleString()
-    mic = (
-        F.expr("ts div 1000")
-        if ts_field == "bigint"
-        else F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    shaped = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col("value").cast("double").alias("value"),
-        F.col("event_id").cast("long").alias("event_id"),
-        mic.alias("mic"),
-    )
-    ordered = shaped.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("mic", "event_id", "value"))
-        ).alias("evs")
-    )
-    a = _EWMA_ALPHA
-    fold = F.expr(
-        f"aggregate(slice(evs, 2, size(evs) - 1), evs[0].value, "
-        f"(acc, e) -> {a}D * e.value + {1 - a}D * acc)"
-    )
-    return ordered.filter(F.size("evs") > 0).select(
-        "user_id",
-        fold.alias("ewma"),
-        F.size("evs").cast("long").alias("n_events"),
-    )
-
-
-ANOMALY_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("event_id", LongType(), False),
-        StructField("value", DoubleType(), False),
-        StructField("deviation", DoubleType(), False),
-    ]
-)
-
-ANOMALY_STATE_SCHEMA = StructType(
-    [
-        StructField("ewma", DoubleType(), False),
-        StructField("ewmvar", DoubleType(), False),
-        StructField("n", LongType(), False),
-    ]
-)
-
-_ANOMALY_MIN_HISTORY = 5  # don't flag until the baseline has settled
-
-
-def _anomaly_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    ewma, ewmvar, n = state.get if state.exists else (0.0, 0.0, 0)
-    a = _EWMA_ALPHA
-    flagged = []
-    # concat-then-sort across ALL Arrow chunks (see _ewma_fn): per-chunk
-    # sorting would make flags depend on Arrow batch boundaries
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        for eid, v in pdf.sort_values(["mic", "event_id"])[
-            ["event_id", "value"]
-        ].itertuples(index=False):
-            v = float(v)
-            if n == 0:
-                ewma, ewmvar = v, 0.0
-            else:
-                d = v - ewma
-                # flag BEFORE absorbing the point: an outlier must not
-                # vouch for itself via the baseline it just inflated
-                if n >= _ANOMALY_MIN_HISTORY and d * d > 9.0 * ewmvar and ewmvar > 0:
-                    flagged.append(
-                        {
-                            "user_id": key[0],
-                            "event_id": int(eid),
-                            "value": v,
-                            "deviation": d,
-                        }
-                    )
-                ewma = ewma + a * d
-                ewmvar = (1 - a) * (ewmvar + a * d * d)
-            n += 1
-    state.update((ewma, ewmvar, n))
-    yield pd.DataFrame(flagged, columns=["user_id", "event_id", "value", "deviation"])
-
-
-def streaming_anomaly(
-    events: DataFrame,
-    user_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Online 3-sigma anomaly detection per user: exponentially-weighted
-    mean AND variance (West 1979's incremental form) in three scalars of
-    state; an event is flagged when its squared deviation from the
-    pre-event baseline exceeds 9x the pre-event EW variance, after a
-    minimum history of 5 points. The outlier is flagged BEFORE it
-    updates the baseline, then absorbed — so a level shift flags once
-    and the baseline re-converges instead of flagging forever.
-
-    State is O(users) regardless of event volume; emits only flagged
-    events. The flags are a pure function of the ordered per-user
-    series, so any micro-batch split (and a checkpoint restart) yields
-    the identical flag set — pinned by test."""
-    from pyspark.sql import functions as F
-
-    ts_field = events.schema[ts_col].dataType.simpleString()
-    mic = (
-        F.expr(f"{ts_col} div 1000")
-        if ts_field == "bigint"
-        else F.unix_micros(F.col(ts_col).cast("timestamp"))
-    )
-    shaped = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(value_col).cast("double").alias("value"),
-        F.col(id_col).cast("long").alias("event_id"),
-        mic.alias("mic"),
-    )
-    return shaped.groupBy("user_id").applyInPandasWithState(
-        _anomaly_fn,
-        outputStructType=ANOMALY_OUTPUT_SCHEMA,
-        stateStructType=ANOMALY_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window_duration: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window counts over an event-time stream — the
-    Spark-native late-data story (SURVEY §2.9/W6: the reference has no
-    user-data windowing; Structured Streaming provides it with state
-    eviction for free).
-
-    ``ts_col`` may be a timestamp column or epoch-nanos long (the
-    testdata shape); nanos are converted via ``timestamp_micros(div
-    1000)``. Events later than ``watermark_delay`` behind the max seen
-    event time are dropped and their window state evicted — bounded
-    state at any scale, the property a driver-side dict can never give.
-    """
-    from pyspark.sql import functions as F
-
-    ts_field = events.schema[ts_col].dataType.simpleString()
-    ts = (
-        F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
-        if ts_field == "bigint"
-        else F.col(ts_col).cast("timestamp")
-    )
-    shaped = events.withColumn("_event_time", ts).withWatermark(
-        "_event_time", watermark_delay
-    )
-    return (
-        shaped.groupBy(
-            F.window("_event_time", window_duration).alias("win"),
-            *(group_cols or []),
-        )
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            *(group_cols or []),
-            F.col("n"),
-        )
-    )
-
-
-def streaming_sessions(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark_delay: str = "30 minutes",
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """Streaming sessionization: event-time session windows that close
-    after ``gap`` of per-key inactivity (the streaming complement of the
-    batch ``events_sessions`` query).
-
-    Spark-first: ``F.session_window`` + a watermark — the state store
-    merges/extends sessions and evicts closed ones; no custom stateful
-    UDF needed. In append mode a session row is emitted exactly once,
-    when the watermark passes its close. Same nanos-long/timestamp
-    input handling as ``streaming_windowed_counts``.
-    """
-    from pyspark.sql import functions as F
-
-    key_cols = key_cols or ["user_id"]
-    ts_field = events.schema[ts_col].dataType.simpleString()
-    ts = (
-        F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
-        if ts_field == "bigint"
-        else F.col(ts_col).cast("timestamp")
-    )
-    shaped = events.withColumn("_event_time", ts).withWatermark(
-        "_event_time", watermark_delay
-    )
-    return (
-        shaped.groupBy(F.session_window("_event_time", gap).alias("sess"), *key_cols)
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            *key_cols,
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def streaming_dedup_exact(
-    docs: DataFrame,
-    ts_col: str = "ts",
-    text_col: str = "text",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: drop documents whose text hash was already
-    seen within the watermark horizon — the ingest-time counterpart of
-    the batch ``dedup_exact`` operator.
-
-    ``dropDuplicatesWithinWatermark`` keys state on the 32-byte md5, so
-    state is hash-sized regardless of document size, and the watermark
-    bounds it in time — the two properties that make streaming dedup
-    feasible at corpus scale (an unbounded driver-side seen-set is
-    neither).
-    """
-    from pyspark.sql import functions as F
-
-    ts_field = docs.schema[ts_col].dataType.simpleString()
-    ts = (
-        F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
-        if ts_field == "bigint"
-        else F.col(ts_col).cast("timestamp")
-    )
-    shaped = (
-        docs.withColumn("_event_time", ts)
-        .withColumn("_text_hash", F.md5(F.col(text_col)))
-        .withWatermark("_event_time", watermark_delay)
-    )
-    return shaped.dropDuplicatesWithinWatermark(["_text_hash"]).drop("_text_hash")
-
-
-def streaming_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    gap: str = "10 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Stream-stream interval join: pair left and right events with equal
-    keys whose event times lie within ``gap`` of each other.
-
-    Spark-first: with watermarks on BOTH sides and a time-bounded join
-    condition, Structured Streaming runs this as a symmetric state-store
-    join and uses the bound to evict state — bounded memory at any
-    rate (the batch analogue is ops/rangejoin.py; the streaming planner
-    does the equivalent internally). Left columns keep their names;
-    right columns get a ``r_`` prefix.
-    """
-    from pyspark.sql import functions as F
-
-    def shape(df, ts_col, time_name):
-        ts_field = df.schema[ts_col].dataType.simpleString()
-        ts = (
-            F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
-            if ts_field == "bigint"
-            else F.col(ts_col).cast("timestamp")
-        )
-        return df.withColumn(time_name, ts).withWatermark(time_name, watermark_delay)
-
-    l = shape(left, left_ts, "_lt")
-    r = shape(right, right_ts, "_rt")
-    for c in r.columns:
-        if c != "_rt" and c not in key_cols:
-            r = r.withColumnRenamed(c, f"r_{c}")
-    cond = F.expr(
-        " AND ".join(
-            [f"l.{k} = r.{k}" for k in key_cols]
-            + [
-                f"r._rt >= l._lt - interval '{gap}'",
-                f"r._rt <= l._lt + interval '{gap}'",
-            ]
-        )
-    )
-    out = l.alias("l").join(r.alias("r"), cond)
-    for k in key_cols:
-        out = out.drop(F.col(f"r.{k}"))
-    return out.drop("_lt", "_rt")
-
-
-def streaming_countmin(
-    events: DataFrame,
-    key_col: str = "user_id",
-    n_rows: int = 4,
-    n_cols: int = 256,
-) -> DataFrame:
-    """Streaming count-min sketch: an UNBOUNDED key domain compressed
-    into a BOUNDED aggregation state (n_rows x n_cols cells) — the
-    streaming frequency story that survives 100 TB/day: state never
-    grows past 1024 rows no matter how many distinct keys flow through,
-    and the md5 cell assignment matches the batch ``vocab_countmin``
-    kernel, so a batch-built sketch and a stream-built sketch over the
-    same data are cell-for-cell identical (pinned by test).
-
-    Plain streaming aggregation in update mode — no custom state code,
-    no watermark needed (the sketch is cumulative); partial aggregation
-    combines map-side so the shuffle per batch is at most
-    partitions x cells rows.
-    """
-    from pyspark.sql import functions as F
-
-    cells = events.select(
-        F.posexplode(
-            F.array(
-                *[
-                    (
-                        F.conv(
-                            F.substring(
-                                F.md5(
-                                    F.concat(
-                                        F.lit(f"{r}:"), F.col(key_col).cast("string")
-                                    )
-                                ),
-                                1,
-                                7,
-                            ),
-                            16,
-                            10,
-                        ).cast("long")
-                        % n_cols
-                    )
-                    for r in range(n_rows)
-                ]
-            )
-        ).alias("row", "col")
-    )
-    return (
-        cells.groupBy(F.col("row").cast("bigint").alias("row"), "col")
-        .agg(F.count("*").alias("total"))
-    )
-
-
-HH_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("shard", LongType(), False),
-        StructField("item", StringType(), False),
-        StructField("est_count", LongType(), False),
-        StructField("max_err", LongType(), False),
-    ]
-)
-
-HH_STATE_SCHEMA = StructType(
-    [
-        StructField("items", ArrayType(StringType()), True),
-        StructField("counts", ArrayType(LongType()), True),
-        StructField("errs", ArrayType(LongType()), True),
-    ]
-)
-
-HH_CAPACITY = 8
-
-
-def _hh_fn(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """SpaceSaving summary for one shard. Deterministic: batch items
-    merge in (-count, item) order; eviction removes the (count, err,
-    item)-smallest entry."""
-    shard = key[0]
-    if state.exists:
-        items, counts, errs = state.get
-        summary = {it: [c, e] for it, c, e in zip(items, counts, errs)}
-    else:
-        summary = {}
-
-    batch_counts: dict[str, int] = {}
-    for pdf in pdf_iter:
-        for it, n in pdf.groupby("item").size().items():
-            batch_counts[it] = batch_counts.get(it, 0) + int(n)
-
-    for it in sorted(batch_counts, key=lambda i: (-batch_counts[i], i)):
-        c = batch_counts[it]
-        if it in summary:
-            summary[it][0] += c
-        elif len(summary) < HH_CAPACITY:
-            summary[it] = [c, 0]
-        else:
-            evict = min(summary, key=lambda i: (summary[i][0], summary[i][1], i))
-            floor = summary[evict][0]
-            del summary[evict]
-            summary[it] = [floor + c, floor]
-
-    its = sorted(summary)
-    state.update((its, [summary[i][0] for i in its], [summary[i][1] for i in its]))
-    yield pd.DataFrame(
-        {
-            "shard": [shard] * len(its),
-            "item": its,
-            "est_count": [summary[i][0] for i in its],
-            "max_err": [summary[i][1] for i in its],
-        }
-    )
-
-
-def streaming_heavy_hitters(
-    events: DataFrame,
-    item_col: str = "event_type",
-    n_shards: int = 4,
-) -> DataFrame:
-    """Distributed streaming heavy hitters: items hash to a fixed shard
-    (md5 % n_shards — an item ALWAYS lands on its shard, so its count is
-    never split), and each shard maintains a SpaceSaving summary of
-    HH_CAPACITY entries in managed state. Total state is
-    n_shards x capacity entries — bounded for any key cardinality — and
-    the SpaceSaving guarantees hold per shard: est_count >= true count,
-    est_count - max_err <= true count, and any item with true count
-    above the shard's eviction floor is present. Emits each touched
-    shard's full summary per batch (update mode)."""
-    from pyspark.sql import functions as F
-
-    shaped = events.select(
-        (
-            F.conv(F.substring(F.md5(F.col(item_col).cast("string")), 1, 7), 16, 10)
-            .cast("long")
-            % n_shards
-        ).alias("shard"),
-        F.col(item_col).cast("string").alias("item"),
-    )
-    return shaped.groupBy("shard").applyInPandasWithState(
-        _hh_fn,
-        outputStructType=HH_OUTPUT_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def incremental_dedup_batch(
@@ -1517,1210 +807,3 @@ def incremental_setsim_batch(
         _write_buckets(new_sets, f"{sets_path}/batch={batch_id}")
 
     return fn
-
-
-KMV_K = 64
-
-KMV_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType(), False),
-        StructField("n_state", LongType(), False),
-        StructField("est_distinct", DoubleType(), False),
-    ]
-)
-
-KMV_STATE_SCHEMA = StructType([StructField("hashes", ArrayType(LongType()), True)])
-
-
-def _kmv_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """KMV merge for one group: union the carried k-minimum hash set
-    with the batch's distinct hashes, keep the K smallest. Set union is
-    order-insensitive, so Arrow chunking/batch splits can't change the
-    result (unlike a fold, no ordering is even needed)."""
-    hs: set[int] = set(state.get[0]) if state.exists else set()
-    for pdf in pdfs:
-        if len(pdf):
-            hs.update(int(h) for h in pdf["h"])
-    keep = sorted(hs)[:KMV_K]
-    state.update((keep,))
-    if len(keep) < KMV_K:
-        est = float(len(keep))
-    else:
-        est = float(KMV_K - 1) * float(2**60) / float(keep[-1])
-    yield pd.DataFrame(
-        [
-            {
-                "event_type": key[0],
-                "n_state": len(keep),
-                "est_distinct": round(est, 4),
-            }
-        ]
-    )
-
-
-def streaming_kmv_distinct(
-    events: DataFrame,
-    key_col: str = "event_type",
-    id_col: str = "user_id",
-) -> DataFrame:
-    """Streaming twin of the batch ``events_theta_union`` KMV sketch:
-    per key (plus the 'ALL' union group), the K smallest distinct md5
-    hashes of the id column live in managed state — O(K) longs per
-    group regardless of stream volume — and each batch emits the
-    current (k-1)/u_k distinct-count estimate. KMV sets are mergeable
-    (union-then-truncate), so the stream-built sketch equals the batch
-    kernel over the same rows under ANY micro-batch split and across
-    checkpoint restarts — pinned by test like the other sketch twins.
-
-    Reference scope: the reference engine has no sketch module; this is
-    part of the training-data-pipeline surface (SURVEY.md §2 extension)
-    built Spark-first."""
-    from pyspark.sql import functions as F
-
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    typed = events.select(F.col(key_col).cast("string").alias("event_type"), h.alias("h"))
-    both = typed.unionByName(typed.select(F.lit("ALL").alias("event_type"), "h"))
-    return both.groupBy("event_type").applyInPandasWithState(
-        _kmv_fn,
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-CUSUM_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("cusum", DoubleType(), False),
-        StructField("n_events", LongType(), False),
-        StructField("alarm", BooleanType(), False),
-    ]
-)
-
-CUSUM_STATE_SCHEMA = StructType(
-    [
-        StructField("s", DoubleType(), False),   # running sum of (value - ref)
-        StructField("m", DoubleType(), False),   # min(0, running min of S)
-        StructField("n", LongType(), False),
-    ]
-)
-
-_CUSUM_REF = 55.0   # reference level + slack (registry.q_events_cusum)
-_CUSUM_H = 100.0    # alarm threshold
-
-
-def _cusum_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    S, M, n = state.get if state.exists else (0.0, 0.0, 0)
-    # concat all Arrow chunks before the event-time sort (see _ewma_fn:
-    # per-chunk sorting folds chunks in arrival order and breaks the
-    # split-anywhere invariant for >10k-row groups)
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        for v in pdf.sort_values(["mic", "event_id"])["value"]:
-            S += float(v) - _CUSUM_REF
-            M = min(M, S)
-            n += 1
-    state.update((S, M, n))
-    cusum = round(S - M, 6)
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": key[0],
-                "cusum": cusum,
-                "n_events": n,
-                "alarm": cusum > _CUSUM_H,
-            }
-        ]
-    )
-
-
-def streaming_cusum(
-    events: DataFrame,
-    user_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Streaming twin of the batch ``events_cusum`` detector: per user,
-    managed state carries the running sum S of (value - 55) and
-    M = min(0, min prefix S) — TWO scalars regardless of stream volume
-    — and each batch emits the user's post-batch CUSUM statistic
-    S - M with the alarm verdict. The fold is associative under batch
-    splitting (state is exactly the fold accumulator), so any
-    micro-batch split plus checkpoint restarts equals the one-batch
-    fold — pinned by test against the window-rewrite batch kernel.
-
-    Reference scope: the reference engine has no analytics module; this
-    is the training-data-pipeline surface (SURVEY.md §2 extension)."""
-    from pyspark.sql import functions as F
-
-    ts_field = events.schema[ts_col].dataType.simpleString()
-    mic = (
-        F.expr(f"{ts_col} div 1000")
-        if ts_field == "bigint"
-        else F.unix_micros(F.col(ts_col).cast("timestamp"))
-    )
-    shaped = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(value_col).cast("double").alias("value"),
-        F.col(id_col).cast("long").alias("event_id"),
-        mic.alias("mic"),
-    )
-    return shaped.groupBy("user_id").applyInPandasWithState(
-        _cusum_fn,
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def batch_cusum_fold(events: DataFrame, user_col: str = "user_id") -> DataFrame:
-    """Batch reference kernel for ``streaming_cusum``: the registry's
-    window rewrite (S - min(0, running min S)) evaluated at each
-    user's LAST event — the value the stream reports after absorbing
-    the same rows."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    ts_field = events.schema["ts"].dataType.simpleString()
-    mic = (
-        F.expr("ts div 1000")
-        if ts_field == "bigint"
-        else F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    shaped = events.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col("value").cast("double").alias("value"),
-        F.col("event_id").cast("long").alias("event_id"),
-        mic.alias("mic"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("mic", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("user_id")
-    s = shaped.withColumn("S", F.sum(F.col("value") - _CUSUM_REF).over(w))
-    c = s.withColumn(
-        "cusum", F.round(F.col("S") - F.least(F.lit(0.0), F.min("S").over(w)), 6)
-    ).withColumn("rn", F.row_number().over(
-        Window.partitionBy("user_id").orderBy(F.desc("mic"), F.desc("event_id"))
-    )).withColumn("n_events", F.count("*").over(wall))
-    return c.filter(F.col("rn") == 1).select(
-        "user_id",
-        "cusum",
-        F.col("n_events").cast("long").alias("n_events"),
-        (F.col("cusum") > _CUSUM_H).alias("alarm"),
-    )
-
-
-PSI_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType(), False),
-        StructField("n_cur", LongType(), False),
-        StructField("n_bins", LongType(), False),
-        StructField("psi", DoubleType(), True),
-    ]
-)
-
-# the accumulated current-window histogram, bin-parallel arrays —
-# bounded by the value domain / bin width, NOT by stream volume
-PSI_STATE_SCHEMA = StructType(
-    [
-        StructField("bins", ArrayType(LongType()), True),
-        StructField("counts", ArrayType(LongType()), True),
-    ]
-)
-
-PSI_BIN_WIDTH = 25.0
-
-
-def psi_statistic(
-    baseline: dict[int, int], current: dict[int, int]
-) -> tuple[int, int, float | None]:
-    """(n_cur, n_bins, psi) of `current` against the frozen `baseline`
-    histogram — the same union-domain +0.5-Laplace formula as the batch
-    events_psi_drift query. None when either side is empty."""
-    import math
-
-    dom = sorted(set(baseline) | set(current))
-    tb, tc, k = sum(baseline.values()), sum(current.values()), len(dom)
-    if k == 0 or tb == 0:
-        return tc, k, None
-    psi = 0.0
-    for b in dom:
-        pb = (baseline.get(b, 0) + 0.5) / (tb + 0.5 * k)
-        pc = (current.get(b, 0) + 0.5) / (tc + 0.5 * k)
-        psi += (pc - pb) * (math.log(pc) - math.log(pb))
-    return tc, k, round(psi, 6)
-
-
-def _make_psi_fn(baseline_by_key: dict[str, dict[int, int]]):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cur: dict[int, int] = (
-            dict(zip(state.get[0], state.get[1])) if state.exists else {}
-        )
-        # histogram merge is order-insensitive — no sort needed, Arrow
-        # chunking and batch splits cannot change the result
-        for pdf in pdfs:
-            for b in pdf["bin"]:
-                b = int(b)
-                cur[b] = cur.get(b, 0) + 1
-        items = sorted(cur.items())
-        state.update(([b for b, _ in items], [c for _, c in items]))
-        base = baseline_by_key.get(key[0], {})
-        n_cur, n_bins, psi = psi_statistic(base, cur)
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": key[0],
-                    "n_cur": n_cur,
-                    "n_bins": n_bins,
-                    "psi": psi,
-                }
-            ]
-        )
-
-    return fn
-
-
-def streaming_psi_drift(
-    events: DataFrame,
-    baseline_by_key: dict[str, dict[int, int]],
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Online distribution-drift monitor: the streaming twin of the
-    batch events_psi_drift query. The baseline histogram (per key) is
-    FROZEN at deploy time — e.g. the batch query's first-half bins —
-    and rides into the workers as a closure constant; managed state
-    accumulates the live histogram per key (bounded by the bin domain,
-    independent of stream volume) and each batch emits the current PSI.
-    Histogram accumulation is a commutative merge, so any micro-batch
-    split plus checkpoint restarts equals the one-batch histogram —
-    and the emitted PSI equals psi_statistic over the same rows,
-    pinned by test against the batch fold."""
-    from pyspark.sql import functions as F
-
-    shaped = events.select(
-        F.col(key_col).cast("string").alias("event_type"),
-        F.floor(F.col(value_col) / PSI_BIN_WIDTH).cast("long").alias("bin"),
-    )
-    return shaped.groupBy("event_type").applyInPandasWithState(
-        _make_psi_fn(baseline_by_key),
-        outputStructType=PSI_OUTPUT_SCHEMA,
-        stateStructType=PSI_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-RESERVOIR_K = 25
-
-RESERVOIR_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("grp", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("weight", LongType(), False),
-        StructField("wkey", DoubleType(), False),
-        StructField("pick_order", LongType(), False),
-    ]
-)
-
-RESERVOIR_STATE_SCHEMA = StructType(
-    [
-        StructField("ids", ArrayType(LongType()), True),
-        StructField("ws", ArrayType(LongType()), True),
-        StructField("keys", ArrayType(DoubleType()), True),
-    ]
-)
-
-
-def _reservoir_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """A-ES reservoir merge for one group: union the carried top-K with
-    the batch's rows, keep the K largest (rounded key desc, doc_id
-    tie-break). The kept set is a pure function of the row SET —
-    per-row keys are deterministic, union is order-insensitive — so any
-    micro-batch split, Arrow chunking, or duplicate redelivery (same
-    doc_id -> same key) yields the identical reservoir."""
-    rows: dict[int, tuple[float, int]] = {}
-    if state.exists:
-        ids, ws, keys = state.get
-        for i, w, k in zip(ids, ws, keys):
-            rows[int(i)] = (float(k), int(w))
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        for i, w, k in zip(pdf["doc_id"], pdf["weight"], pdf["wkey"]):
-            rows[int(i)] = (float(k), int(w))
-    keep = sorted(rows.items(), key=lambda kv: (-kv[1][0], kv[0]))[:RESERVOIR_K]
-    state.update(
-        (
-            [i for i, _ in keep],
-            [w for _, (_, w) in keep],
-            [k for _, (k, _) in keep],
-        )
-    )
-    yield pd.DataFrame(
-        [
-            {
-                "grp": key[0],
-                "doc_id": i,
-                "weight": w,
-                "wkey": k,
-                "pick_order": n + 1,
-            }
-            for n, (i, (k, w)) in enumerate(keep)
-        ],
-        columns=["grp", "doc_id", "weight", "wkey", "pick_order"],
-    )
-
-
-def streaming_reservoir(
-    docs: DataFrame,
-    weight_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Streaming twin of the batch ``doc_weighted_sample`` A-ES
-    selection: the current weighted top-K sample rides in managed state
-    (K (id, weight, key) triples — bounded by K, not stream volume) and
-    each batch emits the full current reservoir with pick order.
-    Per-row keys are the IDENTICAL md5-ticket formula as the batch
-    kernel (ops.sampling.weighted_sample), so the stream-built sample
-    equals the batch sample over the union of rows under ANY
-    micro-batch split, checkpoint restart, or duplicate redelivery —
-    the property that lets a 100 TB pipeline maintain a live training
-    subset without ever re-scanning.
-
-    Reference scope: the reference engine has no sampling module; this
-    is part of the training-data-pipeline surface (SURVEY.md §2
-    extension) built Spark-first."""
-    from pyspark.sql import functions as F
-
-    from .ops.sampling import TICKET_SPACE, WEIGHTED_SALT, sample_ticket
-
-    t = sample_ticket(id_col, WEIGHTED_SALT)
-    u = (t + F.lit(1)) / F.lit(float(TICKET_SPACE))
-    key = F.round(F.log(u) / F.col(weight_col), 6) + F.lit(0.0)
-    prepped = (
-        docs.filter(F.col(weight_col) > 0)
-        .select(
-            F.lit("ALL").alias("grp"),
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(weight_col).cast("long").alias("weight"),
-            key.alias("wkey"),
-        )
-    )
-    return prepped.groupBy("grp").applyInPandasWithState(
-        _reservoir_fn,
-        outputStructType=RESERVOIR_OUTPUT_SCHEMA,
-        stateStructType=RESERVOIR_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-WAU_HLL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("day", LongType(), False),          # days since epoch
-        StructField("wau_estimate", DoubleType(), False),
-        StructField("own_day_seen", BooleanType(), False),
-    ]
-)
-
-WAU_HLL_STATE_SCHEMA = StructType(
-    [
-        StructField("regs", ArrayType(LongType()), False),  # 64 max-rho registers
-        StructField("own_day_seen", BooleanType(), False),
-    ]
-)
-
-_WAU_M = 64  # registers (6-bit bucket index off the 60-bit md5 hash)
-
-
-def _wau_hll_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """HLL register merge for one anchor day: elementwise max of the
-    carried 64 max-rho registers with the batch's per-register maxima.
-    max() is order- and duplicate-insensitive, so Arrow chunking,
-    micro-batch splits, and redelivery cannot change the registers."""
-    if state.exists:
-        regs, own = list(state.get[0]), bool(state.get[1])
-    else:
-        regs, own = [0] * _WAU_M, False
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        # vectorized per-register max (the 7x-fanned event stream makes a
-        # hot anchor day's batch large — a per-row Python loop here would
-        # be the slowest path inside applyInPandasWithState)
-        batch_max = pdf.groupby("register")["rho"].max()
-        for r, rho in batch_max.items():
-            if int(rho) > regs[int(r)]:
-                regs[int(r)] = int(rho)
-        own = own or bool(pdf["is_own_day"].any())
-    state.update((regs, own))
-    # identical estimator to registry.q_events_wau_hll: empty registers
-    # (rho 0 — real rho is always >= 1) contribute 2^-0 = 1 to inv
-    inv = sum(2.0 ** -r for r in regs)
-    est = round(0.709 * _WAU_M * _WAU_M / inv, 4)
-    yield pd.DataFrame(
-        [{"day": int(key[0]), "wau_estimate": est, "own_day_seen": own}]
-    )
-
-
-def streaming_wau_hll(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch ``events_wau_hll`` rolling 7-day
-    weekly-active-users sketch: each event fans out to the seven anchor
-    days whose trailing window contains it (the standard sliding-window
-    -> overlapping-keys rewrite), and per anchor day the 64 HLL max-rho
-    registers live in managed state — 64 longs per day key, bounded
-    regardless of stream volume. Every batch emits the anchor day's
-    current WAU estimate from the merged registers; elementwise max is
-    commutative/idempotent, so the stream-built registers equal the
-    batch kernel's 7-day rangeBetween merge over the same rows under
-    ANY micro-batch split, checkpoint restart, or duplicate redelivery
-    — pinned by test like the KMV/CUSUM/PSI twins. ``own_day_seen``
-    marks anchors that had an event on the anchor day itself (the batch
-    kernel only emits those days).
-
-    Hash/register/rho are the IDENTICAL formulas as the batch kernel
-    (md5 -> 60-bit int; low 6 bits bucket; rho = 55 - bitlen(v)).
-
-    Reference scope: the reference engine has no sketch module; this is
-    part of the training-data-pipeline surface (SURVEY.md §2 extension)
-    built Spark-first."""
-    from pyspark.sql import functions as F
-
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    day = F.to_date(F.date_trunc("DAY", F.timestamp_micros(F.expr("ts div 1000"))))
-    day_num = F.datediff(day, F.lit("1970-01-01").cast("date"))
-    v = F.shiftright(h, 6)
-    rho = (
-        F.when(v == 0, F.lit(55))
-        .otherwise(F.lit(54) - F.length(F.bin(v)) + 1)
-        .cast("long")
-    )
-    prepped = (
-        events.select(
-            day_num.alias("day_num"),
-            (h % _WAU_M).alias("register"),
-            rho.alias("rho"),
-        )
-        .select(
-            F.explode(
-                F.sequence(F.col("day_num"), F.col("day_num") + F.lit(6))
-            ).alias("anchor"),
-            "day_num", "register", "rho",
-        )
-        .withColumn("is_own_day", F.col("anchor") == F.col("day_num"))
-        .drop("day_num")
-    )
-    return prepped.groupBy("anchor").applyInPandasWithState(
-        _wau_hll_fn,
-        outputStructType=WAU_HLL_OUTPUT_SCHEMA,
-        stateStructType=WAU_HLL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-BITMAP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("month", StringType(), False),
-        StructField("user_id", LongType(), False),
-        StructField("mask", LongType(), False),
-        StructField("active_days", LongType(), False),
-    ]
-)
-
-BITMAP_STATE_SCHEMA = StructType([StructField("mask", LongType(), False)])
-
-
-def _bitmap_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Day-of-month bitmask merge for one (month, user): OR the carried
-    mask with the batch's bits. bit_or is commutative and idempotent,
-    so Arrow chunking, micro-batch splits, and duplicate redelivery
-    cannot change the mask."""
-    mask = int(state.get[0]) if state.exists else 0
-    for pdf in pdfs:
-        for b in pdf["_b"]:
-            mask |= int(b)
-    state.update((mask,))
-    yield pd.DataFrame(
-        [
-            {
-                "month": key[0],
-                "user_id": int(key[1]),
-                "mask": mask,
-                "active_days": bin(mask).count("1"),
-            }
-        ]
-    )
-
-
-def streaming_activity_bitmap(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch ``events_activity_bitmap`` rollup:
-    per (month, user) the day-of-month bitmask lives in managed state —
-    ONE long per key, the bitmap-index trick that keeps retention math
-    bounded — and every batch emits the key's current mask and
-    bit_count. bit_or is commutative/idempotent, so the stream-built
-    mask equals the batch kernel's over the same rows under ANY
-    micro-batch split, checkpoint restart, or duplicate redelivery —
-    pinned by test like the WAU/KMV/CUSUM twins. Day/month formulas are
-    IDENTICAL to the batch kernel (nanos ts -> date -> yyyy-MM,
-    1 << (day-1)).
-
-    Reference scope: the reference engine has no sketch module; this is
-    part of the training-data-pipeline surface (SURVEY.md §2 extension)
-    built Spark-first."""
-    from pyspark.sql import functions as F
-
-    d = F.to_date(F.date_trunc("DAY", F.timestamp_micros(F.expr("ts div 1000"))))
-    prepped = events.select(
-        F.date_format(d, "yyyy-MM").alias("month"),
-        "user_id",
-        F.expr(
-            "shiftleft(cast(1 as bigint), "
-            "day(to_date(date_trunc('DAY', timestamp_micros(ts div 1000)))) - 1)"
-        ).alias("_b"),
-    )
-    return prepped.groupBy("month", "user_id").applyInPandasWithState(
-        _bitmap_fn,
-        outputStructType=BITMAP_OUTPUT_SCHEMA,
-        stateStructType=BITMAP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-MATAGG_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", StringType(), False),
-        StructField("grp", StringType(), True),
-        StructField("delta_value", DoubleType(), False),
-        StructField("delta_keys", LongType(), False),
-    ]
-)
-
-MATAGG_STATE_SCHEMA = StructType(
-    [
-        StructField("grp", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("step", LongType(), False),
-        StructField("tx_id", LongType(), False),
-        StructField("present", BooleanType(), False),
-    ]
-)
-
-
-def _agg_delta_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-key LWW transition -> retraction/addition deltas. The winner
-    across ALL Arrow chunks is the max (step, tx_id) row (chunk splits
-    cannot change it); a redelivered row loses the >-comparison against
-    the carried state, so duplicates emit NO delta — idempotence falls
-    out of the LWW position guard, the same discipline as the apply
-    kernel's checkpoint filter."""
-    if state.exists:
-        grp0, val0, step, tx, present0 = state.get
-    else:
-        grp0, val0, step, tx, present0 = None, None, -1, -1, False
-    win = None
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        w = pdf.sort_values(["step", "tx_id"]).iloc[-1]
-        if win is None or (int(w["step"]), int(w["tx_id"])) > (
-            int(win["step"]), int(win["tx_id"])
-        ):
-            win = w
-    out = []
-    if win is not None and (int(win["step"]), int(win["tx_id"])) > (step, tx):
-        grp1 = None if pd.isna(win["grp"]) else str(win["grp"])
-        erase = bool(win["op"] == "erase")
-        val1 = None if erase else float(win["value"])
-        present1 = not erase
-        if present0:
-            out.append(
-                {"key": key[0], "grp": grp0,
-                 "delta_value": -float(val0), "delta_keys": -1}
-            )
-        if present1:
-            out.append(
-                {"key": key[0], "grp": grp1,
-                 "delta_value": float(val1), "delta_keys": 1}
-            )
-        state.update(
-            (grp1 if present1 else None, val1, int(win["step"]),
-             int(win["tx_id"]), present1)
-        )
-    yield pd.DataFrame(
-        out, columns=["key", "grp", "delta_value", "delta_keys"]
-    )
-
-
-def streaming_agg_deltas(
-    events: DataFrame,
-    key_col: str = "key",
-    group_col: str = "grp",
-    value_col: str = "value",
-    op_col: str = "op",
-    step_col: str = "step",
-    txid_col: str = "tx_id",
-) -> DataFrame:
-    """Incremental-view-maintenance delta stream for a grouped
-    aggregate over LWW-keyed state: each key's winning (step, tx_id)
-    transition emits a RETRACTION of its previous contribution
-    (-old_value on the old group, -1 key) and an ADDITION of the new
-    one (+new_value on the new group, +1 key); erases emit only the
-    retraction. Downstream, ``MaterializedAggState.apply_deltas``
-    folds the deltas into per-group (sum, n_keys) with batch-id
-    replay protection — together they maintain a materialized
-    GROUP BY over a CDC stream without ever rescanning the base
-    table: the MERGE-half of incremental view maintenance, state
-    bounded at one (group, value, position) tuple per key.
-
-    Exactly-once effect: duplicates lose the LWW position comparison
-    (no delta), and a crashed batch replays into the same batch_id
-    (the applier skips already-applied ids) — the §4.3 recipe applied
-    to a derived view instead of a destination table.
-
-    Reference scope: the reference applies changes to base tables
-    only (processor.go); maintained derived aggregates are part of
-    the Spark-first extension surface (SURVEY.md §2 extension)."""
-    from pyspark.sql import functions as F
-
-    shaped = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(group_col).cast("string").alias("grp"),
-        F.col(value_col).cast("double").alias("value"),
-        F.col(op_col).cast("string").alias("op"),
-        F.col(step_col).cast("long").alias("step"),
-        F.col(txid_col).cast("long").alias("tx_id"),
-    )
-    return shaped.groupBy("key").applyInPandasWithState(
-        _agg_delta_fn,
-        outputStructType=MATAGG_OUTPUT_SCHEMA,
-        stateStructType=MATAGG_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class MaterializedAggState:
-    """Tiny crash-safe applier for ``streaming_agg_deltas``: per-group
-    (sum_value, n_keys) plus the last applied batch id, persisted as
-    JSON with tmp+rename atomicity. A replayed batch (same batch_id)
-    is skipped, so delta application is exactly-once per batch even
-    though foreachBatch is at-least-once — the same
-    version-guard shape as VersionedTable.commit. State is one row
-    per GROUP (not per key): catalog-scale, the whole point of
-    maintaining the aggregate instead of the base table.
-
-    Float-drift caveat: double sums are maintained as +new/-old
-    retract-add pairs, so a long-lived view accumulates rounding
-    drift relative to a fresh GROUP BY (the fuzz tests pin parity on
-    integer-valued doubles, which are exact). For long-lived views
-    over non-integer values, schedule a periodic full rebuild
-    (recompute the GROUP BY and replace ``groups``) — the standard
-    IVM reconciliation — or maintain cents/ppm fixed-point integers
-    in the source column, as every gated query in this repo does."""
-
-    def __init__(self, path: str):
-        import json as _json
-        import os as _os
-
-        self._json, self._os, self.path = _json, _os, path
-        if _os.path.exists(path):
-            d = _json.load(open(path))
-            self.groups = {
-                k: (float(v[0]), int(v[1])) for k, v in d["groups"].items()
-            }
-            self.last_batch = int(d["last_batch"])
-        else:
-            self.groups, self.last_batch = {}, -1
-
-    def apply_deltas(self, rows, batch_id: int) -> bool:
-        if batch_id <= self.last_batch:
-            return False  # replayed batch: already applied, converge
-        for r in rows:
-            s, n = self.groups.get(r["grp"], (0.0, 0))
-            self.groups[r["grp"]] = (
-                s + float(r["delta_value"]), n + int(r["delta_keys"])
-            )
-        self.groups = {k: v for k, v in self.groups.items() if v[1] != 0}
-        self.last_batch = batch_id
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as fh:
-            self._json.dump(
-                {"groups": {k: list(v) for k, v in self.groups.items()},
-                 "last_batch": self.last_batch}, fh,
-            )
-        self._os.replace(tmp, self.path)
-        return True
-
-class MaterializedTopKState(MaterializedAggState):
-    """Maintained TOP-K view over the delta stream — the third IVM act
-    after the grouped aggregate (``streaming_agg_deltas``) and the
-    joined view (``streaming_join_view_deltas``), consuming the SAME
-    ``MATAGG_OUTPUT_SCHEMA`` deltas.
-
-    The textbook subtlety: top-k is NOT self-maintainable under
-    deletions — a retraction that demotes a top-k member needs the
-    (k+1)th group, which a top-k-only state has already discarded
-    (Gupta & Mumick's classic IVM taxonomy). The correct fix at
-    warehouse scale is exactly what the base class already provides:
-    the maintained state is the FULL per-group aggregate (one row per
-    group — catalog-sized, orders of magnitude below the key space the
-    deltas compress away), and ``topk()`` re-selects from it after
-    each delta fold. Selection is O(groups) with a k-heap, no base
-    table is ever rescanned, and deletions/group-moves are just
-    retract-add pairs folding through — so the view is correct under
-    ANY delete pattern, not only ones that never touch the top.
-
-    Ordering is total and deterministic: (sum DESC, grp ASC), so two
-    engines (or a restart replaying from the JSON snapshot) produce
-    the identical list, ties included."""
-
-    def __init__(self, path: str, k: int = 10):
-        super().__init__(path)
-        self.k = int(k)
-
-    def topk(self) -> list[tuple[str, float, int]]:
-        import heapq
-
-        return [
-            (g, s, n)
-            for (s, _neg_g, g, n) in heapq.nlargest(
-                self.k,
-                (
-                    (s, _NegStr(g), g, n)
-                    for g, (s, n) in self.groups.items()
-                ),
-            )
-        ]
-
-
-class _NegStr:
-    """Inverts string comparison so heapq.nlargest on (sum, _NegStr(g))
-    yields sum DESC, grp ASC — a total deterministic order."""
-
-    __slots__ = ("s",)
-
-    def __init__(self, s: str):
-        self.s = s
-
-    def __lt__(self, other):  # reversed
-        return self.s > other.s
-
-    def __eq__(self, other):
-        return self.s == other.s
-
-
-# ---------------------------------------------------------------------------
-# IVM over a JOINED view: orders-side ⋈ items-side grouped aggregate
-# ---------------------------------------------------------------------------
-
-JOINVIEW_STATE_SCHEMA = StructType(
-    [
-        StructField("grp", StringType(), True),
-        StructField("present", BooleanType(), False),
-        StructField("step_o", LongType(), False),
-        StructField("tx_o", LongType(), False),
-        # per-item LWW map {sub_key: [value, step, tx_id, present]}
-        # serialized as JSON — bounded by items-per-join-key (lineitems
-        # per order: single digits), NOT by stream length
-        StructField("items", StringType(), False),
-    ]
-)
-
-
-def _join_view_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-join-key transition for a maintained JOIN view.
-
-    State carries the parent row's LWW (grp, present, position) AND a
-    per-item LWW map, so a change on EITHER side recomputes this key's
-    full contribution (grp, sum(items), n_items) locally — the delta
-    is retract(old contribution) + add(new contribution), no base-table
-    rescan. Duplicates lose their per-row LWW comparison and change
-    nothing, so they emit no delta (idempotence by position guard);
-    stale out-of-order rows likewise. A parent erase retracts the whole
-    contribution; a parent group move retracts under the old group and
-    re-adds under the new one with the SAME item sum.
-    """
-    import json as _json
-
-    if state.exists:
-        grp, present, step_o, tx_o, items_js = state.get
-        items = {k: tuple(v) for k, v in _json.loads(items_js).items()}
-    else:
-        grp, present, step_o, tx_o, items = None, False, -1, -1, {}
-
-    def contribution():
-        if not present:
-            return None
-        vals = [v for v, _, _, p in items.values() if p]
-        return (grp, float(sum(vals)), len(vals))
-
-    before = contribution()
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        # parent side: batch winner by (step, tx), then LWW vs state
-        oside = pdf[pdf["side"] == "o"]
-        if len(oside):
-            w = oside.sort_values(["step", "tx_id"]).iloc[-1]
-            if (int(w["step"]), int(w["tx_id"])) > (step_o, tx_o):
-                step_o, tx_o = int(w["step"]), int(w["tx_id"])
-                present = bool(w["op"] != "erase")
-                grp = None if pd.isna(w["grp"]) else str(w["grp"])
-        # item side: per-sub_key batch winner (vectorized sort +
-        # drop_duplicates keeps the last = max-position row per item)
-        lside = pdf[pdf["side"] == "l"]
-        if len(lside):
-            wins = (
-                lside.sort_values(["step", "tx_id"])
-                .drop_duplicates("sub_key", keep="last")
-            )
-            for _, w in wins.iterrows():
-                sk = str(w["sub_key"])
-                _, s0, t0, _ = items.get(sk, (0.0, -1, -1, False))
-                if (int(w["step"]), int(w["tx_id"])) > (s0, t0):
-                    items[sk] = (
-                        0.0 if pd.isna(w["value"]) else float(w["value"]),
-                        int(w["step"]),
-                        int(w["tx_id"]),
-                        bool(w["op"] != "erase"),
-                    )
-    after = contribution()
-    state.update(
-        (grp, present, step_o, tx_o,
-         _json.dumps({k: list(v) for k, v in items.items()}))
-    )
-    out = []
-    if before != after:
-        if before is not None:
-            out.append(
-                {"key": key[0], "grp": before[0],
-                 "delta_value": -before[1], "delta_keys": -before[2]}
-            )
-        if after is not None:
-            out.append(
-                {"key": key[0], "grp": after[0],
-                 "delta_value": after[1], "delta_keys": after[2]}
-            )
-    yield pd.DataFrame(out, columns=["key", "grp", "delta_value", "delta_keys"])
-
-
-def streaming_join_view_deltas(
-    changes: DataFrame,
-    join_key_col: str = "jk",
-    side_col: str = "side",
-    sub_key_col: str = "sub_key",
-    group_col: str = "grp",
-    value_col: str = "value",
-    op_col: str = "op",
-    step_col: str = "step",
-    txid_col: str = "tx_id",
-) -> DataFrame:
-    """Incremental maintenance of a JOINED grouped view over two CDC
-    streams — the second act of ``streaming_agg_deltas``: the view is
-
-        SELECT o.grp, sum(l.value), count(l.*)
-        FROM parent o JOIN items l ON o.jk = l.jk GROUP BY o.grp
-
-    maintained under upserts AND deletes on BOTH tables. The two change
-    streams arrive unified with a ``side`` tag ('o' parent / 'l' item);
-    grouping on the join key co-locates each key's parent row and item
-    rows in ONE stateful operator, so every delta is computed from
-    per-key state alone (classic delta-join IVM needs dO⋈L + O⋈dL
-    passes over base tables; keying state by the join key makes both
-    terms local — at 100 TB the state store shards by jk and no base
-    table is ever rescanned). Output deltas are in
-    ``MATAGG_OUTPUT_SCHEMA`` and fold with the SAME
-    ``MaterializedAggState`` applier (delta_keys counts joined items).
-
-    Exactly-once: duplicates/stale rows lose their per-row LWW position
-    comparison (no state change, no delta) and a replayed batch replays
-    into the same batch_id, which the applier skips — the §4.3 recipe
-    on a derived joined view. Same float-drift caveat as
-    ``MaterializedAggState``; keep values integer-valued fixed-point.
-
-    Reference scope: the reference applies changes to base tables only
-    (processor.go); maintained join views are part of the Spark-first
-    extension surface (SURVEY.md §2 extension)."""
-    from pyspark.sql import functions as F
-
-    shaped = changes.select(
-        F.col(join_key_col).cast("string").alias("jk"),
-        F.col(side_col).cast("string").alias("side"),
-        F.col(sub_key_col).cast("string").alias("sub_key"),
-        F.col(group_col).cast("string").alias("grp"),
-        F.col(value_col).cast("double").alias("value"),
-        F.col(op_col).cast("string").alias("op"),
-        F.col(step_col).cast("long").alias("step"),
-        F.col(txid_col).cast("long").alias("tx_id"),
-    )
-    return shaped.groupBy("jk").applyInPandasWithState(
-        _join_view_fn,
-        outputStructType=MATAGG_OUTPUT_SCHEMA,
-        stateStructType=JOINVIEW_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- last-touch attribution twin --------------------------------------------
-
-ATTRIBUTION_LOOKBACK_NS = 7 * 86_400 * 10**9
-
-ATTRIB_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType(), False),
-        StructField("n_click", LongType(), False),
-        StructField("cents_click", LongType(), False),
-        StructField("n_view", LongType(), False),
-        StructField("cents_view", LongType(), False),
-        StructField("n_none", LongType(), False),
-        StructField("cents_none", LongType(), False),
-    ]
-)
-
-ATTRIB_STATE_SCHEMA = StructType(
-    [
-        StructField("touch_ts", LongType(), True),
-        StructField("touch_type", StringType(), True),
-        StructField("n_click", LongType(), False),
-        StructField("cents_click", LongType(), False),
-        StructField("n_view", LongType(), False),
-        StructField("cents_view", LongType(), False),
-        StructField("n_none", LongType(), False),
-        StructField("cents_none", LongType(), False),
-    ]
-)
-
-
-def _half_up_cents(v) -> int:
-    """round(value * 100, 0) with Spark/DuckDB half-away-from-zero
-    semantics (python's round() is banker's — the one divergence that
-    would break twin parity on a .5 cent)."""
-    import math
-
-    x = float(v) * 100.0
-    return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
-
-
-def _attribution_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        (touch_ts, touch_type, n_c, c_c, n_v, c_v, n_n, c_n) = state.get
-    else:
-        touch_ts, touch_type = None, None
-        n_c = c_c = n_v = c_v = n_n = c_n = 0
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        # one total order, same as the batch window: (event-time, id) —
-        # splitting the stream at any batch boundary composes to the
-        # identical left-to-right carry
-        for r in pdf.sort_values(["tsn", "event_id"]).itertuples():
-            et = r.event_type
-            if et in ("click", "view"):
-                touch_ts, touch_type = int(r.tsn), et
-            elif et == "purchase":
-                cents = 0 if pd.isna(r.value) else _half_up_cents(r.value)
-                if (
-                    touch_ts is not None
-                    and int(r.tsn) - touch_ts <= ATTRIBUTION_LOOKBACK_NS
-                ):
-                    label = touch_type
-                else:
-                    label = "none"
-                if label == "click":
-                    n_c += 1
-                    c_c += cents
-                elif label == "view":
-                    n_v += 1
-                    c_v += cents
-                else:
-                    n_n += 1
-                    c_n += cents
-    state.update((touch_ts, touch_type, n_c, c_c, n_v, c_v, n_n, c_n))
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": key[0],
-                "n_click": n_c,
-                "cents_click": c_c,
-                "n_view": n_v,
-                "cents_view": c_v,
-                "n_none": n_n,
-                "cents_none": c_n,
-            }
-        ]
-    )
-
-
-def streaming_attribution(events: DataFrame) -> DataFrame:
-    """Continuously-maintained last-touch attribution per user — the
-    streaming twin of the batch ``events_attribution`` query: state is
-    the user's last click/view touch (one timestamp + one string) plus
-    six tally longs, O(users) total, independent of event volume; each
-    purchase is attributed the moment it arrives, against the SAME
-    7-day lookback and total order (ts, event_id) the batch window
-    folds in, so splitting the stream at any micro-batch boundary (and
-    restarting from the checkpoint) composes to the identical result.
-    Emits each batch's touched users with cumulative tallies (update
-    mode); the corpus-level answer is the sum over users' latest rows.
-
-    PRECONDITION — per-user event-time-ordered delivery: unlike the
-    LWW/position-guarded CDC and join-view twins, the fold is
-    attribute-on-arrival, so batch parity holds only when each user's
-    events arrive in (ts, event_id) order ACROSS batches (within a
-    batch they are sorted before folding). A late touch or purchase —
-    event-time earlier than rows already folded in a prior batch —
-    would be folded at arrival position and silently mis-attribute,
-    and the cumulative tallies cannot be reconciled after the fact.
-    That matches the CDC source this twin is fed from (the reader
-    drains partitions in offset order and events carry
-    monotonically-assigned ids); feeding an out-of-order source
-    requires buffering each user's events behind a watermark before
-    the fold, which this operator deliberately does not do (it would
-    add O(lateness-window) state per user).
-    """
-    from pyspark.sql import functions as F
-
-    ts_field = events.schema["ts"].dataType.simpleString()
-    tsn = (
-        F.col("ts")
-        if ts_field == "bigint"
-        else F.expr("unix_micros(CAST(ts AS TIMESTAMP)) * CAST(1000 AS BIGINT)")
-    )
-    shaped = events.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        tsn.alias("tsn"),
-        F.col("event_type").cast("string").alias("event_type"),
-        F.col("value").cast("double").alias("value"),
-    )
-    return shaped.groupBy("user_id").applyInPandasWithState(
-        _attribution_fn,
-        outputStructType=ATTRIB_OUTPUT_SCHEMA,
-        stateStructType=ATTRIB_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-DQ_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("constraint", StringType(), False),
-        StructField("total", LongType(), False),
-        StructField("violations", LongType(), False),
-        StructField("ok", LongType(), False),
-    ]
-)
-
-DQ_STATE_SCHEMA = StructType(
-    [
-        StructField("total", LongType(), False),
-        StructField("violations", LongType(), False),
-    ]
-)
-
-
-def _dq_counter_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Additive (total, violations) counters for one constraint.
-    Integer addition is commutative/associative, so Arrow chunking and
-    micro-batch splits cannot change the totals; each batch emits the
-    constraint's current report row."""
-    t, v = (int(state.get[0]), int(state.get[1])) if state.exists else (0, 0)
-    for pdf in pdfs:
-        t += int(len(pdf))
-        v += int(pdf["_viol"].sum())
-    state.update((t, v))
-    yield pd.DataFrame(
-        [
-            {
-                "constraint": key[0],
-                "total": t,
-                "violations": v,
-                "ok": 1 if v == 0 else 0,
-            }
-        ]
-    )
-
-
-def streaming_dq_counters(events: DataFrame, checks) -> DataFrame:
-    """Streaming twin of the ``dq_constraints`` row-check arms — the
-    live data-quality monitor a pipeline runs on the SAME declarative
-    ``ops.dq.RowCheck`` specs its batch admission gate uses: every
-    incoming row evaluates all predicates row-locally (NULL counts as
-    a violation, exactly the batch semantics), explodes to one
-    (constraint, violation-bit) pair per check, and a single additive
-    (total, violations) counter pair per constraint lives in managed
-    state — O(n_constraints) longs of state TOTAL, any stream volume.
-    Each micro-batch emits every constraint's current report row in
-    the batch gate's shape (constraint, total, violations, ok).
-
-    Parity: counters are exact under any micro-batch split and
-    checkpoint restart (pinned in tests against ``dq_check`` over the
-    union of all rows). Unlike the idempotent bitmap/HLL twins,
-    duplicated redelivery WOULD double-count an additive counter — so
-    this twin belongs behind the same committed-offset discipline as
-    the apply sink (streaming.py's position guard), which is where the
-    CDC pipeline already runs it.
-
-    Reference scope: no reference counterpart (SURVEY.md §2 extension);
-    the batch twin is ops/dq.py.
-    """
-    from pyspark.sql import functions as F
-
-    pairs = events.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c.name).alias("constraint"),
-                        F.when(F.expr(c.predicate), F.lit(0))
-                        .otherwise(F.lit(1))
-                        .cast("long")
-                        .alias("_viol"),
-                    )
-                    for c in checks
-                ]
-            )
-        ).alias("p")
-    ).select("p.*")
-    return pairs.groupBy("constraint").applyInPandasWithState(
-        _dq_counter_fn,
-        outputStructType=DQ_OUTPUT_SCHEMA,
-        stateStructType=DQ_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

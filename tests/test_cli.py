@@ -865,3 +865,27 @@ def test_cli_compact_two_streams_without_partition_count(spark, tmp_path, capsys
         files = t.n_data_files()
         assert files and all(n == 1 for n in files.values()), files
         assert sorted(t.current().collect()) == rows
+
+
+def test_cli_multi_stream_without_partition_count_is_usage_error(
+    tmp_path, capsys
+):
+    """A CDC run over two streams without --expected-partitions is a
+    usage error: rc 2 and a message naming the flag, decided before
+    Spark starts or the lock is taken, so a standby acquires at once."""
+    from aardappel_spark.locker import Locker, LockStorage
+
+    tmp = str(tmp_path)
+    cfg, metas = _write_two_streams(tmp)
+    with open(cfg, "a") as f:
+        f.write("multiple_instances_mode: true\n")
+    work = os.path.join(tmp, "work")
+    rc = main([
+        "--config", cfg, "--table-metas", metas, "--work-dir", work,
+        "--available-now",
+    ])
+    assert rc == 2
+    assert "--expected-partitions" in capsys.readouterr().err
+    other = Locker(LockStorage(os.path.join(work, "lock.json")), ttl_seconds=60)
+    assert other.try_acquire()
+    other.release()

@@ -117,67 +117,6 @@ def test_lock_stale_mutex_steal_single_winner(tmp_path):
     assert os.path.isdir(store._mutex())  # the winner holds a fresh mutex
 
 
-# -- small-file compaction (maintenance.py) ----------------------------------
-
-
-def test_compact_small_files_preserves_data(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from aardappel_spark.maintenance import compact_small_files, parquet_file_stats
-
-    path = os.path.join(str(tmp_path), "t")
-    # 20 tiny files
-    spark.range(2000).withColumn("v", F.col("id") * 3).repartition(20).write.parquet(path)
-    n_before, total = parquet_file_stats(path)
-    assert n_before == 20
-
-    before = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
-    n_after = compact_small_files(spark, path, target_bytes=total)  # -> 1 file
-    assert n_after == 1
-    assert {(r.id, r.v) for r in spark.read.parquet(path).collect()} == before
-    # idempotent / already-compact: no rewrite
-    assert compact_small_files(spark, path, target_bytes=total) == 1
-
-
-def test_compact_small_files_clears_stale_temp(spark, tmp_path):
-    import os
-
-    from aardappel_spark.maintenance import compact_small_files
-
-    path = os.path.join(str(tmp_path), "t")
-    spark.range(100).repartition(4).write.parquet(path)
-    os.makedirs(path + ".compact_tmp")  # crash leftover
-    n = compact_small_files(spark, path, target_bytes=1)  # target tiny -> no-op (already >= files)
-    assert not os.path.exists(path + ".compact_tmp")
-    assert n == 4
-
-
-def test_compact_crash_between_renames_recovers_original(spark, tmp_path):
-    """ADVICE r2: a crash between `path -> .compact_old` and
-    `.compact_tmp -> path` leaves the only data copies in the staging
-    dirs; the next run must RESTORE .compact_old, not rmtree it."""
-    import shutil
-
-    from aardappel_spark.maintenance import compact_small_files
-
-    path = os.path.join(str(tmp_path), "t")
-    spark.range(200).repartition(4).write.parquet(path)
-    before = sorted(r.id for r in spark.read.parquet(path).collect())
-
-    # simulate the mid-swap crash window
-    shutil.copytree(path, path + ".compact_tmp")
-    os.rename(path, path + ".compact_old")
-    assert not os.path.exists(path)
-
-    n = compact_small_files(spark, path, target_bytes=1)  # tiny target -> no rewrite
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == before
-    assert not os.path.exists(path + ".compact_old")
-    assert not os.path.exists(path + ".compact_tmp")
-    assert n == 4
-
-
 # -- Kafka source logic, broker-free (S1) ------------------------------------
 
 
@@ -199,7 +138,10 @@ def test_kafka_reader_options():
 
 def test_kafka_projection_on_record_schema(spark):
     """The column logic applied to Kafka's record shape (binary values,
-    topic discrimination) — everything but the broker connection."""
+    topic discrimination) — everything but the broker connection. The
+    topic lookup must not use a deprecated API: a FutureWarning fails."""
+    import warnings
+
     from aardappel_spark.sources import project_kafka_records
 
     rows = [
@@ -210,7 +152,10 @@ def test_kafka_projection_on_record_schema(spark):
     df = spark.createDataFrame(
         rows, "topic string, partition int, offset long, value binary"
     )
-    out = project_kafka_records(df, {"orders_topic": 0, "users_topic": 1}).collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        projected = project_kafka_records(df, {"orders_topic": 0, "users_topic": 1})
+    out = projected.collect()
     got = {(r.table_id, r.partition, r.offset, r.value) for r in out}
     assert got == {
         (0, 0, 7, '{"update":{}}'),

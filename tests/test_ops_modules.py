@@ -1970,6 +1970,67 @@ def test_psi_drift_matches_python_model(spark, sf_dir):
     assert abs(row.psi - psi) <= 1e-6
 
 
+def test_cusum_window_rewrite_equals_classic_recursion(spark, tmp_path):
+    """events_cusum's window rewrite S - min(0, running-min S) must equal
+    the textbook recursion s_i = max(0, s_{i-1} + (x_i - 55)), alarm
+    s_i > 100, on every row of random per-user sequences, including
+    spikes and users that never exceed the reference. The DuckDB oracle
+    uses the same rewrite, so only this check can catch a wrong one."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aardappel_spark.registry import QUERIES
+
+    ref, h = 55.0, 100.0  # q_events_cusum's reference level and alarm
+    rng = random.Random(42)
+    rows = []
+    eid = 0
+    for uid in range(8):
+        for i in range(rng.randint(1, 40)):
+            eid += 1
+            base = rng.uniform(0.0, 120.0)
+            if rng.random() < 0.1:
+                base += rng.uniform(100.0, 300.0)  # spike
+            rows.append((uid, eid, i * 10 + rng.randint(0, 5), round(base, 2)))
+    for i in range(20):  # a user entirely below the reference
+        eid += 1
+        rows.append((8, eid, i * 10, round(rng.uniform(0.0, ref - 1.0), 2)))
+
+    t0_ns = 1_700_000_000_000_000_000
+    uid_c, eid_c, mic_c, val_c = zip(*rows)
+    pq.write_table(
+        pa.table({
+            "user_id": pa.array(uid_c, pa.int64()),
+            "event_id": pa.array(eid_c, pa.int64()),
+            "ts": pa.array([t0_ns + m * 1000 for m in mic_c], pa.int64()),
+            "value": pa.array(val_c, pa.float64()),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    got = {
+        r.event_id: (r.user_id, r.cusum, r.alarm)
+        for r in QUERIES["events_cusum"](spark, str(tmp_path)).collect()
+    }
+
+    per_user: dict[int, list] = {}
+    for uid, eid_, mic, v in rows:
+        per_user.setdefault(uid, []).append((mic, eid_, v))
+    want = {}
+    for uid, evs in per_user.items():
+        s = 0.0
+        for _, eid_, v in sorted(evs):
+            s = max(0.0, s + (v - ref))
+            want[eid_] = (uid, round(s, 6), round(s, 6) > h)
+    assert got.keys() == want.keys()
+    for e, (uid, s, alarm) in want.items():
+        g_uid, g_s, g_alarm = got[e]
+        assert g_uid == uid and abs(g_s - s) <= 1e-6 and g_alarm == alarm, e
+    assert any(a for _, _, a in want.values())  # some user alarms
+    assert all(s == 0.0 for u, s, _ in want.values() if u == 8)
+
+
 def test_threshold_curve_is_monotone_and_consistent(spark, sf_dir):
     """Pair mass and affected-doc mass must be non-increasing in the
     threshold, and every affected-doc count is bounded by 2x pairs."""
