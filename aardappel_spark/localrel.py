@@ -22,6 +22,9 @@ single largest term). These helpers build the same frames JVM-natively:
   same (value, declared type) pairs the pickled path materialized. On
   any Arrow conversion failure it falls back to the original pickled
   path, so behaviour can only be identical.
+
+``_unpin`` releases frames pinned with ``localCheckpoint``: the
+per-batch pins of the CDC engine and of the streaming dedup kernels.
 """
 
 from __future__ import annotations
@@ -59,3 +62,16 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     except Exception:
         # fall back to the pickled path rather than change behaviour
         return spark.createDataFrame(rows, st)
+
+
+def _unpin(*frames: DataFrame) -> None:
+    """Release the blocks of frames pinned with ``localCheckpoint``.
+    Dropping the Python frame frees them only once the JVM's GC runs
+    the ContextCleaner, so a long stream would otherwise hold every
+    batch's pins in the block manager."""
+    for df in frames:
+        # what the ContextCleaner runs; RDD.unpersist would also warn
+        # that a local checkpoint cannot be recomputed
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+            df._jdf.logicalPlan().rdd().id(), False
+        )

@@ -154,7 +154,7 @@ def parse_messages(
     # NOTE for callers: Catalyst pushes downstream predicates through this
     # projection, substituting the from_json chain into each condition —
     # measured at ~24 re-parses per row for a typical filter+agg pipeline.
-    # Batch kernels should PERSIST the parsed result (parse once per
+    # Batch kernels should pin the parsed result (parse once per
     # micro-batch — what foreachBatch does naturally); see
     # cdc_queries.parsed_messages.
     return out

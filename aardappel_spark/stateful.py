@@ -22,7 +22,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
-from .localrel import empty_df, local_df
+from .localrel import _unpin, empty_df, local_df
 
 
 def _read_store_or_empty(
@@ -129,19 +129,6 @@ def _write_buckets(df: DataFrame, path: str) -> None:
     df.repartition("bucket").write.partitionBy("bucket").mode(
         "overwrite"
     ).parquet(path)
-
-
-def _unpin(*frames: DataFrame) -> None:
-    """Release the blocks of frames pinned with ``localCheckpoint``.
-    Dropping the Python frame frees them only once the JVM's GC runs
-    the ContextCleaner, so a long stream would otherwise hold every
-    batch's pins in the block manager."""
-    for df in frames:
-        # what the ContextCleaner runs; RDD.unpersist would also warn
-        # that a local checkpoint cannot be recomputed
-        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
-            df._jdf.logicalPlan().rdd().id(), False
-        )
 
 
 def _read_counts_total(path: str, exclude_bid: int) -> int:

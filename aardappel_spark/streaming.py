@@ -37,7 +37,7 @@ from .casting import TableMeta, typed_mutations
 from .compact import compact_changes
 from .cmdqueue import parse_commands, resolve_problem_actions
 from .keyfilter import filter_blocked_keys
-from .localrel import empty_df, local_df
+from .localrel import _unpin, empty_df, local_df
 from .metrics import MetricsRegistry
 # split_heartbeats and get_quorum are unused here but stay bound: the
 # benchmark's tracer wraps the parse/quorum names this module binds
@@ -540,7 +540,7 @@ class ReplicationEngine:
         """The batch's one driver-side aggregate, per (table_id,
         partition): max offset (guard advance), newest heartbeat (quorum),
         error-row count (problem routing) and oldest event position
-        (out-of-order test). One job over the persisted parse replaces a
+        (out-of-order test). One job over the pinned parse replaces a
         collect or count per question."""
         return (
             parsed.groupBy("table_id", "partition")
@@ -623,7 +623,13 @@ class ReplicationEngine:
             # redelivery BEFORE out-of-order routing, like the reference's
             # topic reader guard
             parsed = self._guard_consumed_offsets(parsed)
-        parsed = parsed.persist()
+        # the batch's localCheckpoints: no columnar cache encoding, and
+        # AQE still coalesces the shuffles inside them. All of them live
+        # until the batch ends, because frames derived from one (e.g.
+        # _route_out_of_order's result) are read after the step that
+        # pinned it, and a released local checkpoint cannot be recomputed
+        parsed = parsed.localCheckpoint(eager=False)
+        pins = [parsed]
         try:
             census = self._census(parsed)
             if has_offset:
@@ -654,7 +660,7 @@ class ReplicationEngine:
                 < hb_before[(r.table_id, r.partition)]
                 for r in census
             ):
-                events = self._route_out_of_order(events, hb_before, st)
+                events = self._route_out_of_order(events, hb_before, st, pins)
             # stale filter (F1): strictly-below-checkpoint replays dropped
             events = events.filter(pos() >= pos_lit(*checkpoint))
             if self.blocked_keys is not None:
@@ -703,14 +709,14 @@ class ReplicationEngine:
                 return
 
             quorum_wait = _time.perf_counter() - t_start
-            batch = cut_below_quorum(events, q).persist()
+            batch = cut_below_quorum(events, q)
             remainder = events.filter(pos() >= pos_lit(*q))
 
             t_commit = _time.perf_counter()
             if st["stage"] == STAGE_INITIAL_SCAN:
-                per_table = self._catch_up_apply(batch, batch_id)
+                per_table = self._catch_up_apply(batch, batch_id, pins)
             else:
-                per_table = self._apply_to_tables(batch, version=batch_id + 1)
+                per_table = self._apply_to_tables(batch, batch_id + 1, pins)
             n_mods = sum(per_table.values())
             self.modifications += n_mods
 
@@ -727,11 +733,12 @@ class ReplicationEngine:
                 quorum_wait_seconds=quorum_wait,
                 quorum_step_ms=float(q[0]) * self.step_to_ms,
             )
-            batch.unpersist()
         finally:
-            parsed.unpersist()
+            _unpin(*pins)
 
-    def _apply_to_tables(self, batch: DataFrame, version: int) -> dict[str, int]:
+    def _apply_to_tables(
+        self, batch: DataFrame, version: int, pins: list[DataFrame]
+    ) -> dict[str, int]:
         """Apply one (sub-)batch to every destination with PARTITION-PRUNED
         commits: compact + type the mutations, find which PK buckets they
         touch, merge against ONLY those buckets, and commit with the rest
@@ -742,16 +749,16 @@ class ReplicationEngine:
         for s in self.streams:
             tbl = self.tables[s.table_id]
             ev_t = batch.filter(F.col("table_id") == s.table_id)
-            typed = typed_mutations(compact_changes(ev_t), s.meta).persist()
-            try:
-                touched = sorted(
-                    r[0]
-                    for r in typed.select(tbl.bucket_of().alias("b")).distinct().collect()
-                )
-                merged = merge_mutations(tbl.read_buckets(touched), typed, s.meta)
-                tbl.commit(merged, version=version, touched=touched)
-            finally:
-                typed.unpersist()
+            typed = typed_mutations(compact_changes(ev_t), s.meta).localCheckpoint(
+                eager=False
+            )
+            pins.append(typed)
+            touched = sorted(
+                r[0]
+                for r in typed.select(tbl.bucket_of().alias("b")).distinct().collect()
+            )
+            merged = merge_mutations(tbl.read_buckets(touched), typed, s.meta)
+            tbl.commit(merged, version=version, touched=touched)
             per_table[s.meta.name] = ev_t.count()
         return per_table
 
@@ -759,7 +766,9 @@ class ReplicationEngine:
     # two number spaces never collide (commit prunes old dirs anyway).
     CATCHUP_VERSION_STRIDE = 1_000_000
 
-    def _catch_up_apply(self, batch: DataFrame, batch_id: int) -> dict[str, int]:
+    def _catch_up_apply(
+        self, batch: DataFrame, batch_id: int, pins: list[DataFrame]
+    ) -> dict[str, int]:
         """W4/O2 batched catch-up (DoInitialScan, processor.go:621-726, cap
         :641; README.md:226-239): the initial-scan backlog is applied in
         <= catch_up_batch_size-message sub-batches in global position
@@ -777,20 +786,18 @@ class ReplicationEngine:
         n = batch.count()
         cap = self.catch_up_batch_size
         if n <= cap:
-            return self._apply_to_tables(batch, version=batch_id + 1)
+            return self._apply_to_tables(batch, batch_id + 1, pins)
         chunked = batch.withColumn(
             "_chunk",
             ((F.row_number().over(Window.orderBy("step", "tx_id", "seq")) - 1) / F.lit(cap)).cast("int"),
-        ).persist()
+        ).localCheckpoint(eager=False)
+        pins.append(chunked)
         totals: dict[str, int] = {}
         base = (batch_id + 1) * self.CATCHUP_VERSION_STRIDE
-        try:
-            for k in range(math.ceil(n / cap)):
-                sub = chunked.filter(F.col("_chunk") == k).drop("_chunk")
-                for t, c in self._apply_to_tables(sub, version=base + k).items():
-                    totals[t] = totals.get(t, 0) + c
-        finally:
-            chunked.unpersist()
+        for k in range(math.ceil(n / cap)):
+            sub = chunked.filter(F.col("_chunk") == k).drop("_chunk")
+            for t, c in self._apply_to_tables(sub, base + k, pins).items():
+                totals[t] = totals.get(t, 0) + c
         return totals
 
     def _route_out_of_order(
@@ -798,6 +805,7 @@ class ReplicationEngine:
         events: DataFrame,
         hb_before: dict[tuple[int, int], tuple[Decimal, Decimal]],
         st: dict,
+        pins: list[DataFrame],
     ) -> DataFrame:
         """F4/W3: events older than their partition's last-known heartbeat
         are problem messages; the caller's census found at least one.
@@ -823,35 +831,34 @@ class ReplicationEngine:
             )
         else:
             resolved = late.withColumn("action", F.lit(None).cast("string"))
-        resolved = resolved.persist()
-        try:
-            applied = resolved.filter(F.col("action") == "apply").drop("action")
-            dropped = resolved.filter(
-                F.col("action").isNull() | (F.col("action") == "skip")
-            )
-            unresolved = resolved.filter(F.col("action").isNull())
-            os.makedirs(self.dlq_dir, exist_ok=True)
-            dropped.drop("action").withColumn(
-                "_reason", F.lit("out_of_order")
-            ).withColumn("_ts", F.current_timestamp()).write.mode("append").parquet(
-                self.dlq_dir
-            )
+        # pinned for the rest of the batch: the returned frame reads it
+        resolved = resolved.localCheckpoint(eager=False)
+        pins.append(resolved)
+        applied = resolved.filter(F.col("action") == "apply").drop("action")
+        dropped = resolved.filter(
+            F.col("action").isNull() | (F.col("action") == "skip")
+        )
+        unresolved = resolved.filter(F.col("action").isNull())
+        os.makedirs(self.dlq_dir, exist_ok=True)
+        dropped.drop("action").withColumn(
+            "_reason", F.lit("out_of_order")
+        ).withColumn("_ts", F.current_timestamp()).write.mode("append").parquet(
+            self.dlq_dir
+        )
 
-            if not unresolved.isEmpty() and any(
-                s.problem_strategy == "stop" for s in self.streams
-            ):
-                first = unresolved.first()
-                msg = (
-                    f"out-of-order change at ({first.step},{first.tx_id}) "
-                    f"partition {first.partition}"
-                )
-                self.state.write(
-                    (st["step_id"], st["tx_id"]), st["stage"], STATE_FATAL, msg
-                )
-                raise RuntimeError(msg)
-            return ok.unionByName(applied)
-        finally:
-            resolved.unpersist()
+        if not unresolved.isEmpty() and any(
+            s.problem_strategy == "stop" for s in self.streams
+        ):
+            first = unresolved.first()
+            msg = (
+                f"out-of-order change at ({first.step},{first.tx_id}) "
+                f"partition {first.partition}"
+            )
+            self.state.write(
+                (st["step_id"], st["tx_id"]), st["stage"], STATE_FATAL, msg
+            )
+            raise RuntimeError(msg)
+        return ok.unionByName(applied)
 
     def _route_problems(
         self, problems: DataFrame, st: dict, parsed: DataFrame | None = None

@@ -1130,14 +1130,14 @@ def test_redelivered_record_guarded_while_late_event_goes_to_dlq(spark, tmp_path
     assert eng.state.read()["step_id"] == Decimal(50)
 
 
-def _steady_state_engine(spark, tmp):
+def _steady_state_engine(spark, tmp, per_partition=6):
     """An engine plus a maker of same-shaped steady-state batches, read
     from JSONL files like the file stream source. Batch k updates the same
-    keys on every partition below the heartbeat (k+1)*1000 that all
-    partitions send, plus one update above it that carries over through
-    `_pending` into batch k+1, so every batch advances the quorum and
-    applies the previous carry-over."""
-    n_partitions, per_partition = 4, 6
+    `per_partition` keys on every partition below the heartbeat
+    (k+1)*1000 that all partitions send, plus one update above it that
+    carries over through `_pending` into batch k+1, so every batch
+    advances the quorum and applies the previous carry-over."""
+    n_partitions = 4
     eng = make_engine(spark, tmp, n_partitions=n_partitions)
 
     def batch(k):
@@ -1174,13 +1174,11 @@ def test_steady_state_cdc_batch_compiles_no_code(spark, tmp_path):
     assert eng.state.read()["step_id"] == Decimal(4000)
 
 
-def test_steady_state_cdc_batch_job_bound(spark, tmp_path):
-    """A steady-state batch runs at most 15 Spark jobs: one census
-    aggregate answers the offset guard, heartbeat, problem and
-    out-of-order questions. An upper bound, not an exact pin: AQE may
-    plan fewer."""
+def _steady_batch_jobs(spark, tmp_path, per_partition=6):
+    """Run three warm-up batches of `_steady_state_engine`'s shape, then
+    a fourth in its own job group; returns the fourth batch's job ids."""
     sc = spark.sparkContext
-    eng, batch = _steady_state_engine(spark, str(tmp_path))
+    eng, batch = _steady_state_engine(spark, str(tmp_path), per_partition)
     for k in range(3):
         eng.process_batch(batch(k), k)
     raw = batch(3)
@@ -1191,9 +1189,107 @@ def test_steady_state_cdc_batch_job_bound(spark, tmp_path):
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 15, sorted(jobs)
     assert eng.state.read()["step_id"] == Decimal(4000)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_steady_state_cdc_batch_job_bound(spark, tmp_path):
+    """A steady-state batch runs at most 12 Spark jobs: one census
+    aggregate answers the offset guard, heartbeat, problem and
+    out-of-order questions, and the parse and the typed mutations are
+    pinned with localCheckpoint, so no job builds a columnar cache. An
+    upper bound, not an exact pin: AQE may plan fewer."""
+    jobs = _steady_batch_jobs(spark, tmp_path)
+    assert 0 < len(jobs) <= 12, jobs
+
+
+def test_steady_state_cdc_batch_stages_are_data_sized(spark, tmp_path):
+    """No stage of a steady batch of a few hundred events runs one task
+    per shuffle partition: AQE coalesces every shuffle the batch reads,
+    the compaction's included, because the batch pins its frames with
+    localCheckpoint rather than with the columnar cache, whose cached
+    plan keeps its output partitioning."""
+    sc = spark.sparkContext
+    n_shuffle = 32  # get_spark()'s default; the test session runs 4
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
+    try:
+        jobs = _steady_batch_jobs(spark, tmp_path, per_partition=75)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    tracker = sc.statusTracker()
+    ran = {}  # stage id -> tasks it completed (a skipped stage runs none)
+    for j in jobs:
+        for st in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(st)
+            if info is not None and info.numCompletedTasks:
+                ran[st] = info.numCompletedTasks
+    assert ran, jobs
+    assert max(ran.values()) < n_shuffle, ran
+
+
+def test_cdc_batch_releases_its_pins(spark, tmp_path):
+    """Every batch releases what it pinned, however it ends: the JVM's
+    persistent RDDs after a batch are among those before it. Covers a
+    steady batch, a pending-only early return, and a batch with late
+    events, where the frame `_route_out_of_order` returns (read by the
+    apply, after that method returns) derives from its pinned resolution,
+    so the pin must outlive the method."""
+    sc = spark.sparkContext
+    tmp = str(tmp_path)
+    eng = make_engine(spark, tmp)
+    eng.topic_path = "/topic/a"
+    eng.commands = spark.createDataFrame(
+        [
+            (
+                json.dumps(
+                    {
+                        "aardapel_instance_id": "aardappel",
+                        "path": "/topic/a",
+                        "key": [4],
+                        "ts": [60, 1],
+                        "action": "apply",
+                    }
+                ),
+            )
+        ],
+        ["value"],
+    )
+    for s in eng.streams:
+        s.problem_strategy = "continue"
+    raw_schema = "partition int, offset long, value string"
+
+    def run(batch_id, rows):
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        eng.process_batch(spark.createDataFrame(rows, raw_schema), batch_id)
+        after = set(sc._jsc.getPersistentRDDs().keys())
+        assert after <= before, (batch_id, sorted(after - before))
+
+    def dst():
+        return {r.user_id: r.value for r in eng.tables[0].current().collect()}
+
+    # steady: quorum min(30, 15) = 15 applies user 1
+    run(0, [(0, 1, msg_update(1, "a", 10, 1)), (0, 2, msg_hb(30)), (1, 1, msg_hb(15))])
+    assert dst() == {1: "a"}
+    # pending-only: partition 1 sends no heartbeat, the quorum stays 15
+    run(1, [(0, 3, msg_update(2, "b", 40, 1)), (0, 4, msg_hb(100))])
+    assert eng.state.read()["step_id"] == Decimal(15)
+    assert dst() == {1: "a"}
+    # late: user 3 (step 20) and user 4 (step 60) are behind partition
+    # 0's heartbeat 100; 3 goes to the DLQ, the command applies 4, and
+    # quorum 100 also applies the carried-over user 2
+    run(
+        2,
+        [
+            (0, 5, msg_update(3, "late", 20, 1)),
+            (0, 6, msg_update(4, "kept", 60, 1)),
+            (1, 2, msg_hb(120)),
+        ],
+    )
+    assert eng.state.read()["step_id"] == Decimal(100)
+    assert dst() == {1: "a", 2: "b", 4: "kept"}
+    dlq = spark.read.parquet(eng.dlq_dir).collect()
+    assert [(r.offset, r._reason) for r in dlq] == [(5, "out_of_order")]
 
 
 @pytest.mark.skipif(

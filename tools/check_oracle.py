@@ -3,6 +3,11 @@ run each queries() entry on Spark and its oracle_sql() on DuckDB over the
 same sf dir; compare row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Exits 0 when every query matches, 1 when some differ or fail, and 2 when
+the Spark session died mid-sweep: the sweep stops there, and the JSON
+artifact (CHECK_ORACLE_JSON) names the query it died at and lists the
+queries it never ran instead of counting them as failures.
 """
 
 from __future__ import annotations
@@ -81,6 +86,16 @@ def rows_key(cols, rows):
     )
 
 
+def session_alive(spark) -> bool:
+    """False once the Spark JVM is gone (py4j's connection is refused) or
+    its context was stopped: every later query would fail the same way,
+    so the sweep stops instead of recording them as query failures."""
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:
+        return False
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -107,9 +122,10 @@ def main():
     qs, os_ = entry_mod.queries(), entry_mod.oracle_sql()
     failures = []
     report: dict[str, dict] = {}
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    todo = [n for n in qs if not only or n in only]
+    aborted_after, not_run = None, []
+    for i, name in enumerate(todo):
+        fn = qs[name]
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -120,6 +136,11 @@ def main():
             failures.append(name)
             report[name] = {"ok": False, "error": f"spark: {e}",
                             "sec": round(time.time() - t0, 2)}
+            if not session_alive(spark):
+                aborted_after, not_run = name, todo[i + 1:]
+                print(f"ABORT: the Spark session died at {name}; "
+                      f"{len(not_run)} queries not run")
+                break
             continue
         if name not in os_:
             print(f"SKIP {name}: no oracle (rows={len(s_rows)}) [{time.time()-t0:.1f}s]")
@@ -172,11 +193,16 @@ def main():
     if out_json:
         import json
 
+        out = {"sf_dir": sf_dir, "n": len(report), "n_ok": n_ok}
+        if aborted_after is not None:
+            # the counts cover the queries run; the rest are listed, not failed
+            out["aborted_after"] = aborted_after
+            out["not_run"] = not_run
         with open(out_json, "w") as fh:
-            json.dump({"sf_dir": sf_dir, "n": len(report),
-                       "n_ok": n_ok,
-                       "queries": report}, fh, indent=1)
+            json.dump({**out, "queries": report}, fh, indent=1)
             fh.write("\n")
+    if aborted_after is not None:
+        return 2
     return 1 if failures else 0
 
 
