@@ -259,10 +259,11 @@ def _compact(spark, args, cfg: EngineConfig, metas, work_dir: str) -> None:
     A dedup mode compacts its state store (per-batch dirs -> one file
     per bucket under batch=-1, never a live foreachBatch id), bounding
     partition discovery under unbounded batch count. CDC rewrites each
-    destination to one file per bucket; that needs only the tables, not
-    an engine (nor its partition count)."""
+    destination to one file per bucket and publishes ONE manifest naming
+    every compacted version; that needs only the tables, not an engine
+    (nor its partition count)."""
     from . import stateful
-    from .streaming import VersionedTable
+    from .streaming import Manifest, VersionedTable
 
     if args.dedup_exact:
         store = os.path.join(work_dir, "dedup_store")
@@ -274,20 +275,23 @@ def _compact(spark, args, cfg: EngineConfig, metas, work_dir: str) -> None:
         for part, (b, a) in stateful.compact_setsim_store(spark, store).items():
             print(f"compacted setsim_store/{part}: files {b} -> {a}")
         return
+    manifest = Manifest(work_dir)
+    compacted = []
     for s in cfg.streams:
-        meta, ddl = metas[s.dst_table]
-        tbl = VersionedTable(spark, s.dst_table, meta, ddl)
-        before = tbl.n_data_files()
-        new_v = tbl.compact_files()
-        if new_v == 0:
+        tbl = VersionedTable(spark, s.dst_table, *metas[s.dst_table], manifest)
+        before = sum(tbl.n_data_files().values())
+        if tbl.compact_files() == 0:
             # never-committed table: don't misreport the no-op as "v0"
             print(f"skipped {s.dst_table}: empty table, nothing to compact")
-            continue
+        else:
+            compacted.append((tbl, before))
+    if compacted:
+        manifest.write()
+    for tbl, before in compacted:
         after = tbl.n_data_files()
         print(
-            f"compacted {s.dst_table}: v{new_v}, files "
-            f"{sum(before.values())} -> {sum(after.values())} "
-            f"({len(after)} buckets)"
+            f"compacted {tbl.path}: v{tbl.current_version()}, files "
+            f"{before} -> {sum(after.values())} ({len(after)} buckets)"
         )
 
 

@@ -14,10 +14,12 @@ Lifecycle parity with the reference (SURVEY.md §3.3, W1-W5):
   * FATAL_ERROR persisted to `_state` before the query dies
     (problem_strategy='stop', reader.go:192-204).
 
-Storage: destination tables and `_state` are versioned parquet
-directories (a stand-in for Delta/Iceberg MERGE INTO on a cluster —
-same commit protocol: write new version, flip pointer, replay
-overwrites the same version deterministically).
+Storage: destination tables are versioned parquet directories (a
+stand-in for Delta/Iceberg MERGE INTO on a cluster). A batch writes new,
+unpublished table versions and a pending dir, then commits all of them,
+the `_state` row, heartbeat highs and consumed offsets in ONE manifest
+file (`Manifest`); a replay rewrites the same unpublished dirs
+deterministically.
 """
 
 from __future__ import annotations
@@ -58,82 +60,88 @@ STAGE_INITIAL_SCAN = "INITIAL_SCAN"
 STAGE_RUN = "RUN"
 
 
-class StateStore:
-    """The `_state` checkpoint row (FIXTURES.md §5) as a tiny versioned
-    parquet dir. write() is atomic at the pointer-file level."""
+class Manifest:
+    """The commit log of one CDC work dir, and the engine's ``state``.
 
-    def __init__(self, spark: SparkSession, path: str, instance_id: str):
-        self.spark = spark
-        self.path = path
+    Each publish is ONE file, ``_manifest/v{seq}.json``, written with one
+    tmp-write plus ``os.replace``. It names the `_state` checkpoint row
+    (FIXTURES.md §5), each destination's current and previous version,
+    the pending carry-over dir, the heartbeat highs and the consumed
+    offsets: the reference's one transaction over every destination plus
+    the checkpoint row (processor.go:753-770), shaped like Spark's
+    FileStreamSink `_spark_metadata` log. ``seq`` counts publishes across
+    Spark checkpoints; manifest ``seq`` names pending dir ``seq`` and
+    table versions up to seq + 1 (0 is the empty table), so nothing a
+    batch writes lands on a dir a published manifest names.
+
+    A batch's manifest records its batch id, streaming query id and
+    ``pre``, the seq it built on. A batch whose id and query match the
+    newest manifest replays an attempt that published before Spark
+    committed its offsets, and builds on ``pre``, however often it
+    replays. Other publishes (FATAL, compaction) carry their base's
+    batch, query and ``pre`` forward. A fresh checkpoint (new query id,
+    batch ids from 0 again) builds on the newest manifest."""
+
+    def __init__(self, work_dir: str, instance_id: str = "aardappel", stage: str = STAGE_INITIAL_SCAN):
+        self.dir = os.path.join(work_dir, "_manifest")
+        self.pending_dir = os.path.join(work_dir, "_pending")
         self.instance_id = instance_id
-        os.makedirs(path, exist_ok=True)
+        # every store of the engine before the manifest; `_manifest/` is
+        # made before anything else, so without it these are older
+        older = [n for n in ("_state", "_pending", "_hb", "_off")
+                 if os.path.exists(os.path.join(work_dir, n))]
+        if older and not os.path.isdir(self.dir):
+            raise RuntimeError(
+                f"{work_dir} holds CDC state written before the commit manifest "
+                f"({', '.join(older)}; no _manifest/) and cannot be resumed: start "
+                "from a new --work-dir and new destination tables, and replay "
+                "the source"
+            )
+        os.makedirs(self.dir, exist_ok=True)
+        # what a reader sees before the first publish
+        self.empty = {
+            "seq": -1, "pre": -1, "batch_id": None, "query": None, "tables": {},
+            "pending": None, "hb": [], "off": [],
+            "state": {"id": instance_id, "step_id": "0", "tx_id": "0", "state": STATE_OK,
+                      "stage": stage, "last_msg": ""},
+        }
+        self.base = self.latest()  # the manifest the next publish builds on
+        self.seq = self.base["seq"] + 1  # the next publish's seq
+        self.staged: dict[str, int] = {}  # table path -> unpublished version
 
-    def _ptr(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
-    def read(self) -> dict:
-        if not os.path.exists(self._ptr()):
-            return {
-                "id": self.instance_id,
-                "step_id": Decimal(0),
-                "tx_id": Decimal(0),
-                "state": STATE_OK,
-                "stage": STAGE_INITIAL_SCAN,
-                "last_msg": "",
-            }
-        with open(self._ptr()) as f:
-            version = f.read().strip()
-        row = json.loads(
-            open(os.path.join(self.path, f"v{version}.json")).read()
+    def _seqs(self) -> list[int]:
+        return sorted(
+            int(n[1:-5])
+            for n in os.listdir(self.dir)
+            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
         )
-        row["step_id"] = Decimal(row["step_id"])
-        row["tx_id"] = Decimal(row["tx_id"])
+
+    def _load(self, seq: int) -> dict:
+        if seq < 0:
+            return self.empty
+        with open(os.path.join(self.dir, f"v{seq}.json")) as f:
+            return json.load(f)
+
+    def latest(self) -> dict:
+        seqs = self._seqs()
+        return self._load(seqs[-1] if seqs else -1)
+
+    @staticmethod
+    def version(m: dict, table: str) -> int:
+        """The version of ``table`` manifest ``m`` names (0 = never
+        committed)."""
+        return m["tables"].get(table, [0])[-1]
+
+    def read(self, m: dict | None = None) -> dict:
+        """A manifest's state row, by default the newest's."""
+        row = dict((m or self.latest())["state"])
+        row["step_id"], row["tx_id"] = Decimal(row["step_id"]), Decimal(row["tx_id"])
         return row
 
-    def write(
-        self,
-        position: tuple[Decimal, Decimal],
-        stage: str,
-        state: str = STATE_OK,
-        last_msg: str = "",
-        version: int | None = None,
-        extra: dict | None = None,
-    ) -> None:
-        cur = 0
-        if os.path.exists(self._ptr()):
-            cur = int(open(self._ptr()).read().strip())
-        version = cur + 1 if version is None else version
-        row = {
-            "id": self.instance_id,
-            "step_id": str(position[0]),
-            "tx_id": str(position[1]),
-            "state": state,
-            "stage": stage,
-            "last_msg": last_msg,
-            **(extra or {}),
-        }
-        with open(os.path.join(self.path, f"v{version}.json"), "w") as f:
-            f.write(json.dumps(row))
-        tmp = self._ptr() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._ptr())
-        # one tiny file per batch accretes forever on a long-lived
-        # deployment; only the pointed-at version (and its predecessor,
-        # for post-mortem) ever gets read again
-        for name in os.listdir(self.path):
-            if (
-                name.startswith("v")
-                and name.endswith(".json")
-                and name[1:-5].isdigit()
-                and int(name[1:-5]) < version - 1
-            ):
-                os.remove(os.path.join(self.path, name))
-
-    def ensure_startable(self) -> dict:
+    def ensure_startable(self, m: dict | None = None) -> dict:
         """Refuse to start unless state == OK (selectReplicationState,
         processor.go:308-310 — manual recovery required)."""
-        st = self.read()
+        st = self.read(m)
         if st["state"] != STATE_OK:
             raise RuntimeError(
                 f"replication state is {st['state']} ({st['last_msg']}); "
@@ -141,42 +149,105 @@ class StateStore:
             )
         return st
 
+    def begin(self, batch_id: int, query: str | None) -> dict:
+        """Start batch ``batch_id`` of streaming query ``query``: refuse
+        unless startable, choose the manifest it builds on and drop what
+        a crashed attempt staged. Returns that manifest's state row."""
+        newest = self.latest()
+        self.ensure_startable(newest)
+        self.base = newest
+        if newest["seq"] >= 0 and (newest["batch_id"], newest["query"]) == (batch_id, query):
+            self.base = self._load(newest["pre"])
+        self.seq, self.staged = newest["seq"] + 1, {}
+        return self.read(self.base)
+
+    def write(self, position: tuple[Decimal, Decimal] | None = None, stage: str = "",
+              state: str = STATE_OK, last_msg: str = "", extra: dict | None = None,
+              batch: tuple[int, str | None] | None = None, **content) -> None:
+        """The one commit: the base manifest with ``content``, every
+        staged table version and, given a ``position``, a new state row
+        (else the base's), published as manifest ``seq``. ``batch`` =
+        (batch id, query id) marks a batch's publish and records the
+        base's seq as ``pre``, what a replay of that batch builds on."""
+        if position is not None:
+            content["state"] = {
+                "id": self.instance_id, "step_id": str(position[0]), "tx_id": str(position[1]),
+                "state": state, "stage": stage, "last_msg": last_msg, **(extra or {}),
+            }
+        if batch is not None:
+            content.update(batch_id=batch[0], query=batch[1], pre=self.base["seq"])
+        tables = dict(self.base["tables"])
+        for table, v in self.staged.items():  # the previous version stays named
+            tables[table] = [*tables.get(table, [])[-1:], v]
+        m = {**self.base, **content, "seq": self.seq, "tables": tables}
+        path = os.path.join(self.dir, f"v{self.seq}.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump(m, f)
+        os.replace(path + ".tmp", path)
+        self.base, self.seq, self.staged = m, self.seq + 1, {}
+        seqs = self._seqs()
+        kept, names = self._retained(seqs)
+        for old in set(seqs) - kept:
+            os.remove(os.path.join(self.dir, f"v{old}.json"))
+        for d, keep in names.items():
+            for n in os.listdir(d) if os.path.isdir(d) else []:
+                if n.startswith("v") and n[1:].isdigit() and int(n[1:]) not in keep:
+                    shutil.rmtree(os.path.join(d, n), ignore_errors=True)
+
+    def _retained(self, seqs: list[int]) -> tuple[set[int], dict[str, set[int]]]:
+        """Retention's one rule: keep the newest manifest, the one before
+        it and the newest's ``pre``, and per dir (each table, the pending
+        dir) the versions they name: the newest's current and previous,
+        the others' current. Returns the kept seqs and names."""
+        newest = self._load(seqs[-1] if seqs else -1)
+        kept = {*seqs[-2:], newest["pre"]} - {-1}
+        names: dict[str, set[int]] = {self.pending_dir: set()}
+        for m in [newest, *(self._load(k) for k in kept - {newest["seq"]})]:
+            names[self.pending_dir].add(m["pending"])
+            for table, vs in m["tables"].items():
+                names.setdefault(table, set()).update(vs if m is newest else vs[-1:])
+        return kept, names
+
+    def versions(self, table: str) -> list[int]:
+        """``table``'s retained versions, ascending."""
+        return sorted(self._retained(self._seqs())[1].get(table, ()))
+
 
 class VersionedTable:
-    """Destination table as versioned parquet snapshots with a CURRENT
-    pointer, PARTITIONED by a deterministic PK bucket (``pkb``).
+    """Destination table as versioned parquet dirs ``v{N}/pkb=*``,
+    PARTITIONED by a deterministic PK bucket (``pkb``). The table keeps
+    no pointer of its own: the newest ``Manifest`` of the work dir names
+    its version, and a commit stays invisible until a manifest naming it
+    is published.
 
-    A commit rewrites ONLY the buckets whose keys appear in the batch;
-    untouched buckets carry over into the new version as hardlinks to the
-    previous version's files — byte-identical, no data copied. That is the
-    stand-in for Delta/Iceberg MERGE INTO file-level pruning: write
-    amplification is O(touched partitions), not O(table), so the same
-    commit protocol survives a 100 TB destination. Replaying a batch
-    rewrites the same target version deterministically, so replays
+    A commit rewrites the buckets whose keys appear in the batch and
+    links every other bucket's files from the version it builds on —
+    byte-identical, no data copied. That saves only the buckets a batch
+    misses: with uniform keys a batch of a few thousand mutations touches
+    every bucket, so each commit rewrites the whole table. Write
+    amplification is O(table) per batch, not O(touched buckets); a
+    merge-on-read layout (ROADMAP item 8) is the fix. Replaying a batch
+    rewrites an unpublished version deterministically, so replays
     converge (§4.3)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        meta: TableMeta,
-        schema: str,
-        n_buckets: int = 16,
-    ):
+    def __init__(self, spark: SparkSession, path: str, meta: TableMeta, schema: str,
+                 manifest: Manifest, n_buckets: int = 16):
         self.spark = spark
         self.path = path
         self.meta = meta
         self.schema = schema
+        self.manifest = manifest
         self.n_buckets = n_buckets
-        os.makedirs(path, exist_ok=True)
-
-    def _ptr(self) -> str:
-        return os.path.join(self.path, "CURRENT")
 
     def current_version(self) -> int:
-        if not os.path.exists(self._ptr()):
-            return 0
-        return int(open(self._ptr()).read().strip())
+        """The version the newest manifest names (0 = never committed)."""
+        return self.manifest.version(self.manifest.latest(), self.path)
+
+    def _head(self) -> int:
+        """The version the next commit builds on: the running
+        transaction's last commit, else the base manifest's."""
+        staged = self.manifest.staged.get(self.path)
+        return staged or self.manifest.version(self.manifest.base, self.path)
 
     def bucket_of(self):
         """Deterministic PK bucket column — same expression at write and
@@ -199,75 +270,70 @@ class VersionedTable:
             if name.startswith("pkb=")
         }
 
-    def read_buckets(self, buckets: list[int] | None) -> DataFrame:
-        """Current state of the given buckets (None = all). Reading the
+    def _read(self, v: int, buckets: list[int] | None = None) -> DataFrame:
+        """Version ``v`` of the given buckets (None = all). Reading the
         leaf dirs directly IS the partition pruning: unselected buckets'
         files never reach the scan."""
-        v = self.current_version()
-        if v == 0:
-            return empty_df(self.spark, self.schema)
-        dirs = self._bucket_dirs(v)
         want = None if buckets is None else set(buckets)
-        sel = [p for k, p in sorted(dirs.items()) if want is None or k in want]
+        sel = [
+            p for k, p in sorted(self._bucket_dirs(v).items()) if want is None or k in want
+        ]
         if not sel:
             return empty_df(self.spark, self.schema)
         return self.spark.read.schema(self.schema).parquet(*sel)
 
+    def read_buckets(self, buckets: list[int] | None) -> DataFrame:
+        """The given buckets as the next commit builds on them."""
+        return self._read(self._head(), buckets)
+
     def current(self) -> DataFrame:
-        return self.read_buckets(None)
+        return self._read(self.current_version())
 
     def versions(self) -> list[int]:
-        """Retained snapshot versions, ascending. Retention keeps the
-        current and previous versions (the hardlink carry-over shares
-        unchanged buckets' bytes between them, so history costs only
-        the touched buckets' old files)."""
-        return sorted(
-            int(name[1:])
-            for name in os.listdir(self.path)
-            if name.startswith("v") and name[1:].isdigit()
-            and os.path.isdir(os.path.join(self.path, name))
-        )
+        """Retained versions, ascending: the current and previous one the
+        newest manifest names, and what a replay may build on (the
+        hardlink carry-over shares unchanged buckets' bytes between them,
+        so history costs only the touched buckets' old files)."""
+        return self.manifest.versions(self.path)
 
     def read_version(self, v: int) -> DataFrame:
         """Snapshot (time-travel) read of a retained version — the
         VERSION AS OF story (Delta time travel / Iceberg snapshot
         reads) on the versioned layout: a reader pinned to ``v`` sees
         one consistent table state no matter how many commits land
-        after it, because version files are immutable once the CURRENT
-        pointer swings (a commit writes a NEW directory; it never
-        mutates an old one). Raises for vacuumed versions so a stale
+        after it, because a version dir is never rewritten once a
+        manifest names it. Raises for vacuumed versions so a stale
         reader fails loudly instead of silently reading the wrong
-        snapshot; the retention window (current + previous) is the
-        vacuum dial."""
-        if v == 0:
-            return empty_df(self.spark, self.schema)
-        if v not in self.versions():
+        snapshot; the retention window (the table's current and
+        previous version, however many pending-only batches publish in
+        between) is the vacuum dial."""
+        if v != 0 and v not in self.versions():
             raise ValueError(
                 f"version {v} is not retained at {self.path} "
                 f"(retained: {self.versions()}); vacuumed by a later commit"
             )
-        sel = [p for _, p in sorted(self._bucket_dirs(v).items())]
-        if not sel:
-            return empty_df(self.spark, self.schema)
-        return self.spark.read.schema(self.schema).parquet(*sel)
+        return self._read(v)
 
-    def commit(
-        self, df: DataFrame, version: int, touched: list[int] | None = None
-    ) -> None:
-        """``df`` is the post-state of the TOUCHED buckets (or of the whole
-        table when ``touched`` is None = full rewrite)."""
+    def commit(self, df: DataFrame, touched: list[int] | None = None) -> int:
+        """Write the version the manifest's next publish names: ``df`` is
+        the post-state of the TOUCHED buckets (or of the whole table when
+        ``touched`` is None = full rewrite), the rest link from the
+        version the commit builds on. The version is staged in the
+        manifest, unpublished; returns it."""
+        version = self.manifest.seq + 1
         target = self._version_dir(version)
-        # Materialize into a staging dir FIRST: on a crashed-batch replay
-        # the incoming df lazily READS the existing current version (merge
-        # input), so deleting it before the write would pull files out from
-        # under the running plan.
+        # Materialize into a staging dir FIRST: the incoming df lazily
+        # READS the version it builds on (merge input), which is the
+        # target itself when catch-up sub-batches chain through one
+        # version, so deleting it before the write would pull files out
+        # from under the running plan.
         staging = target + ".staging"
         if os.path.exists(staging):
             shutil.rmtree(staging)
         df.withColumn("pkb", self.bucket_of()).write.partitionBy("pkb").mode(
             "overwrite"
         ).parquet(staging)
-        prev = self.current_version()
+        prev = self._head()
         if touched is not None and prev:
             tset = set(touched)
             for k, src in self._bucket_dirs(prev).items():
@@ -285,51 +351,38 @@ class VersionedTable:
         if os.path.exists(target):
             shutil.rmtree(target)
         os.rename(staging, target)
-        tmp = self._ptr() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._ptr())
-        # hardlinked carry-over makes older versions redundant: data shared
-        # with the new version survives the unlink. Keep current + previous.
-        keep = {version, prev}
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) not in keep:
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        self.manifest.staged[self.path] = version
+        return version
 
     def n_data_files(self) -> dict[int, int]:
         """Per-bucket parquet-file count of the current version — the
         small-file thermometer that says when compact_files() is due."""
-        v = self.current_version()
         return {
-            k: sum(
-                1
-                for fn in os.listdir(d)
-                if not fn.startswith(("_", "."))
-            )
-            for k, d in self._bucket_dirs(v).items()
+            k: sum(1 for fn in os.listdir(d) if not fn.startswith(("_", ".")))
+            for k, d in self._bucket_dirs(self.current_version()).items()
         }
 
     def compact_files(self) -> int:
-        """Maintenance compaction: rewrite the current version so every
-        bucket holds ONE parquet file, and advance CURRENT. Each commit
-        rewrites its touched buckets with however many tasks held rows
-        (up to spark.sql.shuffle.partitions files per bucket), so a
-        long-running stream accumulates exactly the small-file problem
-        that degrades scan/footer performance on a 100 TB table; this
-        is the OPTIMIZE/rewrite-data-files housekeeping job (Delta
-        OPTIMIZE, Iceberg rewriteDataFiles) on the versioned layout.
-        Repartitioning BY THE BUCKET EXPRESSION puts each bucket's rows
-        in a single task before the partitioned write, so the rewrite
-        is one shuffle and the data is byte-for-byte equivalent (same
-        rows, same bucket layout). Crash-safe like any commit: staging
-        dir + atomic CURRENT pointer swap; a replay just re-runs the
-        rewrite. Returns the new version (0 = nothing to compact)."""
-        v = self.current_version()
+        """Maintenance compaction: rewrite the table so every bucket
+        holds ONE parquet file, staged as the version the manifest's next
+        publish names. Each commit rewrites its touched buckets with
+        however many tasks held rows (up to spark.sql.shuffle.partitions
+        files per bucket), so a long-running stream accumulates exactly
+        the small-file problem that degrades scan/footer performance on
+        a 100 TB table; this is the OPTIMIZE/rewrite-data-files
+        housekeeping job (Delta OPTIMIZE, Iceberg rewriteDataFiles) on
+        the versioned layout. Repartitioning BY THE BUCKET EXPRESSION
+        puts each bucket's rows in a single task before the partitioned
+        write, so the rewrite is one shuffle and the data is
+        byte-for-byte equivalent (same rows, same bucket layout).
+        Crash-safe like any commit: nothing is visible until the caller
+        publishes; a replay just re-runs the rewrite. Returns the new
+        version (0 = nothing to compact)."""
+        v = self._head()
         if v == 0:
             return 0
-        df = self.current().repartition(self.n_buckets, self.bucket_of())
-        self.commit(df, v + 1, touched=None)
-        return v + 1
+        df = self._read(v).repartition(self.n_buckets, self.bucket_of())
+        return self.commit(df, touched=None)
 
 
 @dataclass
@@ -388,58 +441,27 @@ class ReplicationEngine:
     monitoring: tuple | None = None
 
     def __post_init__(self):
-        self.state = StateStore(self.spark, os.path.join(self.work_dir, "_state"), self.instance_id)
-        self._restore_snapshots(before_batch_id=None)
-        if not self.initial_scan and self.state.read()["stage"] == STAGE_INITIAL_SCAN:
-            # seed straight to RUN when no initial-scan sync is wanted
-            st = self.state.read()
-            if not os.path.exists(self.state._ptr()):
-                self.state.write((st["step_id"], st["tx_id"]), STAGE_RUN)
+        self.state = Manifest(
+            self.work_dir,
+            self.instance_id,
+            # no initial-scan sync wanted: a new work dir starts in RUN
+            STAGE_INITIAL_SCAN if self.initial_scan else STAGE_RUN,
+        )
+        self._restore()
         self.tables = {
             s.table_id: VersionedTable(
-                self.spark, s.dst_path, s.meta, s.dst_schema, n_buckets=s.n_buckets
+                self.spark, s.dst_path, s.meta, s.dst_schema, self.state,
+                n_buckets=s.n_buckets,
             )
             for s in self.streams
         }
-        self.pending_dir = os.path.join(self.work_dir, "_pending")
+        self.pending_dir = self.state.pending_dir
         self.dlq_dir = os.path.join(self.work_dir, "_dlq")
-        os.makedirs(self.pending_dir, exist_ok=True)
 
-    # -- pending events (above-quorum carryover) ------------------------
-
-    def _pending_versions(self) -> list[int]:
-        if not os.path.exists(self.pending_dir):
-            return []
-        return sorted(
-            int(f[1:]) for f in os.listdir(self.pending_dir) if f.startswith("v")
-        )
-
-    def _read_pending(self, before_batch_id: int) -> DataFrame | None:
-        """Pending state as of BEFORE this batch. A replayed batch N must
-        not see the v{N} it wrote before crashing, or its events double."""
-        versions = [v for v in self._pending_versions() if v < before_batch_id]
-        if not versions:
-            return None
-        # explicit schema: an empty pending snapshot has no footer to infer
-        return self.spark.read.schema(CDC_EVENT_SCHEMA).parquet(
-            os.path.join(self.pending_dir, f"v{versions[-1]}")
-        )
-
-    def _write_pending(self, df: DataFrame, version: int) -> None:
-        target = os.path.join(self.pending_dir, f"v{version}")
-        if os.path.exists(target):
-            shutil.rmtree(target)  # crashed-batch replay
-        df.select(*[f.name for f in CDC_EVENT_SCHEMA.fields]).write.mode(
-            "overwrite"
-        ).parquet(target)
-        # keep version-1: a crash before the state write replays THIS batch,
-        # which reads the previous pending version. Older ones are dead
-        # (their batch's source offsets are already committed).
-        for v in self._pending_versions():
-            if v < version - 1:
-                shutil.rmtree(os.path.join(self.pending_dir, f"v{v}"), ignore_errors=True)
-
-    # -- durable per-batch snapshots: heartbeats (_hb) and offsets (_off) --
+    # -- what a batch carries in its manifest besides tables and _state --
+    #
+    # Pending events: the above-quorum carry-over, one parquet dir per
+    # manifest.
     #
     # Heartbeat highs: Spark commits source offsets after EVERY successful
     # foreachBatch return — including pending-only early returns — so
@@ -455,61 +477,46 @@ class ReplicationEngine:
     # whose delivery can overlap already-consumed offsets; the guard is
     # what drops that overlap.
     #
-    # Both are versioned like ``_write_pending``: ``<dir>/v{batch}.json``,
-    # keeping v{N} and v{N-1}, so a replayed batch restores the snapshot
-    # written BEFORE it and does not see its own crashed attempt's
-    # heartbeats (they would flag the batch's own events as out-of-order)
-    # or filter its own records.
+    # A batch restores all three from the manifest it builds on, so a
+    # replay does not see its own crashed attempt's heartbeats (they would
+    # flag the batch's own events as out-of-order), pending or offsets.
 
-    def _snapshot_versions(self, kind: str) -> list[int]:
-        d = os.path.join(self.work_dir, kind)
-        if not os.path.isdir(d):
+    def _pending_versions(self) -> list[int]:
+        # unused here; the benchmark's tracer reads the retained dirs
+        if not os.path.exists(self.pending_dir):
             return []
         return sorted(
-            int(f[1:-5])
-            for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
+            int(f[1:]) for f in os.listdir(self.pending_dir) if f.startswith("v")
         )
 
-    def _persist_snapshots(self, batch_id: int) -> None:
-        for kind, data in (
-            ("_hb", [[t, p, str(s), str(x)] for (t, p), (s, x) in self.hb_state.items()]),
-            ("_off", [[t, p, o] for (t, p), o in self.off_state.items()]),
-        ):
-            d = os.path.join(self.work_dir, kind)
-            os.makedirs(d, exist_ok=True)
-            path = os.path.join(d, f"v{batch_id}.json")
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(json.dumps(data))
-            os.replace(tmp, path)
-            for v in self._snapshot_versions(kind):
-                if v < batch_id - 1:
-                    os.remove(os.path.join(d, f"v{v}.json"))
+    def _read_pending(self) -> DataFrame | None:
+        v = self.state.base["pending"]
+        if v is None:
+            return None
+        # explicit schema: an empty pending snapshot has no footer to infer
+        return self.spark.read.schema(CDC_EVENT_SCHEMA).parquet(
+            os.path.join(self.pending_dir, f"v{v}")
+        )
 
-    def _restore_snapshots(self, before_batch_id: int | None) -> None:
-        """Reset hb_state and off_state to the newest snapshots from an
-        EARLIER batch (any batch when ``before_batch_id`` is None)."""
+    def _write_pending(self, df: DataFrame) -> None:
+        df.select(*[f.name for f in CDC_EVENT_SCHEMA.fields]).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.pending_dir, f"v{self.state.seq}"))
 
-        def newest(kind: str) -> list:
-            versions = [
-                v
-                for v in self._snapshot_versions(kind)
-                if before_batch_id is None or v < before_batch_id
-            ]
-            if not versions:
-                return []
-            path = os.path.join(self.work_dir, kind, f"v{versions[-1]}.json")
-            try:
-                with open(path) as f:
-                    return json.load(f)
-            except (FileNotFoundError, json.JSONDecodeError):
-                return []
+    def _restore(self) -> None:
+        m = self.state.base
+        self.hb_state = {(t, p): (Decimal(s), Decimal(x)) for t, p, s, x in m["hb"]}
+        self.off_state = {(t, p): o for t, p, o in m["off"]}
 
-        self.hb_state = {
-            (int(t), int(p)): (Decimal(s), Decimal(x)) for t, p, s, x in newest("_hb")
-        }
-        self.off_state = {(int(t), int(p)): int(o) for t, p, o in newest("_off")}
+    def _publish(self, position, stage: str, key: tuple, extra=None) -> None:
+        """The batch's one commit, through ``state.write``: the staged
+        table versions, the pending dir just written, the heartbeat
+        highs and the consumed offsets."""
+        self.state.write(
+            position, stage, extra=extra, batch=key, pending=self.state.seq,
+            hb=[[t, p, str(s), str(x)] for (t, p), (s, x) in self.hb_state.items()],
+            off=[[t, p, o] for (t, p), o in self.off_state.items()],
+        )
 
     # -- consumed-offset guard (S5) and the batch census ---------------
 
@@ -604,11 +611,13 @@ class ReplicationEngine:
         import time as _time
 
         t_start = _time.perf_counter()
-        st = self.state.ensure_startable()
+        # the streaming query's id is new with every fresh checkpoint
+        key = (batch_id, self.spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+        st = self.state.begin(*key)
         checkpoint = (st["step_id"], st["tx_id"])
-        # pre-batch heartbeat state (no-op in steady state; on a replay it
-        # rewinds past the crashed attempt's heartbeats)
-        self._restore_snapshots(before_batch_id=batch_id)
+        # pre-batch heartbeats and offsets (no-op in steady state; on a
+        # replay they rewind past the crashed attempt's)
+        self._restore()
 
         cols = raw.columns
         has_offset = "offset" in cols
@@ -668,44 +677,31 @@ class ReplicationEngine:
                     events, self.blocked_keys, table_path=self.topic_path
                 )
 
-            pend = self._read_pending(before_batch_id=batch_id)
+            pend = self._read_pending()
             if pend is not None:
                 events = pend.unionByName(events)
 
             q = self.quorum()
-
+            sync = {k: st[k] for k in ("sync_step", "sync_tx") if k in st}
+            synced = True
             if st["stage"] == STAGE_INITIAL_SCAN:
                 # W4 (DoInitialScan, processor.go:621-726): remember the MAX
                 # of the first complete heartbeat set as the sync point;
                 # nothing applies until the quorum passes it (the snapshot
                 # backlog must have fully arrived). The apply below then
-                # writes position AND stage=RUN in one state commit — the
+                # publishes position AND stage=RUN in one manifest — the
                 # reference's atomic final-batch flip (:679-698).
-                if (
-                    st.get("sync_step") is None
-                    and len(self.hb_state) >= self.expected_partitions
-                ):
-                    sync = max(self.hb_state.values())
-                    self.state.write(
-                        checkpoint,
-                        STAGE_INITIAL_SCAN,
-                        extra={"sync_step": str(sync[0]), "sync_tx": str(sync[1])},
-                    )
-                    st = self.state.read()
-                synced = (
-                    st.get("sync_step") is not None
-                    and q is not None
-                    and q > (Decimal(st["sync_step"]), Decimal(st["sync_tx"]))
+                if not sync and len(self.hb_state) >= self.expected_partitions:
+                    hi = max(self.hb_state.values())
+                    sync = {"sync_step": str(hi[0]), "sync_tx": str(hi[1])}
+                synced = bool(sync) and q is not None and q > (
+                    Decimal(sync["sync_step"]), Decimal(sync["sync_tx"])
                 )
-                if not synced:
-                    self._write_pending(events, batch_id)
-                    self._persist_snapshots(batch_id)
-                    return
 
-            if q is None or q <= checkpoint:
+            if not synced or q is None or q <= checkpoint:
                 # no safe boundary yet — everything stays pending
-                self._write_pending(events, batch_id)
-                self._persist_snapshots(batch_id)
+                self._write_pending(events)
+                self._publish(checkpoint, st["stage"], key, sync)
                 return
 
             quorum_wait = _time.perf_counter() - t_start
@@ -714,17 +710,16 @@ class ReplicationEngine:
 
             t_commit = _time.perf_counter()
             if st["stage"] == STAGE_INITIAL_SCAN:
-                per_table = self._catch_up_apply(batch, batch_id, pins)
+                per_table = self._catch_up_apply(batch, pins)
             else:
-                per_table = self._apply_to_tables(batch, batch_id + 1, pins)
+                per_table = self._apply_to_tables(batch, pins)
             n_mods = sum(per_table.values())
             self.modifications += n_mods
 
-            self._write_pending(remainder, batch_id)
-            stage = STAGE_RUN  # first successful quorum apply flips stage
-            self.state.write(q, stage)
+            self._write_pending(remainder)
+            # the first successful quorum apply flips stage to RUN
+            self._publish(q, STAGE_RUN, key)
             self._consume_fresh_heartbeats(q)
-            self._persist_snapshots(batch_id)
             self.batches_applied += 1
             self.metrics.on_batch_applied(
                 modifications=n_mods,
@@ -737,14 +732,13 @@ class ReplicationEngine:
             _unpin(*pins)
 
     def _apply_to_tables(
-        self, batch: DataFrame, version: int, pins: list[DataFrame]
+        self, batch: DataFrame, pins: list[DataFrame]
     ) -> dict[str, int]:
         """Apply one (sub-)batch to every destination with PARTITION-PRUNED
         commits: compact + type the mutations, find which PK buckets they
         touch, merge against ONLY those buckets, and commit with the rest
-        carried over by link. The merge join's destination side shrinks to
-        the touched partitions — at 100 TB that is the difference between
-        rewriting the table per micro-batch and rewriting a few files."""
+        carried over by link. Each commit stages the version the batch's
+        manifest will name; nothing is visible before it is published."""
         per_table: dict[str, int] = {}
         for s in self.streams:
             tbl = self.tables[s.table_id]
@@ -758,26 +752,21 @@ class ReplicationEngine:
                 for r in typed.select(tbl.bucket_of().alias("b")).distinct().collect()
             )
             merged = merge_mutations(tbl.read_buckets(touched), typed, s.meta)
-            tbl.commit(merged, version=version, touched=touched)
+            tbl.commit(merged, touched=touched)
             per_table[s.meta.name] = ev_t.count()
         return per_table
 
-    # Catch-up table versions live far above normal batch versions so the
-    # two number spaces never collide (commit prunes old dirs anyway).
-    CATCHUP_VERSION_STRIDE = 1_000_000
-
-    def _catch_up_apply(
-        self, batch: DataFrame, batch_id: int, pins: list[DataFrame]
-    ) -> dict[str, int]:
+    def _catch_up_apply(self, batch: DataFrame, pins: list[DataFrame]) -> dict[str, int]:
         """W4/O2 batched catch-up (DoInitialScan, processor.go:621-726, cap
         :641; README.md:226-239): the initial-scan backlog is applied in
         <= catch_up_batch_size-message sub-batches in global position
-        order, each a separate destination commit, WITHOUT advancing the
-        `_state` checkpoint between them. The caller writes position +
-        stage=RUN once, after the last sub-batch — the reference's atomic
-        final-batch flip (:679-698). A crash mid-loop replays the whole
-        micro-batch (source offsets uncommitted, state still INITIAL_SCAN)
-        and the deterministic chunking re-commits the same sub-batches.
+        order, each a commit chained through the batch's one unpublished
+        table version. The caller publishes tables, position and
+        stage=RUN in one manifest after the last sub-batch — the
+        reference's atomic final-batch flip (:679-698). A crash mid-loop
+        replays the whole micro-batch (source offsets uncommitted, no
+        manifest published) and the deterministic chunking re-commits
+        the same sub-batches.
 
         The global row_number sort is a one-time, catch-up-only operation;
         steady-state batches never pass through it."""
@@ -786,17 +775,16 @@ class ReplicationEngine:
         n = batch.count()
         cap = self.catch_up_batch_size
         if n <= cap:
-            return self._apply_to_tables(batch, batch_id + 1, pins)
+            return self._apply_to_tables(batch, pins)
         chunked = batch.withColumn(
             "_chunk",
             ((F.row_number().over(Window.orderBy("step", "tx_id", "seq")) - 1) / F.lit(cap)).cast("int"),
         ).localCheckpoint(eager=False)
         pins.append(chunked)
         totals: dict[str, int] = {}
-        base = (batch_id + 1) * self.CATCHUP_VERSION_STRIDE
         for k in range(math.ceil(n / cap)):
             sub = chunked.filter(F.col("_chunk") == k).drop("_chunk")
-            for t, c in self._apply_to_tables(sub, base + k, pins).items():
+            for t, c in self._apply_to_tables(sub, pins).items():
                 totals[t] = totals.get(t, 0) + c
         return totals
 

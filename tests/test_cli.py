@@ -5,6 +5,8 @@ load, instance lock, monitoring, stream run, graceful exit."""
 import json
 import os
 
+import pytest
+
 from aardappel_spark.__main__ import main
 
 
@@ -91,24 +93,76 @@ def test_cli_available_now_end_to_end(spark, tmp_path, capsys):
     assert stats["state"] == "OK"
     assert stats["modifications"] == 2
 
-    rows = {
-        r.user_id: r.value
-        for r in _read_dst(spark, os.path.join(tmp, "dst_users")).collect()
-    }
+    rows = {r.user_id: r.value for r in _users(spark, tmp).current().collect()}
     assert rows == {1: "u1", 2: "u2"}
 
 
-def _read_dst(spark, dst_path):
-    from aardappel_spark.streaming import VersionedTable
-    from aardappel_spark.casting import TableMeta
+USERS_META = {"user_id": "Int64", "value": "Optional<Utf8>"}
+ORDERS_META = {"order_id": "Int64", "amount": "Optional<Utf8>"}
 
-    meta = TableMeta(
-        "users",
-        primary_key=["user_id"],
-        columns={"user_id": "Int64", "value": "Optional<Utf8>"},
+
+def _table(spark, tmp, name, key, columns, schema):
+    """Destination ``dst_<name>`` as the newest manifest of the run's
+    work dir ``tmp/work`` names it."""
+    from aardappel_spark.casting import TableMeta
+    from aardappel_spark.streaming import Manifest, VersionedTable
+
+    return VersionedTable(
+        spark, os.path.join(tmp, f"dst_{name}"), TableMeta(name, [key], columns),
+        schema, Manifest(os.path.join(tmp, "work")),
     )
-    vt = VersionedTable(spark, dst_path, meta, "user_id bigint, value string")
-    return vt.current()
+
+
+def _users(spark, tmp):
+    return _table(spark, tmp, "users", "user_id", USERS_META, "user_id bigint, value string")
+
+
+def _orders(spark, tmp):
+    return _table(
+        spark, tmp, "orders", "order_id", ORDERS_META, "order_id bigint, amount string"
+    )
+
+
+@pytest.mark.parametrize("consumed_file", ["kept", "gone"])
+def test_cli_cdc_fresh_checkpoint_keeps_destination_and_position(
+    spark, tmp_path, capsys, consumed_file
+):
+    """A CDC run with a fresh --checkpoint over an existing work dir
+    restarts Spark's batch ids at 0. The destination and the `_state`
+    position must survive it: the second run applies only the new
+    file's changes on top of the first run's rows, whether the source
+    still holds the consumed file (re-delivered, dropped by the offset
+    guard) or has lost it (as after topic retention)."""
+    tmp = str(tmp_path)
+    src = _write_source(tmp)
+    cfg = _write_config(tmp, src)
+    metas = _write_metas(tmp)
+    work = os.path.join(tmp, "work")
+    run = ["--config", cfg, "--table-metas", metas, "--work-dir", work, "--available-now"]
+    assert main(run) == 0
+
+    up = lambda uid, value, step: json.dumps(
+        {"update": {"value": value}, "key": [uid], "ts": [step, 1]}
+    )
+    with open(os.path.join(src, "b2.jsonl"), "w") as f:
+        for offset, value in [
+            (4, up(2, "u2b", 110)),
+            (5, up(3, "u3", 120)),
+            (6, json.dumps({"resolved": [200, 0]})),
+        ]:
+            f.write(json.dumps({"partition": 0, "offset": offset, "value": value}) + "\n")
+    if consumed_file == "gone":
+        os.rename(os.path.join(src, "b1.jsonl"), os.path.join(tmp, "b1.jsonl"))
+    capsys.readouterr()
+    assert main(run + ["--checkpoint", os.path.join(tmp, "ckpt2")]) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["state"] == "OK" and stats["modifications"] == 2
+
+    rows = {r.user_id: r.value for r in _users(spark, tmp).current().collect()}
+    assert rows == {1: "u1", 2: "u2b", 3: "u3"}
+    from aardappel_spark.streaming import Manifest
+
+    assert Manifest(work).read()["step_id"] == 200
 
 
 def test_cli_lock_conflict_exits_standby(spark, tmp_path, capsys):
@@ -220,21 +274,8 @@ def test_cli_multi_stream_routes_by_table(spark, tmp_path, capsys):
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["modifications"] == 2 and stats["state"] == "OK"
 
-    from aardappel_spark.casting import TableMeta
-    from aardappel_spark.streaming import VersionedTable
-
-    users = VersionedTable(
-        spark,
-        os.path.join(tmp, "dst_users"),
-        TableMeta("users", ["user_id"], {"user_id": "Int64", "value": "Optional<Utf8>"}),
-        "user_id bigint, value string",
-    ).current()
-    orders = VersionedTable(
-        spark,
-        os.path.join(tmp, "dst_orders"),
-        TableMeta("orders", ["order_id"], {"order_id": "Int64", "amount": "Optional<Utf8>"}),
-        "order_id bigint, amount string",
-    ).current()
+    users = _users(spark, tmp).current()
+    orders = _orders(spark, tmp).current()
     assert {r.user_id: r.value for r in users.collect()} == {1: "u1"}
     assert {r.order_id: r.amount for r in orders.collect()} == {100: "9.99"}
 
@@ -358,9 +399,6 @@ def test_cli_compact_and_exit(spark, tmp_path, capsys):
     leaves multi-file buckets, it rewrites every destination to one
     file per bucket under the instance lock, reports the delta, and the
     data is unchanged."""
-    from aardappel_spark.casting import TableMeta
-    from aardappel_spark.streaming import VersionedTable
-
     tmp = str(tmp_path)
     src = _write_source(tmp)
     cfg = _write_config(tmp, src)
@@ -374,14 +412,7 @@ def test_cli_compact_and_exit(spark, tmp_path, capsys):
     assert rc == 0
     capsys.readouterr()
 
-    meta = TableMeta(
-        "users", primary_key=["user_id"],
-        columns={"user_id": "Int64", "value": "Optional<Utf8>"},
-    )
-    vt = VersionedTable(
-        spark, os.path.join(tmp, "dst_users"), meta,
-        "user_id bigint, value string",
-    )
+    vt = _users(spark, tmp)
     v_before = vt.current_version()
     before = {
         r.user_id: r.value for r in vt.current().collect()
@@ -829,9 +860,6 @@ def test_cli_compact_two_streams_without_partition_count(spark, tmp_path, capsys
     replication engine: on a two-stream config it runs without
     --expected-partitions (which only the quorum cut needs), leaves
     every bucket at one file, and keeps the data."""
-    from aardappel_spark.casting import TableMeta
-    from aardappel_spark.streaming import VersionedTable
-
     tmp = str(tmp_path)
     cfg, metas = _write_two_streams(tmp)
     work = os.path.join(tmp, "work")
@@ -839,20 +867,7 @@ def test_cli_compact_two_streams_without_partition_count(spark, tmp_path, capsys
         "--config", cfg, "--table-metas", metas, "--work-dir", work,
         "--expected-partitions", "2", "--available-now",
     ]) == 0
-    tables = [
-        VersionedTable(
-            spark, os.path.join(tmp, "dst_users"),
-            TableMeta("users", ["user_id"],
-                      {"user_id": "Int64", "value": "Optional<Utf8>"}),
-            "user_id bigint, value string",
-        ),
-        VersionedTable(
-            spark, os.path.join(tmp, "dst_orders"),
-            TableMeta("orders", ["order_id"],
-                      {"order_id": "Int64", "amount": "Optional<Utf8>"}),
-            "order_id bigint, amount string",
-        ),
-    ]
+    tables = [_users(spark, tmp), _orders(spark, tmp)]
     before = [sorted(t.current().collect()) for t in tables]
     capsys.readouterr()
 

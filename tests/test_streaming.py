@@ -15,9 +15,10 @@ from aardappel_spark.parse import parse_messages, split_events
 from aardappel_spark.streaming import (
     STAGE_RUN,
     STATE_FATAL,
+    Manifest,
     ReplicationEngine,
-    StateStore,
     StreamConfig,
+    VersionedTable,
 )
 
 META = TableMeta(
@@ -171,8 +172,9 @@ def test_problem_message_stops_with_fatal_state(spark, tmp_path):
 
 
 def test_crashed_batch_replay_converges(spark, tmp_path):
-    """§4.3: simulate a crash AFTER table commit but BEFORE the state
-    write; replaying the same batch must converge to the same state."""
+    """§4.3: simulate a crash AFTER table commit but BEFORE the manifest
+    publish: the committed version stays invisible, and replaying the
+    same batch converges to the state a clean run leaves."""
     tmp = str(tmp_path)
     src = os.path.join(tmp, "src")
     write_jsonl(
@@ -198,7 +200,7 @@ def test_crashed_batch_replay_converges(spark, tmp_path):
     eng2 = make_engine(spark, tmp)
     eng2.process_batch(raw, batch_id=0)
     after = sorted(tuple(r) for r in eng2.tables[0].current().collect())
-    assert before == after == [(1, "a")]
+    assert before == [] and after == [(1, "a")]
     st = eng2.state.read()
     assert (st["step_id"], st["tx_id"]) == (Decimal(50), Decimal(0))
 
@@ -402,9 +404,9 @@ def test_initial_scan_batched_catch_up(spark, tmp_path):
     commits = []
     tbl = eng.tables[0]
     orig_commit = tbl.commit
-    tbl.commit = lambda df, version, touched=None: (
-        commits.append(version),
-        orig_commit(df, version, touched),
+    tbl.commit = lambda df, touched=None: (
+        commits.append(touched),
+        orig_commit(df, touched),
     )
 
     b1 = spark.createDataFrame(
@@ -837,9 +839,9 @@ def test_catch_up_crash_at_every_subbatch_converges(spark, tmp_path):
         orig_commit = tbl.commit
         n_commits = 0
 
-        def crashing_commit(df, version, touched=None):
+        def crashing_commit(df, touched=None):
             nonlocal n_commits
-            orig_commit(df, version, touched)
+            orig_commit(df, touched)
             n_commits += 1
             if n_commits >= crash_after:
                 raise Boom()
@@ -1424,34 +1426,258 @@ def test_fuzz_overlap_redelivery_with_crash_converges(spark, tmp_path, seed):
     assert st["step_id"] == Decimal(final_hb) and st["stage"] == STAGE_RUN
 
 
+ORDERS_META = TableMeta(
+    "orders",
+    primary_key=["order_id"],
+    columns={"order_id": "Int64", "amount": "Optional<Utf8>"},
+)
+
+
+def msg_order(oid, amount, step, txid):
+    return json.dumps({"update": {"amount": amount}, "key": [oid], "ts": [step, txid]})
+
+
+def _users_and_orders(spark, tmp):
+    return ReplicationEngine(
+        spark=spark,
+        streams=[
+            StreamConfig(0, META, os.path.join(tmp, "dst_users"), DST_SCHEMA),
+            StreamConfig(
+                1, ORDERS_META, os.path.join(tmp, "dst_orders"),
+                "order_id bigint, amount string",
+            ),
+        ],
+        expected_partitions=2,
+        work_dir=os.path.join(tmp, "work"),
+    )
+
+
+def test_torn_commit_is_invisible_and_replay_converges(spark, tmp_path):
+    """Every destination and `_state` commit in ONE manifest: a crash
+    inside the second table's commit of batch 1, after the first table
+    committed, leaves a reader with both tables and `_state` at batch
+    0, and replaying the batch converges."""
+    tmp = str(tmp_path)
+    raw_schema = "table_id int, partition int, offset long, value string"
+    b0 = spark.createDataFrame(
+        [
+            (0, 0, 1, msg_update(1, "a", 10, 1)),
+            (1, 0, 2, msg_order(7, "x", 12, 1)),
+            (0, 0, 3, msg_hb(50)),
+            (1, 0, 4, msg_hb(50)),
+        ],
+        raw_schema,
+    )
+    b1 = spark.createDataFrame(
+        [
+            (0, 0, 5, msg_update(1, "b", 60, 1)),
+            (1, 0, 6, msg_order(7, "y", 62, 1)),
+            (0, 0, 7, msg_hb(90)),
+            (1, 0, 8, msg_hb(90)),
+        ],
+        raw_schema,
+    )
+    eng = _users_and_orders(spark, tmp)
+    eng.process_batch(b0, 0)
+
+    class Boom(Exception):
+        pass
+
+    orders = eng.tables[1]
+    orig_commit = orders.commit
+
+    def crashing_commit(df, touched=None):
+        orig_commit(df, touched)
+        raise Boom()
+
+    orders.commit = crashing_commit
+    with pytest.raises(Boom):
+        eng.process_batch(b1, 1)
+
+    def seen(e):
+        return (
+            {r.user_id: r.value for r in e.tables[0].current().collect()},
+            {r.order_id: r.amount for r in e.tables[1].current().collect()},
+            e.state.read()["step_id"],
+        )
+
+    reader = _users_and_orders(spark, tmp)  # a restarted driver
+    assert seen(reader) == ({1: "a"}, {7: "x"}, Decimal(50))
+    reader.process_batch(b1, 1)
+    assert seen(reader) == ({1: "b"}, {7: "y"}, Decimal(90))
+
+
+def _b0_b1(spark):
+    """b0 applies step 10; b1 applies step 60 at quorum 70 and leaves
+    step 75 pending. No offset column, so the consumed-offset guard
+    cannot hide a replay that builds on the wrong manifest."""
+    raw_schema = "partition int, value string"
+    b0 = spark.createDataFrame(
+        [(0, msg_update(1, "a", 10, 1)), (0, msg_hb(50)), (1, msg_hb(50))], raw_schema
+    )
+    b1 = spark.createDataFrame(
+        [
+            (0, msg_update(2, "b", 60, 1)),
+            (0, msg_update(3, "c", 75, 1)),
+            (0, msg_hb(70)),
+            (1, msg_hb(80)),
+        ],
+        raw_schema,
+    )
+    return b0, b1
+
+
+def _assert_b1_applied_once(spark, eng):
+    st = eng.state.read()
+    assert (st["state"], st["step_id"]) == ("OK", Decimal(70))
+    assert {r.user_id: r.value for r in eng.tables[0].current().collect()} == {
+        1: "a",
+        2: "b",
+    }
+    pending = os.path.join(eng.pending_dir, f"v{eng.state.latest()['pending']}")
+    assert spark.read.parquet(pending).count() == 1  # step 75, carried once
+
+
+def test_replay_after_publish_builds_on_the_manifest_before(spark, tmp_path):
+    """A batch that published but whose source offsets Spark never
+    committed is replayed with the same batch id, as often as the driver
+    crashes after publishing: each replay must build on the manifest
+    before the batch's first attempt, or its own heartbeat (step 70)
+    would flag its own event (step 60) as out-of-order and stop the
+    stream, and its pending event would be carried twice."""
+    tmp = str(tmp_path)
+    b0, b1 = _b0_b1(spark)
+    eng = make_engine(spark, tmp)
+    eng.process_batch(b0, 0)
+    eng.process_batch(b1, 1)
+    for _ in range(2):  # two more attempts, each publishing again
+        eng = make_engine(spark, tmp)
+        eng.process_batch(b1, 1)
+        _assert_b1_applied_once(spark, eng)
+
+
+def test_replay_after_compaction_builds_on_the_manifest_before(spark, tmp_path):
+    """`--compact-and-exit` between a batch's publish and its replay
+    publishes a manifest that carries the batch's replay base forward:
+    the replay still builds on the manifest before the batch, and the
+    next batch builds on the compacted version."""
+    from types import SimpleNamespace
+
+    from aardappel_spark.__main__ import _compact
+
+    tmp = str(tmp_path)
+    dst = os.path.join(tmp, "dst")
+
+    def compact():
+        _compact(
+            spark,
+            SimpleNamespace(dedup_exact=False, setsim_dedup=False),
+            SimpleNamespace(streams=[SimpleNamespace(dst_table=dst)]),
+            {dst: (META, DST_SCHEMA)},
+            os.path.join(tmp, "work"),
+        )
+
+    b0, b1 = _b0_b1(spark)
+    eng = make_engine(spark, tmp)
+    eng.process_batch(b0, 0)
+    eng.process_batch(b1, 1)
+    compact()
+    eng = make_engine(spark, tmp)
+    eng.process_batch(b1, 1)
+    _assert_b1_applied_once(spark, eng)
+
+    compact()
+    compacted = eng.tables[0].current_version()
+    eng = make_engine(spark, tmp)
+    eng.process_batch(
+        spark.createDataFrame(
+            [(0, msg_update(4, "d", 90, 1)), (0, msg_hb(95)), (1, msg_hb(95))],
+            "partition int, value string",
+        ),
+        2,
+    )
+    assert eng.tables[0].versions() == [compacted, eng.tables[0].current_version()]
+    assert {r.user_id: r.value for r in eng.tables[0].current().collect()} == {
+        1: "a",
+        2: "b",
+        3: "c",
+        4: "d",
+    }
+
+
+def test_one_manifest_is_the_only_version_mechanism(spark, tmp_path):
+    """Two applying batches, each followed by a pending-only one: the
+    work dir keeps one version mechanism — the newest manifest and the
+    one before it, the pending dirs they name, and the table's current
+    and previous versions, the previous one still readable after the
+    pending-only publish — and no `_state/CURRENT`, `_hb/`, `_off/` or
+    table `CURRENT`."""
+    tmp = str(tmp_path)
+    raw_schema = "partition int, offset long, value string"
+    eng = make_engine(spark, tmp)
+    for i, rows in enumerate(
+        [
+            [(0, 1, msg_update(1, "a", 10, 1)), (0, 2, msg_hb(50)), (1, 3, msg_hb(50))],
+            # partition 1 silent: the quorum stays at 50, all pending
+            [(0, 4, msg_update(2, "b", 60, 1)), (0, 5, msg_hb(70))],
+            [(0, 6, msg_update(1, "c", 80, 1)), (0, 7, msg_hb(90)), (1, 8, msg_hb(90))],
+            # partition 1 silent again: the quorum stays at 90
+            [(0, 9, msg_update(3, "d", 95, 1)), (0, 10, msg_hb(99))],
+        ]
+    ):
+        eng.process_batch(spark.createDataFrame(rows, raw_schema), i)
+
+    work, dst = os.path.join(tmp, "work"), os.path.join(tmp, "dst")
+    assert sorted(os.listdir(work)) == ["_manifest", "_pending"]
+    assert sorted(os.listdir(os.path.join(work, "_manifest"))) == ["v2.json", "v3.json"]
+    assert sorted(os.listdir(os.path.join(work, "_pending"))) == ["v2", "v3"]
+    # batch 0 committed v1, batch 2 committed v3 (the version after seq 2)
+    assert sorted(os.listdir(dst)) == ["v1", "v3"]
+    tbl = eng.tables[0]
+    assert tbl.versions() == [1, 3] and tbl.current_version() == 3
+    assert {r.user_id: r.value for r in tbl.read_version(1).collect()} == {1: "a"}
+    assert {r.user_id: r.value for r in tbl.current().collect()} == {1: "c", 2: "b"}
+
+
+@pytest.mark.parametrize("older", ["_state/CURRENT", "_pending/v0/x.parquet", "_hb/v0.json", "_off/v0.json"])
+def test_work_dir_from_before_the_manifest_is_refused(spark, tmp_path, older):
+    """A work dir holding any store of the engine before the manifest —
+    `_state` after a sync point, or only the pending, heartbeat and
+    offset snapshots of pending-only batches — is not resumed: the
+    engine refuses to start, naming the dir and the way out."""
+    import re
+
+    path = tmp_path / "work" / older
+    path.parent.mkdir(parents=True)
+    path.write_text("1")
+    with pytest.raises(RuntimeError) as err:
+        make_engine(spark, str(tmp_path))
+    assert re.search(re.escape(str(tmp_path / "work")) + ".*new --work-dir", str(err.value))
+
+
 def test_versioned_table_compact_files(spark, tmp_path):
     """compact_files() collapses each bucket to one parquet file with
-    byte-identical content, advances CURRENT atomically, and the next
-    incremental commit still carries untouched buckets from the
+    byte-identical content, visible once a manifest publishes it, and
+    the next incremental commit still carries untouched buckets from the
     compacted version — the OPTIMIZE housekeeping job a long-running
     stream needs once per-bucket file counts grow."""
-    from aardappel_spark.casting import TableMeta
-    from aardappel_spark.streaming import VersionedTable
-
-    meta = TableMeta(
-        "users",
-        primary_key=["user_id"],
-        columns={"user_id": "Int64", "value": "Optional<Utf8>"},
-    )
+    m = Manifest(str(tmp_path / "work"))
     vt = VersionedTable(
-        spark, str(tmp_path / "tbl"), meta, "user_id bigint, value string",
-        n_buckets=4,
+        spark, str(tmp_path / "tbl"), META, DST_SCHEMA, m, n_buckets=4
     )
     # a full write under 32 shuffle partitions scatters every bucket
     # across many tasks -> many files per bucket
     rows = [(i, f"v{i}") for i in range(200)]
     df = spark.createDataFrame(rows, "user_id bigint, value string").repartition(16)
-    vt.commit(df, 1, touched=None)
+    vt.commit(df, touched=None)
+    m.write()
     before = vt.n_data_files()
     assert max(before.values()) > 1, before  # the small-file problem is real
 
     new_v = vt.compact_files()
-    assert new_v == 2 and vt.current_version() == 2
+    assert new_v == 2 and vt.current_version() == 1  # staged, unpublished
+    m.write()
+    assert vt.current_version() == 2
     after = vt.n_data_files()
     assert set(after) == set(before) and all(n == 1 for n in after.values()), after
     assert sorted((r.user_id, r.value) for r in vt.current().collect()) == rows
@@ -1462,41 +1688,37 @@ def test_versioned_table_compact_files(spark, tmp_path):
     touched = upd.select(vt.bucket_of().alias("b")).distinct().collect()
     tb = [r.b for r in touched]
     post = vt.read_buckets(tb).filter(~F.col("user_id").isin([0])).unionByName(upd)
-    vt.commit(post, 3, touched=tb)
+    vt.commit(post, touched=tb)
+    m.write()
     got = dict((r.user_id, r.value) for r in vt.current().collect())
     assert got[0] == "NEW" and got[199] == "v199" and len(got) == 200
 
 
 def test_versioned_table_time_travel(spark, tmp_path):
     """Snapshot reads: read_version(v) returns the table EXACTLY as of
-    v regardless of later commits (immutable version dirs + atomic
-    pointer swap = snapshot isolation for readers); vacuumed versions
-    fail loudly. Retention = current + previous."""
+    v regardless of later commits (immutable version dirs + one atomic
+    manifest publish = snapshot isolation for readers); vacuumed
+    versions fail loudly. Retention = each table's current and previous
+    version."""
     import pytest as _pytest
 
-    from aardappel_spark.casting import TableMeta
-    from aardappel_spark.streaming import VersionedTable
-
-    meta = TableMeta(
-        "users",
-        primary_key=["user_id"],
-        columns={"user_id": "Int64", "value": "Optional<Utf8>"},
-    )
+    m = Manifest(str(tmp_path / "work"))
     vt = VersionedTable(
-        spark, str(tmp_path / "tbl"), meta, "user_id bigint, value string",
-        n_buckets=4,
+        spark, str(tmp_path / "tbl"), META, DST_SCHEMA, m, n_buckets=4
     )
     v1_rows = [(i, f"a{i}") for i in range(40)]
     vt.commit(
-        spark.createDataFrame(v1_rows, "user_id bigint, value string"), 1,
+        spark.createDataFrame(v1_rows, "user_id bigint, value string"),
         touched=None,
     )
+    m.write()
 
     # incremental upsert -> v2; v1 must still read as of v1
     upd = spark.createDataFrame([(0, "NEW")], "user_id bigint, value string")
     tb = [r.b for r in upd.select(vt.bucket_of().alias("b")).distinct().collect()]
     post = vt.read_buckets(tb).filter(F.col("user_id") != 0).unionByName(upd)
-    vt.commit(post, 2, touched=tb)
+    vt.commit(post, touched=tb)
+    m.write()
 
     assert vt.versions() == [1, 2]
     as_of_1 = dict(
@@ -1510,7 +1732,8 @@ def test_versioned_table_time_travel(spark, tmp_path):
     upd3 = spark.createDataFrame([(1, "NEWER")], "user_id bigint, value string")
     tb3 = [r.b for r in upd3.select(vt.bucket_of().alias("b")).distinct().collect()]
     post3 = vt.read_buckets(tb3).filter(F.col("user_id") != 1).unionByName(upd3)
-    vt.commit(post3, 3, touched=tb3)
+    vt.commit(post3, touched=tb3)
+    m.write()
     assert vt.versions() == [2, 3]
     as_of_2 = dict((r.user_id, r.value) for r in vt.read_version(2).collect())
     assert as_of_2[0] == "NEW" and as_of_2.get(1) == "a1"

@@ -3,9 +3,10 @@
 The compaction job's operational claim is measured, not asserted:
 drive N small upsert commits through the SAME merge-then-commit path
 the streaming engine uses (read touched buckets, merge the batch,
-commit post-state), record the current version's data-file count as it
-evolves, then run compact_files() and measure the before/after file
-count and full-scan wall clock (read amplification).
+commit post-state, publish a manifest naming it), record the current
+version's data-file count as it evolves, then run compact_files() and
+measure the before/after file count and full-scan wall clock (read
+amplification).
 
 Two claims under test:
 1. File count under churn is BOUNDED (<= n_buckets * write tasks), not
@@ -39,7 +40,7 @@ def main() -> None:
     n_commits = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     from aardappel_spark.casting import TableMeta
     from aardappel_spark.session import get_spark
-    from aardappel_spark.streaming import VersionedTable
+    from aardappel_spark.streaming import Manifest, VersionedTable
 
     spark = get_spark("churn-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -50,7 +51,10 @@ def main() -> None:
         primary_key=["k"],
         columns={"k": "Int64", "v": "Optional<Utf8>"},
     )
-    vt = VersionedTable(spark, os.path.join(root, "t"), meta, "k bigint, v string")
+    manifest = Manifest(os.path.join(root, "work"))
+    vt = VersionedTable(
+        spark, os.path.join(root, "t"), meta, "k bigint, v string", manifest
+    )
     rng = random.Random(7)
 
     checkpoints = sorted({1, 10, 25, 50, n_commits})
@@ -67,7 +71,8 @@ def main() -> None:
         cur = vt.read_buckets(touched)
         # last-wins merge: batch rows shadow current rows with the same key
         merged = batch.unionByName(cur.join(batch.select("k"), "k", "left_anti"))
-        vt.commit(merged, vt.current_version() + 1, touched=touched)
+        vt.commit(merged, touched=touched)
+        manifest.write()
         if i in checkpoints:
             growth[str(i)] = sum(vt.n_data_files().values())
     t_commits = round(time.perf_counter() - t_commits0, 1)
@@ -87,6 +92,7 @@ def main() -> None:
     t_scan_before = scan_time()
     t0 = time.perf_counter()
     new_v = vt.compact_files()
+    manifest.write()
     t_compact = round(time.perf_counter() - t0, 2)
     files_after = vt.n_data_files()
     n_after = sum(files_after.values())

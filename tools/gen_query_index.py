@@ -80,7 +80,9 @@ def main() -> None:
     print("| # | Query | What it computes |")
     print("|---|---|---|")
     missing = []
-    for i, (name, fn) in enumerate(registry.QUERIES.items(), 1):
+    # by name: registry.QUERIES follows the driver's gate order, which
+    # moves with every committed artifact
+    for i, (name, fn) in enumerate(sorted(registry.QUERIES.items()), 1):
         assert name in registry.ORACLES, name
         summary = (
             first_sentence(fn.__doc__) if fn.__doc__ else SUMMARIES.get(name)
