@@ -151,8 +151,8 @@ def build_parser() -> argparse.ArgumentParser:
             "one parquet file per bucket (VersionedTable.compact_files), "
             "print before/after file counts, and exit. Combined with "
             "--setsim-dedup or --dedup-exact it instead compacts that "
-            "mode's streaming state store (per-batch dirs -> one file "
-            "per bucket under batch=-1)"
+            "mode's streaming state store (per-batch deltas -> one "
+            "delta with one file per bucket)"
         ),
     )
     return p
@@ -169,7 +169,9 @@ def _parse_tau(text: str) -> tuple[int, int] | None:
 
 def _usage_error(args, cfg: EngineConfig) -> str | None:
     """Every argument check, run before Spark starts or the lock is
-    taken, so a usage error can never leave the lock held."""
+    taken, so a usage error can never leave the lock held. State the
+    run could not resume (written before the commit manifest) is one
+    too."""
     if args.setsim_dedup and args.dedup_exact:
         return "--setsim-dedup and --dedup-exact are mutually exclusive"
     if args.setsim_dedup and _parse_tau(args.setsim_tau) is None:
@@ -186,7 +188,14 @@ def _usage_error(args, cfg: EngineConfig) -> str | None:
             "--expected-partitions is required for a multi-stream config "
             "(the quorum cut counts every partition of every stream)"
         )
-    return None
+    mode = _dedup_mode(args)
+    if mode is not None:
+        from .stateful import older_store
+
+        return older_store(os.path.join(args.work_dir, mode[1]))
+    from .streaming import older_work_dir
+
+    return older_work_dir(args.work_dir)
 
 
 def _dedup_mode(args):
@@ -217,9 +226,8 @@ def _run_keyed_sink(out_dir: str):
     per-batch overwrite is idempotent under foreachBatch retry; across
     runs delivery is at-least-once (dedupe downstream). An empty frame
     never overwrites an existing batch dir: the exact kernel emits one
-    on a full replay, after the store append, and it must not wipe the
-    attempt's committed output (the setsim kernel skips its sink on a
-    replay)."""
+    on a replay after its publish, and it must not wipe the attempt's
+    committed output (the setsim kernel skips its sink on a replay)."""
     run_dir = os.path.join(out_dir, f"run={uuid.uuid4().hex[:12]}")
 
     def sink(df, batch_id):
@@ -256,8 +264,8 @@ def _cdc_source(spark, args, cfg: EngineConfig, source_dir: str):
 def _compact(spark, args, cfg: EngineConfig, metas, work_dir: str) -> None:
     """The maintenance call; the instance lock guarantees no live writer.
 
-    A dedup mode compacts its state store (per-batch dirs -> one file
-    per bucket under batch=-1, never a live foreachBatch id), bounding
+    A dedup mode compacts its state store (per-batch deltas -> one
+    delta with one file per bucket, published like a batch), bounding
     partition discovery under unbounded batch count. CDC rewrites each
     destination to one file per bucket and publishes ONE manifest naming
     every compacted version; that needs only the tables, not an engine

@@ -149,15 +149,15 @@ class Locker:
             self.owner, {"lock_owner": "", "lock_deadline": 0}
         )
 
-    def start_renewal(self, on_lost=None) -> "LockRenewer":
+    def start_renewal(self) -> "LockRenewer":
         """Start the half-TTL renewal thread (locker_thread.go:12-116
         renews before expiry for exactly this reason): without renewal
         any holder running longer than one TTL silently loses the lock
         to a standby and the 'single-writer' guarantee becomes two
-        concurrent writers (r11 ADVICE). ``on_lost`` fires once, from
-        the renewal thread, if a renew fails — the holder must stop
-        writing (e.g. stop its streaming query)."""
-        renewer = LockRenewer(self, on_lost=on_lost)
+        concurrent writers (r11 ADVICE). If a renew fails the renewer's
+        ``lost`` flips True; the holder polls it and must stop writing
+        (e.g. stop its streaming query)."""
+        renewer = LockRenewer(self)
         renewer.start()
         return renewer
 
@@ -179,12 +179,11 @@ class LockRenewer:
     Mirrors the reference's locker thread: renew strictly before the
     deadline so a live holder never expires (locker_thread.go:12-116);
     a failed renew means the lock was stolen (or storage broke) — the
-    thread fires ``on_lost`` once and exits, and ``lost`` flips True so
-    pollers can check. ``stop()`` is idempotent and joins the thread."""
+    thread flips ``lost`` True for pollers to check and exits.
+    ``stop()`` is idempotent and joins the thread."""
 
-    def __init__(self, locker: Locker, on_lost=None):
+    def __init__(self, locker: Locker):
         self.locker = locker
-        self.on_lost = on_lost
         self.lost = False
         self._stop = threading.Event()
         self._thread = threading.Thread(
@@ -204,11 +203,6 @@ class LockRenewer:
                 ok = False  # storage hiccup = can't prove ownership
             if not ok and not self._stop.is_set():
                 self.lost = True
-                if self.on_lost is not None:
-                    try:
-                        self.on_lost()
-                    except Exception:
-                        pass  # on_lost must never kill the thread exit
                 return
 
     def stop(self) -> None:

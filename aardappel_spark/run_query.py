@@ -19,6 +19,26 @@ import json
 import sys
 
 
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per parquet table of
+    ``sf_dir``: the oracle's input. ``documents`` mirrors the engine's
+    ingest normalization (registry._docs), so NULL text reads as ''
+    on both sides of a comparison."""
+    import glob
+    import os
+
+    import duckdb
+
+    con = duckdb.connect()
+    for p in glob.glob(f"{sf_dir}/*.parquet"):
+        name = os.path.basename(p).removesuffix(".parquet")
+        cols = "*"
+        if name == "documents":
+            cols = "doc_id, COALESCE(text, '') AS text, lang, source, n_chars"
+        con.execute(f"CREATE VIEW {name} AS SELECT {cols} FROM read_parquet('{p}')")
+    return con
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="python -m aardappel_spark.run_query",
@@ -95,18 +115,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"# {len(rows)} rows ({args.query} @ {args.sf_dir})", file=sys.stderr)
 
     if args.oracle:
-        import glob
-        import os as _os
-
-        import duckdb
-
-        con = duckdb.connect()
-        for pth in glob.glob(f"{args.sf_dir}/*.parquet"):
-            t = _os.path.basename(pth).removesuffix(".parquet")
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pth}')"
-            )
-        cur = con.execute(ORACLES[args.query])
+        cur = oracle_db(args.sf_dir).execute(ORACLES[args.query])
         orows = cur.fetchall()
         ok = len(orows) == len(rows)
         print(

@@ -56,15 +56,24 @@ def apply_required_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _host_driver_mem() -> str:
+    """Driver heap for this host: 16g, capped at 2/5 of physical memory.
+    The Python side needs the rest: an sf0.1 oracle sweep's Python
+    process peaked at 8.4 GB RSS on a 15 GB host, where a 16g heap was
+    OOM-killed and a 6g one passed."""
+    gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{max(1, min(16, gib * 2 // 5))}g"
+
+
 def get_spark(app_name: str = "aardappel-spark", master: str | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     # Local mode runs every "executor" thread inside the driver JVM, whose
     # default heap is 1g — far too small for 32 threads plus persisted
     # shared frames, and the resulting GC pressure taxes EVERY query
     # (measured ~1.4-1.9x uniform inflation on a 71-query run). Static
     # conf: only effective for the process that launches the JVM; on a
     # cluster, executor sizing comes from the deployment instead.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

@@ -3,13 +3,18 @@
 ``incremental_dedup_batch`` drops documents whose md5 fingerprint is
 already in a persistent store; ``incremental_setsim_batch`` emits each
 token-set Jaccard near-duplicate pair once, when its second member
-arrives. Both keep the corpus memory in bucketed parquet stores
-(``batch=<id>/bucket=<b>``, ``pmod(xxhash64(key), n_buckets)``) rather
-than in the streaming checkpoint, so a replayed micro-batch overwrites
-only its own ``batch=<id>`` directory and restarts compose; the
-``compact_*_store`` functions fold those per-batch dirs into one
-``batch=-1`` dir with one file per bucket, behind a crash-recoverable
-rename swap.
+arrives. Both keep the corpus memory in bucketed parquet stores rather
+than in the streaming checkpoint, and commit through the manifest log
+the CDC engine uses (``commitlog.ManifestLog``): a batch writes its rows
+as one delta dir ``v=<seq>/bucket=<b>`` (``pmod(xxhash64(key),
+n_buckets)``) per sub-store, named by the manifest's next sequence
+number, not by Spark's batch id, then publishes ONE manifest listing
+the live delta dirs (and the setsim corpus document count). Readers
+read only what the newest manifest names, so a crashed attempt's dirs
+are invisible and its replay rewrites them, and a fresh checkpoint
+(batch ids from 0 again) can never overwrite history. The
+``compact_*_store`` functions fold the deltas into one new delta with
+one file per bucket: one more publish.
 
 The quorum engine (streaming.py) is the replication path; these
 kernels back ``--dedup-exact``/``--setsim-dedup``, ``bench.py`` and the
@@ -18,101 +23,83 @@ registry's ``dedup_*_stream`` queries.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import os
+
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
 
-from .localrel import _unpin, empty_df, local_df
+from .commitlog import ManifestLog, older_state
+from .localrel import _unpin, empty_df
+
+POSTINGS_SCHEMA = "tok string, id long, n long, rn long, bucket int"
+SETS_SCHEMA = "id long, toks array<string>, n long, bucket int"
+FPS_SCHEMA = "fp string, bucket int"
 
 
-def _read_store_or_empty(
-    spark, path: str, schema: str | StructType
+def older_store(store_dir: str) -> str | None:
+    """The refusal of a dedup store written before the manifest (any
+    content and no ``_manifest/``), or None. Creates nothing."""
+    older = older_state(store_dir)
+    if not older:
+        return None
+    return (
+        f"{store_dir} holds a dedup store written before the commit manifest "
+        f"({', '.join(older)}; no _manifest/) and cannot be resumed: start "
+        "from a new --work-dir, or move the store away, and replay the source"
+    )
+
+
+class StoreLog(ManifestLog):
+    """The commit log of one dedup store: a manifest names the live
+    delta dirs ``v=<seq>`` (``deltas``) of every sub-store in ``stores``,
+    plus what the kernel keeps beside them (``empty``'s other keys). A
+    store from before the manifest is refused."""
+
+    # hive-style: a read over several deltas then discovers one
+    # partition layout (``v``, ``bucket``) under the store dir
+    prefix = "v="
+
+    def __init__(self, root: str, stores: list[str], **empty):
+        err = older_store(root)
+        if err:
+            raise RuntimeError(err)
+        self.stores = stores
+        super().__init__(root, {"deltas": [], **empty})
+
+    def _names(self, m: dict, newest: bool) -> dict[str, list]:
+        return dict.fromkeys(self.stores, m["deltas"])
+
+
+def _setsim_log(store_dir: str) -> StoreLog:
+    return StoreLog(
+        store_dir, [f"{store_dir}/postings", f"{store_dir}/sets"], docs=0
+    )
+
+
+def _read_store(
+    spark, path: str, deltas: list[int], schema: str, buckets=None
 ) -> DataFrame:
-    """Read a parquet state store, treating ONLY 'no committed data'
-    as 'first batch / empty corpus': a missing path (PATH_NOT_FOUND)
-    or a directory with no parquet footers (UNABLE_TO_INFER_SCHEMA —
-    e.g. a pre-created store dir, or an orphaned ``_temporary`` from a
-    write that crashed before commit; by the store protocol every
-    committed batch leaves at least one footer, so no-footers really
-    is no-history). Every OTHER error re-raises — corrupt footers
-    (SparkException), a half-migrated mixed store layout
-    (CONFLICTING_PARTITION_COLUMN_NAMES, a SparkRuntimeException in
-    Spark 4), any other AnalysisException: swallowing one would
-    silently forget all history, re-admit duplicates, and drop
-    detections (r10+r11 ADVICE; the r10 narrowing from bare ``except``
-    was still too broad).
-
-    ``schema`` is either a DDL string — the empty frame's schema; the
-    store's own schema is then inferred from its parquet footers,
-    which costs a Spark job — or the StructType an earlier read of the
-    same store inferred (see ``_store_reader``), which skips that job.
-    An empty directory then reads as zero rows without the
-    UNABLE_TO_INFER_SCHEMA detour; a missing path and a mixed layout
-    fail exactly as above."""
-    try:
-        if isinstance(schema, str):
-            return spark.read.parquet(path)
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        cond = e.getCondition() if hasattr(e, "getCondition") else None
-        if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or (
-            cond is None
-            and (
-                "[PATH_NOT_FOUND]" in str(e)
-                or "[UNABLE_TO_INFER_SCHEMA]" in str(e)
-            )
-        ):
-            # JVM-native zero-row frame: the pickled-RDD empty frame
-            # cost a Python-worker round-trip on every first-batch
-            # evaluation (localrel module docstring has the numbers)
-            return empty_df(spark, schema)
-        raise
-
-
-def _read_store_buckets(
-    spark, path: str, schema: str | StructType, buckets
-) -> DataFrame:
-    """Bucket-pruned state-store read: the filter on the hive
-    partition column ``bucket`` is applied to the bare scan, before
-    any projection, so Spark partition-discovers ``batch=<id>/
-    bucket=<b>`` and prunes the listing to matching bucket
-    directories — the scan (and everything shuffled downstream)
-    covers the matching buckets, not the whole store (r11 verdict #4;
-    a plan test asserts ``input_file_name()`` — the runtime truth of
-    what the scan read; ``inputFiles()`` would be the WRONG assertion,
-    it ignores partition pruning — stays inside the requested
-    buckets). An empty bucket list reads nothing."""
-    from pyspark.sql import functions as F
-
-    df = _read_store_or_empty(spark, path, schema)
+    """The named delta dirs of one sub-store, with its declared schema
+    (no footer inference, no Spark job), ``bucket``-pruned unless
+    ``buckets`` is None. The filter on the hive partition column is
+    applied to the bare scan, so Spark prunes the listing to matching
+    bucket dirs: the scan (and everything shuffled downstream) covers
+    the matching buckets, not the whole store (a plan test asserts
+    ``input_file_name()``, the runtime truth of what the scan read). An
+    empty bucket list reads nothing; no deltas reads as the empty
+    store; a named dir that is missing or corrupt raises."""
+    if not deltas:
+        df = empty_df(spark, schema)
+    else:
+        df = (
+            spark.read.schema(schema)
+            .option("basePath", path)
+            .parquet(*(f"{path}/v={d}" for d in deltas))
+        )
+    if buckets is None:
+        return df
     bks = sorted(set(buckets))
     return df.filter(F.col("bucket").isin(bks) if bks else F.lit(False))
-
-
-def _store_reader():
-    """One kernel instance's bucket-pruned store reader
-    (``_read_store_buckets``) that infers each store's schema once.
-    Inference reads parquet footers in a Spark job, and a kernel reads
-    one to three stores per micro-batch, so inferring on every read is a
-    fixed cost of every batch. The first read that finds committed data
-    keeps the inferred StructType here, in the instance, and later reads
-    hand it to Spark. It is inferred, never declared: a declared schema
-    would read a legacy flat store's missing ``bucket`` column as NULL
-    and silently forget all history, where the inferred one fails fast
-    on it. Every committed row sits under a ``batch=<id>`` dir, so a
-    frame with a ``batch`` column came from footers, not from the
-    empty-store fallback."""
-    inferred: dict[str, StructType] = {}
-
-    def read(spark, path: str, schema: str, buckets) -> DataFrame:
-        df = _read_store_buckets(
-            spark, path, inferred.get(path, schema), buckets
-        )
-        if path not in inferred and "batch" in df.columns:
-            inferred[path] = df.schema
-        return df
-
-    return read
 
 
 def _write_buckets(df: DataFrame, path: str) -> None:
@@ -131,147 +118,58 @@ def _write_buckets(df: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
-def _read_counts_total(path: str, exclude_bid: int) -> int:
-    """Driver-side read of the one-row-per-batch ``counts/`` sidecar:
-    ``sum(n)`` over rows with ``bid != exclude_bid``. The sidecar is
-    bounded by construction (one one-row file per committed batch,
-    folded to a single ``bid=-1`` row by compaction), so an Arrow read
-    on the driver replaces a whole Spark job (parquet schema
-    inference + scan + aggregate — measured ~1.5-2.4 s of pure fixed
-    cost per micro-batch at sf0.1) with a sub-millisecond local read.
-    A missing directory is 'first batch' (0, same contract as
-    _read_store_or_empty); an unreadable committed file propagates —
-    silently dropping sidecar rows would loosen nothing (the guard
-    bound only TIGHTENS when the corpus is under-counted) but a
-    corrupt store should still surface. Like Spark's reader it skips
-    ``_``/``.`` dirs: a ``_temporary`` dir holds a write that never
-    committed, and its rows (or its torn file) are not corpus."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    if not os.path.isdir(path):
-        return 0
-    total = 0
-    for dirpath, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.startswith(("_", ".")):
-                continue
-            t = pq.read_table(os.path.join(dirpath, f), columns=["n", "bid"])
-            for n, bid in zip(
-                t.column("n").to_pylist(), t.column("bid").to_pylist()
-            ):
-                if bid != exclude_bid:
-                    total += int(n)
-    return total
+def _nfiles(path: str, deltas: list[int]) -> int:
+    return sum(
+        1
+        for d in deltas
+        for _, _, fs in os.walk(f"{path}/v={d}")
+        for f in fs
+        if not f.startswith(("_", "."))
+    )
 
 
-def _recover_compaction(path: str) -> None:
-    """Roll a crashed ``_compact_bucketed_store`` forward or back:
-    a leftover ``.old`` beside a live store means the compaction
-    completed (drop the backup); a ``.old`` with NO live store means
-    the crash hit between the two renames (restore the backup — the
-    corpus must never silently read as empty, the r10/r11 ADVICE
-    class); a ``.compacting`` dir is an uncommitted rewrite (drop)."""
-    import os
-    import shutil
-
-    old, tmp = path + ".old", path + ".compacting"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _compact_bucketed_store(spark, path: str, schema: str) -> tuple[int, int]:
-    """Compact a ``batch=<id>/bucket=<b>`` streaming state store to a
-    single ``batch=-1`` dir with ONE file per bucket. The per-batch
-    layout keeps writes idempotent, but an unbounded run accumulates
-    one directory per micro-batch and partition discovery (file
-    listing) grows with batch count — at 100 TB the listing, not the
-    data, becomes the per-trigger cost. Compaction rewrites the store
-    content-identically: readers filter on ``bucket`` only, the
-    replay anti-join is content-based, and ``batch=-1`` can never
-    collide with a foreachBatch id (ids are >= 0, so even a
-    fresh-checkpoint restart's batch 0 overwrite cannot wipe the
-    compacted corpus). MUST run under the instance lock with no live
-    writer (the ``--compact-and-exit`` contract). Crash-safe via
-    write-to-``.compacting`` + two renames; ``_recover_compaction``
-    rolls any crash window forward or back. Returns (files_before,
-    files_after)."""
-    import os
-    import shutil
-
-    _recover_compaction(path)
-    df = _read_store_or_empty(spark, path, schema)
-    if df.isEmpty():
-        return (0, 0)
-
-    def _nfiles(p):
-        return sum(
-            1
-            for dp, _, fs in os.walk(p)
-            for f in fs
-            if not f.startswith(("_", "."))
-        )
-
-    before = _nfiles(path)
-    cols = [c.split()[0] for c in schema.split(",")]
-    tmp = path + ".compacting"
-    _write_buckets(df.select(*cols), f"{tmp}/batch=-1")
-    os.rename(path, path + ".old")
-    os.rename(tmp, path)
-    shutil.rmtree(path + ".old")
-    return (before, _nfiles(path))
+def _compact_store(spark, log: StoreLog, schemas: dict[str, str]) -> dict:
+    """Fold every live delta of each sub-store (path -> schema) into ONE
+    new delta with one file per bucket, and publish a manifest naming
+    only it. The per-batch deltas keep writes idempotent, but an
+    unbounded run accumulates one dir per micro-batch and partition
+    discovery (file listing) grows with their count — at 100 TB the
+    listing, not the data, becomes the per-trigger cost. Content-
+    identical for every reader (they filter on ``bucket`` only, and the
+    replay anti-join is content-based). A crash before the publish
+    leaves the previous manifest and its dirs untouched; retention
+    removes the folded dirs after the next publish. MUST run under the
+    instance lock with no live writer (the ``--compact-and-exit``
+    contract). Returns {path: (files_before, files_after)}."""
+    m = log.refresh()
+    if not m["deltas"]:
+        return dict.fromkeys(schemas, (0, 0))
+    seq = log.seq
+    before = {p: _nfiles(p, m["deltas"]) for p in schemas}
+    for path, schema in schemas.items():
+        cols = [c.split()[0] for c in schema.split(",")]
+        df = _read_store(spark, path, m["deltas"], schema).select(*cols)
+        _write_buckets(df, f"{path}/v={seq}")
+    log.publish({**m, "deltas": [seq]})
+    return {p: (before[p], _nfiles(p, [seq])) for p in schemas}
 
 
 def compact_setsim_store(spark, store_dir: str) -> dict:
-    """Compact all three sub-stores of ``incremental_setsim_batch``
-    (postings, sets, and the counts sidecar — the sidecar folds to a
-    single total row under ``bid=-1``, which the guard's
-    ``bid != batch_id`` filter always keeps). Content-identical to the
-    un-compacted store for every reader; run under the instance lock."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    out = {
-        "postings": _compact_bucketed_store(
-            spark, f"{store_dir}/postings",
-            "tok string, id long, n long, rn long, bucket int",
-        ),
-        "sets": _compact_bucketed_store(
-            spark, f"{store_dir}/sets",
-            "id long, toks array<string>, n long, bucket int",
-        ),
-    }
-    counts_path = f"{store_dir}/counts"
-    _recover_compaction(counts_path)
-    counts = _read_store_or_empty(spark, counts_path, "n long, bid long")
-    if not counts.isEmpty():
-        total = counts.agg(F.sum("n").alias("n")).first()["n"]
-        tmp = counts_path + ".compacting"
-        local_df(
-            spark, [(int(total), -1)], "n long, bid long"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/batch=-1")
-        os.rename(counts_path, counts_path + ".old")
-        os.rename(tmp, counts_path)
-        shutil.rmtree(counts_path + ".old")
-        out["counts"] = (1, 1)
-    else:
-        out["counts"] = (0, 0)
-    return out
+    """Compact the postings and sets stores of
+    ``incremental_setsim_batch`` in one publish (the corpus count rides
+    along in the manifest). Run under the instance lock."""
+    out = _compact_store(spark, _setsim_log(store_dir), {
+        f"{store_dir}/postings": POSTINGS_SCHEMA,
+        f"{store_dir}/sets": SETS_SCHEMA,
+    })
+    return {os.path.basename(p): v for p, v in out.items()}
 
 
 def compact_dedup_store(spark, store_path: str):
     """Compact the ``incremental_dedup_batch`` fingerprint store to one
     file per bucket (same contract as ``compact_setsim_store``)."""
-    return _compact_bucketed_store(spark, store_path, "fp string, bucket int")
+    log = StoreLog(store_path, [store_path])
+    return _compact_store(spark, log, {store_path: FPS_SCHEMA})[store_path]
 
 
 def incremental_dedup_batch(
@@ -289,38 +187,31 @@ def incremental_dedup_batch(
 
     The store is a parquet table of 32-byte fingerprints — the
     batch-side ``dedup_incremental`` anti-join shape, made continuous.
-    Store format v2 (r12 verdict #3): hive-partitioned
-    ``batch=<id>/bucket=<b>`` with ``pmod(xxhash64(fp), n_buckets)``,
-    the setsim-store recipe. The anti-join reads ONLY the fp buckets
-    this batch's fingerprints hash to — a duplicate fp lands in the
-    same bucket on both sides, so the prune is exact and the scan
+    Each batch's survivors form one delta ``v=<seq>/bucket=<b>`` with
+    ``pmod(xxhash64(fp), n_buckets)``, published through the store's
+    manifest (module docstring). The anti-join reads ONLY the fp
+    buckets this batch's fingerprints hash to — a duplicate fp lands in
+    the same bucket on both sides, so the prune is exact and the scan
     (hence the shuffle) covers matching buckets, not the corpus; the
-    shared bucket function also co-locates the join at scale. A legacy
-    flat (unbucketed) store fails fast on the missing ``bucket``
-    column rather than being silently misread.
+    shared bucket function also co-locates the join at scale.
 
-    Replays are idempotent: each batch OVERWRITES its own
-    ``batch=<id>`` subdirectory, and the write is SKIPPED for an empty
-    survivor frame — a fully-replayed batch (every fp already in the
-    store, including its own committed ``batch=<id>`` rows) must not
-    overwrite its committed fingerprints with nothing (the r11 setsim
-    wipe pattern). The sink still fires on an empty frame: an
-    all-duplicates batch is a legitimate empty emit, and the CLI sink
-    guards the overwrite-vs-exists case itself. The sink runs BEFORE
-    the store grows, so delivery is at-least-once per batch_id (the
-    standard foreachBatch contract — dedupe downstream by batch id).
+    Every batch builds on the newest manifest, so replays are
+    content-based: a replay before the publish rewrites the same
+    unpublished delta, and a replay after it finds its own
+    fingerprints in the store and writes and publishes nothing. The
+    sink still fires on an empty frame: an all-duplicates batch is a
+    legitimate empty emit, and the CLI sink guards the
+    overwrite-vs-exists case itself. The sink runs BEFORE the store
+    grows, so delivery is at-least-once per batch_id (the standard
+    foreachBatch contract — dedupe downstream by batch id).
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    # a compaction that crashed mid-swap must be rolled forward/back
-    # BEFORE the first read, or the store could read as 'first batch'
-    # and silently forget the corpus (the r10/r11 ADVICE class)
-    _recover_compaction(store_path)
-    read_store = _store_reader()
+    log = StoreLog(store_path, [store_path])
 
     def fn(batch_df, batch_id):
         spark = batch_df.sparkSession
+        m = log.refresh()
         batch = batch_df.withColumn("_fp", F.md5(F.col(text_col)))
         w = Window.partitionBy("_fp").orderBy(id_col)
         batch = (
@@ -342,14 +233,13 @@ def incremental_dedup_batch(
         )
         try:
             # anti-join reads ONLY the buckets this batch's fps hash
-            # to; missing path = first batch; any other read error
-            # propagates (r10/r11 ADVICE: silently forgetting history
-            # re-admits dups)
+            # to; a read error propagates (r10/r11 ADVICE: silently
+            # forgetting history re-admits dups)
             fp_bks = [
                 r._bk for r in batch.select("_bk").distinct().collect()
             ]
-            store = read_store(
-                spark, store_path, "fp string, bucket int", fp_bks
+            store = _read_store(
+                spark, store_path, m["deltas"], FPS_SCHEMA, fp_bks
             ).select("fp")
             fresh = batch.join(
                 store, batch["_fp"] == store["fp"], "left_anti"
@@ -357,13 +247,13 @@ def incremental_dedup_batch(
             if sink is not None:
                 sink(fresh.drop("_fp", "_bk"), batch_id)
             if not fresh.isEmpty():
-                # overwrite-by-batch: idempotent under replay
                 _write_buckets(
                     fresh.select(
                         F.col("_fp").alias("fp"), F.col("_bk").alias("bucket")
                     ),
-                    f"{store_path}/batch={batch_id}",
+                    f"{store_path}/v={log.seq}",
                 )
+                log.publish({**m, "deltas": [*m["deltas"], log.seq]})
         finally:
             # `fresh` belongs to the sink, which may read it later
             _unpin(batch)
@@ -404,42 +294,36 @@ def incremental_setsim_batch(
     output bound — and the batch is refused with the same
     dial-to-turn message when it exceeds ``guard_max_candidates``
     (default ``max(1_000_000, 200 * corpus_docs)``). The corpus size
-    feeding that default comes from a tiny ``counts/`` sidecar (one
-    row per committed batch), NOT from counting the sets store — at
-    scale the full-store file listing alone would dominate a
-    micro-batch (r12 verdict #2). A store whose sidecar is missing
-    (e.g. half-deleted) under-counts the corpus, which only TIGHTENS
-    the default bound — refusal, never wrongness.
+    feeding that default is the document count the store's manifest
+    carries, NOT a count of the sets store — at scale the full-store
+    file listing alone would dominate a micro-batch (r12 verdict #2).
 
-    State is two parquet stores plus a one-row-per-batch ``counts/``
-    sidecar under ``store_dir`` (the ``incremental_dedup_batch``
-    pattern — the store, not the streaming checkpoint, carries the
-    corpus memory, so restarts and reprocessing compose): ``postings/``
-    holds each historical doc's PREFIX postings (tok, id, n, rn) —
-    only the prefix, which is what the lemma needs from the archived
-    side — and ``sets/`` holds (id, toks, n) for the verify join.
-    Each batch writes its rows as an OVERWRITE of its own
-    ``batch=<id>`` hive subdirectory, so store writes are idempotent
-    under replay — a crash between the two writes can never leave
-    permanently duplicated postings rows (r10 ADVICE). Re-delivered
-    docs (any batch id) are anti-joined away against ``sets/`` before
-    anything else, and a FULLY-replayed (or tokenless) batch returns
-    early — neither the sink nor the store writes run, so a replayed
-    batch can never hand the sink an empty frame that an
-    overwrite-by-batch sink would use to wipe the batch's committed
-    output (r11 ADVICE). The sink fires BEFORE the stores grow, so
-    pair delivery is AT-LEAST-ONCE per batch_id: a crash between the
-    sink call and the store writes re-emits that batch's pairs on
-    replay — dedupe downstream by batch_id (the standard foreachBatch
-    contract); ordering the writes the other way would LOSE pairs on
-    the mirror-image crash, which is worse for a dedup screen.
+    State is two parquet stores under ``store_dir`` (the
+    ``incremental_dedup_batch`` pattern — the store, not the streaming
+    checkpoint, carries the corpus memory, so restarts and
+    reprocessing compose): ``postings/`` holds each historical doc's
+    PREFIX postings (tok, id, n, rn) — only the prefix, which is what
+    the lemma needs from the archived side — and ``sets/`` holds
+    (id, toks, n) for the verify join. Each batch writes one delta per
+    store and publishes them in one manifest (module docstring), so a
+    crash between the two writes leaves both invisible and the replay
+    rewrites them: never duplicated postings rows (r10 ADVICE), and a
+    crashed attempt's postings never reach the replay's candidate join
+    or guard. Re-delivered docs (any batch id) are anti-joined away
+    against ``sets/`` before anything else, and a FULLY-replayed (or
+    tokenless) batch returns early — neither the sink nor the store
+    writes run, so a replayed batch can never hand the sink an empty
+    frame that an overwrite-by-batch sink would use to wipe the
+    batch's committed output (r11 ADVICE). The sink fires BEFORE the
+    stores grow, so pair delivery is AT-LEAST-ONCE per batch_id: a
+    crash between the sink call and the publish re-emits that batch's
+    pairs on replay — dedupe downstream by batch_id (the standard
+    foreachBatch contract); publishing first would LOSE pairs on the
+    mirror-image crash, which is worse for a dedup screen.
 
-    BUCKETED store layout (r11 verdict #4 — store format v2,
-    incompatible with pre-r12 flat stores, which fail fast on the
-    missing ``bucket`` partition column rather than being silently
-    misread): both stores are hive-partitioned
-    ``batch=<id>/bucket=<b>`` with ``n_buckets`` buckets — postings by
-    ``pmod(xxhash64(tok), n_buckets)``, sets by
+    BUCKETED store layout (r11 verdict #4): both stores' deltas are
+    hive-partitioned ``v=<seq>/bucket=<b>`` with ``n_buckets`` buckets
+    — postings by ``pmod(xxhash64(tok), n_buckets)``, sets by
     ``pmod(xxhash64(id), n_buckets)``. ALL THREE historical reads are
     bucket-pruned (r12 verdict #1 closed the verify join): the
     candidate join reads ONLY the postings buckets the micro-batch's
@@ -460,17 +344,9 @@ def incremental_setsim_batch(
     in tests; candidate sets differ between token orders, detections
     cannot).
     """
-    from pyspark.sql import functions as F
-
     post_path = f"{store_dir}/postings"
     sets_path = f"{store_dir}/sets"
-    counts_path = f"{store_dir}/counts"
-    sets_schema = "id long, toks array<string>, n long, bucket int"
-    # roll a crashed compaction forward/back before the first read —
-    # a mid-swap crash must never read as an empty corpus
-    for _p in (post_path, sets_path, counts_path):
-        _recover_compaction(_p)
-    read_store = _store_reader()
+    log = _setsim_log(store_dir)
 
     def fn(batch_df, batch_id):
         pins = []  # the batch's internal localCheckpoints
@@ -486,6 +362,7 @@ def incremental_setsim_batch(
         from .ops.dedup import distinct_shingle_sets
 
         spark = batch_df.sparkSession
+        m = log.refresh()
         batch = batch_df.dropDuplicates([id_col])
         # replay idempotence: a re-delivered doc is already corpus.
         # The anti-join reads ONLY the sets buckets this batch's doc
@@ -501,10 +378,12 @@ def incremental_setsim_batch(
             .distinct()
             .collect()
         ]
-        # missing path = first batch; anything else propagates
-        # (r10/r11 ADVICE: swallowing a real read error here would
-        # re-admit historical docs and silently drop detections)
-        replay_sets = read_store(spark, sets_path, sets_schema, id_bks)
+        # a read error propagates (r10/r11 ADVICE: swallowing one
+        # here would re-admit historical docs and silently drop
+        # detections)
+        replay_sets = _read_store(
+            spark, sets_path, m["deltas"], SETS_SCHEMA, id_bks
+        )
         batch = batch.join(
             replay_sets.select(F.col("id").alias(id_col)), id_col, "left_anti"
         )
@@ -581,26 +460,17 @@ def incremental_setsim_batch(
         # prefix tokens hash to: a shared token lands in the same
         # bucket on both sides, so the prune is exact and the scan
         # (hence the shuffle) covers matching buckets, not the corpus
-        old_post = read_store(
-            spark, post_path,
-            "tok string, id long, n long, rn long, bucket int", head["bks"],
+        old_post = _read_store(
+            spark, post_path, m["deltas"], POSTINGS_SCHEMA, head["bks"],
         ).select("tok", "id", "n", "rn")
         all_post = old_post.unionByName(
             new_post.select("tok", "id", "n", "rn")
         )
         # per-batch degenerate-regime guard: join output bound. The
-        # corpus size comes from the tiny counts sidecar (one row per
-        # committed batch, no token arrays), NOT from counting the
-        # sets store — at scale listing the full store's files every
-        # batch would dominate the trigger (r12 verdict #2). The
-        # sidecar is read driver-side (Arrow): it is bounded by
-        # construction, and the Spark job the old read spent on it was
-        # ~2 s/batch of pure fixed cost (guide §1.2). Exclude this
-        # batch's own row: a crashed prior attempt may have committed
-        # it before the sets write, and those docs are already in
-        # n_new.
-        n_prior = _read_counts_total(counts_path, batch_id)
-        n_corpus = n_prior + n_new
+        # corpus size is the manifest's document count, NOT a count of
+        # the sets store — at scale listing the full store's files
+        # every batch would dominate the trigger (r12 verdict #2)
+        n_corpus = m["docs"] + n_new
         bound = (
             guard_max_candidates
             if guard_max_candidates and guard_max_candidates > 0
@@ -688,8 +558,8 @@ def incremental_setsim_batch(
             .distinct()
             .collect()
         ]
-        old_cand_sets = read_store(
-            spark, sets_path, sets_schema, cand_bks,
+        old_cand_sets = _read_store(
+            spark, sets_path, m["deltas"], SETS_SCHEMA, cand_bks,
         ).select("id", "toks", "n")
         # pin the pruned-store ∪ new-sets union ONCE per batch: the
         # verify join consumes it on BOTH key legs (id_a and id_b),
@@ -738,59 +608,22 @@ def incremental_setsim_batch(
         )
         if sink is not None:
             sink(out, batch_id)
-        # IDEMPOTENT store writes (r10 ADVICE): each batch OVERWRITES
-        # its own hive-partition subdirectory, so a crash between the
-        # two writes can never leave permanently duplicated postings —
-        # the replay overwrites the same batch=N paths. The sink runs
-        # FIRST, so delivery is at-least-once per batch_id (losing
-        # pairs would be worse for a dedup screen than re-emitting
-        # them; dedupe downstream by batch_id, the standard
-        # foreachBatch contract). A fully-replayed batch returned
-        # early above, BEFORE the sink — so a replay can neither wipe
-        # these store rows nor hand an overwrite-by-batch sink an
-        # empty frame (r11 ADVICE). Bucket subdirs under each batch
-        # make the next batches' candidate/anti-join scans prunable;
-        # _write_buckets writes ONE file per (batch, bucket), with as
+        # both deltas, then ONE publish: a crash anywhere before it
+        # leaves the store as it was, and the replay rewrites the same
+        # unpublished dirs (r10 ADVICE). The sink ran FIRST, so
+        # delivery is at-least-once per batch_id (losing pairs would be
+        # worse for a dedup screen than re-emitting them; dedupe
+        # downstream by batch_id, the standard foreachBatch contract).
+        # A fully-replayed batch returned early above, BEFORE the sink
+        # — so a replay can neither grow the stores nor hand an
+        # overwrite-by-batch sink an empty frame (r11 ADVICE). Bucket
+        # subdirs make the next batches' candidate/anti-join scans
+        # prunable; _write_buckets writes ONE file per bucket, with as
         # many tasks as the data needs.
-        # Counts sidecar BEFORE sets: the early return above fires only
-        # when every doc is in the SETS store, which is written last —
-        # so any replay that reaches this point recomputes and
-        # overwrites all three batch=<id> dirs, and a batch whose sets
-        # write committed always has its counts row committed too (the
-        # guard can only under-count after a crash, never
-        # double-count). Arrow-local one-row frame: the pickled-RDD
-        # frame made this write alone ~6 s/batch on the bench VM
-        # (guide §4 — the Python boundary), ~0.5 s Arrow-local.
-        # the counts and postings writes are independent jobs with no
-        # ordering constraint between THEM (replay overwrites both),
-        # so they run concurrently and back-fill each other's task
-        # tails (guide §2.6); only the SETS write must commit LAST —
-        # it is the write the replay early-return keys on, so
-        # "sets committed" must imply "counts + postings committed".
-        from pyspark import InheritableThread
-
-        failed = []
-
-        def _write_counts():
-            try:
-                local_df(
-                    spark, [(int(n_new), int(batch_id))], "n long, bid long"
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    f"{counts_path}/batch={batch_id}"
-                )
-            except BaseException as e:  # re-raised below, before sets
-                failed.append(e)
-
-        # the thread carries the caller's job group and description
-        # (pinned-thread mode), so its job is attributed to this batch
-        counts = InheritableThread(_write_counts, session=spark)
-        counts.start()
-        try:
-            _write_buckets(new_post, f"{post_path}/batch={batch_id}")
-        finally:
-            counts.join()
-        if failed:
-            raise failed[0]
-        _write_buckets(new_sets, f"{sets_path}/batch={batch_id}")
+        _write_buckets(new_post, f"{post_path}/v={log.seq}")
+        _write_buckets(new_sets, f"{sets_path}/v={log.seq}")
+        log.publish({
+            **m, "deltas": [*m["deltas"], log.seq], "docs": m["docs"] + n_new,
+        })
 
     return fn

@@ -24,7 +24,6 @@ deterministically.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import shutil
@@ -36,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .apply import merge_mutations
 from .casting import TableMeta, typed_mutations
+from .commitlog import ManifestLog, older_state
 from .compact import compact_changes
 from .cmdqueue import parse_commands, resolve_problem_actions
 from .keyfilter import filter_blocked_keys
@@ -60,17 +60,16 @@ STAGE_INITIAL_SCAN = "INITIAL_SCAN"
 STAGE_RUN = "RUN"
 
 
-class Manifest:
+class Manifest(ManifestLog):
     """The commit log of one CDC work dir, and the engine's ``state``.
 
-    Each publish is ONE file, ``_manifest/v{seq}.json``, written with one
-    tmp-write plus ``os.replace``. It names the `_state` checkpoint row
-    (FIXTURES.md §5), each destination's current and previous version,
-    the pending carry-over dir, the heartbeat highs and the consumed
-    offsets: the reference's one transaction over every destination plus
-    the checkpoint row (processor.go:753-770), shaped like Spark's
-    FileStreamSink `_spark_metadata` log. ``seq`` counts publishes across
-    Spark checkpoints; manifest ``seq`` names pending dir ``seq`` and
+    Each publish is ONE file, ``_manifest/v{seq}.json`` (``ManifestLog``).
+    It names the `_state` checkpoint row (FIXTURES.md §5), each
+    destination's current and previous version, the pending carry-over
+    dir, the heartbeat highs and the consumed offsets: the reference's
+    one transaction over every destination plus the checkpoint row
+    (processor.go:753-770), shaped like Spark's FileStreamSink
+    `_spark_metadata` log. Manifest ``seq`` names pending dir ``seq`` and
     table versions up to seq + 1 (0 is the empty table), so nothing a
     batch writes lands on a dir a published manifest names.
 
@@ -83,48 +82,17 @@ class Manifest:
     batch ids from 0 again) builds on the newest manifest."""
 
     def __init__(self, work_dir: str, instance_id: str = "aardappel", stage: str = STAGE_INITIAL_SCAN):
-        self.dir = os.path.join(work_dir, "_manifest")
+        err = older_work_dir(work_dir)
+        if err:
+            raise RuntimeError(err)
         self.pending_dir = os.path.join(work_dir, "_pending")
         self.instance_id = instance_id
-        # every store of the engine before the manifest; `_manifest/` is
-        # made before anything else, so without it these are older
-        older = [n for n in ("_state", "_pending", "_hb", "_off")
-                 if os.path.exists(os.path.join(work_dir, n))]
-        if older and not os.path.isdir(self.dir):
-            raise RuntimeError(
-                f"{work_dir} holds CDC state written before the commit manifest "
-                f"({', '.join(older)}; no _manifest/) and cannot be resumed: start "
-                "from a new --work-dir and new destination tables, and replay "
-                "the source"
-            )
-        os.makedirs(self.dir, exist_ok=True)
-        # what a reader sees before the first publish
-        self.empty = {
-            "seq": -1, "pre": -1, "batch_id": None, "query": None, "tables": {},
-            "pending": None, "hb": [], "off": [],
+        super().__init__(work_dir, {
+            "batch_id": None, "query": None, "tables": {}, "pending": None, "hb": [], "off": [],
             "state": {"id": instance_id, "step_id": "0", "tx_id": "0", "state": STATE_OK,
                       "stage": stage, "last_msg": ""},
-        }
-        self.base = self.latest()  # the manifest the next publish builds on
-        self.seq = self.base["seq"] + 1  # the next publish's seq
+        })
         self.staged: dict[str, int] = {}  # table path -> unpublished version
-
-    def _seqs(self) -> list[int]:
-        return sorted(
-            int(n[1:-5])
-            for n in os.listdir(self.dir)
-            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-        )
-
-    def _load(self, seq: int) -> dict:
-        if seq < 0:
-            return self.empty
-        with open(os.path.join(self.dir, f"v{seq}.json")) as f:
-            return json.load(f)
-
-    def latest(self) -> dict:
-        seqs = self._seqs()
-        return self._load(seqs[-1] if seqs else -1)
 
     @staticmethod
     def version(m: dict, table: str) -> int:
@@ -153,12 +121,11 @@ class Manifest:
         """Start batch ``batch_id`` of streaming query ``query``: refuse
         unless startable, choose the manifest it builds on and drop what
         a crashed attempt staged. Returns that manifest's state row."""
-        newest = self.latest()
+        newest = self.refresh()
         self.ensure_startable(newest)
-        self.base = newest
         if newest["seq"] >= 0 and (newest["batch_id"], newest["query"]) == (batch_id, query):
             self.base = self._load(newest["pre"])
-        self.seq, self.staged = newest["seq"] + 1, {}
+        self.staged = {}
         return self.read(self.base)
 
     def write(self, position: tuple[Decimal, Decimal] | None = None, stage: str = "",
@@ -179,38 +146,32 @@ class Manifest:
         tables = dict(self.base["tables"])
         for table, v in self.staged.items():  # the previous version stays named
             tables[table] = [*tables.get(table, [])[-1:], v]
-        m = {**self.base, **content, "seq": self.seq, "tables": tables}
-        path = os.path.join(self.dir, f"v{self.seq}.json")
-        with open(path + ".tmp", "w") as f:
-            json.dump(m, f)
-        os.replace(path + ".tmp", path)
-        self.base, self.seq, self.staged = m, self.seq + 1, {}
-        seqs = self._seqs()
-        kept, names = self._retained(seqs)
-        for old in set(seqs) - kept:
-            os.remove(os.path.join(self.dir, f"v{old}.json"))
-        for d, keep in names.items():
-            for n in os.listdir(d) if os.path.isdir(d) else []:
-                if n.startswith("v") and n[1:].isdigit() and int(n[1:]) not in keep:
-                    shutil.rmtree(os.path.join(d, n), ignore_errors=True)
+        self.staged = {}
+        self.publish({**self.base, **content, "tables": tables})
 
-    def _retained(self, seqs: list[int]) -> tuple[set[int], dict[str, set[int]]]:
-        """Retention's one rule: keep the newest manifest, the one before
-        it and the newest's ``pre``, and per dir (each table, the pending
-        dir) the versions they name: the newest's current and previous,
-        the others' current. Returns the kept seqs and names."""
-        newest = self._load(seqs[-1] if seqs else -1)
-        kept = {*seqs[-2:], newest["pre"]} - {-1}
-        names: dict[str, set[int]] = {self.pending_dir: set()}
-        for m in [newest, *(self._load(k) for k in kept - {newest["seq"]})]:
-            names[self.pending_dir].add(m["pending"])
-            for table, vs in m["tables"].items():
-                names.setdefault(table, set()).update(vs if m is newest else vs[-1:])
-        return kept, names
+    def _names(self, m: dict, newest: bool) -> dict[str, list]:
+        """The newest manifest keeps each table's current and previous
+        version, the others only the current; each keeps its pending dir."""
+        tables = {t: vs if newest else vs[-1:] for t, vs in m["tables"].items()}
+        return {self.pending_dir: [m["pending"]], **tables}
 
     def versions(self, table: str) -> list[int]:
         """``table``'s retained versions, ascending."""
         return sorted(self._retained(self._seqs())[1].get(table, ()))
+
+
+def older_work_dir(work_dir: str) -> str | None:
+    """The refusal of a CDC work dir written before the commit manifest,
+    or None: any of the engine's older stores without ``_manifest/``."""
+    older = older_state(work_dir, ("_state", "_pending", "_hb", "_off"))
+    if not older:
+        return None
+    return (
+        f"{work_dir} holds CDC state written before the commit manifest "
+        f"({', '.join(older)}; no _manifest/) and cannot be resumed: start "
+        "from a new --work-dir and new destination tables, and replay "
+        "the source"
+    )
 
 
 class VersionedTable:

@@ -394,6 +394,23 @@ def test_run_query_cli_list_and_run(spark, capsys):
     assert "did you mean" in capsys.readouterr().err
 
 
+def test_run_query_oracle_reads_null_text_as_empty(tmp_path):
+    """run_query --oracle reads the documents table through the same
+    views as every oracle check: NULL text reads as '', as the engine's
+    ingest normalizes it."""
+    import duckdb
+
+    from aardappel_spark.run_query import oracle_db
+
+    path = os.path.join(tmp_path, "documents.parquet")
+    duckdb.execute(
+        "COPY (SELECT 1::BIGINT AS doc_id, NULL::VARCHAR AS text, 'en' AS lang,"
+        f" 's1' AS source, 0 AS n_chars) TO '{path}' (FORMAT PARQUET)"
+    )
+    con = oracle_db(str(tmp_path))
+    assert con.execute("SELECT doc_id, text FROM documents").fetchall() == [(1, "")]
+
+
 def test_cli_compact_and_exit(spark, tmp_path, capsys):
     """--compact-and-exit is the maintenance mode: after a normal run
     leaves multi-file buckets, it rewrites every destination to one
@@ -516,6 +533,31 @@ def test_cli_setsim_dedup_mode_end_to_end(spark, tmp_path):
     ]
     assert len(runs) == 2, runs
 
+    # run 3, same fresh checkpoint: a verbatim copy and a near-dup of
+    # run 1's doc 1. Run 2's batch 0 must not have overwritten run 1's
+    # store history, so both pair with doc 1 (and with doc 6)
+    with open(os.path.join(src, "b3.jsonl"), "w") as f:
+        f.write(json.dumps({"doc_id": 7, "text": docs[0][1]}) + "\n")
+        f.write(json.dumps(
+            {"doc_id": 8, "text": docs[0][1] + " again"}
+        ) + "\n")
+    assert main([
+        "--config", cfg,
+        "--source-dir", src,
+        "--work-dir", work,
+        "--setsim-dedup",
+        "--setsim-tau", "1/2",
+        "--setsim-shingle", "2",
+        "--available-now",
+        "--checkpoint", os.path.join(tmp_path, "ckpt2"),
+    ]) == 0
+    got3 = {
+        (r.id_a, r.id_b)
+        for r in spark.read.parquet(os.path.join(work, "setsim_pairs"))
+        .filter("verified").collect()
+    }
+    assert {(1, 7), (1, 8), (7, 8)} <= got3 - got2, got3 - got2
+
 
 def test_cli_setsim_rejects_bad_tau_and_missing_metas(tmp_path, capsys):
     src = os.path.join(tmp_path, "docs")
@@ -588,6 +630,23 @@ def test_cli_dedup_exact_mode_end_to_end(spark, tmp_path):
     # run 1's survivors intact (run-keyed: batch id restart can't wipe
     # them) + only the genuinely-new doc from run 2
     assert got2 == {1, 3, 5, 7}
+
+    # run 3, same fresh checkpoint: a duplicate of run 1's doc 3 and a
+    # new doc. Run 2's batch 0 must not have overwritten run 1's store
+    # history, so doc 8 drops
+    with open(os.path.join(src, "b3.jsonl"), "w") as f:
+        f.write(json.dumps({"doc_id": 8, "text": "delta epsilon zeta"}) + "\n")
+        f.write(json.dumps({"doc_id": 9, "text": "nu xi omicron"}) + "\n")
+    assert main([
+        "--config", cfg,
+        "--source-dir", src,
+        "--work-dir", work,
+        "--dedup-exact",
+        "--available-now",
+        "--checkpoint", os.path.join(tmp_path, "ckpt2"),
+    ]) == 0
+    surv3 = spark.read.parquet(os.path.join(work, "dedup_survivors"))
+    assert {r.doc_id for r in surv3.collect()} == {1, 3, 5, 7, 9}
     # both modes at once is a usage error
     assert main([
         "--config", cfg, "--source-dir", src, "--work-dir", work,
@@ -598,7 +657,7 @@ def test_cli_dedup_exact_mode_end_to_end(spark, tmp_path):
 def test_cli_lock_lost_before_query_handle_still_stops(
     spark, tmp_path, monkeypatch
 ):
-    """r12 ADVICE (medium): if the renewal thread fires on_lost while
+    """r12 ADVICE (medium): if the renewal thread loses the lock while
     the query handle is still None (a renew at ttl/2 can fail during
     slow stream startup), nothing stopped the stream back then — the
     CLI must re-check the lost flag right after assigning the handle
@@ -614,11 +673,9 @@ def test_cli_lock_lost_before_query_handle_still_stops(
         def stop(self):
             pass
 
-    def start_renewal(self, on_lost=None):
-        # simulate the race: the renewal fails BEFORE main assigns
-        # lock_lost["query"] — on_lost fires against a None handle
-        if on_lost is not None:
-            on_lost()
+    def start_renewal(self):
+        # simulate the race: the renewal has already failed when main
+        # gets the renewer, before the query handle exists
         return _InstantLossRenewer()
 
     monkeypatch.setattr(locker_mod.Locker, "start_renewal", start_renewal)
@@ -679,9 +736,11 @@ def test_cli_mode_conflict_checked_before_lock_acquisition(tmp_path):
 
 def test_cli_compact_dedup_state_store(spark, tmp_path, capsys):
     """r13: --compact-and-exit combined with --dedup-exact compacts the
-    streaming fingerprint store (per-batch dirs -> one file per bucket
-    under batch=-1) under the instance lock, and the compacted store
-    still drops duplicates on the next run."""
+    streaming fingerprint store (per-batch deltas -> one delta with one
+    file per bucket, named by a new manifest) under the instance lock,
+    and the compacted store still drops duplicates on the next run."""
+    from aardappel_spark.stateful import StoreLog
+
     docs = [(1, "alpha"), (2, "beta"), (3, "gamma"), (4, "alpha")]
     src = os.path.join(tmp_path, "docs")
     os.makedirs(src, exist_ok=True)
@@ -696,8 +755,7 @@ def test_cli_compact_dedup_state_store(spark, tmp_path, capsys):
         "--dedup-exact", "--available-now",
     ]) == 0
     store = os.path.join(work, "dedup_store")
-    assert any(d.startswith("batch=") and d != "batch=-1"
-               for d in os.listdir(store))
+    assert StoreLog(store, []).latest()["deltas"] == [0]
 
     assert main([
         "--config", cfg, "--source-dir", src, "--work-dir", work,
@@ -705,9 +763,7 @@ def test_cli_compact_dedup_state_store(spark, tmp_path, capsys):
     ]) == 0
     out = capsys.readouterr().out
     assert "compacted dedup_store" in out
-    assert [d for d in os.listdir(store) if d.startswith("batch=")] == [
-        "batch=-1"
-    ]
+    assert StoreLog(store, []).latest()["deltas"] == [1]
     # the lock was released by the maintenance path
     from aardappel_spark.locker import Locker, LockStorage
 
@@ -901,6 +957,45 @@ def test_cli_multi_stream_without_partition_count_is_usage_error(
     ])
     assert rc == 2
     assert "--expected-partitions" in capsys.readouterr().err
+    other = Locker(LockStorage(os.path.join(work, "lock.json")), ttl_seconds=60)
+    assert other.try_acquire()
+    other.release()
+
+
+@pytest.mark.parametrize("mode", ["cdc", "dedup-exact", "setsim-dedup"])
+def test_cli_refuses_state_from_before_the_manifest_before_spark(
+    tmp_path, capsys, monkeypatch, mode
+):
+    """A work dir whose CDC state or dedup store was written before the
+    commit manifest is a usage error: exit 2 with one line naming the
+    dir, before Spark starts or the lock is taken, and without making
+    a _manifest/ there."""
+    from aardappel_spark import session
+    from aardappel_spark.locker import Locker, LockStorage
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    tmp = str(tmp_path)
+    src = _write_source(tmp)
+    cfg = _write_config(tmp, src, multi_instance=True)
+    work = os.path.join(tmp, "work")
+    store = {
+        "cdc": work,
+        "dedup-exact": os.path.join(work, "dedup_store"),
+        "setsim-dedup": os.path.join(work, "setsim_store"),
+    }[mode]
+    older = {"cdc": "_state", "dedup-exact": "batch=0", "setsim-dedup": "counts"}[mode]
+    os.makedirs(os.path.join(store, older))
+    flags = (
+        ["--table-metas", _write_metas(tmp)] if mode == "cdc" else [f"--{mode}"]
+    )
+    rc = main(["--config", cfg, "--work-dir", work, *flags, "--available-now"])
+    assert rc == 2
+    err = capsys.readouterr().err.strip()
+    assert len(err.splitlines()) == 1 and store in err and older in err, err
+    assert not os.path.exists(os.path.join(store, "_manifest"))
     other = Locker(LockStorage(os.path.join(work, "lock.json")), ttl_seconds=60)
     assert other.try_acquire()
     other.release()

@@ -12,13 +12,13 @@ oracle now COALESCEs). The query set below is every query that
 diverged before those fixes, pinned so they can't regress.
 """
 
-import glob
 import os
 
 import duckdb
 import pytest
 
 from aardappel_spark import registry
+from aardappel_spark.run_query import oracle_db
 from tools.check_oracle import rows_key
 
 # every query that diverged on this fixture before the empty-doc fixes,
@@ -170,21 +170,7 @@ def fuzz_sf_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def fuzz_duck(fuzz_sf_dir):
-    con = duckdb.connect()
-    for p in glob.glob(f"{fuzz_sf_dir}/*.parquet"):
-        name = os.path.basename(p).removesuffix(".parquet")
-        if name == "documents":
-            # mirror the engine's ingest normalization (registry._docs):
-            # NULL text reads as '' on both sides
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT doc_id,"
-                " COALESCE(text, '') AS text, lang, source, n_chars"
-                f" FROM read_parquet('{p}')"
-            )
-        else:
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = oracle_db(fuzz_sf_dir)
     yield con
     con.close()
 

@@ -245,26 +245,25 @@ def test_lock_renewal_thread_keeps_lock_beyond_ttl(tmp_path):
 
 
 def test_lock_renewal_fires_on_lost_and_stops_writing(tmp_path):
-    """A failed renew means the lock was stolen: the renewer must fire
-    on_lost exactly once, flip .lost, and exit — the holder's callback
-    is what stops the stream."""
+    """A failed renew means the lock was stolen: the renewer must flip
+    .lost, which the holder polls to stop the stream, and exit without
+    renewing again."""
     path = str(tmp_path / "lock.json")
     a = Locker(LockStorage(path), ttl_seconds=0.4)
     assert a.try_acquire()
-    events = []
-    renewer = a.start_renewal(on_lost=lambda: events.append("lost"))
+    renewer = a.start_renewal()
     # simulate a steal: another owner overwrites the lock row directly
+    stolen = {"lock_owner": "lock_intruder", "lock_deadline": time.time() + 99}
     with open(path, "w") as f:
-        json.dump(
-            {"lock_owner": "lock_intruder", "lock_deadline": time.time() + 99},
-            f,
-        )
+        json.dump(stolen, f)
     deadline = time.time() + 3.0
     while not renewer.lost and time.time() < deadline:
         time.sleep(0.05)
-    assert renewer.lost and events == ["lost"]
-    time.sleep(0.5)  # the thread exited; on_lost never fires again
-    assert events == ["lost"]
+    assert renewer.lost
+    time.sleep(0.5)  # the thread exited; it never renews again
+    assert not renewer._thread.is_alive()
+    with open(path) as f:
+        assert json.load(f) == stolen
     renewer.stop()  # idempotent after self-exit
 
 

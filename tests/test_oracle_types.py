@@ -11,11 +11,11 @@ DESCRIBEs every registered oracle and rejects any pandas-fragile output
 column type so the class can never recur.
 """
 
-import glob
 import os
 
-import duckdb
 import pytest
+
+from aardappel_spark.run_query import oracle_db
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -26,17 +26,7 @@ FRAGILE_PREFIXES = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for p in glob.glob(f"{SF_DIR}/*.parquet"):
-        name = os.path.basename(p).removesuffix(".parquet")
-        if name == "documents":
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT doc_id,"
-                " COALESCE(text, '') AS text, lang, source, n_chars"
-                f" FROM read_parquet('{p}')"
-            )
-        else:
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_db(SF_DIR)
     yield con
     con.close()
 

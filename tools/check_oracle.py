@@ -12,7 +12,6 @@ queries it never ran instead of counting them as failures.
 
 from __future__ import annotations
 
-import glob
 import math
 import os
 import sys
@@ -20,9 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 import __spark_entry__ as entry_mod
+from aardappel_spark.run_query import oracle_db
 from aardappel_spark.session import get_spark
 
 
@@ -103,21 +101,7 @@ def main():
     spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for p in glob.glob(f"{sf_dir}/*.parquet"):
-        name = os.path.basename(p).removesuffix(".parquet")
-        if name == "documents":
-            # mirror the engine's ingest normalization (registry._docs):
-            # NULL text reads as '' on both sides of the comparison
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT doc_id,"
-                " COALESCE(text, '') AS text, lang, source, n_chars"
-                f" FROM read_parquet('{p}')"
-            )
-        else:
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = oracle_db(sf_dir)
 
     qs, os_ = entry_mod.queries(), entry_mod.oracle_sql()
     failures = []
