@@ -7,9 +7,8 @@ the reference's field names so a user can port a config mechanically.
 Problem strategies default to 'stop' and are normalized case-insensitively
 (verifyStreamProblemStrategy, config.go:64-77).
 
-YAML parsing uses pyyaml when present, else a built-in subset parser
-(the container has no pyyaml; the subset covers the reference's own
-config shape: scalars, nested maps, lists of maps).
+A config file is YAML (read with PyYAML) or, by its ``.json`` suffix,
+JSON.
 """
 
 from __future__ import annotations
@@ -118,83 +117,11 @@ class EngineConfig:
         if path.endswith(".json"):
             return cls.from_dict(json.loads(text))
         try:
-            import yaml  # type: ignore
+            import yaml
+        except ImportError as e:
+            raise RuntimeError(
+                f"{path}: reading YAML needs PyYAML; a .json config needs no "
+                "dependency"
+            ) from e
+        return cls.from_dict(yaml.safe_load(text))
 
-            return cls.from_dict(yaml.safe_load(text))
-        except ImportError:
-            return cls.from_dict(_parse_yaml_subset(text))
-
-
-def _parse_yaml_subset(text: str) -> dict:
-    """Minimal YAML for the reference config shape: top-level scalars,
-    one-level nested maps, and lists of flat maps. Comments stripped."""
-
-    def convert(v: str):
-        v = v.strip()
-        if v.startswith(("'", '"')) and v.endswith(("'", '"')) and len(v) >= 2:
-            return v[1:-1]
-        if v.lower() in ("true", "false"):
-            return v.lower() == "true"
-        try:
-            return int(v)
-        except ValueError:
-            return v
-
-    root: dict = {}
-    context: dict | None = None  # nested map under the last 'key:' header
-    cur_list: list | None = None
-    cur_item: dict | None = None
-
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].rstrip() if not raw.lstrip().startswith("#") else ""
-        if "#" in raw and not raw.lstrip().startswith("#"):
-            # keep fragments like "grpcs://..." intact: only strip comments
-            # that follow whitespace
-            idx = raw.find(" #")
-            line = raw[:idx].rstrip() if idx >= 0 else raw.rstrip()
-        if not line.strip():
-            continue
-        indent = len(line) - len(line.lstrip())
-        stripped = line.strip()
-
-        if stripped.startswith("- "):
-            if cur_list is None:
-                raise ValueError(f"unexpected list item: {line}")
-            cur_item = {}
-            cur_list.append(cur_item)
-            stripped = stripped[2:]
-            if ":" in stripped:
-                k, v = stripped.split(":", 1)
-                cur_item[k.strip()] = convert(v)
-            continue
-
-        if ":" not in stripped:
-            raise ValueError(f"cannot parse line: {line}")
-        k, v = stripped.split(":", 1)
-        k = k.strip()
-
-        if indent == 0:
-            cur_list, cur_item, context = None, None, None
-            if v.strip() == "":
-                # header: nested map or list follows
-                peek_target: dict = {}
-                root[k] = peek_target
-                context = peek_target
-                # lists are detected lazily on first "- "
-                cur_list = []
-                root[k + "\x00maybe_list"] = cur_list
-            else:
-                root[k] = convert(v)
-        else:
-            if cur_item is not None:
-                cur_item[k] = convert(v)
-            elif context is not None:
-                context[k] = convert(v)
-
-    # resolve header ambiguity: prefer non-empty list over empty map
-    for k in [k for k in root if k.endswith("\x00maybe_list")]:
-        base = k[: -len("\x00maybe_list")]
-        if root[k]:
-            root[base] = root[k]
-        del root[k]
-    return root

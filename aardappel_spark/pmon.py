@@ -27,8 +27,9 @@ from .metrics import MetricsRegistry
 
 
 class HeartbeatGuard:
-    """W2: fires ``topic_without_hb`` when the engine has not seen a
-    complete heartbeat set for ``timeout_seconds``.
+    """W2: fires ``topic_without_hb`` when the engine's heartbeat tracker
+    has not stamped a complete fresh set for ``timeout_seconds``, for the
+    streams its census finds partitions missing in.
 
     ``check_once`` is the pure step (testable with a fake clock);
     ``start`` runs it on the reference's sleep-then-check loop
@@ -42,36 +43,17 @@ class HeartbeatGuard:
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
 
-    def _missing_by_stream(self) -> dict[str, bool]:
-        """Per-stream 'has missing partitions' census (findMissed,
-        hb_tracker.go:62-74). Stream layout comes from
-        ``engine.stream_partitions`` (table_id -> expected partition
-        count); absent entries default to 1."""
-        layout = getattr(self.engine, "stream_partitions", None) or {}
-        seen: dict[int, int] = {}
-        for (t, _p) in self.engine.hb_state:
-            seen[t] = seen.get(t, 0) + 1
-        # single-stream engines can fall back to the quorum gate's count;
-        # multi-stream ones need an explicit layout (default 1 per stream)
-        only = self.engine.streams[0].table_id if len(self.engine.streams) == 1 else None
-        out = {}
-        for s in self.engine.streams:
-            default = self.engine.expected_partitions if s.table_id == only else 1
-            expected = layout.get(s.table_id, default)
-            out[s.meta.name] = seen.get(s.table_id, 0) < expected
-        return out
-
     def check_once(self, now: float | None = None) -> dict[str, bool]:
         """One guard step: returns tag -> missing and feeds the metrics
         gauges. Healthy (a full set within the timeout) resets all tags
         to 0, like the reference's resetMon path."""
         now = self.clock() if now is None else now
-        last = self.engine.last_full_hb_time or self._started_at
+        hb = self.engine.heartbeats
+        streams = self.engine.streams
         metrics: MetricsRegistry = self.engine.metrics
-        if now - last > self.timeout:
-            missing = self._missing_by_stream()
-        else:
-            missing = {s.meta.name: False for s in self.engine.streams}
+        stale = now - (hb.full_at or self._started_at) > self.timeout
+        by_id = hb.missing([s.table_id for s in streams]) if stale else {}
+        missing = {s.meta.name: by_id.get(s.table_id, False) for s in streams}
         for tag, miss in missing.items():
             metrics.on_heartbeat_missing(tag, miss)
         return missing

@@ -1,19 +1,24 @@
 """Heartbeat tracking and quorum (safe watermark) computation.
 
-Behavioral spec: /root/reference/internal/hb_tracker/hb_tracker.go:
+Behavioral spec: the reference's internal/hb_tracker/hb_tracker.go, kept
+in ONE place, ``HeartbeatTracker``:
   * AddHb keeps the newest heartbeat per (reader, partition)   (:128-194)
   * GetQuorum = min over the complete set — only when EVERY partition of
     EVERY stream has reported                                  (:196-219)
   * GetMaxHb = max over the first complete set (initial scan)  (:221-237)
   * GetQuorumAfter = quorum only if strictly greater           (:239-250)
   * findMissed = partitions with no heartbeat yet              (:62-74)
-The quorum cut over data is STRICTLY-LESS: an event equal to the quorum
-belongs to the next batch (tx_queue.go:26-33, README.md:140-143).
+  * Commit consumes the heartbeats at-or-below the applied cut, and
+    lastFullHbTime stamps a complete set of fresh ones (:33,113)
+The tracker is plain driver-side Python over one row per partition, like
+Structured Streaming's event-time watermark: state advanced between
+triggers, no cluster job. The engine feeds it from its batch census and
+keeps its highs in the commit manifest's ``hb`` list.
 
-Spark's built-in watermark is a per-query heuristic, not a strict
-multi-stream quorum, so this is explicit aggregation (SURVEY.md W1) — the
-one genuinely custom piece of streaming logic. All of it is tiny metadata
-(one row per partition), so these aggregations are negligible at any scale.
+The quorum cut over data is STRICTLY-LESS: an event equal to the quorum
+belongs to the next batch (tx_queue.go:26-33, README.md:140-143). That
+cut, and the query suite's per-partition heartbeat frames, are the
+DataFrame pieces below.
 """
 
 from __future__ import annotations
@@ -25,66 +30,106 @@ from pyspark.sql import functions as F
 
 from .types import pos, pos_lit
 
-
-def latest_heartbeats(heartbeats: DataFrame) -> DataFrame:
-    """A1: newest heartbeat per (table_id, partition)."""
-    return heartbeats.groupBy("table_id", "partition").agg(
-        F.max(pos()).alias("hb")
-    )
+Position = tuple[Decimal, Decimal]
 
 
 def get_quorum(
-    heartbeats: DataFrame, expected_partitions: int
-) -> tuple[Decimal, Decimal] | None:
-    """A2/W1: min over per-partition max heartbeats, gated on completeness.
-
-    Returns None until every one of ``expected_partitions`` (table_id,
-    partition) pairs has reported — progress is hostage to the slowest
-    partition by design (README.md:694-695).
-    """
-    row = (
-        latest_heartbeats(heartbeats)
-        .agg(F.min("hb").alias("q"), F.count("*").alias("n"))
-        .collect()[0]
-    )
-    if row.n < expected_partitions or row.q is None:
+    highs: dict[tuple[int, int], Position], expected: int, after=None
+) -> Position | None:
+    """A2/A4 (GetQuorum, GetQuorumAfter): the min of the per-partition
+    highs, None until ``expected`` partitions have reported — progress is
+    hostage to the slowest partition by design (README.md:694-695) — and
+    None unless strictly greater than ``after`` when given."""
+    if len(highs) < expected:
         return None
-    return (row.q.step, row.q.tx_id)
-
-
-def get_max_hb(heartbeats: DataFrame) -> tuple[Decimal, Decimal] | None:
-    """A3: max over latest heartbeats (initial-scan sync point)."""
-    row = latest_heartbeats(heartbeats).agg(F.max("hb").alias("m")).collect()[0]
-    if row.m is None:
-        return None
-    return (row.m.step, row.m.tx_id)
-
-
-def get_quorum_after(
-    heartbeats: DataFrame,
-    expected_partitions: int,
-    after: tuple[int | Decimal, int | Decimal],
-) -> tuple[Decimal, Decimal] | None:
-    """A4: quorum only if strictly greater than ``after``."""
-    q = get_quorum(heartbeats, expected_partitions)
-    if q is None:
-        return None
-    if (Decimal(q[0]), Decimal(q[1])) <= (Decimal(after[0]), Decimal(after[1])):
+    q = min(highs.values())
+    if after is not None and q <= (Decimal(after[0]), Decimal(after[1])):
         return None
     return q
 
 
-def missing_partitions(heartbeats: DataFrame, layout: DataFrame) -> DataFrame:
-    """A5: expected-layout rows with no heartbeat yet, counted per stream.
+class HeartbeatTracker:
+    """hb_tracker.go: the per-(table_id, partition) heartbeat highs, the
+    partitions that heartbeated since the last quorum consumption
+    (``fresh``) and the wall-clock of the last complete fresh set
+    (``full_at``, lastFullHbTime). ``expected`` partitions gate the
+    quorum; ``layout`` (table_id -> partition count) is the W2 guard's
+    per-stream census.
 
-    ``layout`` has one row per expected (table_id, partition) — from config
-    / topic discovery (doDescribeTopics, main.go:119-138).
-    """
-    seen = latest_heartbeats(heartbeats).select("table_id", "partition")
-    return (
-        layout.join(seen, ["table_id", "partition"], "left_anti")
-        .groupBy("table_id")
-        .agg(F.count("*").alias("missing_partitions"))
+    Only the highs are durable (``load``/``dump``, the manifest's ``hb``
+    list). The fresh set mirrors the reference deleting consumed entries
+    on Commit: its full-set test passes again only once every partition
+    has produced a genuinely new heartbeat. Testing the cumulative highs
+    instead would restamp on every batch forever after the first full
+    set, and the guard would never fire."""
+
+    def __init__(self, expected: int, layout: dict[int, int] | None = None):
+        self.expected = expected
+        self.layout = layout or {}
+        self.highs: dict[tuple[int, int], Position] = {}
+        self.fresh: set[tuple[int, int]] = set()
+        self.full_at: float | None = None
+
+    def load(self, hb: list) -> None:
+        """The highs from a manifest's ``hb`` list (rows of table_id,
+        partition, step, tx_id)."""
+        self.highs = {(t, p): (Decimal(s), Decimal(x)) for t, p, s, x in hb}
+
+    def dump(self) -> list:
+        return [[t, p, str(s), str(x)] for (t, p), (s, x) in self.highs.items()]
+
+    def add(self, census: list, now: float) -> None:
+        """A1 (AddHb): fold a batch's newest heartbeat per partition
+        (census rows with table_id, partition and an ``hb`` position or
+        None); every partition that heartbeated is fresh, whether or not
+        it advanced its high. W2: a complete fresh set stamps ``now``."""
+        for r in census:
+            if r.hb is None:
+                continue
+            k = (r.table_id, r.partition)
+            self.fresh.add(k)
+            cand = (r.hb.step, r.hb.tx_id)
+            if k not in self.highs or cand > self.highs[k]:
+                self.highs[k] = cand
+        if len(self.fresh) >= self.expected:
+            self.full_at = now
+
+    def quorum(self, after=None) -> Position | None:
+        return get_quorum(self.highs, self.expected, after)
+
+    def max_hb(self) -> Position | None:
+        """A3: the max over the complete set — the initial-scan sync
+        point — or None until every expected partition has reported."""
+        if len(self.highs) < self.expected:
+            return None
+        return max(self.highs.values())
+
+    def commit(self, q: Position) -> None:
+        """A quorum apply at ``q`` consumes the fresh heartbeats at-or-below
+        it; partitions whose high is still above ``q`` stay fresh."""
+        self.fresh = {
+            k for k in self.fresh if k in self.highs and self.highs[k] > q
+        }
+
+    def missing(self, table_ids: list[int]) -> dict[int, bool]:
+        """A5 (findMissed): per stream, whether fewer partitions have
+        reported than its layout expects. Without a layout entry a single
+        stream expects the quorum gate's count, and each of several
+        streams expects 1."""
+        seen: dict[int, int] = {}
+        for t, _p in list(self.highs):  # the guard runs on its own thread
+            seen[t] = seen.get(t, 0) + 1
+        default = self.expected if len(table_ids) == 1 else 1
+        return {
+            t: seen.get(t, 0) < self.layout.get(t, default) for t in table_ids
+        }
+
+
+def latest_heartbeats(heartbeats: DataFrame) -> DataFrame:
+    """A1 over a heartbeat frame: newest heartbeat per (table_id,
+    partition)."""
+    return heartbeats.groupBy("table_id", "partition").agg(
+        F.max(pos()).alias("hb")
     )
 
 

@@ -49,8 +49,8 @@ _REGATE: list[str] = [
     "dedup_span",  # reads the shared gram census (r13); r10
     "doc_dup_coverage",  # reads the shared gram census (r13); r10
     "doc_boilerplate",  # pins its (doc, gram) aggregate (r13); r9
-    "dedup_setsim_stream",  # one pinned token count, AQE-sized store writes; r14
-    "dedup_incremental_stream",  # AQE-sized store writes, schema inferred once; r14
+    "dedup_setsim_stream",  # manifest-published stores, pairs collected in the sink; r14
+    "dedup_incremental_stream",  # manifest-published store, summary taken in the sink; r14
 ]
 
 # the committed CORRECTNESS artifacts sit next to the package

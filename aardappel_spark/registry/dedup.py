@@ -1522,8 +1522,9 @@ def q_dedup_setsim_stream(spark, sf_dir):
     union corpus; the DuckDB oracle recomputes those pairs from
     scratch with the df-ordered prefix filter (any shared total order
     is exact), so the claim crosses the hash as a cross-engine fact.
-    The emitted frames are localCheckpointed by the twin, so the
-    temporary state store is deleted before returning."""
+    The sink collects each batch's verified pairs inside its call (the
+    twin releases the frame when the batch ends), so the temporary
+    state store is deleted before returning."""
     import shutil
     import tempfile
 
@@ -1531,27 +1532,21 @@ def q_dedup_setsim_stream(spark, sf_dir):
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     store = tempfile.mkdtemp(prefix="setsim_stream_")
-    outs = []
+    pairs = []
     try:
         fn = incremental_setsim_batch(
             store, tau_num=4, tau_den=5, shingle=4,
-            sink=lambda df, bid: outs.append(df),
+            sink=lambda df, bid: pairs.extend(
+                df.filter("verified").select("n_inter", "n_a", "n_b").collect()
+            ),
         )
         for i in range(3):
             fn(docs.filter(F.col("doc_id") % 3 == i), i)
     finally:
         shutil.rmtree(store, ignore_errors=True)
-    if not outs:
-        # empty corpus: every batch returns before the sink (the r12
-        # replay guard) — fold over an empty frame of the sink shape
-        outs.append(empty_df(
-            spark, "id_a long, id_b long, n_a long, n_b long, "
-                   "n_inter long, verified boolean",
-        ))
-    emitted = outs[0]
-    for o in outs[1:]:
-        emitted = emitted.unionByName(o)
-    verified = emitted.filter("verified")
+    # an empty corpus never reaches the sink (the r12 replay guard): the
+    # fold below runs over no rows
+    verified = local_df(spark, pairs, "n_inter long, n_a long, n_b long")
     return verified.agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.coalesce(F.sum("n_inter"), F.lit(0)).cast("bigint")
@@ -1633,7 +1628,8 @@ def q_dedup_incremental_stream(spark, sf_dir):
     survivor set from scratch: a doc survives iff it is the
     (batch, doc_id)-minimal document of its fingerprint over the whole
     feed, which is exactly the twin's arrival-order semantics. The
-    emitted frames are localCheckpointed by the twin, so the temporary
+    sink summarizes each batch's survivors inside its call (the twin
+    releases the frame when the batch ends), so the temporary
     fingerprint store is deleted before returning."""
     import shutil
     import tempfile
@@ -1642,25 +1638,22 @@ def q_dedup_incremental_stream(spark, sf_dir):
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     store = tempfile.mkdtemp(prefix="dedup_stream_")
-    outs = []
+    kept = []
     try:
         fn = incremental_dedup_batch(
             store,
-            sink=lambda df, bid: outs.append(
-                df.withColumn("batch", F.lit(bid).cast("bigint"))
-            ),
+            sink=lambda df, bid: kept.append((bid, *df.agg(
+                F.count("*"), F.sum("doc_id"), F.sum(F.length("text"))
+            ).first())),
         )
         for i in range(3):
             fn(docs.filter(F.col("doc_id") % 3 == i), i)
     finally:
         shutil.rmtree(store, ignore_errors=True)
-    survivors = outs[0]
-    for o in outs[1:]:
-        survivors = survivors.unionByName(o)
-    return survivors.groupBy("batch").agg(
-        F.count("*").cast("bigint").alias("n_kept"),
-        F.sum("doc_id").cast("bigint").alias("sum_ids"),
-        F.sum(F.length("text")).cast("bigint").alias("n_chars"),
+    # a batch with no survivors has no row, as under a groupBy
+    return local_df(
+        spark, [r for r in kept if r[1]],
+        "batch bigint, n_kept bigint, sum_ids bigint, n_chars bigint",
     )
 
 

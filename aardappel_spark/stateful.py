@@ -6,8 +6,8 @@ token-set Jaccard near-duplicate pair once, when its second member
 arrives. Both keep the corpus memory in bucketed parquet stores rather
 than in the streaming checkpoint, and commit through the manifest log
 the CDC engine uses (``commitlog.ManifestLog``): a batch writes its rows
-as one delta dir ``v=<seq>/bucket=<b>`` (``pmod(xxhash64(key),
-n_buckets)``) per sub-store, named by the manifest's next sequence
+as one delta dir ``v=<seq>/bucket=<b>`` (``types.bucket_col`` of the
+key) per sub-store, named by the manifest's next sequence
 number, not by Spark's batch id, then publishes ONE manifest listing
 the live delta dirs (and the setsim corpus document count). Readers
 read only what the newest manifest names, so a crashed attempt's dirs
@@ -15,6 +15,12 @@ are invisible and its replay rewrites them, and a fresh checkpoint
 (batch ids from 0 again) can never overwrite history. The
 ``compact_*_store`` functions fold the deltas into one new delta with
 one file per bucket: one more publish.
+
+A sink consumes its frame inside the call, the ``foreachBatch``
+contract: the kernel pins the frame before the stores grow and releases
+it with the batch's other pins once the batch ends. A sink that keeps
+the frame past the call must collect it, or pin its own copy and
+release it.
 
 The quorum engine (streaming.py) is the replication path; these
 kernels back ``--dedup-exact``/``--setsim-dedup``, ``bench.py`` and the
@@ -30,6 +36,7 @@ from pyspark.sql import functions as F
 
 from .commitlog import ManifestLog, older_state
 from .localrel import _unpin, empty_df
+from .types import bucket_col
 
 POSTINGS_SCHEMA = "tok string, id long, n long, rn long, bucket int"
 SETS_SCHEMA = "id long, toks array<string>, n long, bucket int"
@@ -218,12 +225,7 @@ def incremental_dedup_batch(
             batch.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
-            .withColumn(
-                "_bk",
-                F.pmod(F.xxhash64(F.col("_fp")), F.lit(n_buckets)).cast(
-                    "int"
-                ),
-            )
+            .withColumn("_bk", bucket_col(n_buckets, "_fp"))
             # one fingerprint pass feeds the bucket list, the
             # anti-join, and the store write. eager=False saves only
             # the checkpoint's own collect job: under AQE the shuffle
@@ -231,6 +233,7 @@ def incremental_dedup_batch(
             # bucket collect below
             .localCheckpoint(eager=False)
         )
+        pins = [batch]
         try:
             # anti-join reads ONLY the buckets this batch's fps hash
             # to; a read error propagates (r10/r11 ADVICE: silently
@@ -244,6 +247,7 @@ def incremental_dedup_batch(
             fresh = batch.join(
                 store, batch["_fp"] == store["fp"], "left_anti"
             ).localCheckpoint()  # pin survivors BEFORE the store grows
+            pins.append(fresh)
             if sink is not None:
                 sink(fresh.drop("_fp", "_bk"), batch_id)
             if not fresh.isEmpty():
@@ -255,8 +259,8 @@ def incremental_dedup_batch(
                 )
                 log.publish({**m, "deltas": [*m["deltas"], log.seq]})
         finally:
-            # `fresh` belongs to the sink, which may read it later
-            _unpin(batch)
+            # the sink consumed `fresh` inside its call (module docstring)
+            _unpin(*pins)
 
     return fn
 
@@ -353,9 +357,8 @@ def incremental_setsim_batch(
         try:
             _batch(batch_df, batch_id, pins)
         finally:
-            # released after the last store write (or the early
-            # return / guard refusal); `out` is not among them — it
-            # belongs to the sink, which may read it after we return
+            # released after the publish (or the early return / guard
+            # refusal), the sink's frame `out` with the rest
             _unpin(*pins)
 
     def _batch(batch_df, batch_id, pins):
@@ -370,11 +373,7 @@ def incremental_setsim_batch(
         # the prune is exact and the scan skips the rest of history.
         id_bks = [
             r.bucket
-            for r in batch.select(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets))
-                .cast("int")
-                .alias("bucket")
-            )
+            for r in batch.select(bucket_col(n_buckets, id_col).alias("bucket"))
             .distinct()
             .collect()
         ]
@@ -420,9 +419,7 @@ def incremental_setsim_batch(
             "n",
             (F.col("_pos") + 1).cast("bigint").alias("rn"),
             F.col("_s.tok").alias("tok"),
-            F.pmod(F.xxhash64(F.col("_s.tok")), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
+            bucket_col(n_buckets, F.col("_s.tok")).alias("bucket"),
         )
         # new_post is NOT checkpointed: it is a cheap slice+posexplode
         # projection of the pinned `ranked` blocks, and its own eager
@@ -530,9 +527,7 @@ def incremental_setsim_batch(
             F.col("_id").alias("id"),
             F.expr("transform(_st, s -> s.tok)").alias("toks"),
             F.col("_n").alias("n"),
-            F.pmod(F.xxhash64(F.col("_id")), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
+            bucket_col(n_buckets, "_id").alias("bucket"),
         )
         # new_sets is a row-local transform of the pinned `ranked`
         # blocks (same reasoning as new_post: no checkpoint job; the
@@ -550,11 +545,7 @@ def incremental_setsim_batch(
             for r in cand.select(
                 F.explode(F.array("id_a", "id_b")).alias("id")
             )
-            .select(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets))
-                .cast("int")
-                .alias("bucket")
-            )
+            .select(bucket_col(n_buckets, "id").alias("bucket"))
             .distinct()
             .collect()
         ]
@@ -606,6 +597,7 @@ def incremental_setsim_batch(
             )
             .localCheckpoint()  # pin BEFORE the stores grow
         )
+        pins.append(out)
         if sink is not None:
             sink(out, batch_id)
         # both deltas, then ONE publish: a crash anywhere before it

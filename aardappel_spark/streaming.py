@@ -51,13 +51,14 @@ from .parse import (
     split_heartbeats,
     split_problems,
 )
-from .quorum import cut_below_quorum, get_quorum
-from .types import CDC_EVENT_SCHEMA, OP_RESOLVED, pos, pos_lit
+from .quorum import HeartbeatTracker, cut_below_quorum, get_quorum
+from .types import CDC_EVENT_SCHEMA, OP_RESOLVED, bucket_col, pos, pos_lit
 
 STATE_OK = "OK"
 STATE_FATAL = "FATAL_ERROR"
 STAGE_INITIAL_SCAN = "INITIAL_SCAN"
 STAGE_RUN = "RUN"
+STEP_TO_MS = 1e-3  # CDC step unit (microseconds) -> milliseconds
 
 
 class Manifest(ManifestLog):
@@ -213,10 +214,7 @@ class VersionedTable:
     def bucket_of(self):
         """Deterministic PK bucket column — same expression at write and
         prune time, so a key always lands in the same partition."""
-        return F.pmod(
-            F.xxhash64(*[F.col(c) for c in self.meta.primary_key]),
-            F.lit(self.n_buckets),
-        ).cast("int")
+        return bucket_col(self.n_buckets, *self.meta.primary_key)
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"v{v}")
@@ -374,7 +372,6 @@ class ReplicationEngine:
     blocked_keys: DataFrame | None = None  # BINARY serialized keys (S13)
     commands: DataFrame | None = None  # raw command-topic messages (S12)
     metrics: MetricsRegistry = field(default_factory=MetricsRegistry)
-    step_to_ms: float = 1e-3  # CDC step unit -> milliseconds (default: micros)
     # W4: start in INITIAL_SCAN (reference seeds it always, main.go:99-117).
     # False seeds stage RUN for pure change-stream deployments with no
     # snapshot backlog to sync past.
@@ -385,23 +382,14 @@ class ReplicationEngine:
     # Optional per-stream layout (table_id -> partition count) for the
     # heartbeat guard's census; expected_partitions stays the quorum gate.
     stream_partitions: dict[int, int] | None = None
-    hb_state: dict[tuple[int, int], tuple[Decimal, Decimal]] = field(default_factory=dict)
-    # W2: wall-clock of the last COMPLETE set of FRESH heartbeats
-    # (lastFullHbTime, hb_tracker.go:33,113); the guard loop compares
-    # against it. `hb_fresh` tracks which partitions heartbeated since the
-    # last quorum consumption — the reference deletes consumed tracker
-    # entries on Commit, so its full-set test only passes again once every
-    # partition has produced a genuinely new heartbeat. Testing the
-    # cumulative `hb_state` size instead would restamp on every batch
-    # forever after the first full set and the guard would never fire.
-    last_full_hb_time: float | None = None
-    hb_fresh: set[tuple[int, int]] = field(default_factory=set)
-    batches_applied: int = 0
-    modifications: int = 0
+    batches_applied: int = field(default=0, init=False)
+    modifications: int = field(default=0, init=False)
     # (MonitoringServer, HeartbeatGuard) once from_config started them
-    monitoring: tuple | None = None
+    monitoring: tuple | None = field(default=None, init=False)
 
     def __post_init__(self):
+        # the quorum gate, the initial-scan sync point and the W2 guard
+        self.heartbeats = HeartbeatTracker(self.expected_partitions, self.stream_partitions)
         self.state = Manifest(
             self.work_dir,
             self.instance_id,
@@ -466,7 +454,7 @@ class ReplicationEngine:
 
     def _restore(self) -> None:
         m = self.state.base
-        self.hb_state = {(t, p): (Decimal(s), Decimal(x)) for t, p, s, x in m["hb"]}
+        self.heartbeats.load(m["hb"])
         self.off_state = {(t, p): o for t, p, o in m["off"]}
 
     def _publish(self, position, stage: str, key: tuple, extra=None) -> None:
@@ -475,7 +463,7 @@ class ReplicationEngine:
         highs and the consumed offsets."""
         self.state.write(
             position, stage, extra=extra, batch=key, pending=self.state.seq,
-            hb=[[t, p, str(s), str(x)] for (t, p), (s, x) in self.hb_state.items()],
+            hb=self.heartbeats.dump(),
             off=[[t, p, o] for (t, p), o in self.off_state.items()],
         )
 
@@ -528,42 +516,6 @@ class ReplicationEngine:
             if cur is None or r.max_off > cur:
                 self.off_state[k] = r.max_off
 
-    def _update_hb_state(self, census: list) -> set[tuple[int, int]]:
-        """Fold a batch's heartbeats into ``hb_state``; returns the set of
-        (table_id, partition) keys that heartbeated in THIS batch (fresh
-        keys for the W2 guard, whether or not they advanced the high)."""
-        seen: set[tuple[int, int]] = set()
-        for r in census:
-            if r.hb is None:
-                continue
-            k = (r.table_id, r.partition)
-            seen.add(k)
-            cur = self.hb_state.get(k)
-            cand = (r.hb.step, r.hb.tx_id)
-            if cur is None or cand > cur:
-                self.hb_state[k] = cand
-        return seen
-
-    def _note_fresh_heartbeats(self, seen: set[tuple[int, int]], now: float) -> None:
-        """W2 stamp: ``last_full_hb_time`` advances only when every expected
-        partition has heartbeated since the last quorum consumption."""
-        self.hb_fresh.update(seen)
-        if len(self.hb_fresh) >= self.expected_partitions:
-            self.last_full_hb_time = now
-
-    def _consume_fresh_heartbeats(self, q: tuple[Decimal, Decimal]) -> None:
-        """Mirror of the reference's tracker Commit (hb_tracker.go): a
-        quorum apply consumes heartbeats at-or-below the cut — partitions
-        whose high is still above ``q`` stay fresh."""
-        self.hb_fresh = {
-            k for k in self.hb_fresh if k in self.hb_state and self.hb_state[k] > q
-        }
-
-    def quorum(self) -> tuple[Decimal, Decimal] | None:
-        if len(self.hb_state) < self.expected_partitions:
-            return None
-        return min(self.hb_state.values())
-
     # -- the per-batch kernel -------------------------------------------
 
     def process_batch(self, raw: DataFrame, batch_id: int) -> None:
@@ -610,9 +562,8 @@ class ReplicationEngine:
             # snapshot BEFORE this batch's heartbeats: out-of-order means
             # older than a heartbeat the stream had already emitted
             # (verifyStream, reader.go:150-207)
-            hb_before = dict(self.hb_state)
-            seen_hb = self._update_hb_state(census)
-            self._note_fresh_heartbeats(seen_hb, _time.time())
+            hb_before = dict(self.heartbeats.highs)
+            self.heartbeats.add(census, _time.time())
 
             events = split_events(parsed).select(
                 *[f.name for f in CDC_EVENT_SCHEMA.fields]
@@ -642,7 +593,8 @@ class ReplicationEngine:
             if pend is not None:
                 events = pend.unionByName(events)
 
-            q = self.quorum()
+            # the quorum, if it passed the checkpoint (GetQuorumAfter)
+            q = self.heartbeats.quorum(after=checkpoint)
             sync = {k: st[k] for k in ("sync_step", "sync_tx") if k in st}
             synced = True
             if st["stage"] == STAGE_INITIAL_SCAN:
@@ -652,14 +604,13 @@ class ReplicationEngine:
                 # backlog must have fully arrived). The apply below then
                 # publishes position AND stage=RUN in one manifest — the
                 # reference's atomic final-batch flip (:679-698).
-                if not sync and len(self.hb_state) >= self.expected_partitions:
-                    hi = max(self.hb_state.values())
+                if not sync and (hi := self.heartbeats.max_hb()) is not None:
                     sync = {"sync_step": str(hi[0]), "sync_tx": str(hi[1])}
                 synced = bool(sync) and q is not None and q > (
                     Decimal(sync["sync_step"]), Decimal(sync["sync_tx"])
                 )
 
-            if not synced or q is None or q <= checkpoint:
+            if not synced or q is None:
                 # no safe boundary yet — everything stays pending
                 self._write_pending(events)
                 self._publish(checkpoint, st["stage"], key, sync)
@@ -680,14 +631,14 @@ class ReplicationEngine:
             self._write_pending(remainder)
             # the first successful quorum apply flips stage to RUN
             self._publish(q, STAGE_RUN, key)
-            self._consume_fresh_heartbeats(q)
+            self.heartbeats.commit(q)
             self.batches_applied += 1
             self.metrics.on_batch_applied(
                 modifications=n_mods,
                 per_table=per_table,
                 commit_seconds=_time.perf_counter() - t_commit,
                 quorum_wait_seconds=quorum_wait,
-                quorum_step_ms=float(q[0]) * self.step_to_ms,
+                quorum_step_ms=float(q[0]) * STEP_TO_MS,
             )
         finally:
             _unpin(*pins)

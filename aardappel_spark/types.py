@@ -87,3 +87,11 @@ def full_pos(
         F.col(txid_col).alias("tx_id"),
         F.col(seq_col).alias("seq"),
     )
+
+
+def bucket_col(n_buckets: int, *cols: str | Column) -> Column:
+    """The one bucket function of every bucketed store: the CDC
+    destination's ``pkb`` and the dedup stores' ``bucket``. Writers and
+    pruning readers must agree on it exactly, or a pruned read misses the
+    bucket a key was written to."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")

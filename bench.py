@@ -121,17 +121,16 @@ def _warm_setsim_stream(spark, sf_dir):
         .limit(400)
     )
     store = tempfile.mkdtemp(prefix="bench_setsim_warm_")
-    outs = []
     try:
         fn = incremental_setsim_batch(
             store, tau_num=4, tau_den=5, shingle=4,
-            sink=lambda df, bid: outs.append(df),
+            # the kernel releases the frame when the batch ends
+            sink=lambda df, bid: df.collect(),
         )
         for i in range(2):
             fn(docs.filter(F.col("doc_id") % 2 == i), i)
     finally:
         shutil.rmtree(store, ignore_errors=True)
-    return outs[0] if outs else spark.range(1)
 
 
 def warmup_builds(spark, sf_dir) -> dict:

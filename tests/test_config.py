@@ -53,6 +53,21 @@ def test_load_reference_shaped_yaml(tmp_path):
     assert cfg.streams[0].mon_tag == "/Root/test/table1_rep"  # default = dst
 
 
+def test_yaml_without_pyyaml_names_json(tmp_path, monkeypatch):
+    import json
+    import sys
+
+    p = tmp_path / "config.yaml"
+    p.write_text(SAMPLE)
+    monkeypatch.setitem(sys.modules, "yaml", None)  # import yaml fails
+    with pytest.raises(RuntimeError, match=r"needs PyYAML; a \.json config"):
+        EngineConfig.load(str(p))
+    # a .json config loads without it
+    j = tmp_path / "config.json"
+    j.write_text(json.dumps({"instance_id": "x", "streams": []}))
+    assert EngineConfig.load(str(j)).instance_id == "x"
+
+
 def test_unknown_problem_strategy_rejected():
     with pytest.raises(ValueError, match="unknown stream problem strategy"):
         StreamSpec(src_topic="t", dst_table="d", problem_strategy="explode")

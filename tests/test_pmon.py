@@ -92,14 +92,14 @@ def test_heartbeat_guard_fires_and_resets(spark, tmp_path):
     assert eng.metrics.topic_without_hb["users"] == 0
 
     # past the timeout with one of two partitions silent
-    eng.hb_state[(0, 0)] = (Decimal(5), Decimal(0))
+    eng.heartbeats.highs[(0, 0)] = (Decimal(5), Decimal(0))
     missing = guard.check_once(now=t0 + 60)
     assert missing == {"users": True}
     assert eng.metrics.topic_without_hb["users"] == 1
 
-    # full set arrives: engine stamps last_full_hb_time; guard resets
-    eng.hb_state[(0, 1)] = (Decimal(6), Decimal(0))
-    eng.last_full_hb_time = t0 + 61
+    # full set arrives: the tracker stamps full_at; guard resets
+    eng.heartbeats.highs[(0, 1)] = (Decimal(6), Decimal(0))
+    eng.heartbeats.full_at = t0 + 61
     assert guard.check_once(now=t0 + 65) == {"users": False}
     assert eng.metrics.topic_without_hb["users"] == 0
 
@@ -114,9 +114,9 @@ def test_engine_stamps_last_full_hb_time(spark, tmp_path):
         ],
         raw_schema,
     )
-    assert eng.last_full_hb_time is None
+    assert eng.heartbeats.full_at is None
     eng.process_batch(b, 0)
-    assert eng.last_full_hb_time is not None
+    assert eng.heartbeats.full_at is not None
 
 
 def test_store_blocked_keys_round_trip(spark, tmp_path):
@@ -160,10 +160,10 @@ def test_guard_single_stream_uses_expected_partitions(spark, tmp_path):
     eng = _engine(spark, str(tmp_path))  # expected_partitions=2, no layout
     t0 = 1000.0
     guard = HeartbeatGuard(eng, timeout_seconds=10, clock=lambda: t0)
-    eng.hb_state[(0, 0)] = (Decimal(5), Decimal(0))
+    eng.heartbeats.highs[(0, 0)] = (Decimal(5), Decimal(0))
     assert guard.check_once(now=t0 + 60) == {"users": True}
-    eng.hb_state[(0, 1)] = (Decimal(6), Decimal(0))
-    eng.last_full_hb_time = None  # still stale by clock...
+    eng.heartbeats.highs[(0, 1)] = (Decimal(6), Decimal(0))
+    eng.heartbeats.full_at = None  # still stale by clock...
     missing = guard.check_once(now=t0 + 60)
     # ...but the full set is present, so the census finds nothing missing
     assert missing == {"users": False}

@@ -1089,33 +1089,34 @@ def test_setsim_guard_mass_exact_with_history(spark, tmp_path):
 
 
 def test_dedup_kernels_release_internal_pins(spark, tmp_path):
-    """Each batch releases its internal localCheckpoint pins once its
-    last store write is done: over 4 batches through both kernels the
-    JVM's persistent-RDD count grows by at most the frames the sinks
-    still hold (setsim's pairs, the exact kernel's survivors)."""
+    """Each batch releases every localCheckpoint pin it made, the frame
+    it handed its sink included, once the batch ends: after every batch
+    through either kernel no persistent RDD is left that was not there
+    before the batch (the ContextCleaner may still drop older ones). A
+    sink consumes its frame inside the call."""
     from aardappel_spark.stateful import (
         incremental_dedup_batch,
         incremental_setsim_batch,
     )
 
-    held = []
+    emitted = []
     setsim = incremental_setsim_batch(
         str(tmp_path / "setsim"), tau_num=1, tau_den=2, shingle=1,
-        sink=lambda df, bid: held.append(df),
+        sink=lambda df, bid: emitted.append(df.count()),
     )
     exact = incremental_dedup_batch(
-        str(tmp_path / "exact"), sink=lambda df, bid: held.append(df)
+        str(tmp_path / "exact"), sink=lambda df, bid: emitted.append(df.count())
     )
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    before = persistent().size()
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     texts = []
     for k in range(4):
         docs = _stream_docs(10 + k, 100 * k, 30, texts)
         texts += [t for _, t in docs]
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        setsim(df, k)
-        exact(df, k)
-    assert len(held) == 8
-    assert persistent().size() - before <= len(held)
-    # the sink-owned frames are still readable after the kernels return
-    assert sum(h.count() for h in held) > 0
+        for kernel in (setsim, exact):
+            before = pinned()
+            kernel(df, k)
+            assert pinned() - before == set()
+    assert len(emitted) == 8 and sum(emitted) > 0

@@ -206,11 +206,11 @@ def test_crashed_batch_replay_converges(spark, tmp_path):
 
 
 def test_full_hb_stamp_requires_fresh_set_after_consumption(spark, tmp_path):
-    """ADVICE r2 (W2): `last_full_hb_time` must only advance on a full set
-    of heartbeats that are NEW since the last quorum consumption — the
+    """ADVICE r2 (W2): the tracker's `full_at` stamp must only advance on
+    a full set of heartbeats that are NEW since the last quorum consumption — the
     reference deletes consumed tracker entries (hb_tracker.go Commit), so
     one partition going silent mid-run stalls the stamp and the guard
-    fires. Testing cumulative hb_state size restamps forever."""
+    fires. Testing the cumulative highs' size restamps forever."""
     tmp = str(tmp_path)
     eng = make_engine(spark, tmp)
 
@@ -225,25 +225,25 @@ def test_full_hb_stamp_requires_fresh_set_after_consumption(spark, tmp_path):
         batch("b0", [(0, 1, msg_update(1, "a", 10, 1)), (0, 2, msg_hb(50)), (1, 3, msg_hb(50))]),
         batch_id=0,
     )
-    t0 = eng.last_full_hb_time
+    t0 = eng.heartbeats.full_at
     assert t0 is not None
-    assert eng.hb_fresh == set()
+    assert eng.heartbeats.fresh == set()
 
     # partition 1 goes silent; partition 0 keeps heartbeating alone —
-    # the stamp must NOT advance even though hb_state stays full-size
+    # the stamp must NOT advance even though the highs stay full-size
     eng.process_batch(batch("b1", [(0, 4, msg_hb(60))]), batch_id=1)
     eng.process_batch(batch("b2", [(0, 5, msg_hb(70))]), batch_id=2)
-    assert eng.last_full_hb_time == t0
-    assert len(eng.hb_state) == 2  # cumulative state IS still full-size
+    assert eng.heartbeats.full_at == t0
+    assert len(eng.heartbeats.highs) == 2  # cumulative state IS still full-size
 
     # partition 1 comes back -> genuinely fresh full set -> stamp advances
     eng.process_batch(batch("b3", [(1, 6, msg_hb(80))]), batch_id=3)
-    assert eng.last_full_hb_time is not None and eng.last_full_hb_time > t0
+    assert eng.heartbeats.full_at is not None and eng.heartbeats.full_at > t0
 
     # consumption mirror: the quorum cut q=(70,0) consumed partition 0's
     # heartbeat exactly at the cut, while partition 1's (80,0) is above it
     # and therefore stays fresh (hb_tracker keeps entries above the cut)
-    assert eng.hb_fresh == {(0, 1)}
+    assert eng.heartbeats.fresh == {(0, 1)}
 
 
 def test_out_of_order_routed_by_command_and_strategy(spark, tmp_path):
@@ -509,11 +509,11 @@ def test_heartbeats_survive_driver_restart(spark, tmp_path):
         ),
         0,
     )
-    assert eng.quorum() == (Decimal(50), Decimal(0))
+    assert eng.heartbeats.quorum() == (Decimal(50), Decimal(0))
 
     # driver restart: fresh engine over the same work_dir
     eng2 = make_engine(spark, tmp)
-    assert eng2.quorum() == (Decimal(50), Decimal(0))
+    assert eng2.heartbeats.quorum() == (Decimal(50), Decimal(0))
     # partition 1's pre-restart heartbeat still counts: advancing only
     # partition 0 unlocks a new quorum
     eng2.process_batch(
