@@ -264,24 +264,20 @@ def _cdc_source(spark, args, cfg: EngineConfig, source_dir: str):
 def _compact(spark, args, cfg: EngineConfig, metas, work_dir: str) -> None:
     """The maintenance call; the instance lock guarantees no live writer.
 
-    A dedup mode compacts its state store (per-batch deltas -> one
-    delta with one file per bucket, published like a batch), bounding
-    partition discovery under unbounded batch count. CDC rewrites each
-    destination to one file per bucket and publishes ONE manifest naming
-    every compacted version; that needs only the tables, not an engine
-    (nor its partition count)."""
-    from . import stateful
+    A dedup mode force-folds its state store: the batch write with no
+    new rows (per-batch deltas -> one delta with one file per bucket,
+    published like a batch). CDC rewrites each destination to one file
+    per bucket and publishes ONE manifest naming every compacted
+    version; that needs only the tables, not an engine (nor its
+    partition count)."""
     from .streaming import Manifest, VersionedTable
 
-    if args.dedup_exact:
-        store = os.path.join(work_dir, "dedup_store")
-        b, a = stateful.compact_dedup_store(spark, store)
-        print(f"compacted dedup_store: files {b} -> {a}")
-        return
-    if args.setsim_dedup:
-        store = os.path.join(work_dir, "setsim_store")
-        for part, (b, a) in stateful.compact_setsim_store(spark, store).items():
-            print(f"compacted setsim_store/{part}: files {b} -> {a}")
+    mode = _dedup_mode(args)
+    if mode is not None:
+        factory, store_dir, _ = mode
+        store = factory(os.path.join(work_dir, store_dir)).store
+        for path, (b, a) in store.fold(spark).items():
+            print(f"compacted {os.path.relpath(path, work_dir)}: files {b} -> {a}")
         return
     manifest = Manifest(work_dir)
     compacted = []

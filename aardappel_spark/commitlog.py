@@ -6,8 +6,10 @@ ONE tmp-write plus ``os.replace``, so a reader sees a whole manifest or
 the one before it, never a torn commit; nothing a writer puts in an
 unnamed version dir is visible until a manifest names it. The CDC
 engine (``streaming.Manifest``) and the dedup stores
-(``stateful.StoreLog``) differ only in what a manifest holds and which
-version dirs it names (``_names``).
+(``stateful.StoreLog``) subclass it; they differ in what a manifest
+holds and which version dirs it names (``_names``). A dedup store also
+owns its reads and its one write path, which folds the store's deltas
+in the same publish once they reach Spark's listing threshold.
 """
 
 from __future__ import annotations

@@ -12,9 +12,14 @@ number, not by Spark's batch id, then publishes ONE manifest listing
 the live delta dirs (and the setsim corpus document count). Readers
 read only what the newest manifest names, so a crashed attempt's dirs
 are invisible and its replay rewrites them, and a fresh checkpoint
-(batch ids from 0 again) can never overwrite history. The
-``compact_*_store`` functions fold the deltas into one new delta with
-one file per bucket: one more publish.
+(batch ids from 0 again) can never overwrite history. ``StoreLog``
+is the store's one reader and writer. Once the live deltas reach the
+session's ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+(past which Spark lists a read's paths in a job of its own), the next
+batch's write folds them: each sub-store's new delta takes every live
+delta's rows too, with one file per bucket, and the same one publish
+names it alone. ``--compact-and-exit`` runs that write with no new rows
+(``StoreLog.fold``, reached through a kernel's ``store``).
 
 A sink consumes its frame inside the call, the ``foreachBatch``
 contract: the kernel pins the frame before the stores grow and releases
@@ -57,72 +62,114 @@ def older_store(store_dir: str) -> str | None:
 
 
 class StoreLog(ManifestLog):
-    """The commit log of one dedup store: a manifest names the live
-    delta dirs ``v=<seq>`` (``deltas``) of every sub-store in ``stores``,
-    plus what the kernel keeps beside them (``empty``'s other keys). A
-    store from before the manifest is refused."""
+    """A dedup store and its commit log. The store has sub-stores
+    (``schemas``: dir -> declared schema), each a set of delta dirs
+    ``v=<seq>/bucket=<b>``; a manifest names the live deltas
+    (``deltas``, the same for every sub-store) plus what the kernel
+    keeps beside them (``empty``'s other keys). Every read, write and
+    publish of the store goes through here; ``commit`` is the one
+    writer, and it folds the store once the live deltas reach Spark's
+    listing threshold. A store from before the manifest is refused."""
 
     # hive-style: a read over several deltas then discovers one
     # partition layout (``v``, ``bucket``) under the store dir
     prefix = "v="
 
-    def __init__(self, root: str, stores: list[str], **empty):
+    def __init__(self, root: str, schemas: dict[str, str], **empty):
         err = older_store(root)
         if err:
             raise RuntimeError(err)
-        self.stores = stores
+        self.schemas = schemas
         super().__init__(root, {"deltas": [], **empty})
 
     def _names(self, m: dict, newest: bool) -> dict[str, list]:
-        return dict.fromkeys(self.stores, m["deltas"])
+        return dict.fromkeys(self.schemas, m["deltas"])
 
+    def read(self, spark, path: str, buckets=None) -> DataFrame:
+        """Sub-store ``path`` as the base manifest names it, with its
+        declared schema (no footer inference, no Spark job),
+        ``bucket``-pruned unless ``buckets`` is None. The filter on the
+        hive partition column is applied to the bare scan, so Spark
+        prunes the listing to matching bucket dirs: the scan (and
+        everything shuffled downstream) covers the matching buckets,
+        not the whole store (a plan test asserts ``input_file_name()``,
+        the runtime truth of what the scan read). An empty bucket list
+        reads nothing; no deltas reads as the empty store; a named dir
+        that is missing or corrupt raises."""
+        schema = self.schemas[path]
+        deltas = self.base["deltas"]
+        if not deltas:
+            df = empty_df(spark, schema)
+        else:
+            df = (
+                spark.read.schema(schema)
+                .option("basePath", path)
+                .parquet(*(f"{path}/v={d}" for d in deltas))
+            )
+        if buckets is not None:
+            bks = sorted(set(buckets))
+            df = df.filter(F.col("bucket").isin(bks) if bks else F.lit(False))
+        return df.select(*(c.split()[0] for c in schema.split(",")))
 
-def _setsim_log(store_dir: str) -> StoreLog:
-    return StoreLog(
-        store_dir, [f"{store_dir}/postings", f"{store_dir}/sets"], docs=0
-    )
+    def commit(self, spark, rows: dict, force: bool = False, **fields) -> None:
+        """Write each sub-store's new ``rows`` (path -> frame, or None
+        for none) as delta ``v=<seq>`` and publish ONE manifest naming
+        it, with ``fields`` updated. A crash anywhere before the publish
+        leaves the store as it was, and a replay rewrites the same
+        unpublished dirs.
 
+        Once the base manifest names as many live deltas as the
+        session's ``spark.sql.sources.parallelPartitionDiscovery.
+        threshold`` (or with ``force``), the write folds: each delta
+        takes every live delta's rows as well, and the manifest names it
+        alone. A read then never crosses the threshold, past which Spark
+        lists the paths in a job of its own, and the store stays at one
+        delta per batch since the last fold. Folding is content-
+        identical for every reader (they filter on ``bucket`` only, and
+        the replay anti-joins are content-based), and retention removes
+        the folded dirs after the next publish."""
+        m = self.base
+        limit = int(spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        ))
+        fold = force or len(m["deltas"]) >= limit
+        for path, df in rows.items():
+            if fold:
+                old = self.read(spark, path)
+                df = old if df is None else df.unionByName(old)
+            self._write(df, f"{path}/v={self.seq}")
+        deltas = [self.seq] if fold else [*m["deltas"], self.seq]
+        self.publish({**m, **fields, "deltas": deltas})
 
-def _read_store(
-    spark, path: str, deltas: list[int], schema: str, buckets=None
-) -> DataFrame:
-    """The named delta dirs of one sub-store, with its declared schema
-    (no footer inference, no Spark job), ``bucket``-pruned unless
-    ``buckets`` is None. The filter on the hive partition column is
-    applied to the bare scan, so Spark prunes the listing to matching
-    bucket dirs: the scan (and everything shuffled downstream) covers
-    the matching buckets, not the whole store (a plan test asserts
-    ``input_file_name()``, the runtime truth of what the scan read). An
-    empty bucket list reads nothing; no deltas reads as the empty
-    store; a named dir that is missing or corrupt raises."""
-    if not deltas:
-        df = empty_df(spark, schema)
-    else:
-        df = (
-            spark.read.schema(schema)
-            .option("basePath", path)
-            .parquet(*(f"{path}/v={d}" for d in deltas))
-        )
-    if buckets is None:
-        return df
-    bks = sorted(set(buckets))
-    return df.filter(F.col("bucket").isin(bks) if bks else F.lit(False))
+    def _write(self, df: DataFrame, path: str) -> None:
+        """Overwrite ``path`` with ``df`` hive-partitioned by
+        ``bucket``, ONE file per bucket dir. partitionBy alone fans out
+        to (task partitions x buckets) tiny files (r12 measured 2x on
+        the whole replay). Hash-partitioning on ``bucket`` first puts
+        each bucket's rows in one shuffle partition, and AQE only merges
+        whole partitions, so it still writes one file per bucket while
+        it sizes the write to the data: a micro-batch of a few KB per
+        bucket is written by one or two tasks, where one fixed partition
+        per bucket would run one task per bucket. AQE merges only
+        partitions below its advisory size, so at scale the write still
+        runs one task per bucket."""
+        df.repartition("bucket").write.partitionBy("bucket").mode(
+            "overwrite"
+        ).parquet(path)
 
-
-def _write_buckets(df: DataFrame, path: str) -> None:
-    """Overwrite ``path`` with ``df`` hive-partitioned by ``bucket``,
-    ONE file per bucket dir. partitionBy alone fans out to (task
-    partitions x buckets) tiny files (r12 measured 2x on the whole
-    replay). Hash-partitioning on ``bucket`` first puts each bucket's
-    rows in one shuffle partition, and AQE only merges whole partitions,
-    so it still writes one file per bucket while it sizes the write to
-    the data: a micro-batch of a few KB per bucket is written by one or
-    two tasks, where one fixed partition per bucket would run one task
-    per bucket. AQE merges only partitions below its advisory size, so
-    at scale the write still runs one task per bucket."""
-    df.repartition("bucket").write.partitionBy("bucket").mode(
-        "overwrite"
-    ).parquet(path)
+    def fold(self, spark) -> dict[str, tuple[int, int]]:
+        """The forced fold of ``--compact-and-exit``: ``commit`` with no
+        new rows, so every sub-store ends as one delta with one file per
+        bucket. MUST run under the instance lock with no live writer. A
+        store with no deltas is left as it is. Returns {sub-store path:
+        (files before, files after)}."""
+        m = self.refresh()
+        before = {p: _nfiles(p, m["deltas"]) for p in self.schemas}
+        if m["deltas"]:
+            self.commit(spark, dict.fromkeys(self.schemas), force=True)
+        return {
+            p: (before[p], _nfiles(p, self.base["deltas"])) for p in self.schemas
+        }
 
 
 def _nfiles(path: str, deltas: list[int]) -> int:
@@ -133,50 +180,6 @@ def _nfiles(path: str, deltas: list[int]) -> int:
         for f in fs
         if not f.startswith(("_", "."))
     )
-
-
-def _compact_store(spark, log: StoreLog, schemas: dict[str, str]) -> dict:
-    """Fold every live delta of each sub-store (path -> schema) into ONE
-    new delta with one file per bucket, and publish a manifest naming
-    only it. The per-batch deltas keep writes idempotent, but an
-    unbounded run accumulates one dir per micro-batch and partition
-    discovery (file listing) grows with their count — at 100 TB the
-    listing, not the data, becomes the per-trigger cost. Content-
-    identical for every reader (they filter on ``bucket`` only, and the
-    replay anti-join is content-based). A crash before the publish
-    leaves the previous manifest and its dirs untouched; retention
-    removes the folded dirs after the next publish. MUST run under the
-    instance lock with no live writer (the ``--compact-and-exit``
-    contract). Returns {path: (files_before, files_after)}."""
-    m = log.refresh()
-    if not m["deltas"]:
-        return dict.fromkeys(schemas, (0, 0))
-    seq = log.seq
-    before = {p: _nfiles(p, m["deltas"]) for p in schemas}
-    for path, schema in schemas.items():
-        cols = [c.split()[0] for c in schema.split(",")]
-        df = _read_store(spark, path, m["deltas"], schema).select(*cols)
-        _write_buckets(df, f"{path}/v={seq}")
-    log.publish({**m, "deltas": [seq]})
-    return {p: (before[p], _nfiles(p, [seq])) for p in schemas}
-
-
-def compact_setsim_store(spark, store_dir: str) -> dict:
-    """Compact the postings and sets stores of
-    ``incremental_setsim_batch`` in one publish (the corpus count rides
-    along in the manifest). Run under the instance lock."""
-    out = _compact_store(spark, _setsim_log(store_dir), {
-        f"{store_dir}/postings": POSTINGS_SCHEMA,
-        f"{store_dir}/sets": SETS_SCHEMA,
-    })
-    return {os.path.basename(p): v for p, v in out.items()}
-
-
-def compact_dedup_store(spark, store_path: str):
-    """Compact the ``incremental_dedup_batch`` fingerprint store to one
-    file per bucket (same contract as ``compact_setsim_store``)."""
-    log = StoreLog(store_path, [store_path])
-    return _compact_store(spark, log, {store_path: FPS_SCHEMA})[store_path]
 
 
 def incremental_dedup_batch(
@@ -214,11 +217,11 @@ def incremental_dedup_batch(
     """
     from pyspark.sql.window import Window
 
-    log = StoreLog(store_path, [store_path])
+    log = StoreLog(store_path, {store_path: FPS_SCHEMA})
 
     def fn(batch_df, batch_id):
         spark = batch_df.sparkSession
-        m = log.refresh()
+        log.refresh()
         batch = batch_df.withColumn("_fp", F.md5(F.col(text_col)))
         w = Window.partitionBy("_fp").orderBy(id_col)
         batch = (
@@ -241,9 +244,7 @@ def incremental_dedup_batch(
             fp_bks = [
                 r._bk for r in batch.select("_bk").distinct().collect()
             ]
-            store = _read_store(
-                spark, store_path, m["deltas"], FPS_SCHEMA, fp_bks
-            ).select("fp")
+            store = log.read(spark, store_path, fp_bks).select("fp")
             fresh = batch.join(
                 store, batch["_fp"] == store["fp"], "left_anti"
             ).localCheckpoint()  # pin survivors BEFORE the store grows
@@ -251,17 +252,14 @@ def incremental_dedup_batch(
             if sink is not None:
                 sink(fresh.drop("_fp", "_bk"), batch_id)
             if not fresh.isEmpty():
-                _write_buckets(
-                    fresh.select(
-                        F.col("_fp").alias("fp"), F.col("_bk").alias("bucket")
-                    ),
-                    f"{store_path}/v={log.seq}",
-                )
-                log.publish({**m, "deltas": [*m["deltas"], log.seq]})
+                log.commit(spark, {store_path: fresh.select(
+                    F.col("_fp").alias("fp"), F.col("_bk").alias("bucket")
+                )})
         finally:
             # the sink consumed `fresh` inside its call (module docstring)
             _unpin(*pins)
 
+    fn.store = log  # --compact-and-exit folds it
     return fn
 
 
@@ -350,7 +348,9 @@ def incremental_setsim_batch(
     """
     post_path = f"{store_dir}/postings"
     sets_path = f"{store_dir}/sets"
-    log = _setsim_log(store_dir)
+    log = StoreLog(
+        store_dir, {post_path: POSTINGS_SCHEMA, sets_path: SETS_SCHEMA}, docs=0
+    )
 
     def fn(batch_df, batch_id):
         pins = []  # the batch's internal localCheckpoints
@@ -380,9 +380,7 @@ def incremental_setsim_batch(
         # a read error propagates (r10/r11 ADVICE: swallowing one
         # here would re-admit historical docs and silently drop
         # detections)
-        replay_sets = _read_store(
-            spark, sets_path, m["deltas"], SETS_SCHEMA, id_bks
-        )
+        replay_sets = log.read(spark, sets_path, id_bks)
         batch = batch.join(
             replay_sets.select(F.col("id").alias(id_col)), id_col, "left_anti"
         )
@@ -457,9 +455,9 @@ def incremental_setsim_batch(
         # prefix tokens hash to: a shared token lands in the same
         # bucket on both sides, so the prune is exact and the scan
         # (hence the shuffle) covers matching buckets, not the corpus
-        old_post = _read_store(
-            spark, post_path, m["deltas"], POSTINGS_SCHEMA, head["bks"],
-        ).select("tok", "id", "n", "rn")
+        old_post = log.read(spark, post_path, head["bks"]).select(
+            "tok", "id", "n", "rn"
+        )
         all_post = old_post.unionByName(
             new_post.select("tok", "id", "n", "rn")
         )
@@ -549,9 +547,9 @@ def incremental_setsim_batch(
             .distinct()
             .collect()
         ]
-        old_cand_sets = _read_store(
-            spark, sets_path, m["deltas"], SETS_SCHEMA, cand_bks,
-        ).select("id", "toks", "n")
+        old_cand_sets = log.read(spark, sets_path, cand_bks).select(
+            "id", "toks", "n"
+        )
         # pin the pruned-store ∪ new-sets union ONCE per batch: the
         # verify join consumes it on BOTH key legs (id_a and id_b),
         # and without the pin each leg planned its own evaluation of
@@ -608,14 +606,11 @@ def incremental_setsim_batch(
         # downstream by batch_id, the standard foreachBatch contract).
         # A fully-replayed batch returned early above, BEFORE the sink
         # — so a replay can neither grow the stores nor hand an
-        # overwrite-by-batch sink an empty frame (r11 ADVICE). Bucket
-        # subdirs make the next batches' candidate/anti-join scans
-        # prunable; _write_buckets writes ONE file per bucket, with as
-        # many tasks as the data needs.
-        _write_buckets(new_post, f"{post_path}/v={log.seq}")
-        _write_buckets(new_sets, f"{sets_path}/v={log.seq}")
-        log.publish({
-            **m, "deltas": [*m["deltas"], log.seq], "docs": m["docs"] + n_new,
-        })
+        # overwrite-by-batch sink an empty frame (r11 ADVICE).
+        log.commit(
+            spark, {post_path: new_post, sets_path: new_sets},
+            docs=m["docs"] + n_new,
+        )
 
+    fn.store = log  # --compact-and-exit folds it
     return fn

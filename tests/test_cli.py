@@ -755,7 +755,7 @@ def test_cli_compact_dedup_state_store(spark, tmp_path, capsys):
         "--dedup-exact", "--available-now",
     ]) == 0
     store = os.path.join(work, "dedup_store")
-    assert StoreLog(store, []).latest()["deltas"] == [0]
+    assert StoreLog(store, {}).latest()["deltas"] == [0]
 
     assert main([
         "--config", cfg, "--source-dir", src, "--work-dir", work,
@@ -763,7 +763,7 @@ def test_cli_compact_dedup_state_store(spark, tmp_path, capsys):
     ]) == 0
     out = capsys.readouterr().out
     assert "compacted dedup_store" in out
-    assert StoreLog(store, []).latest()["deltas"] == [1]
+    assert StoreLog(store, {}).latest()["deltas"] == [1]
     # the lock was released by the maintenance path
     from aardappel_spark.locker import Locker, LockStorage
 

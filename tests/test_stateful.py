@@ -1,7 +1,7 @@
 """The streaming dedup kernels (``incremental_dedup_batch``,
 ``incremental_setsim_batch``) and their bucketed stores: results across
 micro-batches, restarts and replays, store layout and pruning, the
-manifest commit and the store compactions."""
+manifest commit and the store's fold (in band and forced)."""
 
 import os
 import re
@@ -12,9 +12,9 @@ import pytest
 def _published(spark, root, path, schema):
     """What a reader of the store rooted at ``root`` sees at ``path``:
     the delta dirs its newest manifest names."""
-    from aardappel_spark.stateful import StoreLog, _read_store
+    from aardappel_spark.stateful import StoreLog
 
-    return _read_store(spark, path, StoreLog(root, []).latest()["deltas"], schema)
+    return StoreLog(root, {path: schema}).read(spark, path)
 
 
 def _fail_once(monkeypatch, obj, name):
@@ -289,19 +289,19 @@ def test_incremental_setsim_crash_replay_never_duplicates_postings(
     # candidate join (no pair against itself), and the replay converges
     crashed2 = str(tmp_path / "crashed2")
     fn3, emitted3 = mk(crashed2)
-    real_write = st._write_buckets
+    real_write = st.StoreLog._write
     calls = []
 
-    def write_postings_only(df, path):
+    def write_postings_only(self, df, path):
         calls.append(path)
         if len(calls) == 2:
             raise RuntimeError("crash in the sets write")
-        real_write(df, path)
+        real_write(self, df, path)
 
-    monkeypatch.setattr(st, "_write_buckets", write_postings_only)
+    monkeypatch.setattr(st.StoreLog, "_write", write_postings_only)
     with pytest.raises(RuntimeError, match="sets write"):
         fn3(batch, 0)
-    monkeypatch.setattr(st, "_write_buckets", real_write)
+    monkeypatch.setattr(st.StoreLog, "_write", real_write)
     assert postings(crashed2).count() == 0
     fn3(batch, 0)
     assert postings(crashed2).count() == clean_n
@@ -423,7 +423,7 @@ def test_setsim_store_bucketed_and_candidate_scan_prunes(spark, tmp_path):
 
     from aardappel_spark.stateful import (
         POSTINGS_SCHEMA,
-        _read_store,
+        StoreLog,
         incremental_setsim_batch,
     )
 
@@ -447,9 +447,9 @@ def test_setsim_store_bucketed_and_candidate_scan_prunes(spark, tmp_path):
     ]
     assert len(sets_dirs) >= 2, sets_dirs
 
-    schema = POSTINGS_SCHEMA
+    log = StoreLog(store, {post: POSTINGS_SCHEMA})
     want = int(bucket_dirs[0].split("=")[1])
-    pruned = _read_store(spark, post, [0], schema, [want])
+    pruned = log.read(spark, post, [want])
     read_files = {
         r[0]
         for r in pruned.select(F.input_file_name()).distinct().collect()
@@ -466,33 +466,41 @@ def test_setsim_store_bucketed_and_candidate_scan_prunes(spark, tmp_path):
         r.bucket for r in pruned.select("bucket").distinct().collect()
     } == {want}
     # empty bucket list = read nothing (first-batch shape)
-    assert _read_store(spark, post, [0], schema, []).count() == 0
+    assert log.read(spark, post, []).count() == 0
 
 
 def test_read_store_reads_only_named_deltas(spark, tmp_path):
-    """r11 ADVICE (medium), on the manifest store: the reader reads
-    exactly the delta dirs it is given, with the declared schema. No
-    deltas is the empty store; an unnamed dir (a crashed attempt's
-    write) is never read; a named dir that is missing must raise
-    instead of silently forgetting history."""
-    from aardappel_spark.stateful import FPS_SCHEMA, _read_store
+    """r11 ADVICE (medium), on the manifest store: the store's read
+    reads exactly the delta dirs its manifest names, with the declared
+    schema. No deltas is the empty store; an unnamed dir (a crashed
+    attempt's write) is never read; a named dir that is missing must
+    raise instead of silently forgetting history."""
+    from aardappel_spark.stateful import FPS_SCHEMA, StoreLog
 
     store = str(tmp_path / "fps")
-    df = _read_store(spark, store, [], FPS_SCHEMA)
+    log = StoreLog(store, {store: FPS_SCHEMA})
+    df = log.read(spark, store)
     assert df.count() == 0 and df.columns == ["fp", "bucket"]
-    assert _read_store(spark, store, [], FPS_SCHEMA, [1]).count() == 0
+    assert log.read(spark, store, [1]).count() == 0
 
-    for v, fps in ((0, ["a", "b"]), (1, ["c"]), (2, ["unpublished"])):
+    def delta(v, fps):
         spark.createDataFrame(
             [(f, i % 2) for i, f in enumerate(fps)], FPS_SCHEMA
         ).write.partitionBy("bucket").parquet(f"{store}/v={v}")
-    got = _read_store(spark, store, [0, 1], FPS_SCHEMA).select("fp", "bucket")
+
+    delta(0, ["a", "b"])
+    delta(1, ["c"])
+    log.publish({**log.base, "deltas": [0, 1]})
+    delta(2, ["unpublished"])
+    got = log.read(spark, store)
+    assert got.columns == ["fp", "bucket"]
     assert sorted(got.collect()) == [("a", 0), ("b", 1), ("c", 0)]
-    pruned = _read_store(spark, store, [0, 1], FPS_SCHEMA, [1]).select("fp")
+    pruned = log.read(spark, store, [1]).select("fp")
     assert [r.fp for r in pruned.collect()] == ["b"]
 
+    log.publish({**log.base, "deltas": [0, 3]})
     with pytest.raises(Exception, match="PATH_NOT_FOUND"):
-        _read_store(spark, store, [0, 3], FPS_SCHEMA).count()
+        log.read(spark, store).count()
 
 
 def test_setsim_batch_never_scans_full_history(spark, tmp_path, monkeypatch):
@@ -508,14 +516,15 @@ def test_setsim_batch_never_scans_full_history(spark, tmp_path, monkeypatch):
     import aardappel_spark.stateful as st
 
     calls = []
-    real_read = st._read_store
+    real_read = st.StoreLog.read
 
-    def rec_read(spark_, path, deltas, schema, buckets=None):
+    def rec_read(self, spark_, path, buckets=None):
         kind = "full" if buckets is None else "pruned"
-        calls.append((kind, path, list(deltas), sorted(set(buckets or ()))))
-        return real_read(spark_, path, deltas, schema, buckets)
+        deltas = list(self.base["deltas"])
+        calls.append((kind, path, deltas, sorted(set(buckets or ()))))
+        return real_read(self, spark_, path, buckets)
 
-    monkeypatch.setattr(st, "_read_store", rec_read)
+    monkeypatch.setattr(st.StoreLog, "read", rec_read)
 
     store = str(tmp_path / "store")
     outs = []
@@ -563,8 +572,8 @@ def test_setsim_batch_never_scans_full_history(spark, tmp_path, monkeypatch):
 
     # the manifest's corpus count is the sets store's row count, the
     # figure the old guard used to count
-    m = st.StoreLog(store, []).latest()
-    n_sets = real_read(spark, f"{store}/sets", m["deltas"], st.SETS_SCHEMA).count()
+    m = st.StoreLog(store, {}).latest()
+    n_sets = _published(spark, store, f"{store}/sets", st.SETS_SCHEMA).count()
     assert m["deltas"] == [0, 1] and m["docs"] == 28 == n_sets
 
 
@@ -641,7 +650,7 @@ def test_dedup_fp_store_bucketed_prunes_and_replay_never_wipes(
 
     from aardappel_spark.stateful import (
         FPS_SCHEMA,
-        _read_store,
+        StoreLog,
         incremental_dedup_batch,
     )
 
@@ -664,7 +673,7 @@ def test_dedup_fp_store_bucketed_prunes_and_replay_never_wipes(
 
     # pruned read really scans only the requested bucket's files
     want = int(bucket_dirs[0].split("=")[1])
-    pruned = _read_store(spark, store, [0], FPS_SCHEMA, [want])
+    pruned = StoreLog(store, {store: FPS_SCHEMA}).read(spark, store, [want])
     read_files = {
         r[0]
         for r in pruned.select(F.input_file_name()).distinct().collect()
@@ -713,15 +722,14 @@ def test_dedup_fp_store_bucketed_prunes_and_replay_never_wipes(
 def test_setsim_store_compaction_is_content_identical(
     spark, tmp_path, monkeypatch
 ):
-    """r13: state-store compaction bounds partition-discovery cost (one
-    dir per micro-batch otherwise grows without bound). Compacting to
-    one delta must be CONTENT-identical for every reader: a post-
-    compaction batch emits exactly the pairs it would have over the
-    uncompacted store, a replayed old batch id stays a no-op (the
-    anti-join is content-based), and the guard's corpus count is
-    preserved. A compaction that crashes after writing its delta but
-    before the publish leaves readers on the previous manifest, and
-    the next compaction converges."""
+    """The forced fold (``--compact-and-exit``: the store's batch write
+    with no new rows) folds the deltas into one, and must be
+    CONTENT-identical for every reader: a post-fold batch emits exactly
+    the pairs it would have over the unfolded store, a replayed old
+    batch id stays a no-op (the anti-join is content-based), and the
+    guard's corpus count is preserved. A fold that crashes after
+    writing its delta but before the publish leaves readers on the
+    previous manifest, and the next fold converges."""
     import shutil
 
     import aardappel_spark.stateful as st
@@ -763,16 +771,16 @@ def test_setsim_store_compaction_is_content_identical(
     }
     _fail_once(monkeypatch, st.StoreLog, "publish")
     with pytest.raises(RuntimeError, match="crash in publish"):
-        st.compact_setsim_store(spark, store_a)
-    # the compacted delta is written but unnamed: readers still see
-    # the two batch deltas
+        fn_a.store.fold(spark)
+    # the folded delta is written but unnamed: readers still see the
+    # two batch deltas
     assert os.path.isdir(f"{store_a}/postings/v=2")
-    assert st.StoreLog(store_a, []).latest()["deltas"] == [0, 1]
+    assert st.StoreLog(store_a, {}).latest()["deltas"] == [0, 1]
     assert rows("postings", st.POSTINGS_SCHEMA) == before["postings"]
 
-    rep = st.compact_setsim_store(spark, store_a)
+    rep = {os.path.basename(p): v for p, v in fn_a.store.fold(spark).items()}
     assert set(rep) == {"postings", "sets"}
-    m = st.StoreLog(store_a, []).latest()
+    m = st.StoreLog(store_a, {}).latest()
     assert m["deltas"] == [2] and m["docs"] == 29  # 15 + 14 committed docs
     for part, schema in (
         ("postings", st.POSTINGS_SCHEMA), ("sets", st.SETS_SCHEMA)
@@ -787,7 +795,7 @@ def test_setsim_store_compaction_is_content_identical(
             for d in buckets if d.startswith("bucket=")
         )
 
-    # the same third batch over compacted vs uncompacted stores
+    # the same third batch over folded vs unfolded stores
     outs_b = []
     fn_b = st.incremental_setsim_batch(
         store_b, tau_num=1, tau_den=2, shingle=1,
@@ -798,22 +806,22 @@ def test_setsim_store_compaction_is_content_identical(
     fn_a(batch(2), 2)
     fn_b(batch(2), 2)
     assert outs_a[-1] == outs_b[-1]
-    assert (19, 40) in outs_a[-1][1]  # cross-batch pair found post-compact
+    assert (19, 40) in outs_a[-1][1]  # cross-batch pair found post-fold
     # the next publish retired the folded deltas
     assert sorted(os.listdir(f"{store_a}/postings")) == ["v=2", "v=3"]
 
-    # a replayed old batch id is still a no-op after compaction
+    # a replayed old batch id is still a no-op after the fold
     n = len(outs_a)
     fn_a(batch(0), 0)
     assert len(outs_a) == n
-    assert st.StoreLog(store_a, []).latest()["deltas"] == [2, 3]
+    assert st.StoreLog(store_a, {}).latest()["deltas"] == [2, 3]
 
 
 def test_dedup_store_compaction_and_crash_recovery(spark, tmp_path, monkeypatch):
-    """r13: fp-store compaction is content-identical (duplicates still
-    drop afterwards), and a compaction that crashes after writing its
+    """The fp store's forced fold is content-identical (duplicates
+    still drop afterwards), and a fold that crashes after writing its
     delta but before the publish never changes what readers see: the
-    corpus still dedups, and the next compaction converges."""
+    corpus still dedups, and the next fold converges."""
     import aardappel_spark.stateful as st
 
     store = str(tmp_path / "fps")
@@ -829,10 +837,10 @@ def test_dedup_store_compaction_and_crash_recovery(spark, tmp_path, monkeypatch)
     ), 1)
     assert emitted[-1] == [101]
 
-    b, a = st.compact_dedup_store(spark, store)
+    b, a = fn.store.fold(spark)[store]
     assert a <= b and a > 0
-    assert st.StoreLog(store, []).latest()["deltas"] == [2]
-    # duplicates of both pre-compaction batches still drop
+    assert st.StoreLog(store, {}).latest()["deltas"] == [2]
+    # duplicates of both pre-fold batches still drop
     fn(spark.createDataFrame(
         [(200, "text 7"), (201, "new one"), (202, "really new")],
         "doc_id long, text string",
@@ -842,13 +850,13 @@ def test_dedup_store_compaction_and_crash_recovery(spark, tmp_path, monkeypatch)
         "v=2", "v=3"
     ]
 
-    # a compaction crash after its delta is written: unpublished, so
-    # readers keep the previous manifest's deltas
+    # a fold crash after its delta is written: unpublished, so readers
+    # keep the previous manifest's deltas
     _fail_once(monkeypatch, st.StoreLog, "publish")
     with pytest.raises(RuntimeError, match="crash in publish"):
-        st.compact_dedup_store(spark, store)
+        fn.store.fold(spark)
     assert os.path.isdir(f"{store}/v=4")
-    assert st.StoreLog(store, []).latest()["deltas"] == [2, 3]
+    assert st.StoreLog(store, {}).latest()["deltas"] == [2, 3]
     # a new kernel instance over the store still dedups (both deltas)
     fn2 = st.incremental_dedup_batch(
         store, sink=lambda df, bid: emitted.append([r.doc_id for r in df.collect()])
@@ -857,22 +865,24 @@ def test_dedup_store_compaction_and_crash_recovery(spark, tmp_path, monkeypatch)
         [(300, "text 5"), (301, "really new")], "doc_id long, text string"
     ), 0)
     assert emitted[-1] == []
-    # the next compaction converges on one delta holding every fp
-    st.compact_dedup_store(spark, store)
-    m = st.StoreLog(store, []).latest()
+    # the next fold converges on one delta holding every fp
+    fn2.store.fold(spark)
+    m = st.StoreLog(store, {}).latest()
     assert len(m["deltas"]) == 1
     fps = _published(spark, store, store, st.FPS_SCHEMA)
     assert fps.count() == fps.select("fp").distinct().count() == 26
 
-    # compacting an empty/missing store is a no-op
-    assert st.compact_dedup_store(spark, str(tmp_path / "nope")) == (0, 0)
+    # folding an empty/missing store is a no-op
+    nope = str(tmp_path / "nope")
+    assert st.incremental_dedup_batch(nope).store.fold(spark) == {nope: (0, 0)}
+    assert st.StoreLog(nope, {}).latest()["seq"] == -1
 
 
 def test_store_from_before_the_manifest_is_refused(spark, tmp_path):
     """A store dir holding data but no _manifest/ (the per-batch-dir
     layout, with its counts sidecar) is refused by both kernel
-    factories and both compactions, naming the dir; an empty
-    pre-created dir is a new store."""
+    factories and by the store object a forced fold runs on, naming the
+    dir; an empty pre-created dir is a new store."""
     import aardappel_spark.stateful as st
 
     setsim = tmp_path / "setsim"
@@ -882,14 +892,14 @@ def test_store_from_before_the_manifest_is_refused(spark, tmp_path):
     exact.mkdir(parents=True)
     for call in (
         lambda: st.incremental_setsim_batch(str(setsim)),
-        lambda: st.compact_setsim_store(spark, str(setsim)),
+        lambda: st.StoreLog(str(setsim), {}).fold(spark),
     ):
         with pytest.raises(RuntimeError, match=re.escape(str(setsim)) + ".*counts"):
             call()
     fps = str(tmp_path / "fps")
     for call in (
         lambda: st.incremental_dedup_batch(fps),
-        lambda: st.compact_dedup_store(spark, fps),
+        lambda: st.StoreLog(fps, {}).fold(spark),
     ):
         with pytest.raises(RuntimeError, match=re.escape(fps) + ".*batch=0"):
             call()
@@ -902,7 +912,7 @@ def test_store_from_before_the_manifest_is_refused(spark, tmp_path):
 
 def test_one_manifest_is_the_only_store_commit_mechanism(spark, tmp_path):
     """Both dedup stores commit through one manifest log: after a few
-    batches and a compaction each store has _manifest/, none of the
+    batches and a forced fold each store has _manifest/, none of the
     older mechanisms' dirs (counts/, .old, .compacting) exist, and every
     data dir is named by a retained manifest."""
     import json
@@ -923,8 +933,8 @@ def test_one_manifest_is_the_only_store_commit_mechanism(spark, tmp_path):
         setsim(df, k)
         exact(df, k)
         if k == 1:
-            st.compact_setsim_store(spark, str(root / "setsim"))
-            st.compact_dedup_store(spark, str(root / "exact"))
+            setsim.store.fold(spark)
+            exact.store.fold(spark)
 
     assert sorted(os.listdir(root)) == ["exact", "setsim"]
     assert sorted(os.listdir(root / "setsim")) == ["_manifest", "postings", "sets"]
@@ -1120,3 +1130,161 @@ def test_dedup_kernels_release_internal_pins(spark, tmp_path):
             kernel(df, k)
             assert pinned() - before == set()
     assert len(emitted) == 8 and sum(emitted) > 0
+
+
+_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _fold_at(spark, n):
+    """Set the session's listing threshold, the store's fold point, to
+    ``n``; returns the value to restore."""
+    old = spark.conf.get(_THRESHOLD)
+    spark.conf.set(_THRESHOLD, str(n))
+    return old
+
+
+def test_store_folds_in_band_at_listing_threshold(spark, tmp_path):
+    """Once the live deltas reach the session's listing threshold, the
+    next batch's write folds them into its own delta: after every batch
+    the newest manifest of each store names at most threshold deltas,
+    and the kernels' output is unchanged: survivors are the first-id md5
+    model's, verified pairs the batch kernel's over the union corpus."""
+    import hashlib
+
+    import aardappel_spark.stateful as st
+    from aardappel_spark.ops.dedup import setsim_prefix_pairs
+
+    root = tmp_path / "store"
+    pairs, survivors = set(), set()
+    setsim = st.incremental_setsim_batch(
+        str(root / "setsim"), tau_num=1, tau_den=2, shingle=1,
+        sink=lambda df, bid: pairs.update(
+            (r.id_a, r.id_b) for r in df.collect() if r.verified
+        ),
+    )
+    exact = st.incremental_dedup_batch(
+        str(root / "exact"),
+        sink=lambda df, bid: survivors.update(r.doc_id for r in df.collect()),
+    )
+    batches, texts, live = [], [], []
+    old = _fold_at(spark, 3)
+    try:
+        for k in range(8):
+            docs = _stream_docs(40 + k, 100 * k, 12, texts)
+            texts += [t for _, t in docs]
+            batches.append(docs)
+            df = spark.createDataFrame(docs, "doc_id long, text string")
+            setsim(df, k)
+            exact(df, k)
+            live.append(tuple(
+                len(st.StoreLog(str(root / s), {}).latest()["deltas"])
+                for s in ("setsim", "exact")
+            ))
+    finally:
+        spark.conf.set(_THRESHOLD, old)
+
+    assert all(n <= 3 for ns in live for n in ns), live
+    assert live[3] == (1, 1), live  # batch 3 folded deltas 0-2 into its own
+
+    seen, want = set(), set()
+    for docs in batches:
+        for doc_id, text in sorted(docs):
+            fp = hashlib.md5(text.encode()).hexdigest()
+            if fp not in seen:
+                seen.add(fp)
+                want.add(doc_id)
+    assert survivors == want
+    union = spark.createDataFrame(
+        [d for docs in batches for d in docs], "doc_id long, text string"
+    )
+    assert pairs == {
+        (r.id_a, r.id_b)
+        for r in setsim_prefix_pairs(union, tau_num=1, tau_den=2, shingle=1)
+        .filter("verified").collect()
+    }
+    assert pairs  # the feed plants near-dups
+
+
+def test_crash_in_a_fold_batch_keeps_readers_and_replay_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A crash at the publish of the batch that folds: the fold's delta
+    is written but unnamed, readers keep the previous deltas, a replay
+    of the batch id converges on the clean run's pairs, survivors and
+    postings, and the publish after the fold retires the folded dirs."""
+    import aardappel_spark.stateful as st
+
+    def mk(root):
+        out = {"pairs": set(), "survivors": set()}
+        setsim = st.incremental_setsim_batch(
+            f"{root}/setsim", tau_num=1, tau_den=2, shingle=1,
+            sink=lambda df, bid: out["pairs"].update(
+                (r.id_a, r.id_b) for r in df.collect() if r.verified
+            ),
+        )
+        exact = st.incremental_dedup_batch(
+            f"{root}/exact",
+            sink=lambda df, bid: out["survivors"].update(
+                r.doc_id for r in df.collect()
+            ),
+        )
+        return setsim, exact, out
+
+    texts, batches = [], []
+    for k in range(4):
+        docs = _stream_docs(60 + k, 100 * k, 12, texts)
+        texts += [t for _, t in docs]
+        batches.append(spark.createDataFrame(docs, "doc_id long, text string"))
+
+    def postings(root):
+        return _published(
+            spark, f"{root}/setsim", f"{root}/setsim/postings", st.POSTINGS_SCHEMA
+        )
+
+    def fps(root):
+        return _published(spark, f"{root}/exact", f"{root}/exact", st.FPS_SCHEMA)
+
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    old = _fold_at(spark, 2)
+    try:
+        c_setsim, c_exact, c_out = mk(clean)
+        for k, df in enumerate(batches[:3]):
+            c_setsim(df, k)
+            c_exact(df, k)
+
+        setsim, exact, out = mk(crashed)
+        for k, df in enumerate(batches[:2]):
+            setsim(df, k)
+            exact(df, k)
+        n_post, n_fps = postings(crashed).count(), fps(crashed).count()
+        # batch 2 folds deltas 0-1; both kernels crash at its publish
+        for kernel, store in ((setsim, "setsim"), (exact, "exact")):
+            _fail_once(monkeypatch, st.StoreLog, "publish")
+            with pytest.raises(RuntimeError, match="crash in publish"):
+                kernel(batches[2], 2)
+            log = st.StoreLog(f"{crashed}/{store}", {})
+            assert log.latest()["deltas"] == [0, 1], store
+        for sub in ("setsim/postings", "setsim/sets", "exact"):
+            assert os.path.isdir(f"{crashed}/{sub}/v=2"), sub
+        assert postings(crashed).count() == n_post
+        assert fps(crashed).count() == n_fps
+
+        # the replay of batch 2 folds again and publishes
+        setsim(batches[2], 2)
+        exact(batches[2], 2)
+        for store in ("setsim", "exact"):
+            assert st.StoreLog(f"{crashed}/{store}", {}).latest()["deltas"] == [2]
+        assert out == c_out
+        assert postings(crashed).count() == postings(clean).count()
+        assert sorted(fps(crashed).collect()) == sorted(fps(clean).collect())
+        assert sorted(os.listdir(f"{crashed}/setsim/postings")) == [
+            "v=0", "v=1", "v=2"
+        ]  # the manifest before the fold still names 0-1
+
+        setsim(batches[3], 3)
+        exact(batches[3], 3)
+    finally:
+        spark.conf.set(_THRESHOLD, old)
+    for sub in ("setsim/postings", "setsim/sets", "exact"):
+        data = sorted(d for d in os.listdir(f"{crashed}/{sub}") if d.startswith("v="))
+        assert data == ["v=2", "v=3"], (sub, data)

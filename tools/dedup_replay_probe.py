@@ -9,12 +9,19 @@ batches, and records after every batch:
   leaves a ``localCheckpoint`` pin behind grows it with the batch count
   (its blocks stay in the block manager for the session's life).
 * ``jobs``: the Spark jobs each kernel ran for the batch.
-* ``store_files``: the parquet files under each store (its deltas grow
-  by one dir per batch until a compaction folds them).
+* ``store_files``: the parquet files under each store, counted on
+  disk (retained but unnamed deltas included).
+* ``live_deltas``: the deltas each store's newest manifest names. A
+  batch adds one; once they reach the session's
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` the next
+  write folds them into its own delta (``StoreLog.commit``).
+* ``folded``: whether either store folded in this batch.
 
 The claim under test is that block-manager state and jobs per batch
-stay flat over a long replay; ``summary`` compares the first and last
-ten batches.
+stay flat over a long replay. ``summary`` reports non-fold batches
+(first and last ten, and the job counts of every batch after the
+first) and fold batches apart, with each fold's extra wall time over
+the non-fold median amortized over all batches.
 
 Usage: python tools/dedup_replay_probe.py [n_batches] [seed]
        -> DEDUP_REPLAY.json
@@ -22,6 +29,7 @@ Usage: python tools/dedup_replay_probe.py [n_batches] [seed]
 
 from __future__ import annotations
 
+import collections
 import json
 import os
 import shutil
@@ -37,6 +45,12 @@ def _store_files(path: str) -> int:
     return sum(
         1 for _, _, names in os.walk(path) for n in names if n.endswith(".parquet")
     )
+
+
+def _live_deltas(path: str) -> int:
+    from aardappel_spark.stateful import StoreLog
+
+    return len(StoreLog(path, {}).latest()["deltas"])
 
 
 def main() -> None:
@@ -83,11 +97,17 @@ def main() -> None:
             rows.append({"batch": b})
             t0 = time.perf_counter()
             replay.run(spark, [path], b)
-            rows[-1].update(
+            row = rows[-1]
+            row.update(
                 batch_s=round(time.perf_counter() - t0, 3),
                 persistent_rdds=sc._jsc.getPersistentRDDs().size(),
-                setsim_store_files=_store_files(os.path.join(store, "setsim")),
-                exact_store_files=_store_files(os.path.join(store, "exact")),
+            )
+            for name in ("setsim", "exact"):
+                row[f"{name}_store_files"] = _store_files(os.path.join(store, name))
+                row[f"{name}_live_deltas"] = _live_deltas(os.path.join(store, name))
+            row["folded"] = b > 0 and any(
+                row[f"{n}_live_deltas"] < rows[-2][f"{n}_live_deltas"]
+                for n in ("setsim", "exact")
             )
             print(json.dumps(rows[-1]), flush=True)
     finally:
@@ -100,15 +120,36 @@ def main() -> None:
             for k in ("persistent_rdds", "setsim_jobs", "exact_jobs", "batch_s")
         }
 
-    k = min(10, n_batches)
+    plain = [r for r in rows if not r["folded"]]
+    folds = [r for r in rows if r["folded"]]
+    k = min(10, len(plain))
+    plain_s = statistics.median(r["batch_s"] for r in plain)
+    jobs = collections.Counter(
+        f"{r['setsim_jobs']}+{r['exact_jobs']}" for r in plain[1:]
+    )
     out = {
         "n_batches": n_batches,
         "seed": seed,
         "docs_per_batch": DOCS_PER_BATCH,
         "schema": DOC_SCHEMA,
         "summary": {
-            "first": window(rows[:k]),
-            "last": window(rows[-k:]),
+            "first": window(plain[:k]),
+            "last": window(plain[-k:]),
+            "non_fold_jobs": dict(jobs),
+            "folds": {
+                "batches": [r["batch"] for r in folds],
+                "median": window(folds) if folds else None,
+                "extra_s_per_batch": round(
+                    sum(r["batch_s"] - plain_s for r in folds) / n_batches, 3
+                ),
+            },
+            "max_live_deltas": max(
+                max(r["setsim_live_deltas"], r["exact_live_deltas"]) for r in rows
+            ),
+            "max_store_files": {
+                n: max(r[f"{n}_store_files"] for r in rows)
+                for n in ("setsim", "exact")
+            },
             "max_persistent_rdds": max(r["persistent_rdds"] for r in rows),
             "survivors": len(replay.survivors),
             "verified_pairs": len(replay.pairs),
